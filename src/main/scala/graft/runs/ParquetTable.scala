@@ -42,6 +42,12 @@ import org.apache.spark.sql.{Column, Dataset, Encoder, SaveMode, SparkSession}
   * lock that later writers break after `StaleLockMs`. Readers never
   * lock or retry: manifests only ever appear.
   *
+  * Every mutation is one commit: a parquet write plus a manifest
+  * create. Callers batch rows rather than commit per row — a stage
+  * run makes 3 ledger commits whatever its output count: 1 `runstatus`
+  * upsert before dispatch, then 1 `runs` upsert and 1 `runstatus`
+  * update after its jobs succeed ([[graft.stage.Stage.processOutputs]]).
+  *
   * Rows are typed; keys are column names. The table is run-metadata
   * sized (thousands of rows), but every operation is expressed
   * relationally, so nothing here breaks if it grows by 10^6.
@@ -141,9 +147,18 @@ final class ParquetTable[T: Encoder](
     * do not disturb it (snapshot isolation for in-flight readers).
     */
   def ds: Dataset[T] = currentManifest() match {
-    case Some((_, snap)) => spark.read.parquet(new Path(path, snap).toString).as[T]
+    case Some((_, snap)) => readSnapshot(snap)
     case None            => spark.emptyDataset[T]
   }
+
+  /** Read one snapshot dir with the row type's own schema: every
+    * snapshot is written from a `Dataset[T]`, so the schema is known
+    * and `spark.read.parquet` need not launch a footer-inference job
+    * on every read.
+    */
+  private def readSnapshot(snap: String): Dataset[T] =
+    spark.read.schema(implicitly[Encoder[T]].schema)
+      .parquet(new Path(path, snap).toString).as[T]
 
   def all(): Seq[T] = ds.collect().toSeq
 
@@ -176,7 +191,7 @@ final class ParquetTable[T: Encoder](
     val snap =
       try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
       finally in.close()
-    spark.read.parquet(new Path(path, snap).toString).as[T]
+    readSnapshot(snap)
   }
 
   def isEmpty: Boolean = ds.isEmpty
@@ -213,14 +228,15 @@ final class ParquetTable[T: Encoder](
     * pruned, fully distributed).
     */
   def update(pred: Column)(f: T => T): Unit = withWriterLock {
-    val toTouch = ds.filter(pred)
-    val n = toTouch.count()
-    require(n <= maxUpdateRows,
-      s"update() matched $n rows of $path — this point-update API " +
-      s"materializes matches on the driver and is fenced to " +
-      s"$maxUpdateRows rows (metadata-scale). Use a " +
+    // one job: collect at most one row past the fence, so a wide match
+    // is caught before anything is rewritten
+    val probe = ds.filter(pred).limit(math.min(maxUpdateRows + 1, Int.MaxValue).toInt).collect()
+    require(probe.length <= maxUpdateRows,
+      s"update() matched more than $maxUpdateRows rows of $path — this " +
+      "point-update API materializes matches on the driver and is fenced " +
+      s"to $maxUpdateRows rows (metadata-scale). Use a " +
       "distributed rewrite (operators.Merge) for data-scale tables.")
-    val matched = toTouch.collect().toSeq.map(f)
+    val matched = probe.toSeq.map(f)
     val rest    = ds.filter(!org.apache.spark.sql.functions.coalesce(
       pred, org.apache.spark.sql.functions.lit(false)))
     commitSnapshot(rest.unionByName(spark.createDataset(matched)))

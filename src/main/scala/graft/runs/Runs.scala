@@ -2,7 +2,7 @@ package graft.runs
 
 import java.time.Instant
 
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
 
 import graft.core.Input
@@ -57,14 +57,14 @@ final class Runs(spark: SparkSession, path: String, project: String, method: Str
       .collect()
       .toSeq
 
-  /** Batch upsert of an output's inputs: on duplicate key, the row's
-    * `version` and `timestamp` are replaced (reference: Runs.scala:77-103).
+  /** Batch upsert of each output's inputs, all in one commit: on
+    * duplicate key, the row's `version` and `timestamp` are replaced
+    * (reference: Runs.scala:77-103, one output per call).
     */
-  def insert(stage: String, output: String, inputs: Seq[Input]): Unit = {
-    migrate()
+  def insert(stage: String, outputs: (String, Iterable[Input])*): Unit = {
     val now = Instant.now
-    table.upsert(inputs.map { i =>
-      RunRow(project, method, stage, i.key, i.version, output, now)
+    table.upsert(outputs.flatMap { case (output, inputs) =>
+      inputs.map(i => RunRow(project, method, stage, i.key, i.version, output, now))
     })
   }
 
@@ -99,25 +99,40 @@ final class RunStatus(spark: SparkSession, path: String, project: String, method
       .collect()
       .toSeq
 
-  /** Insert (or conflict-reset) an output row. */
-  def insert(stage: String, output: String): Unit = {
-    migrate()
-    table.upsert(Seq(
-      RunStatusRow(project, method, stage, output, None, None, Instant.now)))
+  /** Insert (or conflict-reset) output rows, in one commit. */
+  def insert(stage: String, outputs: String*): Unit = reset(stage, outputs, started = None)
+
+  /** Insert (or conflict-reset) output rows already marked started, in
+    * one commit: the end state of [[insert]] followed by [[start]],
+    * with `started == created`.
+    */
+  def begin(stage: String, outputs: String*): Unit = reset(stage, outputs, Some(Instant.now))
+
+  private def reset(stage: String, outputs: Seq[String], started: Option[Instant]): Unit = {
+    val now = started.getOrElse(Instant.now)
+    table.upsert(outputs.map(o => RunStatusRow(project, method, stage, o, started, None, now)))
   }
 
-  private def keyPred(stage: String, output: String) =
+  private def keyPred(stage: String, outputs: Seq[String]) =
     col("project") === project && col("method") === method &&
-      col("stage") === stage && col("output") === output
+      col("stage") === stage && col("output").isin(outputs: _*)
 
-  /** Mark an output as started (reference: RunStatus.scala:88-99). */
-  def start(stage: String, output: String): Unit =
-    table.update(keyPred(stage, output))(_.copy(started = Some(Instant.now)))
+  /** Mark outputs as started, in one commit (reference:
+    * RunStatus.scala:88-99, one output per call).
+    */
+  def start(stage: String, outputs: String*): Unit = {
+    val now = Some(Instant.now)
+    if (outputs.nonEmpty) table.update(keyPred(stage, outputs))(_.copy(started = now))
+  }
 
-  /** Mark an output as ended (reference: RunStatus.scala:102-113). */
-  def end(stage: String, output: String): Unit =
-    table.update(keyPred(stage, output))(_.copy(ended = Some(Instant.now)))
+  /** Mark outputs as ended, in one commit (reference:
+    * RunStatus.scala:102-113, one output per call).
+    */
+  def end(stage: String, outputs: String*): Unit = {
+    val now = Some(Instant.now)
+    if (outputs.nonEmpty) table.update(keyPred(stage, outputs))(_.copy(ended = now))
+  }
 
   def delete(stage: String, output: String): Unit =
-    table.delete(keyPred(stage, output))
+    table.delete(keyPred(stage, Seq(output)))
 }

@@ -140,12 +140,14 @@ abstract class Stage(implicit val context: Context) {
     updatedOutputMap.filter { case (_, ins) => ins.nonEmpty }
   }
 
-  /** Record what was built (reference: Stage.scala:269-276). */
-  def insertRuns(outputs: Map[String, Set[Input]]): Unit =
-    for ((output, inputs) <- outputs.toList.sortBy(_._1)) {
-      context.runs.insert(getName, output, inputs.toList)
-      context.runStatus.end(getName, output)
-    }
+  /** Record what was built (reference: Stage.scala:269-276) in 2
+    * commits whatever the output count: 1 `runs` upsert of every
+    * output's inputs, then 1 `runstatus` update ending them all.
+    */
+  def insertRuns(outputs: Map[String, Set[Input]]): Unit = {
+    context.runs.insert(getName, outputs.toSeq: _*)
+    context.runStatus.end(getName, outputs.keys.toSeq: _*)
+  }
 
   /** Log the work that would run; true if any (Stage.scala:282-295). */
   def showWork(opts: Opts): Boolean = {
@@ -161,13 +163,14 @@ abstract class Stage(implicit val context: Context) {
     * (reference: Stage.scala:110-162 provisions ≤N EMR clusters; here
     * a bounded pool shares the SparkSession — the scheduler
     * interleaves the jobs' stages across executors).
+    *
+    * The ledger sees 1 commit before dispatch (every output started)
+    * and, via [[insertRuns]], 2 after all jobs succeed. A failed job
+    * writes no `runs` row and leaves every output started, not ended.
     */
   def processOutputs(outputMap: Map[String, Set[Input]], opts: Opts): Unit = {
     val outputs = outputMap.keys.toList.sorted
-    outputs.foreach { o =>
-      context.runStatus.insert(getName, o)
-      context.runStatus.start(getName, o)
-    }
+    context.runStatus.begin(getName, outputs: _*)
 
     val pool = Executors.newFixedThreadPool(math.min(opts.clusters(), math.max(outputs.size, 1)))
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
@@ -197,8 +200,7 @@ abstract class Stage(implicit val context: Context) {
     getWork(opts) match {
       case outputMap if outputMap.isEmpty => ()
       case outputMap if opts.insertRuns() =>
-        outputMap.keys.foreach(o => context.runStatus.insert(getName, o))
-        outputMap.keys.foreach(o => context.runStatus.start(getName, o))
+        context.runStatus.begin(getName, outputMap.keys.toSeq: _*)
         insertRuns(outputMap)
         outputMap.keys.foreach(success)
       case outputMap =>

@@ -28,7 +28,7 @@ final class RunsSpec extends SparkTestBase {
 
   test("insert/delete - single input") {
     runs.migrate()
-    runs.insert(stage, "o1", Seq(input("i1")))
+    runs.insert(stage, "o1" -> Seq(input("i1")))
     assert(runs.all().size == 1)
     runs.delete(stage, "o1")
     assert(runs.all().isEmpty)
@@ -37,8 +37,8 @@ final class RunsSpec extends SparkTestBase {
   test("insert/delete - multiple inputs/outputs") {
     val inputs = (1 to 6).map(_.toString).map(input)
     runs.migrate()
-    runs.insert(stage, "o1", inputs.take(3))
-    runs.insert(stage, "o2", inputs.drop(3))
+    runs.insert(stage, "o1" -> inputs.take(3))
+    runs.insert(stage, "o2" -> inputs.drop(3))
 
     val results = runs.of(stage)
     assert(results.size == 6)
@@ -58,19 +58,19 @@ final class RunsSpec extends SparkTestBase {
   test("update output with changed inputs (upsert)") {
     val inputs = (1 to 3).map(_.toString).map(input)
     runs.migrate()
-    runs.insert(stage, "o", inputs)
+    runs.insert(stage, "o" -> inputs)
 
     val i1 = runs.all().map(r => Input(r.input, r.version)).toSet
     assert(i1 == inputs.toSet)
 
     val newInputs = (4 to 6).map(_.toString).map(input)
-    runs.insert(stage, "o", newInputs)
+    runs.insert(stage, "o" -> newInputs)
     val i2 = runs.all().map(r => Input(r.input, r.version)).toSet
     assert(i2 == (inputs ++ newInputs).toSet)
 
     // same keys, different versions — must replace, not duplicate
     val updatedInputs = inputs.map(i => input(i.key))
-    runs.insert(stage, "o", updatedInputs)
+    runs.insert(stage, "o" -> updatedInputs)
     val i3 = runs.all().map(r => Input(r.input, r.version)).toSet
     assert(i3 == (newInputs ++ updatedInputs).toSet)
     assert(runs.all().size == 6)

@@ -21,6 +21,86 @@ final class IncrementalSpec extends SparkTestBase {
     Files.write(p, s"data for $key".getBytes)
   }
 
+  /** Bump an input's version past every recorded run, then let the
+    * clock move on so the next run's timestamp is strictly after it.
+    */
+  private def touch(root: String, key: String): Unit = {
+    Thread.sleep(50)
+    Files.setLastModifiedTime(
+      Paths.get(root, key),
+      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis()))
+    Thread.sleep(50)
+  }
+
+  /** Latest committed version, summed over both ledger tables: the
+    * number of ledger commits made so far.
+    */
+  private def ledgerVersion(context: Context): Long =
+    Seq(context.runs.table, context.runStatus.table).map(_.versions.lastOption.getOrElse(0L)).sum
+
+  /** Output `g` is built from the inputs `a/<g>/part-*`; the jobs of
+    * the `failing` outputs throw.
+    */
+  private def groupStage(root: String, failing: Set[String] = Set.empty)(
+      implicit context: Context): Stage =
+    new Stage() {
+      val source = Input.Source("a/*/", "part-*")
+      override val sources = Seq(source)
+      override val rules: PartialFunction[Input, Outputs] = {
+        case source(group, _) => Outputs.Named(group)
+      }
+      override def make(output: String): SparkJob = SparkJob { (_, env) =>
+        if (failing(output)) throw new IllegalStateException(s"job for $output failed")
+        writeFile(root, s"${env.prefix}/${env.method}/${env.stage}/$output/_SUCCESS")
+      }
+      override def getName: String = "GroupStage"
+    }
+
+  private val groups = Seq("g1", "g2", "g3")
+
+  test("a run commits the ledger 3 times, whatever the number of stale outputs") {
+    val root = tmpDir("commits-spec")
+    implicit val context: Context = TestMethod.context(spark, root)
+    groups.foreach(g => writeFile(root, s"a/$g/part-1"))
+    val stage = groupStage(root)
+    context.runs.migrate()
+    context.runStatus.migrate()
+
+    def refresh(touched: Seq[String], flags: String*): Unit = {
+      touched.foreach(g => touch(root, s"a/$g/part-1"))
+      assert(stage.getWork(new Opts(Seq("--yes"))).keySet == touched.toSet)
+      val v0 = ledgerVersion(context)
+      stage.run(new Opts("--yes" +: flags))
+      assert(ledgerVersion(context) - v0 == 3, s"commits of a run over $touched")
+      assert(stage.getWork(new Opts(Seq("--yes"))).isEmpty)
+      val statuses = context.runStatus.of("GroupStage")
+      assert(statuses.map(_.output).toSet == groups.toSet)
+      assert(statuses.forall(s => s.started.exists(st => s.ended.exists(e => !st.isAfter(e)))))
+    }
+
+    refresh(groups)         // cold build, k = 3
+    refresh(Seq("g2"))      // k = 1
+    refresh(groups)         // k = 3
+    refresh(Seq("g3"), "--insert-runs")
+  }
+
+  test("a failed job leaves runs unchanged and every output started, not ended") {
+    val root = tmpDir("fail-spec")
+    implicit val context: Context = TestMethod.context(spark, root)
+    groups.foreach(g => writeFile(root, s"a/$g/part-1"))
+    groupStage(root).run(new Opts(Seq("--yes")))
+    val before = context.runs.all().toSet
+
+    Seq("g1", "g2").foreach(g => touch(root, s"a/$g/part-1"))
+    intercept[IllegalStateException] {
+      groupStage(root, failing = Set("g2")).run(new Opts(Seq("--yes")))
+    }
+    assert(context.runs.all().toSet == before)
+    val status = context.runStatus.of("GroupStage").map(s => s.output -> s).toMap
+    Seq("g1", "g2").foreach(g => assert(status(g).started.isDefined && status(g).ended.isEmpty, g))
+    assert(status("g3").ended.isDefined)
+  }
+
   test("resourceUri copies a classpath resource once, memoized") {
     val root = tmpDir("res-spec")
     implicit val context: Context = TestMethod.context(spark, root)
@@ -90,15 +170,10 @@ final class IncrementalSpec extends SparkTestBase {
 
     // touch one input (newer than the recorded run timestamps, but in
     // the past so a fresh run supersedes it): only its output is stale
-    val touched = Paths.get(root, "a/wow/part-1")
-    Thread.sleep(50)
-    Files.setLastModifiedTime(
-      touched,
-      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis()))
+    touch(root, "a/wow/part-1")
     val work2 = stage.getWork(new Opts(Seq("--yes")))
     assert(work2.keySet == Set("wow"))
 
-    Thread.sleep(50)
     stage.run(new Opts(Seq("--yes")))
     assert(jobRuns.get == 3)
     assert(stage.getWork(new Opts(Seq("--yes"))).isEmpty)
@@ -108,12 +183,8 @@ final class IncrementalSpec extends SparkTestBase {
     assert(reproc.keySet == Set("foo", "wow"))
 
     // --insert-runs writes bookkeeping without running jobs
-    Thread.sleep(50)
-    Files.setLastModifiedTime(
-      touched,
-      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis()))
+    touch(root, "a/wow/part-1")
     assert(stage.getWork(new Opts(Seq("--yes"))).keySet == Set("wow"))
-    Thread.sleep(50)
     stage.run(new Opts(Seq("--yes", "--insert-runs")))
     assert(jobRuns.get == 3) // unchanged
     assert(stage.getWork(new Opts(Seq("--yes"))).isEmpty)
