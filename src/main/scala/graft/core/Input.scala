@@ -3,7 +3,7 @@ package graft.core
 import java.time.Instant
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 import paths.KeyOps
 
@@ -29,9 +29,7 @@ object Input {
     * The listing strategy mirrors the reference's hand-rolled
     * partition pruning: list only under the literal `commonPrefix`
     * (everything before the first `*`), then glob-filter the listed
-    * keys. At cluster scale the filter runs columnar — see
-    * [[Source.inputsDS]], which pushes both globs down as `rlike`
-    * predicates on a `Dataset` instead of a driver-side loop.
+    * keys.
     */
   final case class Source(prefix: String, basename: String,
                           rootOverride: Option[String] = None) {
@@ -84,22 +82,6 @@ object Input {
         if (matches(in)) buf += in
       }
       buf.result()
-    }
-
-    /** Columnar membership predicate + listing for cluster scale:
-      * the same source semantics as a `Dataset` filter, with both
-      * globs compiled to `rlike` regexes so the match runs inside
-      * whole-stage codegen over a distributed listing (e.g. the
-      * output of a manifest scan) rather than in a driver loop.
-      */
-    def inputsDS(listed: Dataset[Input]): Dataset[Input] = {
-      import listed.sparkSession.implicits._
-      import org.apache.spark.sql.functions._
-      val dir  = regexp_extract(col("key"), "^(.*/)", 1)
-      val base = element_at(split(col("key"), "/"), -1)
-      listed
-        .filter(base.rlike(basenameGlob.fullRegex) && dir.rlike(prefixGlob.regex))
-        .as[Input]
     }
   }
 

@@ -1,9 +1,8 @@
 package graft.stage
 
-import java.util.concurrent.Executors
+import java.util.concurrent.{Callable, ExecutionException, Executors}
 
-import scala.concurrent.duration.Duration
-import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
 
@@ -167,32 +166,39 @@ abstract class Stage(implicit val context: Context) {
     * The ledger sees 1 commit before dispatch (every output started)
     * and, via [[insertRuns]], 2 after all jobs succeed. A failed job
     * writes no `runs` row and leaves every output started, not ended.
+    * The call returns only once every job has ended, so a failed run
+    * leaves no sibling job still writing; it then rethrows the first
+    * failure (in output order).
     */
   def processOutputs(outputMap: Map[String, Set[Input]], opts: Opts): Unit = {
     val outputs = outputMap.keys.toList.sorted
     context.runStatus.begin(getName, outputs: _*)
 
-    val pool = Executors.newFixedThreadPool(math.min(opts.clusters(), math.max(outputs.size, 1)))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try {
-      val futures = outputs.map { output =>
-        Future {
-          val env = JobEnv(
-            project = context.project,
-            method = context.methodName,
-            stage = getName,
-            output = output,
-            inputRoot = context.inputRoot,
-            outputRoot = context.outputRoot,
-            prefix = context.outPrefix,
-            dryRun = opts.dryRun()
-          )
-          make(output).run(context.spark, env)
-          output
-        }
+    val jobs = outputs.map { output =>
+      val job: Callable[Unit] = () => {
+        val env = JobEnv(
+          project = context.project,
+          method = context.methodName,
+          stage = getName,
+          output = output,
+          inputRoot = context.inputRoot,
+          outputRoot = context.outputRoot,
+          prefix = context.outPrefix,
+          dryRun = opts.dryRun()
+        )
+        make(output).run(context.spark, env)
       }
-      Await.result(Future.sequence(futures), Duration.Inf).foreach(success)
-    } finally pool.shutdown()
+      job
+    }
+    val pool = Executors.newFixedThreadPool(math.min(opts.clusters(), math.max(outputs.size, 1)))
+    val results =
+      try pool.invokeAll(jobs.asJava).asScala
+      finally pool.shutdown()
+    results.foreach { r =>
+      try r.get()
+      catch { case e: ExecutionException => throw e.getCause }
+    }
+    outputs.foreach(success)
   }
 
   /** Run the stage (reference: Stage.scala:298-318). */

@@ -39,9 +39,9 @@ final class IncrementalSpec extends SparkTestBase {
     Seq(context.runs.table, context.runStatus.table).map(_.versions.lastOption.getOrElse(0L)).sum
 
   /** Output `g` is built from the inputs `a/<g>/part-*`; the jobs of
-    * the `failing` outputs throw.
+    * the `failing` outputs throw at once, the others take `delayMs`.
     */
-  private def groupStage(root: String, failing: Set[String] = Set.empty)(
+  private def groupStage(root: String, failing: Set[String] = Set.empty, delayMs: Long = 0)(
       implicit context: Context): Stage =
     new Stage() {
       val source = Input.Source("a/*/", "part-*")
@@ -51,6 +51,7 @@ final class IncrementalSpec extends SparkTestBase {
       }
       override def make(output: String): SparkJob = SparkJob { (_, env) =>
         if (failing(output)) throw new IllegalStateException(s"job for $output failed")
+        Thread.sleep(delayMs)
         writeFile(root, s"${env.prefix}/${env.method}/${env.stage}/$output/_SUCCESS")
       }
       override def getName: String = "GroupStage"
@@ -99,6 +100,17 @@ final class IncrementalSpec extends SparkTestBase {
     val status = context.runStatus.of("GroupStage").map(s => s.output -> s).toMap
     Seq("g1", "g2").foreach(g => assert(status(g).started.isDefined && status(g).ended.isEmpty, g))
     assert(status("g3").ended.isDefined)
+  }
+
+  test("a failed run returns only after its sibling jobs have ended") {
+    val root = tmpDir("sibling-spec")
+    implicit val context: Context = TestMethod.context(spark, root)
+    groups.foreach(g => writeFile(root, s"a/$g/part-1"))
+    intercept[IllegalStateException] {
+      groupStage(root, failing = Set("g1"), delayMs = 500).run(new Opts(Seq("--yes")))
+    }
+    val built = groups.filter(g => Files.exists(Paths.get(root, s"out/TestMethod/GroupStage/$g/_SUCCESS")))
+    assert(built == Seq("g2", "g3"))
   }
 
   test("resourceUri copies a classpath resource once, memoized") {

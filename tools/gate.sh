@@ -7,15 +7,17 @@ cd "$(dirname "$0")/.."
 SF_CORRECT="${1:-/root/testdata/sf0.01}"
 SF_BENCH="${2:-/root/testdata/sf0.1}"
 OUT=$(mktemp -d /tmp/graft-gate.XXXX)
+# numbers are only comparable at one core count: default to this host's
+CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}"
 
 echo "== specs =="
 sbt -batch test 2>&1 | grep -E "Tests:|FAILED" | tail -2
 
 echo "== correctness ($SF_CORRECT) =="
-SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-8}" \
+SPARK_GRAFT_CPUS="$CPUS" \
   sbt -batch "runMain graft.Verify $SF_CORRECT $OUT" > /dev/null 2>&1
 python3 tools/check.py "$SF_CORRECT" "$OUT" | tail -2
 
 echo "== bench ($SF_BENCH) =="
-SPARK_GRAFT_SF_DIR="$SF_BENCH" SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" \
+SPARK_GRAFT_SF_DIR="$SF_BENCH" SPARK_GRAFT_CPUS="$CPUS" \
   sbt -batch "runMain graft.Bench" 2>&1 | grep '"metric"'
