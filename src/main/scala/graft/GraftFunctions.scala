@@ -68,9 +68,9 @@ object GraftFunctions {
     },
     "hyperplane_sketches" -> { exprs =>
       require(exprs.length == 5, "hyperplane_sketches(vec, dim, planes, tables, seed)")
-      HyperplaneSketches(exprs(0), foldableInt(exprs(1), "dim"),
+      HyperplaneProbeSketches(exprs(0), foldableInt(exprs(1), "dim"),
         foldableInt(exprs(2), "planes"), foldableInt(exprs(3), "tables"),
-        foldableInt(exprs(4), "seed").toLong)
+        foldableInt(exprs(4), "seed").toLong, probes = 0)
     },
     // Glob semantics (reference Glob.scala) as SQL predicates: the
     // glob compiles to the shared regex and evaluates as codegen'd

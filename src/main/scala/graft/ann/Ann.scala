@@ -1,6 +1,6 @@
 package graft.ann
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -23,11 +23,6 @@ import graft.functions.VectorOps
   */
 object Ann {
 
-  /** Exact top-k cosine neighbors for each query vector.
-    *
-    * @param corpus  (id, vec) rows
-    * @param queries (id, vec) rows — must be broadcast-sized
-    */
   /** Spread a compute-dense scoring input across the session's
     * shuffle-partition count. Spark sizes scan splits by BYTES, but
     * the broadcast-product / sketch passes below cost
@@ -46,6 +41,11 @@ object Ann {
   private[graft] def spread(df: DataFrame): DataFrame =
     graft.core.Partitioning.spread(df)
 
+  /** Exact top-k cosine neighbors for each query vector.
+    *
+    * @param corpus  (id, vec) rows
+    * @param queries (id, vec) rows — must be broadcast-sized
+    */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
     val c = spread(corpus).select(
       col("id").as("nbr_id"), col("vec").as("cvec"),
@@ -261,6 +261,23 @@ object Ann {
   /** See [[lshProfile]]. */
   final case class LshProfile(estPairs: Double, tables: Int, candidateFraction: Double)
 
+  /** (keep…, table, bucket) rows of the width-(probes+1) hyperplane
+    * emission ([[graft.functions.HyperplaneProbeSketches]]): array slot
+    * `pos` belongs to table `pos DIV (probes+1)`. At probes = 0 the
+    * slot IS the table, so the plan carries no division.
+    */
+  private def sketchRows(df: DataFrame, keep: Seq[Column], dim: Int, planes: Int,
+                         tables: Int, seed: Long, probes: Int): DataFrame = {
+    val sketches = graft.functions.HyperplaneProbeSketches(
+      col("vec"), dim, planes, tables, seed, probes)
+    if (probes == 0) df.select(keep :+ posexplode(sketches).as(Seq("table", "bucket")): _*)
+    else {
+      val rows = df.select(keep :+ posexplode(sketches).as(Seq("pos", "bucket")): _*)
+      rows.select(rows.columns.dropRight(2).toSeq.map(col) :+
+        expr(s"pos DIV ${probes + 1}").as("table") :+ col("bucket"): _*)
+    }
+  }
+
   /** EXACT candidate volume of a [[cosineNearDupPairsLSH]] config on
     * THIS corpus — the vector-side analogue of
     * `NgramJaccard.candidateVolume`: one sketch pass and one
@@ -277,12 +294,16 @@ object Ann {
     * (bucket_rows, distinct_buckets, max_bucket, candidate_volume).
     * `candidate_volume` stays in Long arithmetic end to end for the
     * same ~1e15-regime reason as the n-gram form.
+    *
+    * `probes` prices the widened emission: Σ e·(e−1)/2 over every
+    * (table, bucket) of the width-(probes+1) multiset. A point emits
+    * at most one entry per (table, bucket) (distinct single-bit flips
+    * are distinct buckets), so e counts distinct points and the
+    * self-pair term subtracts exactly.
     */
   def lshCandidateVolume(df: DataFrame, dim: Int, planes: Int,
-                         tables: Int, seed: Long = 42L): DataFrame =
-    df.select(posexplode(
-        graft.functions.HyperplaneSketches(col("vec"), dim, planes, tables, seed))
-        .as(Seq("table", "bucket")))
+                         tables: Int, seed: Long = 42L, probes: Int = 2): DataFrame =
+    sketchRows(df, Nil, dim, planes, tables, seed, probes)
       .groupBy(col("table"), col("bucket")).agg(count(lit(1)).as("len"))
       .agg(sum(col("len")).as("bucket_rows"),
         count(lit(1)).as("distinct_buckets"),
@@ -351,7 +372,10 @@ object Ann {
   def cosineKnnGraphLSH(df: DataFrame, minCos: Double, k: Int, dim: Int,
                         planes: Int = 10, tables: Int = -1,
                         seed: Long = 42L, checkpoint: Boolean = true): DataFrame = {
-    // the pair plan (48-table bucket join + verify) feeds BOTH union
+    // a pinned table count keeps the single-probe emission it was
+    // tuned at (a2's 48 tables); unpinned, the pair join's measured
+    // multi-probe sizing applies.
+    // The pair plan (48-table bucket join + verify) feeds BOTH union
     // branches; checkpoint the tiny thresholded pair set so the LSH
     // pipeline executes once, not once per direction (exchange reuse
     // does not cover the post-shuffle verify operators).
@@ -362,7 +386,8 @@ object Ann {
     // rounds. PlanAuditSpec runs this same construction un-truncated
     // (at the cost of planning the LSH pipeline per branch) and pins
     // the join shape; production callers keep the default.
-    val pairs = cosineNearDupPairsLSH(df, minCos, dim, planes, tables, seed)
+    val pairs = cosineNearDupPairsLSH(df, minCos, dim, planes, tables, seed,
+      probes = if (tables > 0) 0 else 2)
     val undirected = if (checkpoint) pairs.localCheckpoint(eager = false) else pairs
     knnFromPairs(undirected, k)
   }
@@ -383,16 +408,6 @@ object Ann {
     topK(directed, k)
   }
 
-  /** IVF (inverted-file) approximate top-k: a coarse quantizer — a
-    * small broadcastable centroid table, e.g. k-means centroids or
-    * per-label means — partitions the corpus into cells; each query
-    * probes only its `nprobe` nearest cells. The corpus is scanned
-    * once to assign cells (a broadcast join, no shuffle of vectors),
-    * and scoring is a cell equi-join — the index structure behind
-    * FAISS-style IVF-Flat, expressed relationally.
-    *
-    * @param centroids (cell, vec) rows — must be broadcast-sized
-    */
   /** Distributed fixed-iteration spherical k-means — the coarse
     * quantizer builder for [[ivfTopK]] and SemDeDup-style semantic
     * dedup, so cell count is a real scale knob (thousands of cells
@@ -541,6 +556,16 @@ object Ann {
     topK(scored, k, dedup = true)
   }
 
+  /** IVF (inverted-file) approximate top-k: a coarse quantizer — a
+    * small broadcastable centroid table, e.g. k-means centroids or
+    * per-label means — partitions the corpus into cells; each query
+    * probes only its `nprobe` nearest cells. The corpus is scanned
+    * once to assign cells (a broadcast join, no shuffle of vectors),
+    * and scoring is a cell equi-join — the index structure behind
+    * FAISS-style IVF-Flat, expressed relationally.
+    *
+    * @param centroids (cell, vec) rows — must be broadcast-sized
+    */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, centroids: DataFrame,
               k: Int, nprobe: Int = 2): DataFrame =
     ivfProbe(ivfAssignments(corpus, centroids), queries, centroids, k, nprobe)
@@ -578,13 +603,6 @@ object Ann {
     ivfProbe(spark.table(s"${tablePrefix}_cells"),
       queries, spark.table(s"${tablePrefix}_centroids"), k, nprobe)
 
-  /** Scale path for embedding near-dup pairs: hyperplane-sketch
-    * blocking (L tables), so candidate pairs come from bucket
-    * self-joins instead of the all-pairs product; each candidate is
-    * then exactly scored and thresholded. Recall depends on how far
-    * τ's angle is from orthogonal — high for true near-dups
-    * (cos ≥ 0.9), as the spec shows on clustered data.
-    */
   /** Exact ε-graph: every (a < b) pair with cosine ≥ minCos, scored
     * by the broadcast brute-force form (the a1 baseline shape: the
     * corpus never shuffles, each partition scans against the
@@ -609,63 +627,88 @@ object Ann {
       .select(col("a"), col("b"), col("sim"))
   }
 
-  /** `tables ≤ 0` (the default) sizes the index from THIS corpus —
-    * and as of round 16 the un-pinned path IS the margin-guided
-    * multi-probe join ([[cosineNearDupPairsLSHMP]]): identical
-    * (a, b, sim) output on every gated fixture, at 6–9× fewer tables
-    * for the same 0.05 expected-miss budget (sf1: 13 vs 180 tables,
-    * 18.3 vs 69.0 s; sf10: 33 vs 236, 75 vs 159 s — SCALE.md), with
-    * a measured fallback that drops the probes and falls back to the
-    * analytic [[autoTables]] sizing when the corpus has no sampled
-    * true pairs to measure a catch rate on. `probes = 0` forces the
-    * classic single-probe auto sizing; a pinned `tables > 0` keeps
-    * the single-probe emission verbatim (gate/bench configs pin and
-    * stay pure plan construction — the un-pinned path pays the same
-    * two cheap pre-flight actions as before, a count and a
-    * 2000-vector sampled pair estimate, just measuring catch instead
-    * of assuming the analytic worst case). The r11 audit's lesson
-    * still governs: a fixed table count tuned to measured recall 1.0
-    * at one scale silently drops pairs at 10× (expected misses grow
-    * with the true-pair count), so defaults must size to the corpus.
+  /** Scale path for embedding near-dup pairs: hyperplane-sketch
+    * blocking (L tables), so candidate pairs come from bucket
+    * self-joins instead of the all-pairs product; each candidate is
+    * then exactly scored and thresholded. Recall depends on how far
+    * τ's angle is from orthogonal — high for true near-dups
+    * (cos ≥ 0.9), as the spec shows on clustered data.
+    *
+    * Margin-guided multi-probe emission: each vector emits, per
+    * table, its base bucket plus `probes` one-bit-flips at its
+    * smallest |projection| planes
+    * ([[graft.functions.HyperplaneProbeSketches]]), and the self-join
+    * matches on ANY emission collision — so a pair is caught not only
+    * when a table's full signature agrees but also when it disagrees
+    * in one straddled bit (either side's probe) or two (probe meets
+    * probe). `probes = 0` is the classic single-probe join. What
+    * probing buys at 100 TB: the sketch pass, the bucket-shuffle
+    * bytes, and any persisted index all scale with tables × width × n
+    * — the dominant cost at a selective τ where candidates track true
+    * pairs (SPOTCHECK_tau) — while at a gap-less τ the candidate side
+    * grows only by the in-bucket width factor.
+    *
+    * Sizing, three rules:
+    *   - a pinned `tables > 0` keeps the caller's `probes` verbatim
+    *     (gate/bench configs pin and stay pure plan construction);
+    *   - unpinned with `probes > 0` (the default) sizes from THIS
+    *     corpus' MEASURED per-table catch rate ([[mpSizing]]): identical
+    *     (a, b, sim) output on every gated fixture, at 6–9× fewer
+    *     tables for the same 0.05 expected-miss budget (sf1: 13 vs 180
+    *     tables, 18.3 vs 69.0 s; sf10: 33 vs 236, 75 vs 159 s —
+    *     SCALE.md). When the sample has no true pairs to measure a
+    *     catch rate on, or the measured sizing fails to beat the
+    *     analytic single-probe law strictly, the probes are DROPPED
+    *     and the table count is the analytic one — the plan is then
+    *     exactly the single-probe emission, never width× rows for no
+    *     index saving;
+    *   - unpinned with `probes = 0` uses the analytic [[autoTables]].
+    * The un-pinned paths pay two cheap pre-flight actions, a count and
+    * a 2000-vector sampled pair estimate. The r11 audit's lesson
+    * governs: a fixed table count tuned to measured recall 1.0 at one
+    * scale silently drops pairs at 10× (expected misses grow with the
+    * true-pair count), so defaults must size to the corpus.
     *
     * `maxCandidateVolume` is the same loud-refusal guard as
     * `NgramJaccard.pairs`: when set below `Long.MaxValue`, one extra
     * linear pre-flight ([[lshCandidateVolume]] — exact, one sketch
-    * pass) counts the dot products the bucket join would evaluate
-    * and throws if the corpus is on the gap-less side of the cliff
-    * (SCALE.md: at τ with no similarity gap, candidates are a
-    * constant fraction of n²/2 NO MATTER the table sizing — the
-    * measured 82% at the d5 gate; at a selective τ the same config
-    * prunes 5–70×, SPOTCHECK_tau.txt). The default keeps the call
-    * pure plan construction.
+    * pass, priced at the emission the join actually builds) counts the
+    * dot products the bucket join would evaluate and throws if the
+    * corpus is on the gap-less side of the cliff (SCALE.md: at τ with
+    * no similarity gap, candidates are a constant fraction of n²/2 NO
+    * MATTER the table sizing — the measured 82% at the d5 gate; at a
+    * selective τ the same config prunes 5–70×, SPOTCHECK_tau.txt). The
+    * default keeps the call pure plan construction.
     */
   def cosineNearDupPairsLSH(df: DataFrame, minCos: Double, dim: Int,
                             planes: Int = 10, tables: Int = -1,
                             seed: Long = 42L,
                             maxCandidateVolume: Long = Long.MaxValue,
                             probes: Int = 2): DataFrame = {
-    if (tables <= 0 && probes > 0)
-      return cosineNearDupPairsLSHMP(df, minCos, dim, planes, tables = -1,
-        probes = math.min(probes, planes - 1), seed = seed,
-        maxCandidateVolume = maxCandidateVolume)
-    val nTables = if (tables > 0) tables else autoTables(df, minCos, planes, seed)
+    val (nTables, effProbes) =
+      if (tables > 0) (tables, probes)
+      else if (probes > 0) {
+        val p = math.min(probes, planes - 1)
+        val (t, pays) = mpSizing(df, minCos, dim, planes, p, seed)
+        (t, if (pays) p else 0)
+      } else (autoTables(df, minCos, planes, seed), 0)
     if (maxCandidateVolume < Long.MaxValue) {
-      val r = lshCandidateVolume(df, dim, planes, nTables, seed).collect().head
+      val r = lshCandidateVolume(df, dim, planes, nTables, seed, effProbes).collect().head
       val vol = r.getAs[Long]("candidate_volume")
       if (vol > maxCandidateVolume)
         throw new IllegalStateException(
           s"cosineNearDupPairsLSH pre-flight: bucket-join candidate volume $vol exceeds " +
-          s"maxCandidateVolume=$maxCandidateVolume ($nTables tables × $planes planes, " +
-          s"max bucket ${r.getAs[Long]("max_bucket")}). At this τ the corpus has no " +
-          "similarity gap — candidates are a constant fraction of all pairs however the " +
-          "index is sized. Raise τ to a selective threshold (candidates then track TRUE " +
-          "pairs — SPOTCHECK_tau.txt), add planes per table, use SemDeDup.runAuto " +
-          "(cell-bounded, n^1.5 total work), or raise the budget.")
+          s"maxCandidateVolume=$maxCandidateVolume ($nTables tables × $planes planes × " +
+          s"width ${effProbes + 1}, max bucket ${r.getAs[Long]("max_bucket")}). At this τ " +
+          "the corpus has no similarity gap — candidates are a constant fraction of all " +
+          "pairs however the index is sized. Raise τ to a selective threshold (candidates " +
+          "then track TRUE pairs — SPOTCHECK_tau.txt), add planes per table, use " +
+          "SemDeDup.runAuto (cell-bounded, n^1.5 total work), or raise the budget.")
     }
     // Vectors ride INTO the bucket rows and collisions are scored
     // inline, so only τ-SURVIVORS ever reach a pair-level shuffle.
-    // The shuffled volume is tables × n rows (each carrying one
-    // vector) — linear in the corpus — while the candidate pair
+    // The shuffled volume is tables × width × n rows (each carrying
+    // one vector) — linear in the corpus — while the candidate pair
     // multiset, which at a gap-less τ is a constant fraction of
     // n²/2, stays INSIDE the join's output iterator and dies in the
     // codegen'd filter. The previous shape (dedup bare-id pairs
@@ -676,17 +719,18 @@ object Ann {
     // output. Duplicate cross-table collisions cost only redundant
     // dot products (rare pairs collide in ~1 table; only true
     // near-dups — few — collide in many), and the final distinct
-    // dedups survivors, not candidates. SHUFFLE_HASH pins the
-    // symmetric self-join's Exchange-reuse shape for the same
-    // reason as SimHash.pairs (the d4 drift).
-    // spread before sketching: the emission costs tables×planes×dim
-    // multiplies PER ROW — a byte-small 1-split scan would compute
-    // every table's sketches for the whole corpus on one core (see
-    // [[spread]]; a no-op at scale where the scan is already split)
-    val sketched = spread(df).select(col("id"), col("vec"),
-      graft.functions.VectorOps.fnorm(col("vec")).as("nrm"),
-      posexplode(graft.functions.HyperplaneSketches(col("vec"), dim, planes, nTables, seed))
-        .as(Seq("table", "bucket")))
+    // dedups survivors, not candidates. Both sides derive from ONE
+    // sketched subtree, and SHUFFLE_HASH pins the symmetric
+    // self-join's Exchange-reuse shape for the same reason as
+    // SimHash.pairs (the d4 drift).
+    // spread before sketching: the emission costs
+    // tables×width×planes×dim multiplies PER ROW — a byte-small
+    // 1-split scan would compute every table's sketches for the whole
+    // corpus on one core (see [[spread]]; a no-op at scale where the
+    // scan is already split)
+    val sketched = sketchRows(spread(df),
+      Seq(col("id"), col("vec"), VectorOps.fnorm(col("vec")).as("nrm")),
+      dim, planes, nTables, seed, effProbes)
     val l = sketched.select(col("table"), col("bucket"),
       col("id").as("a"), col("vec").as("va"), col("nrm").as("na"))
     val r = sketched.select(col("table"), col("bucket"),
@@ -694,7 +738,7 @@ object Ann {
     l.hint("shuffle_hash").join(r, Seq("table", "bucket"))
       .filter(col("a") < col("b"))
       .withColumn("sim",
-        graft.functions.VectorOps.cosinePre(col("va"), col("vb"), col("na"), col("nb")))
+        VectorOps.cosinePre(col("va"), col("vb"), col("na"), col("nb")))
       .filter(col("sim") >= minCos)
       .select("a", "b", "sim")
       // dedup cross-table collisions on the PAIR KEY, not (a, b, sim):
@@ -881,114 +925,6 @@ object Ann {
     (tMp, m.catches > 0 && tMp < tSingle)
   }
 
-  /** EXACT candidate volume of a [[cosineNearDupPairsLSHMP]] config —
-    * [[lshCandidateVolume]] for the probe emission: Σ e·(e−1)/2 over
-    * every (table, bucket) of the widened emission multiset, the
-    * number of fused dots the symmetric probe join will evaluate. A
-    * point emits at most one entry per (table, bucket) (distinct
-    * single-bit flips are distinct buckets), so e counts distinct
-    * points and the self-pair term subtracts exactly.
-    */
-  def mpCandidateVolume(df: DataFrame, dim: Int, planes: Int, tables: Int,
-                        probes: Int, seed: Long = 42L): DataFrame = {
-    val width = probes + 1
-    df.select(posexplode(
-        graft.functions.HyperplaneProbeSketches(col("vec"), dim, planes, tables, seed, probes))
-        .as(Seq("pos", "bucket")))
-      .select(expr(s"pos DIV $width").as("table"), col("bucket"))
-      .groupBy(col("table"), col("bucket")).agg(count(lit(1)).as("len"))
-      .agg(sum(col("len")).as("bucket_rows"),
-        count(lit(1)).as("distinct_buckets"),
-        max(col("len")).as("max_bucket"),
-        sum(expr("len * (len - 1) DIV 2")).as("candidate_volume"))
-  }
-
-  /** Margin-guided multi-probe near-dup pair join — the same
-    * τ-thresholded (a, b, sim) contract as [[cosineNearDupPairsLSH]],
-    * at a FRACTION of its table count: each vector emits, per table,
-    * its base bucket plus `probes` one-bit-flips at its smallest
-    * |projection| planes ([[graft.functions.HyperplaneProbeSketches]]),
-    * and the self-join matches on ANY emission collision — so a pair
-    * is caught not only when a table's full signature agrees but also
-    * when it disagrees in one straddled bit (either side's probe) or
-    * two (probe meets probe). Catch probability per table is measured
-    * on the corpus ([[mpCatchRate]]) and fed to the same recall-
-    * budget law, which at the d-family gate config sizes ~4–5× fewer
-    * tables than the single-probe index for the SAME expected-miss
-    * budget. What that buys at 100 TB: the sketch pass, the bucket-
-    * shuffle bytes, and any persisted index all scale with
-    * tables × width × n — the dominant cost at a selective τ where
-    * candidates track true pairs (SPOTCHECK_tau) — while at a
-    * gap-less τ the candidate side grows only by the in-bucket width
-    * factor. Both sides derive from ONE sketched subtree, so the
-    * symmetric join keeps the single-Exchange reuse shape (and the
-    * SHUFFLE_HASH pin) of the single-probe form; a<b canonicalizes
-    * orientation; the final groupBy-max dedups cross-table and
-    * cross-bucket re-collisions on the pair key exactly as in
-    * [[cosineNearDupPairsLSH]].
-    */
-  def cosineNearDupPairsLSHMP(df: DataFrame, minCos: Double, dim: Int,
-                              planes: Int = 6, tables: Int = -1, probes: Int = 2,
-                              seed: Long = 42L,
-                              maxCandidateVolume: Long = Long.MaxValue): DataFrame = {
-    // auto path: when the sizing sample has no true pairs to measure a
-    // catch rate on (a super-selective τ on this corpus), OR when the
-    // measured sizing fails to beat the analytic single-probe law
-    // strictly (weak per-table catch — probing buys tables nothing),
-    // the table count falls back to the single-probe law and the
-    // probes themselves are DROPPED so the join degenerates to exactly
-    // the single-probe emission volume instead of paying width× rows
-    // for no index saving. A pinned `tables` keeps the caller's probes
-    // verbatim.
-    val (nTables, effProbes) =
-      if (tables > 0) (tables, probes)
-      else {
-        val (t, measurable) = mpSizing(df, minCos, dim, planes, probes, seed)
-        (t, if (measurable) probes else 0)
-      }
-    val width = effProbes + 1
-    if (maxCandidateVolume < Long.MaxValue) {
-      // effProbes, not probes: the pre-flight must price the emission
-      // the join below actually builds — measuring the full-probe
-      // config under a dropped-probe fallback both over-counts the
-      // volume (spurious refusals) and mis-prices the real plan
-      val r = mpCandidateVolume(df, dim, planes, nTables, effProbes, seed).collect().head
-      val vol = r.getAs[Long]("candidate_volume")
-      if (vol > maxCandidateVolume)
-        throw new IllegalStateException(
-          s"cosineNearDupPairsLSHMP pre-flight: probe-join candidate volume $vol exceeds " +
-          s"maxCandidateVolume=$maxCandidateVolume ($nTables tables × $planes planes × " +
-          s"width $width, max bucket ${r.getAs[Long]("max_bucket")}). Raise τ, add planes, " +
-          "or raise the budget — same regimes as the single-probe guard.")
-    }
-    // spread before sketching (the single-probe join's rationale: the
-    // widened emission costs tables×width×planes×dim work per row)
-    val sketched = spread(df).select(col("id"), col("vec"),
-      VectorOps.fnorm(col("vec")).as("nrm"),
-      // effProbes, not probes: with probes=2 dropped to 0 the sketch
-      // would still emit width-3 arrays while `pos DIV (0+1)` treats
-      // every probe slot as its own table — slot-wise matching at the
-      // full width× emission cost the fallback exists to avoid
-      // (round-16 ADVICE; AnnSpec pins the fallback plan's sketch
-      // expressions at probes=0 — emission exactly tables × n)
-      posexplode(graft.functions.HyperplaneProbeSketches(
-        col("vec"), dim, planes, nTables, seed, effProbes)).as(Seq("pos", "bucket")))
-      .select(col("id"), col("vec"), col("nrm"),
-        expr(s"pos DIV $width").as("table"), col("bucket"))
-    val l = sketched.select(col("table"), col("bucket"),
-      col("id").as("a"), col("vec").as("va"), col("nrm").as("na"))
-    val r = sketched.select(col("table"), col("bucket"),
-      col("id").as("b"), col("vec").as("vb"), col("nrm").as("nb"))
-    l.hint("shuffle_hash").join(r, Seq("table", "bucket"))
-      .filter(col("a") < col("b"))
-      .withColumn("sim",
-        VectorOps.cosinePre(col("va"), col("vb"), col("na"), col("nb")))
-      .filter(col("sim") >= minCos)
-      .select("a", "b", "sim")
-      .groupBy(col("a"), col("b"))
-      .agg(max(col("sim")).as("sim"))
-  }
-
   /** Exact-score candidate (a, b) pairs against the vector table and
     * threshold, via two equi-joins on id: the candidate rows (two
     * longs) shuffle to each side's vectors, and the vector table
@@ -998,8 +934,8 @@ object Ann {
     * the dominant byte-volume at 50 k vectors: each surviving pair
     * re-shipped two ~1 KB arrays through the group-by Exchange).
     *
-    * Used by the INCREMENTAL paths only, where it is the right
-    * shape: their candidate sets are bounded by the incoming batch's
+    * Used by the stored-index path only, where it is the right
+    * shape: its candidate set is bounded by the incoming batch's
     * collisions (small), while carrying the whole EXISTING corpus'
     * vectors through the index join — what in-bucket scoring would
     * require — costs a corpus-sized vector shuffle per batch. The
@@ -1018,54 +954,19 @@ object Ann {
       .select("a", "b", "sim")
   }
 
-  /** Incremental embedding near-dup: pairs involving at least one
-    * NEW vector, from sketch-bucket collisions of the incoming batch
-    * against (existing ∪ new) — the existing×existing join never
-    * runs, which is what makes re-checking a growing corpus per
-    * batch affordable. New ids must sort after existing ids; every
-    * output pair's `b` is a new vector. Same tuned (planes, tables,
-    * seed) semantics as [[cosineNearDupPairsLSH]]. This form
-    * re-sketches the existing side each call; the production loop
-    * uses [[cosineNearDupPairsLSHIndexed]] with a stored
-    * [[sketchIndex]] so existing vectors are sketched once, ever.
-    */
-  def cosineNearDupPairsLSHIncremental(existing: DataFrame, incoming: DataFrame,
-                                       minCos: Double, dim: Int,
-                                       planes: Int = 10, tables: Int = 8,
-                                       seed: Long = 42L,
-                                       checkpoint: Boolean = true): DataFrame = {
-    val all = existing.select(col("id"), col("vec"))
-      .unionByName(incoming.select(col("id"), col("vec")))
-    val cands = sketchIndex(all, dim, planes, tables, seed)
-      .select(col("table"), col("bucket"), col("id").as("a"))
-      .join(sketchIndex(incoming, dim, planes, tables, seed)
-        .select(col("table"), col("bucket"), col("id").as("b")),
-        Seq("table", "bucket"))
-      .filter(col("a") < col("b"))
-      .select("a", "b")
-      .distinct()
-      // materialize the (bounded, two-long-row) candidate set once:
-      // it feeds the candidate-id semi-join AND both verify joins,
-      // and without the checkpoint each reference re-derives the
-      // whole sketch-explode + bucket-join subtree (the d19 plan
-      // carried 19 copies of the embeddings scan). `checkpoint =
-      // false` un-truncates the lineage so specs can assert the
-      // plan's storage properties (the a2KnnGraph pattern).
-      .transform(c => if (checkpoint) c.localCheckpoint(false) else c)
-    verifyCandidates(cands, all, minCos)
-  }
-
   /** The persistent hyperplane-LSH index: exploded (id, table,
-    * bucket) rows — what [[cosineNearDupPairsLSHIndexed]] consumes
-    * for the existing side so a growing corpus is sketched ONCE.
-    * Deterministic given (dim, planes, tables, seed): an index row
-    * equals what a recompute would produce.
+    * bucket) rows of the width-(probes+1) emission — what
+    * [[cosineNearDupPairsLSHIndexed]] consumes for the existing side
+    * so a growing corpus is sketched ONCE. Deterministic given (dim,
+    * planes, tables, seed, probes): an index row equals what a
+    * recompute would produce. With probes, `probes + 1` rows per (id,
+    * table) — but the measured-catch sizing needs ~6–9× fewer tables
+    * for the same miss budget, so the persisted index is net ~2–3×
+    * smaller than the single-probe one.
     */
   def sketchIndex(df: DataFrame, dim: Int, planes: Int = 10,
-                  tables: Int = 8, seed: Long = 42L): DataFrame =
-    df.select(col("id"),
-      posexplode(graft.functions.HyperplaneSketches(col("vec"), dim, planes, tables, seed))
-        .as(Seq("table", "bucket")))
+                  tables: Int = 8, seed: Long = 42L, probes: Int = 2): DataFrame =
+    sketchRows(df, Seq(col("id")), dim, planes, tables, seed, probes)
 
   /** Store a sketch index as a bucketed catalog table (hash-clustered
     * on `bucket`, a subset of the candidate join key (table, bucket),
@@ -1079,91 +980,28 @@ object Ann {
       .format("parquet")
       .saveAsTable(table)
 
-  /** The persistent MULTI-PROBE index: exploded (id, table, bucket)
-    * rows of the widened emission ([[graft.functions.HyperplaneProbeSketches]]
-    * — base bucket + `probes` one-bit flips per table). Same storage
-    * schema as [[sketchIndex]] (so [[saveSketchIndex]]'s bucketed
-    * layout applies unchanged), `probes + 1` rows per (id, table) —
-    * but the measured-catch sizing needs ~6–9× fewer tables for the
-    * same miss budget, so the PERSISTED index is net ~2–3× smaller
-    * than the single-probe one and every per-batch probe shuffles
-    * proportionally fewer bytes. probes = 0 is bit-identical to
-    * [[sketchIndex]].
-    */
-  def probeSketchIndex(df: DataFrame, dim: Int, planes: Int = 6,
-                       tables: Int = 16, seed: Long = 42L,
-                       probes: Int = 2): DataFrame = {
-    val width = probes + 1
-    df.select(col("id"),
-      posexplode(graft.functions.HyperplaneProbeSketches(
-        col("vec"), dim, planes, tables, seed, probes)).as(Seq("pos", "bucket")))
-      .select(col("id"), expr(s"pos DIV $width").as("table"), col("bucket"))
-  }
-
-  /** [[cosineNearDupPairsLSHIndexed]] with a MULTI-PROBE stored
-    * index: the existing side arrives as persisted widened-emission
-    * (id, table, bucket) rows ([[probeSketchIndex]]) plus the vector
-    * table; the incoming batch is probe-sketched with the SAME
-    * (dim, planes, tables, seed, probes) and candidates are any
-    * emission collision — a pair is caught when a table's base
-    * sketches agree OR either side's probe straddles the disagreeing
-    * plane. Only candidate-touched existing vectors are read for
-    * exact scoring, so per-batch cost is collisions + a semi-join,
-    * never a corpus re-sketch. Every output pair's `b` is a new
-    * vector (new ids sort after existing ids); equivalence with the
-    * full multi-probe self-join restricted to new-touching pairs is
-    * spec'd, and `d19_embed_neardup_incr` gates the whole dataflow
-    * against the exact all-pairs oracle.
-    */
-  def cosineNearDupPairsLSHIndexedMP(existingIndex: DataFrame,
-                                     existingVecs: DataFrame,
-                                     incoming: DataFrame,
-                                     minCos: Double, dim: Int,
-                                     planes: Int = 6, tables: Int = 16,
-                                     probes: Int = 2,
-                                     seed: Long = 42L,
-                                     checkpoint: Boolean = true): DataFrame = {
-    val newSketches = probeSketchIndex(incoming, dim, planes, tables, seed, probes)
-    val allSketches = existingIndex.select(col("id"), col("table"), col("bucket"))
-      .unionByName(newSketches)
-    val cands = allSketches.select(col("table"), col("bucket"), col("id").as("a"))
-      .join(newSketches.select(col("table"), col("bucket"), col("id").as("b")),
-        Seq("table", "bucket"))
-      .filter(col("a") < col("b"))
-      .select("a", "b")
-      .distinct()
-      // materialize the (bounded, two-long-row) candidate set once:
-      // it feeds the candidate-id semi-join AND both verify joins,
-      // and without the checkpoint each reference re-derives the
-      // whole sketch-explode + bucket-join subtree (the d19 plan
-      // carried 19 copies of the embeddings scan). `checkpoint =
-      // false` un-truncates the lineage so specs can assert the
-      // plan's storage properties (the a2KnnGraph pattern).
-      .transform(c => if (checkpoint) c.localCheckpoint(false) else c)
-    val candIds = cands.select(col("a").as("id"))
-      .unionByName(cands.select(col("b").as("id")))
-      .distinct()
-    val vecsNeeded = existingVecs.select(col("id"), col("vec"))
-      .join(candIds, Seq("id"), "left_semi")
-      .unionByName(incoming.select(col("id"), col("vec")))
-    verifyCandidates(cands, vecsNeeded, minCos)
-  }
-
-  /** [[cosineNearDupPairsLSHIncremental]] against a PRECOMPUTED
-    * index: the existing side arrives as stored (id, table, bucket)
-    * rows plus the vector table — nothing existing is re-sketched,
-    * and only existing vectors that appear in a candidate pair are
-    * read for exact scoring. Semantics identical to the recompute
-    * form (equivalence-spec'd); new ids sort after existing ids.
+  /** Incremental embedding near-dup against a PRECOMPUTED index: the
+    * existing side arrives as stored (id, table, bucket) rows
+    * ([[sketchIndex]]) plus the vector table; the incoming batch is
+    * sketched with the SAME (dim, planes, tables, seed, probes) and
+    * candidates are any emission collision. Nothing existing is
+    * re-sketched and the existing×existing join never runs; only
+    * existing vectors that appear in a candidate pair are read for
+    * exact scoring, so per-batch cost is collisions + a semi-join.
+    * New ids must sort after existing ids; every output pair's `b` is
+    * a new vector. Equivalence with the full [[cosineNearDupPairsLSH]]
+    * self-join at the same pinned config, restricted to new-touching
+    * pairs, is spec'd, and `d19_embed_neardup_incr` gates the whole
+    * dataflow against the exact all-pairs oracle.
     */
   def cosineNearDupPairsLSHIndexed(existingIndex: DataFrame,
                                    existingVecs: DataFrame,
                                    incoming: DataFrame,
                                    minCos: Double, dim: Int,
                                    planes: Int = 10, tables: Int = 8,
-                                   seed: Long = 42L,
+                                   seed: Long = 42L, probes: Int = 2,
                                    checkpoint: Boolean = true): DataFrame = {
-    val newSketches = sketchIndex(incoming, dim, planes, tables, seed)
+    val newSketches = sketchIndex(incoming, dim, planes, tables, seed, probes)
     val allSketches = existingIndex.select(col("id"), col("table"), col("bucket"))
       .unionByName(newSketches)
     val cands = allSketches.select(col("table"), col("bucket"), col("id").as("a"))

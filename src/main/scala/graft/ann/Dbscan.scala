@@ -74,7 +74,7 @@ object Dbscan {
         Ann.cosinePairsExact(vecs, minCos)
       else
         Ann.cosineNearDupPairsLSH(vecs, minCos, dim, planes,
-          tables = profile.tables, seed = seed)
+          tables = profile.tables, seed = seed, probes = 0)
     fromNeighbors(vecs.select(col("id")), pairs.select(col("a"), col("b")), minPts)
   }
 

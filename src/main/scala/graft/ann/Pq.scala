@@ -213,12 +213,6 @@ object Pq {
       PqLut(col("vec"), b.arr, b.present, b.m, b.ksub, b.dsub).as("lut"))
   }
 
-  /** Full-corpus PQ search: ADC-rank every (query, corpus) pair over
-    * the compressed index, exact-re-rank the top `rerank`. With
-    * rerank slack the output EQUALS [[Ann.bruteForceTopK]]
-    * (spec-checked) — a1's oracle gates it verbatim, the SQ8
-    * pattern at a far higher compression.
-    */
   // The repartition after the PqAssign projection is load-bearing,
   // not cosmetic: whole-stage codegen DEFERS a projected variable to
   // its use sites, and under the broadcast join that means
@@ -234,49 +228,17 @@ object Pq {
         VectorOps.fnorm(col("vec")).as("cnorm"))
       .repartition(shufflePartitions(corpus))
 
+  /** Full-corpus PQ search: ADC-rank every (query, corpus) pair over
+    * the compressed index, exact-re-rank the top `rerank`. With
+    * rerank slack the output EQUALS [[Ann.bruteForceTopK]]
+    * (spec-checked) — a1's oracle gates it verbatim, the SQ8
+    * pattern at a far higher compression.
+    */
   def pqTopK(corpus: DataFrame, queries: DataFrame, codebooks: DataFrame,
              k: Int, m: Int, ksub: Int, rerank: Int = 64): DataFrame = {
     val b = collectBooks(codebooks, m, ksub)
-    val qIdx = queries.select(col("id").as("query_id"),
-      PqLut(col("vec"), b.arr, b.present, b.m, b.ksub, b.dsub).as("lut"))
-    rerankStage(adcStage(encodedCorpus(corpus, b), qIdx, rerank), corpus, queries, k)
-  }
-
-  /** The measured half of [[pqTopKAuto]]'s dispatch: the worst
-    * full-scan ADC rank of any true top-k neighbor of the sampled
-    * queries — the TunePq/SpotPq measurement as a library function.
-    * The ranked relation stays distributed; only the 1-row max is
-    * collected (the pre-flight scalar class).
-    */
-  def measuredScanRank(corpus: DataFrame, sampleQueries: DataFrame,
-                       codebooks: DataFrame, k: Int, m: Int, ksub: Int): Int = {
-    val b = collectBooks(codebooks, m, ksub)
-    measuredScanRankFromCIdx(corpus, sampleQueries, encodedCorpus(corpus, b), b, k)
-  }
-
-  /** [[measuredScanRank]] over an ALREADY-ENCODED (and possibly
-    * persisted) stage-1 relation — the encode-once entry
-    * [[pqTopKAuto]] uses so the corpus is PQ-encoded and shuffled
-    * once across the measurement and the accepted-arm serve.
-    */
-  private def measuredScanRankFromCIdx(corpus: DataFrame, sampleQueries: DataFrame,
-                                       cIdx: DataFrame, b: PqBooks, k: Int): Int = {
-    val tops = Ann.bruteForceTopK(corpus, sampleQueries, k)
-      .select(col("query_id"), col("nbr_id"))
-    val qIdx = sampleQueries.select(col("id").as("query_id"),
-      PqLut(col("vec"), b.arr, b.present, b.m, b.ksub, b.dsub).as("lut"))
-    val row = cIdx.join(broadcast(qIdx), col("query_id") =!= col("nbr_id"))
-      .withColumn("qsim", PqAdc(col("codes"), col("lut")) / col("cnorm"))
-      .withColumn("r", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("query_id"))
-          .orderBy(col("qsim").desc, col("nbr_id").asc)))
-      .join(broadcast(tops), Seq("query_id", "nbr_id"))
-      .agg(max(col("r"))).head()
-    // empty sample/corpus → no true pairs → max is null; 0 keeps the
-    // caller's dispatch well-defined (budget floors at 16) instead of
-    // NPE-ing the one search API that would otherwise not return
-    // empty gracefully
-    if (row.isNullAt(0)) 0 else row.getInt(0)
+    rerankStage(adcStage(scored(encodedCorpus(corpus, b), queryLuts(queries, b)), rerank),
+      corpus, queries, k)
   }
 
   /** Measured-budget auto dispatch — the v6/d16/d17 pattern applied
@@ -307,9 +269,10 @@ object Pq {
     * costs roughly 2× a plain brute scan (measurement + fallback).
     * That is the price of an honest dispatch on a structureless
     * corpus; callers that already know the law for this corpus skip
-    * it by passing `knownRank` (e.g. from a prior [[measuredScanRank]]
-    * over the same corpus/k — the SpotPq protocol), which makes the
-    * call pure plan construction except for the corpus count.
+    * it by passing `knownRank` (a worst full-scan ADC rank measured
+    * earlier over the same corpus/k — the SpotPq protocol), which
+    * makes the call pure plan construction except for the corpus
+    * count.
     */
   def pqTopKAuto(corpus: DataFrame, queries: DataFrame, codebooks: DataFrame,
                  k: Int, m: Int, ksub: Int, sampleQueries: Int = 32,
@@ -325,22 +288,21 @@ object Pq {
       else Ann.bruteForceTopK(corpus, queries, k)
     case None =>
       // encode ONCE: the measurement's full-scan ADC ranking and the
-      // accepted-arm serve previously each rebuilt the identical
-      // encoded relation (one corpus encode + shuffle per consumer).
-      // DISK_ONLY persist, not localCheckpoint — the codes relation
-      // is corpus-sized (the ivfPqTopKAuto storage-discipline note).
+      // accepted-arm serve read the same encoded relation (one corpus
+      // encode + shuffle, not one per consumer). DISK_ONLY persist,
+      // not localCheckpoint — the codes relation is corpus-sized (the
+      // ivfPqTopKAuto storage-discipline note).
       val b = collectBooks(codebooks, m, ksub)
       val cIdx = encodedCorpus(corpus, b)
         .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
       val sample = queries.orderBy(col("id")).limit(sampleQueries)
-      val needed = measuredScanRankFromCIdx(corpus, sample, cIdx, b, k)
+      val needed = measuredRank(scored(cIdx, queryLuts(sample, b)),
+        Ann.bruteForceTopK(corpus, sample, k).select(col("query_id"), col("nbr_id")))
       val budget = math.max(16, marginX * needed)
       val n = corpus.count()
-      if (budget <= (budgetFrac * n).toLong) {
-        val qIdx = queries.select(col("id").as("query_id"),
-          PqLut(col("vec"), b.arr, b.present, b.m, b.ksub, b.dsub).as("lut"))
-        rerankStage(adcStage(cIdx, qIdx, budget), corpus, queries, k)
-      } else {
+      if (budget <= (budgetFrac * n).toLong)
+        rerankStage(adcStage(scored(cIdx, queryLuts(queries, b)), budget), corpus, queries, k)
+      else {
         // the measured law says the corpus has no structure for the
         // index to exploit at this k — exact scan, loudly the same
         // answer for a linear (not rerank-inflated) cost
@@ -357,26 +319,21 @@ object Pq {
     * true answer's cell; a value that comes back as a large fraction
     * of the cell count is the law saying the coarse quantizer does
     * not separate this corpus at this k — the honest-dispatch refuse
-    * signal, same family as [[measuredScanRank]]. Only a 1-row max is
-    * collected.
+    * signal, same family as the ADC law ([[measuredRank]]). Only a
+    * 1-row max is collected.
     */
   def measuredCellRank(corpus: DataFrame, sampleQueries: DataFrame,
                        centroids: DataFrame, k: Int): Int =
-    measuredCellRankFrom(
+    measuredCellRankFromCells(
       Ann.bruteForceTopK(corpus, sampleQueries, k).select(col("query_id"), col("nbr_id")),
-      corpus, sampleQueries, centroids)
-
-  private[ann] def measuredCellRankFrom(tops: DataFrame, corpus: DataFrame,
-                                        sampleQueries: DataFrame,
-                                        centroids: DataFrame): Int =
-    measuredCellRankFromCells(tops,
       Ann.assignCells(corpus, centroids).select(col("id").as("nbr_id"), col("cell")),
       sampleQueries, centroids)
 
-  /** [[measuredCellRankFrom]] over a PRECOMPUTED (nbr_id, cell)
-    * assignment — lets a caller that already materialized the corpus
-    * assignment (it also feeds the ADC law and the serve scan) reuse
-    * it instead of re-running the n×cells scoring pass.
+  /** [[measuredCellRank]] over PRECOMPUTED true answers `tops`
+    * (query_id, nbr_id) and a (nbr_id, cell) assignment — lets a
+    * caller that already materialized the corpus assignment (it also
+    * feeds the ADC law and the serve scan) reuse it instead of
+    * re-running the n×cells scoring pass.
     */
   private[ann] def measuredCellRankFromCells(tops: DataFrame, nbrCell: DataFrame,
                                              sampleQueries: DataFrame,
@@ -399,36 +356,12 @@ object Pq {
     if (row.isNullAt(0)) 0 else row.getInt(0)
   }
 
-  /** The in-cell half: worst ADC rank of any sampled true top-k
-    * answer among the `nprobe` probed cells' candidates — the TunePq
-    * `neededIvf` law as a library function, for sizing `rerank` once
-    * `nprobe` is chosen. Every sampled answer is inside the probed
-    * set whenever `nprobe ≥` [[measuredCellRank]] (the caller's
-    * contract — [[ivfPqTopKAuto]] guarantees it by construction).
-    */
-  def measuredProbeRank(corpus: DataFrame, sampleQueries: DataFrame,
-                        centroids: DataFrame, codebooks: DataFrame,
-                        k: Int, m: Int, ksub: Int, nprobe: Int): Int =
-    measuredProbeRankFrom(
-      Ann.bruteForceTopK(corpus, sampleQueries, k).select(col("query_id"), col("nbr_id")),
-      corpus, sampleQueries, centroids, codebooks, m, ksub, nprobe)
-
-  private[ann] def measuredProbeRankFrom(tops: DataFrame, corpus: DataFrame,
-                                         sampleQueries: DataFrame,
-                                         centroids: DataFrame, codebooks: DataFrame,
-                                         m: Int, ksub: Int, nprobe: Int): Int =
-    measuredProbeRankFromAssigned(tops, Ann.ivfAssignments(corpus, centroids),
-      sampleQueries, centroids, codebooks, m, ksub, nprobe)
-
-  /** [[measuredProbeRankFrom]] over a PRECOMPUTED (cell, id, vec,
-    * nrm) assignment (the [[Ann.ivfAssignments]] shape) — the
-    * assignment-reuse twin of [[measuredCellRankFromCells]].
-    */
-  /** The encoded stage-1 scan relation both the ADC law and the
-    * accepted-arm serve read: (cell, nbr_id, codes, cnorm) from a
-    * precomputed assignment. The repartition pins PqAssign map-side
-    * (the pqTopK deferral note) and shuffles only the compressed
-    * codes relation.
+  /** The encoded stage-1 scan relation of the IVF·PQ paths (in
+    * [[ivfPqTopKAuto]], both the ADC law and the accepted-arm serve
+    * read it): (cell, nbr_id, codes, cnorm) from a precomputed
+    * [[Ann.ivfAssignments]] assignment. The repartition pins PqAssign
+    * map-side (the encodedCorpus deferral note) and shuffles only the
+    * compressed codes relation.
     */
   private def encodedFromAssigned(assigned: DataFrame, b: PqBooks): DataFrame =
     assigned
@@ -436,38 +369,6 @@ object Pq {
         PqAssign(col("vec"), b.arr, b.present, b.m, b.ksub, b.dsub).as("codes"),
         col("nrm").as("cnorm"))
       .repartition(shufflePartitions(assigned))
-
-  private[ann] def measuredProbeRankFromAssigned(tops: DataFrame, assigned: DataFrame,
-                                                 sampleQueries: DataFrame,
-                                                 centroids: DataFrame, codebooks: DataFrame,
-                                                 m: Int, ksub: Int, nprobe: Int): Int = {
-    val b = collectBooks(codebooks, m, ksub)
-    measuredProbeRankFromCIdx(tops, encodedFromAssigned(assigned, b), sampleQueries,
-      centroids, b, nprobe)
-  }
-
-  /** [[measuredProbeRankFromAssigned]] over an ALREADY-ENCODED (and
-    * possibly persisted) stage-1 relation — the encode-once entry the
-    * measured auto dispatch uses so the corpus is PQ-encoded and
-    * shuffled exactly once across the ADC law and the serve scan.
-    */
-  private def measuredProbeRankFromCIdx(tops: DataFrame, cIdx: DataFrame,
-                                        sampleQueries: DataFrame,
-                                        centroids: DataFrame, b: PqBooks,
-                                        nprobe: Int): Int = {
-    val qIdx = Ann.assignN(sampleQueries, centroids, nprobe, "query_id", "qvec", "qnorm")
-      .select(col("query_id"), col("cell"),
-        PqLut(col("qvec"), b.arr, b.present, b.m, b.ksub, b.dsub).as("lut"))
-    val row = cIdx.join(broadcast(qIdx), Seq("cell"))
-      .filter(col("query_id") =!= col("nbr_id"))
-      .withColumn("qsim", PqAdc(col("codes"), col("lut")) / col("cnorm"))
-      .withColumn("r", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("query_id"))
-          .orderBy(col("qsim").desc, col("nbr_id").asc)))
-      .join(broadcast(tops), Seq("query_id", "nbr_id"))
-      .agg(max(col("r"))).head()
-    if (row.isNullAt(0)) 0 else row.getInt(0)
-  }
 
   /** Fully-measured IVF·PQ auto dispatch — [[pqTopKAuto]]'s recipe
     * applied to BOTH index dials instead of taking `nprobe` as a
@@ -478,8 +379,8 @@ object Pq {
     * margined depth exceeds `probeFrac` of the cells (the coarse
     * quantizer does not separate this corpus — probing most cells is
     * a worse brute force); then (2) size `rerank` from the worst
-    * in-cell ADC rank at that depth ([[measuredProbeRank]],
-    * ×marginX, floor 16), refusing when the budget exceeds
+    * in-cell ADC rank at that depth ([[measuredRank]] over the probed
+    * cells, ×marginX, floor 16), refusing when the budget exceeds
     * `budgetFrac` of the corpus (the a7 rule: ADC error displaces
     * candidates by whole percents on structureless data).
     *
@@ -544,14 +445,16 @@ object Pq {
     val b = collectBooks(codebooks, m, ksub)
     val cIdx = encodedFromAssigned(asg, b)
       .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    val adcNeeded = measuredProbeRankFromCIdx(tops, cIdx, sample, centroids, b, nprobe)
+    val adcNeeded = measuredRank(
+      scored(cIdx, queryLuts(sample, b, Some(centroids -> nprobe)), Seq("cell")), tops)
     val rerank = math.max(16, marginX * adcNeeded)
     if (rerank <= (budgetFrac * n).toLong)
       // rerank vectors come from the persisted assignment (id, vec,
       // nrm — the same fnorm expression the corpus projection would
       // recompute), so the serve plan touches no third corpus scan
-      ivfPqTopKFromCIdx(cIdx, asg.select(col("id"), col("vec"), col("nrm")),
-        queries, centroids, b, k, nprobe, rerank)
+      rerankFromVecs(adcStage(scored(cIdx,
+          queryLuts(queries, b, Some(centroids -> nprobe)), Seq("cell")), rerank),
+        asg.select(col("id"), col("vec"), col("nrm")), queries, k)
     else {
       asg.unpersist(); cIdx.unpersist()
       Ann.bruteForceTopK(corpus, queries, k)
@@ -569,42 +472,12 @@ object Pq {
     */
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, centroids: DataFrame,
                 codebooks: DataFrame, k: Int, m: Int, ksub: Int,
-                nprobe: Int = 2, rerank: Int = 64): DataFrame =
-    ivfPqTopKFromAssigned(Ann.ivfAssignments(corpus, centroids), corpus,
-      queries, centroids, codebooks, k, m, ksub, nprobe, rerank)
-
-  /** [[ivfPqTopK]] over a PRECOMPUTED assignment (the
-    * [[Ann.ivfAssignments]] shape) — the assignment-reuse entry the
-    * measured auto dispatch serves through, so the corpus is scored
-    * against the centroids exactly once per call chain.
-    */
-  private[ann] def ivfPqTopKFromAssigned(assigned: DataFrame, corpus: DataFrame,
-                                         queries: DataFrame, centroids: DataFrame,
-                                         codebooks: DataFrame, k: Int, m: Int,
-                                         ksub: Int, nprobe: Int, rerank: Int): DataFrame = {
+                nprobe: Int = 2, rerank: Int = 64): DataFrame = {
     val b = collectBooks(codebooks, m, ksub)
-    rerankStage(adcStage(encodedFromAssigned(assigned, b),
-      probeLuts(queries, centroids, b, nprobe), rerank, joinKeys = Seq("cell")),
+    rerankStage(adcStage(scored(encodedFromAssigned(Ann.ivfAssignments(corpus, centroids), b),
+        queryLuts(queries, b, Some(centroids -> nprobe)), Seq("cell")), rerank),
       corpus, queries, k)
   }
-
-  // per-query probe luts: the nprobe nearest cells with the baked
-  // ADC lookup table — the qIdx side of every in-memory probe join
-  private def probeLuts(queries: DataFrame, centroids: DataFrame, b: PqBooks,
-                        nprobe: Int): DataFrame =
-    Ann.assignN(queries, centroids, nprobe, "query_id", "qvec", "qnorm")
-      .select(col("query_id"), col("cell"),
-        PqLut(col("qvec"), b.arr, b.present, b.m, b.ksub, b.dsub).as("lut"))
-
-  /** [[ivfPqTopKFromAssigned]] over an ALREADY-ENCODED stage-1
-    * relation plus an explicit rerank vector source — the
-    * encode-once serve entry of the measured auto dispatch.
-    */
-  private def ivfPqTopKFromCIdx(cIdx: DataFrame, vecs: DataFrame, queries: DataFrame,
-                                centroids: DataFrame, b: PqBooks, k: Int,
-                                nprobe: Int, rerank: Int): DataFrame =
-    rerankFromVecs(adcStage(cIdx, probeLuts(queries, centroids, b, nprobe),
-      rerank, joinKeys = Seq("cell")), vecs, queries, k)
 
   /** Persist an IVF·PQ index: `<prefix>_centroids` + `<prefix>_books`
     * (both broadcast-tiny), `<prefix>_codes` (cell, id, codes:
@@ -707,55 +580,49 @@ object Pq {
     * and the exact re-rank restores exact output under the same
     * budget. The `greatest(…, 1e-12)` floor keeps a degenerate
     * all-hole candidate finite (it ranks arbitrarily, burns one
-    * rerank slot, and exact re-rank disposes of it).
+    * rerank slot, and exact re-rank disposes of it). The scored scan
+    * is [[indexedScored]], which the stored ADC law reads too.
     */
   def ivfPqTopKIndexed(spark: SparkSession, tablePrefix: String, queries: DataFrame,
                        k: Int, m: Int, ksub: Int, nprobe: Int = 2,
-                       rerank: Int = 64): DataFrame = {
-    val centroids = spark.table(s"${tablePrefix}_centroids")
+                       rerank: Int = 64): DataFrame =
+    rerankFromVecs(adcStage(indexedScored(spark, tablePrefix, queries, m, ksub, nprobe), rerank),
+      spark.table(s"${tablePrefix}_vecs").select(col("id"), col("vec"), col("nrm")),
+      queries, k)
+
+  // the stored index as the packed serving scan reads it: the codes
+  // table probed at `nprobe` cells, ranked by the recon-norm quantized
+  // cosine. Serving and the stored ADC law share this ONE read of the
+  // centroids, books and codes tables, so a law stored next to the
+  // index budgets precisely the scan that will consume it.
+  private def indexedScored(spark: SparkSession, tablePrefix: String, queries: DataFrame,
+                            m: Int, ksub: Int, nprobe: Int): DataFrame = {
     val b = collectBooks(spark.table(s"${tablePrefix}_books"), m, ksub)
     val cn2 = typedLit(PqCodec.codeNorms(b.arr, b.dsub).toSeq)
     val cIdx = spark.table(s"${tablePrefix}_codes")
       .select(col("cell"), col("id").as("nbr_id"), col("codes"))
-    val qIdx = Ann.assignN(queries, centroids, nprobe, "query_id", "qvec", "qnorm")
-      .select(col("query_id"), col("cell"),
-        PqLut(col("qvec"), b.arr, b.present, b.m, b.ksub, b.dsub).as("lut"))
-    val vecs = spark.table(s"${tablePrefix}_vecs")
-      .select(col("id"), col("vec"), col("nrm"))
-    val qsim = PqAdcPacked(col("codes"), col("lut"), b.m, b.ksub) /
-      sqrt(greatest(PqAdcPacked(col("codes"), cn2, b.m, b.ksub), lit(1e-12)))
-    rerankFromVecs(adcStage(cIdx, qIdx, rerank, joinKeys = Seq("cell"), qsim = qsim),
-      vecs, queries, k)
+    scored(cIdx,
+      queryLuts(queries, b, Some(spark.table(s"${tablePrefix}_centroids") -> nprobe)),
+      Seq("cell"),
+      PqAdcPacked(col("codes"), col("lut"), b.m, b.ksub) /
+        sqrt(greatest(PqAdcPacked(col("codes"), cn2, b.m, b.ksub), lit(1e-12))))
   }
 
-  /** [[measuredProbeRankFrom]] evaluated against the PERSISTED index
-    * with the exact ranking [[ivfPqTopKIndexed]] serves with — packed
-    * codes, reconstructed norms, the stored tables themselves — so a
-    * law stored next to the index budgets precisely the scan that
-    * will consume it, not an in-memory approximation of it.
+  /** The build-time measurement sample the stored laws are derived
+    * from: `sampleN` stored vectors in deterministic xxhash64(id)
+    * order — spread across the whole id range, NOT the smallest ids.
+    * An id-prefix sample measures whatever cohort happens to occupy
+    * the low ids (in an append-ordered corpus, the oldest batch) and
+    * its worst-case ranks transfer badly to population queries; the
+    * hash order is id-uniform by construction, deterministic across
+    * runs, and costs one bounded TopK over the vecs table. Exposed so
+    * audits can serve the EXACT sampled vectors the laws measured
+    * (where the stored-law contract promises exactness, not just
+    * margin coverage).
     */
-  private[ann] def measuredIndexRankFrom(spark: SparkSession, tablePrefix: String,
-                                         tops: DataFrame, sample: DataFrame,
-                                         m: Int, ksub: Int, nprobe: Int): Int = {
-    val centroids = spark.table(s"${tablePrefix}_centroids")
-    val b = collectBooks(spark.table(s"${tablePrefix}_books"), m, ksub)
-    val cn2 = typedLit(PqCodec.codeNorms(b.arr, b.dsub).toSeq)
-    val cIdx = spark.table(s"${tablePrefix}_codes")
-      .select(col("cell"), col("id").as("nbr_id"), col("codes"))
-    val qIdx = Ann.assignN(sample, centroids, nprobe, "query_id", "qvec", "qnorm")
-      .select(col("query_id"), col("cell"),
-        PqLut(col("qvec"), b.arr, b.present, b.m, b.ksub, b.dsub).as("lut"))
-    val row = cIdx.join(broadcast(qIdx), Seq("cell"))
-      .filter(col("query_id") =!= col("nbr_id"))
-      .withColumn("qsim", PqAdcPacked(col("codes"), col("lut"), b.m, b.ksub) /
-        sqrt(greatest(PqAdcPacked(col("codes"), cn2, b.m, b.ksub), lit(1e-12))))
-      .withColumn("r", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("query_id"))
-          .orderBy(col("qsim").desc, col("nbr_id").asc)))
-      .join(broadcast(tops), Seq("query_id", "nbr_id"))
-      .agg(max(col("r"))).head()
-    if (row.isNullAt(0)) 0 else row.getInt(0)
-  }
+  def lawsSample(spark: SparkSession, tablePrefix: String, sampleN: Int): DataFrame =
+    spark.table(s"${tablePrefix}_vecs").select(col("id"), col("vec"))
+      .orderBy(xxhash64(col("id")), col("id")).limit(sampleN)
 
   /** Measure BOTH dispatch laws against a persisted [[saveIvfPqIndex]]
     * index and store them beside it as `<prefix>_laws` (one row:
@@ -766,8 +633,8 @@ object Pq {
     * tiny metadata reads. The sample is the `sampleN` smallest-id
     * stored vectors self-queried at `k = measureK`; the ADC law is
     * measured over the STORED packed tables with the recon-norm
-    * ranking serving actually uses ([[measuredIndexRankFrom]]), not
-    * an in-memory stand-in. The row also persists the DIAL the ADC
+    * ranking serving actually uses ([[indexedScored]]), not an
+    * in-memory stand-in. The row also persists the DIAL the ADC
     * law was measured at (`nprobe = marginX · cell_rank`, capped) —
     * serving probes at exactly that stored dial, so a serve-time
     * margin choice can never probe cells the stored ADC law did not
@@ -785,22 +652,6 @@ object Pq {
     * derived table (dropped on build/drop), and the fingerprint
     * check backstops any laws table that escapes that lifecycle.
     */
-  /** The build-time measurement sample the stored laws are derived
-    * from: `sampleN` stored vectors in deterministic xxhash64(id)
-    * order — spread across the whole id range, NOT the smallest ids.
-    * An id-prefix sample measures whatever cohort happens to occupy
-    * the low ids (in an append-ordered corpus, the oldest batch) and
-    * its worst-case ranks transfer badly to population queries; the
-    * hash order is id-uniform by construction, deterministic across
-    * runs, and costs one bounded TopK over the vecs table. Exposed so
-    * audits can serve the EXACT sampled vectors the laws measured
-    * (where the stored-law contract promises exactness, not just
-    * margin coverage).
-    */
-  def lawsSample(spark: SparkSession, tablePrefix: String, sampleN: Int): DataFrame =
-    spark.table(s"${tablePrefix}_vecs").select(col("id"), col("vec"))
-      .orderBy(xxhash64(col("id")), col("id")).limit(sampleN)
-
   def saveIvfPqLaws(spark: SparkSession, tablePrefix: String, measureK: Int,
                     m: Int, ksub: Int, sampleN: Int = 32, marginX: Int = 2): Unit = {
     val corpus = spark.table(s"${tablePrefix}_vecs").select(col("id"), col("vec"))
@@ -833,7 +684,7 @@ object Pq {
     // too) touches only <prefix>_laws, which the ADC measurement
     // never reads — overlap the two
     val (adcNeeded, _) = graft.core.Par.par2(
-      measuredIndexRankFrom(spark, tablePrefix, tops, sample, m, ksub, nprobe), {
+      measuredRank(indexedScored(spark, tablePrefix, sample, m, ksub, nprobe), tops), {
         spark.sql(s"DROP TABLE IF EXISTS ${tablePrefix}_laws")
         graft.index.StoredIndex.reclaimLocation(spark, s"${tablePrefix}_laws")
       })
@@ -899,31 +750,69 @@ object Pq {
       ivfPqTopKIndexed(spark, tablePrefix, queries, k, m, ksub, nprobe, rerank)
   }
 
-  // stage 1: ADC-score the (broadcast query × candidate) product —
-  // equi-keyed on `joinKeys` when probing cells, the full product
-  // when scanning — and keep the top `rerank` ids per query with the
-  // bounded TopKAgg (map-side combine; ≤rerank rows per query per
-  // partition cross the shuffle, never the scored product). `qsim` is
-  // the post-join scoring expression: the default reads a stored
-  // cnorm (in-memory paths, where norms are free); the packed indexed
-  // path passes the recon-norm form instead.
-  private def adcStage(cIdx: DataFrame, qIdx: DataFrame, rerank: Int,
-                       joinKeys: Seq[String] = Nil,
-                       qsim: Column = PqAdc(col("codes"), col("lut")) / col("cnorm"))
+  // the query side of every ADC join: each query's baked lookup
+  // table, (query_id, lut) for a full scan or, given `probe =
+  // Some(centroids -> nprobe)`, (query_id, cell, lut) over its nprobe
+  // nearest cells ([[Ann.assignN]])
+  private def queryLuts(queries: DataFrame, b: PqBooks,
+                        probe: Option[(DataFrame, Int)] = None): DataFrame = {
+    def lut(v: Column) = PqLut(v, b.arr, b.present, b.m, b.ksub, b.dsub).as("lut")
+    probe match {
+      case None => queries.select(col("id").as("query_id"), lut(col("vec")))
+      case Some((centroids, nprobe)) =>
+        Ann.assignN(queries, centroids, nprobe, "query_id", "qvec", "qnorm")
+          .select(col("query_id"), col("cell"), lut(col("qvec")))
+    }
+  }
+
+  // the scored-candidate join every ADC consumer reads: the (broadcast
+  // query × candidate) product — equi-keyed on `joinKeys` when probing
+  // cells, the full product when scanning — with its ADC score `qsim`.
+  // The default reads a stored cnorm (in-memory paths, where norms are
+  // free); the packed indexed path passes the recon-norm form instead.
+  // (qnorm divides identically on every candidate of a query — it
+  // cannot change the per-query ADC ranking, so scoring skips it.)
+  private def scored(cIdx: DataFrame, qIdx: DataFrame, joinKeys: Seq[String] = Nil,
+                     qsim: Column = PqAdc(col("codes"), col("lut")) / col("cnorm"))
       : DataFrame = {
     val q = broadcast(qIdx.select(
       (col("query_id") +: joinKeys.map(col)) :+ col("lut"): _*))
     val joined =
       if (joinKeys.isEmpty) cIdx.join(q, col("query_id") =!= col("nbr_id"))
       else cIdx.join(q, joinKeys).filter(col("query_id") =!= col("nbr_id"))
-    joined
-      .withColumn("qsim", qsim)
+    joined.withColumn("qsim", qsim)
+  }
+
+  // stage 1 of a serve: keep the top `rerank` ids per query with the
+  // bounded TopKAgg (map-side combine; ≤rerank rows per query per
+  // partition cross the shuffle, never the scored product)
+  private def adcStage(scored: DataFrame, rerank: Int): DataFrame =
+    scored
       .groupBy(col("query_id"))
       .agg(graft.functions.TopKAgg.distinct(col("qsim"), col("nbr_id"), rerank).as("top"))
       .select(col("query_id"), explode(col("top.tag")).as("nbr_id"))
+
+  /** The ADC half of every measured dispatch law: the worst rank, in
+    * (qsim desc, nbr_id asc) order over the scored candidates, of any
+    * true top-k answer in `tops` (query_id, nbr_id) — the TunePq/SpotPq
+    * law. Over the full scan it budgets [[pqTopKAuto]]'s rerank; over
+    * the probed cells, [[ivfPqTopKAuto]]'s; over [[indexedScored]], the
+    * stored law of [[saveIvfPqLaws]]. The ranked relation stays
+    * distributed; only the 1-row max is collected.
+    */
+  private def measuredRank(scored: DataFrame, tops: DataFrame): Int = {
+    val row = scored
+      .withColumn("r", row_number().over(
+        org.apache.spark.sql.expressions.Window.partitionBy(col("query_id"))
+          .orderBy(col("qsim").desc, col("nbr_id").asc)))
+      .join(broadcast(tops), Seq("query_id", "nbr_id"))
+      .agg(max(col("r"))).head()
+    // empty sample/corpus → no true pairs → max is null; 0 keeps the
+    // caller's dispatch well-defined (budget floors at 16) instead of
+    // NPE-ing the one search API that would otherwise not return
+    // empty gracefully
+    if (row.isNullAt(0)) 0 else row.getInt(0)
   }
-  // (qnorm divides identically on every candidate of a query — it
-  // cannot change the per-query ADC ranking, so stage 1 skips it.)
 
   // stage 2: bare (query, nbr) id pairs pull full-precision vectors
   // back in; exact cosine; final top-k — byte-identical scoring to

@@ -266,70 +266,12 @@ object WordShingles {
 /** All `tables` signed-random-hyperplane sketches of a float vector
   * in one pass: table t's planes are `planes × dim` Gaussians drawn
   * from `Random(seed + t)` in plane-major order, bit p of sketch t
-  * is the sign of plane p's projection.
-  *
-  * The HOF formulation (`aggregate(zip_with(vec, array(lit…)))` per
-  * plane per table) evaluates its lambdas interpreted per element —
-  * tables·planes·dim boxed calls per row. This is the same math as
-  * one compiled loop over a precomputed plane matrix.
+  * is the sign of plane p's projection — the `probes = 0` emission
+  * of [[HyperplaneProbeSketches]], one sketch per table.
   */
-case class HyperplaneSketches(child: Expression, dim: Int, planes: Int,
-                              tables: Int, seed: Long)
-    extends UnaryExpression with CodegenFallback {
-
-  require(planes >= 1 && planes <= 63, "planes must be in [1, 63]")
-  require(tables >= 1, "tables must be >= 1")
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"hyperplane sketches expect array<float>, got ${t.simpleString}")
-  }
-
-  // plane matrix per table, plane-major — the draw order is part of
-  // the contract: tuned (planes, tables, seed) configurations (and
-  // tools/TuneD5) depend on it
-  @transient private lazy val planeMats: Array[Array[Double]] =
-    Array.tabulate(tables) { t =>
-      val rnd = new scala.util.Random(seed + t)
-      Array.fill(planes * dim)(rnd.nextGaussian())
-    }
-
-  override protected def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val n   = math.min(arr.numElements(), dim)
-    val out = new Array[Long](tables)
-    var t = 0
-    while (t < tables) {
-      val mat  = planeMats(t)
-      var bits = 0L
-      var p    = 0
-      while (p < planes) {
-        val off = p * dim
-        var dot = 0.0
-        var k   = 0
-        while (k < n) {
-          if (!arr.isNullAt(k)) dot += arr.getFloat(k).toDouble * mat(off + k)
-          k += 1
-        }
-        if (dot >= 0) bits |= (1L << p)
-        p += 1
-      }
-      out(t) = bits
-      t += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): HyperplaneSketches =
-    copy(child = newChild)
-}
-
 object HyperplaneSketches {
   def apply(vec: Column, dim: Int, planes: Int, tables: Int, seed: Long): Column =
-    Bridge.column(HyperplaneSketches(Bridge.expression(vec), dim, planes, tables, seed))
+    HyperplaneProbeSketches(vec, dim, planes, tables, seed, probes = 0)
 }
 
 /** Margin-guided multi-probe hyperplane sketches (Lv et al., VLDB'07
@@ -347,10 +289,11 @@ object HyperplaneSketches {
   *
   * Output layout (contract, relied on by `Ann` probe joins): length
   * `tables × (probes+1)`; entry `t·(probes+1)` is table t's base
-  * sketch (bit-identical to [[HyperplaneSketches]] at the same
-  * (dim, planes, tables, seed) — same `Random(seed + t)` plane-major
-  * draw), followed by its `probes` flips ordered by ascending
-  * |projection|, ties to the lower plane index. A vector emits at
+  * sketch (the same at every `probes`: table t's planes are `planes ×
+  * dim` Gaussians drawn from `Random(seed + t)` in plane-major order,
+  * bit p of the sketch is the sign of plane p's projection), followed
+  * by its `probes` flips ordered by ascending |projection|, ties to
+  * the lower plane index. A vector emits at
   * most ONE entry per (table, bucket): distinct single-bit flips are
   * distinct buckets, so self-collisions across a table's entries are
   * impossible — the pair-join relies on this to subtract self-matches
@@ -374,8 +317,10 @@ case class HyperplaneProbeSketches(child: Expression, dim: Int, planes: Int,
       s"hyperplane probe sketches expect array<float>, got ${t.simpleString}")
   }
 
-  // identical draw to HyperplaneSketches — the base buckets of the two
-  // expressions MUST match so mixed base/probe joins collide correctly
+  // plane matrix per table, plane-major — the draw order is part of
+  // the contract: tuned (planes, tables, seed) configurations depend
+  // on it, and base buckets must match across `probes` so an index
+  // and a batch sketched at different widths still collide
   @transient private lazy val planeMats: Array[Array[Double]] =
     Array.tabulate(tables) { t =>
       val rnd = new scala.util.Random(seed + t)
@@ -423,7 +368,7 @@ case class HyperplaneProbeSketches(child: Expression, dim: Int, planes: Int,
         // `best` stays -1; fall through to the lowest untaken plane so
         // a degenerate vector degrades (arbitrary-but-deterministic
         // probes, exact sim filter still decides) like the base
-        // HyperplaneSketches treats NaN (dot >= 0 is just false) —
+        // sketch treats NaN (dot >= 0 is just false) —
         // instead of aborting the whole job on taken(-1)
         if (best < 0) {
           p = 0

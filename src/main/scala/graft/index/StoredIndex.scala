@@ -178,7 +178,8 @@ case class MinHashBandIndex(table: String, idCol: String, textCol: String,
   * shared contract: one table of (id, table, bucket) widened-emission
   * rows, bucketed on `bucket`. Sketches are deterministic in the
   * frozen (dim, planes, tables, seed, probes). Serving path:
-  * [[graft.ann.Ann.cosineNearDupPairsLSHIndexedMP]].
+  * [[graft.ann.Ann.cosineNearDupPairsLSHIndexed]] at the same
+  * (dim, planes, tables, seed, probes).
   */
 case class ProbeSketchIndex(table: String, dim: Int, planes: Int = 6,
                             nTables: Int = 16, seed: Long = 42L, probes: Int = 2,
@@ -189,12 +190,12 @@ case class ProbeSketchIndex(table: String, dim: Int, planes: Int = 6,
   override def build(corpus: DataFrame): Unit = {
     resetStorage(corpus.sparkSession)
     Ann.saveSketchIndex(
-      Ann.probeSketchIndex(corpus, dim, planes, nTables, seed, probes),
+      Ann.sketchIndex(corpus, dim, planes, nTables, seed, probes),
       table, nBuckets, append = false)
   }
   override def append(batch: DataFrame): Unit =
     Ann.saveSketchIndex(
-      Ann.probeSketchIndex(batch, dim, planes, nTables, seed, probes),
+      Ann.sketchIndex(batch, dim, planes, nTables, seed, probes),
       table, nBuckets, append = true)
 }
 

@@ -47,7 +47,7 @@ object CorpusOps {
   def v5EpsGraph(s: SparkSession, d: String): DataFrame =
     Ann.cosineNearDupPairsLSH(
       t(s, d, "embeddings").select(col("vec_id").as("id"), col("embedding").as("vec")),
-      minCos = 0.45, dim = 64, planes = 6, tables = 48, seed = 42L)
+      minCos = 0.45, dim = 64, planes = 6, tables = 48, seed = 42L, probes = 0)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- dedup ----
@@ -154,10 +154,10 @@ object CorpusOps {
     },
 
     // LSH-blocked near-dup pairs: hyperplane-sketch bucket self-join,
-    // never an all-pairs product. (planes=6, tables=48, seed=42) is
-    // tuned (tools/TuneD5.scala) to recall 1.0 against the exact ≥τ
-    // pair set at sf0.001/0.01/0.1, so the same DuckDB all-pairs
-    // oracle hash gates it; the all-pairs form survives only as the
+    // never an all-pairs product. (planes=6, tables=48, seed=42,
+    // single-probe: probes=0) is tuned to recall 1.0 against the
+    // exact ≥τ pair set at sf0.001/0.01/0.1, so the same DuckDB
+    // all-pairs oracle hash gates it; the all-pairs form survives only as the
     // recall spec's ground truth (AnnSpec). Measured recall 1.0 is
     // SCALE-CONTINGENT: per-pair miss P = (1−p^planes)^tables, so
     // expected misses grow with the true-pair count (sf1 measures
@@ -167,7 +167,7 @@ object CorpusOps {
     "d5_embed_neardup" -> { (s, d) =>
       Ann.cosineNearDupPairsLSH(
           t(s, d, "embeddings").select(col("vec_id").as("id"), col("embedding").as("vec")),
-          minCos = 0.45, dim = 64, planes = 6, tables = 48, seed = 42L)
+          minCos = 0.45, dim = 64, planes = 6, tables = 48, seed = 42L, probes = 0)
         .select(col("a"), col("b"), round(col("sim"), 6).as("sim"))
         .orderBy(col("a"), col("b"))
     },
@@ -400,8 +400,9 @@ object CorpusOps {
     // analytic sizing. This is the config a user who types nothing
     // gets at ANY scale; the same exact all-pairs oracle as d5 gates
     // it, so the hash match proves the sizing's realized recall is
-    // 1.0 here, not just expected. (probes = 0 forces the classic
-    // single-probe auto path; d18 gates the mp form at planes = 6.)
+    // 1.0 here, not just expected. (Ann.cosineNearDupPairsLSH with
+    // probes = 0 forces the classic single-probe auto path; d18 gates
+    // the same multi-probe form at planes = 6.)
     "d17_embed_neardup_auto" -> { (s, d) =>
       Ann.cosineNearDupPairsLSH(
           t(s, d, "embeddings").select(col("vec_id").as("id"), col("embedding").as("vec")),
@@ -417,30 +418,34 @@ object CorpusOps {
     // — and the MEASURED per-table catch rate (mpCatchRate on the
     // same deterministic hash sample as d17's sizing) feeds the same
     // recall-budget law, landing ~4× fewer tables than d17's
-    // single-probe sizing at this τ. The identical exact all-pairs
+    // single-probe sizing at this τ. It is Ann.cosineNearDupPairsLSH
+    // un-pinned at planes = 6 with its default probes = 2; d5 is the
+    // same join pinned single-probe. The identical exact all-pairs
     // oracle gates it: a hash match proves the smaller index still
     // realizes recall 1.0 on this corpus, not just expects it.
     "d18_embed_neardup_mp" -> { (s, d) =>
-      Ann.cosineNearDupPairsLSHMP(
+      Ann.cosineNearDupPairsLSH(
           t(s, d, "embeddings").select(col("vec_id").as("id"), col("embedding").as("vec")),
-          minCos = 0.45, dim = 64)
+          minCos = 0.45, dim = 64, planes = 6)
         .select(col("a"), col("b"), round(col("sim"), 6).as("sim"))
         .orderBy(col("a"), col("b"))
     },
 
     // Incremental near-dup against a STORED multi-probe index (the
-    // per-batch production loop): the first 80% of ids (by max-id
-    // integer cut — deterministic, replayed by the oracle) are the
-    // indexed corpus, the rest arrive as the incoming batch. Nothing
-    // existing is re-sketched; only candidate-touched existing
-    // vectors are read for scoring; every output pair involves a new
-    // vector (b > cut, since new ids sort last). The exact all-pairs
-    // oracle restricted to new-touching pairs gates the whole
-    // dataflow — index build, widened-emission collision join,
-    // semi-join vector fetch, exact verify. At 100 TB this is the
-    // shape that matters: a growing corpus pays per batch only
-    // collisions + a bounded semi-join, and the persisted index is
-    // ~2–3× smaller than the single-probe one (6–9× fewer tables ×
+    // per-batch production loop: Ann.sketchIndex builds the index and
+    // Ann.cosineNearDupPairsLSHIndexed probes it, both at the same
+    // pinned planes = 6, tables = 16, probes = 2): the first 80% of
+    // ids (by max-id integer cut — deterministic, replayed by the
+    // oracle) are the indexed corpus, the rest arrive as the
+    // incoming batch. Nothing existing is re-sketched; only
+    // candidate-touched existing vectors are read for scoring; every
+    // output pair involves a new vector (b > cut, since new ids sort
+    // last). The exact all-pairs oracle restricted to new-touching
+    // pairs gates the whole dataflow — index build, widened-emission
+    // collision join, semi-join vector fetch, exact verify. At 100 TB
+    // this is the shape that matters: a growing corpus pays per batch
+    // only collisions + a bounded semi-join, and the persisted index
+    // is ~2–3× smaller than the single-probe one (6–9× fewer tables ×
     // width 3).
     "d19_embed_neardup_incr" -> { (s, d) =>
       val vecs = t(s, d, "embeddings")
@@ -450,9 +455,9 @@ object CorpusOps {
       val cut = vecs.agg(max(col("id"))).head.getLong(0) * 4 / 5
       val existing = vecs.filter(col("id") <= cut)
       val incoming = vecs.filter(col("id") > cut)
-      val idx = Ann.probeSketchIndex(existing, dim = 64, planes = 6,
+      val idx = Ann.sketchIndex(existing, dim = 64, planes = 6,
         tables = 16, seed = 42L, probes = 2)
-      Ann.cosineNearDupPairsLSHIndexedMP(idx, existing, incoming,
+      Ann.cosineNearDupPairsLSHIndexed(idx, existing, incoming,
           minCos = 0.45, dim = 64, planes = 6, tables = 16, probes = 2, seed = 42L)
         .select(col("a"), col("b"), round(col("sim"), 6).as("sim"))
         .orderBy(col("a"), col("b"))

@@ -106,7 +106,7 @@ object SpotSf1 {
       // config to outgrow.
       val exact = Ann.cosinePairsExact(vecs, minCos = 0.45).localCheckpoint(eager = false)
       val lsh48 = Ann.cosineNearDupPairsLSH(vecs, minCos = 0.45, dim = 64,
-        planes = 6, tables = 48, seed = 42L).localCheckpoint(eager = false)
+        planes = 6, tables = 48, seed = 42L, probes = 0).localCheckpoint(eager = false)
       val (falsePairs, missed48, both48) = diff(lsh48, exact, Seq("a", "b", "sim"))
       check("d5_lsh48_precision_exact")(falsePairs == 0,
         s"pairs=$both48 falsePairs=$falsePairs (sim compared bitwise)")
@@ -121,7 +121,7 @@ object SpotSf1 {
         f"missed=$missed48 predicted=$predicted%.1f ±$tol%.1f recall=${both48.toDouble / (both48 + missed48)}%.4f")
 
       val lsh = Ann.cosineNearDupPairsLSH(vecs, minCos = 0.45, dim = 64,
-        planes = 6, tables = 192, seed = 42L).localCheckpoint(eager = false)
+        planes = 6, tables = 192, seed = 42L, probes = 0).localCheckpoint(eager = false)
       val (onlyLsh, onlyExact, both) = diff(lsh, exact, Seq("a", "b", "sim"))
       check("d5_lsh_scaled_tables_exact")(onlyLsh == 0 && onlyExact == 0,
         s"pairs=$both onlyLsh=$onlyLsh missedByLsh=$onlyExact (T=192, sim bitwise)")

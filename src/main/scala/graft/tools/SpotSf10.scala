@@ -130,7 +130,7 @@ object SpotSf10 {
       // --- d5 gated config: precision exact, misses match the model ---
       t0 = System.nanoTime()
       val lsh48 = Ann.cosineNearDupPairsLSH(vecs, minCos = 0.45, dim = 64,
-        planes = 6, tables = 48, seed = 42L).localCheckpoint(eager = false)
+        planes = 6, tables = 48, seed = 42L, probes = 0).localCheckpoint(eager = false)
       val (falsePairs, missed48, both48) = diff(lsh48, exact, Seq("a", "b", "sim"))
       check("d5_lsh48_precision_exact")(falsePairs == 0,
         s"pairs=$both48 falsePairs=$falsePairs (sim compared bitwise)")
@@ -156,7 +156,7 @@ object SpotSf10 {
       println(s"INFO model_tables=$tModel (tablesForRecall(0.45, 6, $nPairs, 0.05))")
       t0 = System.nanoTime()
       val lshT = Ann.cosineNearDupPairsLSH(vecs, minCos = 0.45, dim = 64,
-        planes = 6, tables = tModel, seed = 42L).localCheckpoint(eager = false)
+        planes = 6, tables = tModel, seed = 42L, probes = 0).localCheckpoint(eager = false)
       val (onlyLsh, missedT, bothT) = diff(lshT, exact, Seq("a", "b", "sim"))
       check("d5_lsh_model_tables_exact")(onlyLsh == 0 && missedT == 0,
         f"pairs=$bothT onlyLsh=$onlyLsh missedByLsh=$missedT recall=${

@@ -166,7 +166,7 @@ object SpotTau {
         val tables = Ann.tablesForRecall(tau, planes, nPairs.toDouble, 0.01)
         t0 = System.nanoTime()
         val vol = Ann.lshCandidateVolume(planted, dim = 64, planes = planes,
-          tables = tables).collect().head
+          tables = tables, probes = 0).collect().head
         val cand = vol.getAs[Long]("candidate_volume")
         val tVol = (System.nanoTime() - t0) / 1e9
         val prune = allPairs.toDouble / cand
@@ -179,7 +179,7 @@ object SpotTau {
           f"exact/model = ${cand / model}%.3f")
         t0 = System.nanoTime()
         val lsh = Ann.cosineNearDupPairsLSH(planted, minCos = tau, dim = 64,
-          planes = planes, tables = tables).localCheckpoint(eager = false)
+          planes = planes, tables = tables, probes = 0).localCheckpoint(eager = false)
         val (onlyLsh, missed, both) = diff(lsh, exact, Seq("a", "b", "sim"))
         check(s"tau_p${planes}_exact_at_budget")(onlyLsh == 0 && missed == 0,
           f"pairs=$both only=$onlyLsh/$missed (sim bitwise) prune=${prune}%.1fx " +
@@ -198,7 +198,7 @@ object SpotTau {
         val tMp = Ann.mpAutoTables(planted, tau, dim = 64, planes = planes,
           probes = probes, maxExpectedMisses = 0.01)
         val tSingle = Ann.tablesForRecall(tau, planes, nPairs.toDouble, 0.01)
-        val mp = Ann.cosineNearDupPairsLSHMP(planted, minCos = tau, dim = 64,
+        val mp = Ann.cosineNearDupPairsLSH(planted, minCos = tau, dim = 64,
           planes = planes, tables = tMp, probes = probes).localCheckpoint(eager = false)
         val (onlyMp, missedMp, bothMp) = diff(mp, exact, Seq("a", "b", "sim"))
         println(f"INFO mp planes=$planes probes=$probes tables=$tMp " +

@@ -135,9 +135,11 @@ final class AnnSpec extends SparkTestBase {
 
     val full = Ann.cosineNearDupPairsLSH(df, minCos = 0.9, dim = dim)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val incr = Ann.cosineNearDupPairsLSHIncremental(
-        df.filter(col("id") < split), df.filter(col("id") >= split),
-        minCos = 0.9, dim = dim)
+    val existing = df.filter(col("id") < split)
+    val incoming = df.filter(col("id") >= split)
+    val incr = Ann.cosineNearDupPairsLSHIndexed(
+        Ann.sketchIndex(existing, dim, planes = 10, tables = 8, probes = 0),
+        existing, incoming, minCos = 0.9, dim = dim, planes = 10, tables = 8, probes = 0)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(incr == full.filter { case (_, b) => b >= split })
     assert(incr.nonEmpty)
@@ -158,24 +160,27 @@ final class AnnSpec extends SparkTestBase {
     val incoming = df.filter(col("id") >= split)
     val table = "sketch_index_spec"
     try {
-      Ann.saveSketchIndex(Ann.sketchIndex(existing, dim), table, nBuckets = 8)
+      Ann.saveSketchIndex(Ann.sketchIndex(existing, dim, probes = 0), table, nBuckets = 8)
       val indexed = Ann.cosineNearDupPairsLSHIndexed(
-          spark.table(table), existing, incoming, minCos = 0.9, dim = dim)
+          spark.table(table), existing, incoming, minCos = 0.9, dim = dim, probes = 0)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val recompute = Ann.cosineNearDupPairsLSHIncremental(
-          existing, incoming, minCos = 0.9, dim = dim)
+      // recompute: the full self-join at the same pinned config,
+      // restricted to new-touching pairs
+      val recompute = Ann.cosineNearDupPairsLSH(df, minCos = 0.9, dim = dim,
+          planes = 10, tables = 8, probes = 0)
+        .filter(col("b") >= split)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(indexed == recompute && indexed.nonEmpty)
 
       // the indexed plan sketches ONLY the incoming batch — in the
       // ANALYZED plan (before optimizer subtree duplication), no
-      // HyperplaneSketches computation may sit above the existing-side
+      // hyperplane-sketch computation may sit above the existing-side
       // filter; the existing buckets come from the stored table
       import org.apache.spark.sql.catalyst.plans.logical.Filter
       def sketchedOverExisting(df: org.apache.spark.sql.DataFrame): Boolean =
         df.queryExecution.analyzed.collect {
           case p if p.expressions.exists(_.exists(
-                _.isInstanceOf[graft.functions.HyperplaneSketches])) &&
+                _.isInstanceOf[graft.functions.HyperplaneProbeSketches])) &&
               p.collect { case f: Filter
                 if f.condition.toString.contains(s"< $split") => f }.nonEmpty => p
         }.nonEmpty
@@ -183,18 +188,21 @@ final class AnnSpec extends SparkTestBase {
       // truncates the analyzed plan, hiding exactly the lineage these
       // storage-property assertions inspect (the a2KnnGraph pattern)
       val indexedDf = Ann.cosineNearDupPairsLSHIndexed(
-        spark.table(table), existing, incoming, minCos = 0.9, dim = dim,
+        spark.table(table), existing, incoming, minCos = 0.9, dim = dim, probes = 0,
         checkpoint = false)
       assert(!sketchedOverExisting(indexedDf), "existing side must not be re-sketched")
       assert(indexedDf.queryExecution.analyzed.toString.contains(table))
-      // positive control: the recompute form DOES sketch the existing side
-      assert(sketchedOverExisting(Ann.cosineNearDupPairsLSHIncremental(
-        existing, incoming, minCos = 0.9, dim = dim, checkpoint = false)))
+      // positive control: an index sketched inline DOES sketch the
+      // existing side
+      assert(sketchedOverExisting(Ann.cosineNearDupPairsLSHIndexed(
+        Ann.sketchIndex(existing, dim, probes = 0), existing, incoming,
+        minCos = 0.9, dim = dim, probes = 0, checkpoint = false)))
 
       // append maintenance keeps the stored index equal to a recompute
-      Ann.saveSketchIndex(Ann.sketchIndex(incoming, dim), table, nBuckets = 8, append = true)
+      Ann.saveSketchIndex(Ann.sketchIndex(incoming, dim, probes = 0), table, nBuckets = 8,
+        append = true)
       val stored = spark.table(table)
-      val fresh = Ann.sketchIndex(df, dim)
+      val fresh = Ann.sketchIndex(df, dim, probes = 0)
       assert(stored.count() == fresh.count())
       assert(stored.exceptAll(fresh).isEmpty && fresh.exceptAll(stored).isEmpty)
     } finally spark.sql(s"DROP TABLE IF EXISTS $table")
@@ -335,13 +343,13 @@ final class AnnSpec extends SparkTestBase {
     // miniature; the guard names the measured volume and the outs
     val e = intercept[IllegalStateException] {
       Ann.cosineNearDupPairsLSH(vecs, minCos = 0.1, dim = 64, planes = 4,
-        tables = 8, maxCandidateVolume = 10L)
+        tables = 8, maxCandidateVolume = 10L, probes = 0)
     }
     assert(e.getMessage.contains("candidate volume"))
     assert(e.getMessage.contains("SemDeDup.runAuto"))
     // same config, default budget: pure plan construction, completes
     val n = Ann.cosineNearDupPairsLSH(vecs, minCos = 0.1, dim = 64, planes = 4,
-      tables = 8).count()
+      tables = 8, probes = 0).count()
     assert(n > 0)
   }
 
@@ -349,7 +357,7 @@ final class AnnSpec extends SparkTestBase {
     val (dim, planes, tables, seed, probes) = (64, 6, 5, 42L, 2)
     val width = probes + 1
     val rows = vecs.limit(50).select(col("id"),
-        graft.functions.HyperplaneSketches(col("vec"), dim, planes, tables, seed).as("base"),
+        graft.functions.HyperplaneProbeSketches(col("vec"), dim, planes, tables, seed, 0).as("base"),
         graft.functions.HyperplaneProbeSketches(col("vec"), dim, planes, tables, seed, probes).as("mp"))
       .collect()
     assert(rows.nonEmpty)
@@ -359,7 +367,8 @@ final class AnnSpec extends SparkTestBase {
       assert(mp.length == tables * width)
       (0 until tables).foreach { t =>
         val slot = mp.slice(t * width, (t + 1) * width)
-        // entry 0 is the base sketch, bit-identical to the plain expression
+        // entry 0 is the base sketch, bit-identical to the probes = 0
+        // emission — the auto join relies on this when it drops probes
         assert(slot.head == base(t), s"table $t base mismatch")
         // probes: distinct single-bit flips of the base
         slot.tail.foreach { pr =>
@@ -368,13 +377,6 @@ final class AnnSpec extends SparkTestBase {
         assert(slot.distinct.length == width, s"table $t emissions not distinct")
       }
     }
-    // probes=0 degenerates to the plain expression bit-for-bit — the
-    // auto join relies on this when the catch rate is unmeasurable
-    val degenerate = vecs.limit(10).select(
-        graft.functions.HyperplaneSketches(col("vec"), dim, planes, tables, seed).as("base"),
-        graft.functions.HyperplaneProbeSketches(col("vec"), dim, planes, tables, seed, 0).as("mp"))
-      .collect()
-    degenerate.foreach(r => assert(r.getSeq[Long](0) == r.getSeq[Long](1)))
   }
 
   test("multi-probe near-dup: recovers the exact pairs with FEWER tables than single-probe") {
@@ -393,7 +395,7 @@ final class AnnSpec extends SparkTestBase {
     val tMp     = Ann.mpAutoTables(df, minCos = 0.9, dim = dim, planes = planes, probes = 3)
     assert(tMp <= tSingle,
       s"measured-catch sizing should never exceed the analytic single-probe count ($tMp > $tSingle)")
-    val mp = Ann.cosineNearDupPairsLSHMP(df, minCos = 0.9, dim = dim,
+    val mp = Ann.cosineNearDupPairsLSH(df, minCos = 0.9, dim = dim,
         planes = planes, probes = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(exact.nonEmpty)
@@ -407,15 +409,15 @@ final class AnnSpec extends SparkTestBase {
     val df = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
     val sp = Ann.cosineNearDupPairsLSH(df, minCos = 0.45, dim = 64,
-      planes = 6, tables = 48).collect()
+      planes = 6, tables = 48, probes = 0).collect()
       .map(r => (r.getLong(0), r.getLong(1), math.rint(r.getDouble(2) * 1e6))).toSet
-    val mp = Ann.cosineNearDupPairsLSHMP(df, minCos = 0.45, dim = 64,
+    val mp = Ann.cosineNearDupPairsLSH(df, minCos = 0.45, dim = 64,
       planes = 6, probes = 2).collect()
       .map(r => (r.getLong(0), r.getLong(1), math.rint(r.getDouble(2) * 1e6))).toSet
     assert(sp.nonEmpty && mp == sp)
     // unmeasurable-catch fallback: a τ with no sampled true pairs must
     // not blow up — the auto path sizes single-probe and drops probes
-    assert(Ann.cosineNearDupPairsLSHMP(df, minCos = 0.99, dim = 64,
+    assert(Ann.cosineNearDupPairsLSH(df, minCos = 0.99, dim = 64,
       planes = 6, probes = 2).count() == 0)
   }
 
@@ -437,13 +439,13 @@ final class AnnSpec extends SparkTestBase {
       // the same bucketed persistence as the single-probe index: the
       // schema (id, table, bucket) is shared, only the emission widens
       Ann.saveSketchIndex(
-        Ann.probeSketchIndex(existing, dim, planes, tables, probes = probes),
+        Ann.sketchIndex(existing, dim, planes, tables, probes = probes),
         table, nBuckets = 8)
-      val indexed = Ann.cosineNearDupPairsLSHIndexedMP(
+      val indexed = Ann.cosineNearDupPairsLSHIndexed(
           spark.table(table), existing, incoming, minCos = 0.9, dim = dim,
           planes = planes, tables = tables, probes = probes)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val full = Ann.cosineNearDupPairsLSHMP(df, minCos = 0.9, dim = dim,
+      val full = Ann.cosineNearDupPairsLSH(df, minCos = 0.9, dim = dim,
           planes = planes, tables = tables, probes = probes)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(indexed.nonEmpty)
@@ -462,23 +464,24 @@ final class AnnSpec extends SparkTestBase {
                 if f.condition.toString.contains(s"< $split") => f }.nonEmpty => p
         }.nonEmpty
       // checkpoint = false un-truncates the lineage (a2KnnGraph pattern)
-      val indexedDf = Ann.cosineNearDupPairsLSHIndexedMP(
+      val indexedDf = Ann.cosineNearDupPairsLSHIndexed(
         spark.table(table), existing, incoming, minCos = 0.9, dim = dim,
         planes = planes, tables = tables, probes = probes, checkpoint = false)
       assert(!sketchedOverExisting(indexedDf), "existing side must not be re-sketched")
       assert(indexedDf.queryExecution.analyzed.toString.contains(table))
 
-      // probes=0 index is bit-identical to the single-probe index
-      val sp = Ann.sketchIndex(existing, dim, planes, tables)
-      val mp0 = Ann.probeSketchIndex(existing, dim, planes, tables, probes = 0)
-      assert(mp0.exceptAll(sp).isEmpty && sp.exceptAll(mp0).isEmpty)
+      // the probes=0 index is the base slots of the widened one: every
+      // single-probe row is also emitted with probes, at the same table
+      val sp = Ann.sketchIndex(existing, dim, planes, tables, probes = 0)
+      val mp = Ann.sketchIndex(existing, dim, planes, tables, probes = probes)
+      assert(sp.count() * (probes + 1) == mp.count() && sp.exceptAll(mp).isEmpty)
 
       // append maintenance: stored ≡ fresh full-corpus probe index
       Ann.saveSketchIndex(
-        Ann.probeSketchIndex(incoming, dim, planes, tables, probes = probes),
+        Ann.sketchIndex(incoming, dim, planes, tables, probes = probes),
         table, nBuckets = 8, append = true)
       val stored = spark.table(table)
-      val fresh = Ann.probeSketchIndex(df, dim, planes, tables, probes = probes)
+      val fresh = Ann.sketchIndex(df, dim, planes, tables, probes = probes)
       assert(stored.count() == fresh.count())
       assert(stored.exceptAll(fresh).isEmpty && fresh.exceptAll(stored).isEmpty)
     } finally spark.sql(s"DROP TABLE IF EXISTS $table")
@@ -495,7 +498,7 @@ final class AnnSpec extends SparkTestBase {
     val df = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
     def sketchProbes(minCos: Double): Seq[Int] = {
-      val plan = Ann.cosineNearDupPairsLSHMP(df, minCos = minCos, dim = 64,
+      val plan = Ann.cosineNearDupPairsLSH(df, minCos = minCos, dim = 64,
         planes = 6, probes = 2).queryExecution.analyzed
       plan.flatMap(_.expressions.flatMap(_.collect {
         case h: graft.functions.HyperplaneProbeSketches => h.probes
@@ -509,7 +512,7 @@ final class AnnSpec extends SparkTestBase {
     // plan degenerates to the classic single-probe join EXACTLY
     // (round-16 sf1 lesson: clamped-to-single sizing with probes kept
     // tripled d17's emission for identical output)
-    val fallbackTables = Ann.cosineNearDupPairsLSHMP(df, minCos = 0.99, dim = 64,
+    val fallbackTables = Ann.cosineNearDupPairsLSH(df, minCos = 0.99, dim = 64,
         planes = 6, probes = 2).queryExecution.analyzed
       .flatMap(_.expressions.flatMap(_.collect {
         case h: graft.functions.HyperplaneProbeSketches => h.tables
@@ -590,29 +593,10 @@ final class AnnSpec extends SparkTestBase {
     val exact = Ann.cosineNearDupPairs(mixedDf, minCos = 0.9)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(marginal.nonEmpty && exact.size >= easy.size + marginal.size)
-    val mp = Ann.cosineNearDupPairsLSHMP(mixedDf, minCos = 0.9, dim = dim,
+    val mp = Ann.cosineNearDupPairsLSH(mixedDf, minCos = 0.9, dim = dim,
         planes = planes, probes = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(mp == exact, s"auto-sized T=$tMixed missed ${(exact -- mp).size} of ${exact.size}")
-  }
-
-  test("mpCandidateVolume: exact evaluation count, vs an independent probe join") {
-    val (dim, planes, tables, seed, probes) = (64, 6, 4, 42L, 2)
-    val width = probes + 1
-    val row = Ann.mpCandidateVolume(vecs, dim, planes, tables, probes, seed).collect().head
-    val n = vecs.count()
-    assert(row.getAs[Long]("bucket_rows") == tables * width * n)
-    val sketched = vecs.select(col("id"), posexplode(
-        graft.functions.HyperplaneProbeSketches(col("vec"), dim, planes, tables, seed, probes))
-        .as(Seq("pos", "bucket")))
-      .select(expr(s"pos DIV $width").as("table"), col("bucket"), col("id"))
-    val joined = sketched.select(col("table"), col("bucket"), col("id").as("a"))
-      .join(sketched.select(col("table"), col("bucket"), col("id").as("b")),
-        Seq("table", "bucket"))
-      .filter(col("a") < col("b"))
-      .count()
-    assert(row.getAs[Long]("candidate_volume") == joined,
-      s"aggregate said ${row.getAs[Long]("candidate_volume")}, join counted $joined")
   }
 
   test("mpCatchRate: measured catch dominates the analytic single-probe collision rate") {
@@ -631,22 +615,29 @@ final class AnnSpec extends SparkTestBase {
 
   test("lshCandidateVolume: exact multiset collision count, vs an independent join") {
     val (dim, planes, tables, seed) = (64, 6, 4, 42L)
-    val row = Ann.lshCandidateVolume(vecs, dim, planes, tables, seed).collect().head
     val n = vecs.count()
-    assert(row.getAs[Long]("bucket_rows") == tables * n)
-    assert(row.getAs[Long]("max_bucket") >= 1)
-    // independent count: materialize the same config's bucket
-    // collisions as an actual (table, bucket) self-join and count the
-    // a < b rows — the multiset of dot products the pair join pays for
-    val sketched = vecs.select(col("id"), posexplode(
-        graft.functions.HyperplaneSketches(col("vec"), dim, planes, tables, seed))
-        .as(Seq("table", "bucket")))
-    val joined = sketched.select(col("table"), col("bucket"), col("id").as("a"))
-      .join(sketched.select(col("table"), col("bucket"), col("id").as("b")),
-        Seq("table", "bucket"))
-      .filter(col("a") < col("b"))
-      .count()
-    assert(row.getAs[Long]("candidate_volume") == joined,
-      s"aggregate said ${row.getAs[Long]("candidate_volume")}, join counted $joined")
+    // single-probe and widened emissions: the guard prices whichever
+    // the pair join builds
+    for (probes <- Seq(0, 2)) {
+      val width = probes + 1
+      val row = Ann.lshCandidateVolume(vecs, dim, planes, tables, seed, probes).collect().head
+      assert(row.getAs[Long]("bucket_rows") == tables * width * n)
+      assert(row.getAs[Long]("max_bucket") >= 1)
+      // independent count: materialize the same config's bucket
+      // collisions as an actual (table, bucket) self-join and count the
+      // a < b rows — the multiset of dot products the pair join pays for
+      val sketched = vecs.select(col("id"), posexplode(
+          graft.functions.HyperplaneProbeSketches(col("vec"), dim, planes, tables, seed, probes))
+          .as(Seq("pos", "bucket")))
+        .select(expr(s"pos DIV $width").as("table"), col("bucket"), col("id"))
+      val joined = sketched.select(col("table"), col("bucket"), col("id").as("a"))
+        .join(sketched.select(col("table"), col("bucket"), col("id").as("b")),
+          Seq("table", "bucket"))
+        .filter(col("a") < col("b"))
+        .count()
+      assert(row.getAs[Long]("candidate_volume") == joined,
+        s"probes=$probes: aggregate said ${row.getAs[Long]("candidate_volume")}, " +
+          s"join counted $joined")
+    }
   }
 }

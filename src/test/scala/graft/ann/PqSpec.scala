@@ -311,7 +311,7 @@ final class PqSpec extends SparkTestBase {
     assert(codes.forall(_.getSeq[Int](1).length == M))
     val lutRow = Pq.adcLut(bad.filter(col("id") === 2), books, M, KSUB).head()
     assert(lutRow.getSeq[Double](lutRow.fieldIndex("lut")).length == M * KSUB)
-    // empty query set: measuredScanRank has no true pairs (max = null)
+    // empty query set: the ADC rank law has no true pairs (max = null)
     // → budget floors, dispatch stays defined, result is empty — not
     // an NPE from the one search API that wouldn't degrade
     assert(Pq.pqTopKAuto(vecs, vecs.filter(col("id") < 0), books,

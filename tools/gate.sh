@@ -11,7 +11,10 @@ OUT=$(mktemp -d /tmp/graft-gate.XXXX)
 CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}"
 
 echo "== specs =="
-sbt -batch test 2>&1 | grep -E "Tests:|FAILED" | tail -2
+sbt -batch test 2>&1 | tee "$OUT/specs.log" | grep -E "Tests:|FAILED" | tail -2
+# task results that arrive after their query's accumulators were
+# cleaned up log this DAGScheduler error; the count shows a rise
+echo "non-existent accumulator errors: $(grep -c 'non-existent accumulator' "$OUT/specs.log" || true)"
 
 echo "== correctness ($SF_CORRECT) =="
 SPARK_GRAFT_CPUS="$CPUS" \
