@@ -15,11 +15,11 @@ import graft.functions.VectorOps
   *     baseline and the right plan whenever |queries| is small enough
   *     to broadcast (the common case: a query batch vs a 100 TB
   *     corpus — embarrassingly parallel, no shuffle of the corpus).
-  *   - [[lshTopK]] — signed-random-hyperplane bucketing: corpus and
-  *     queries are bucketed by sketch; only same/near buckets are
-  *     compared (a bucket equi-join instead of a cross product),
-  *     trading recall for a corpus-sized shuffle-free probe. Multi-
-  *     probe (flipping each sketch bit) recovers most recall.
+  *   - [[cosineNearDupPairsLSH]] / [[cosineKnnGraphLSH]] — signed-
+  *     random-hyperplane bucketing: vectors are bucketed by sketch and
+  *     only same/near buckets are compared (a bucket equi-join instead
+  *     of a cross product). Multi-probe (flipping each sketch bit)
+  *     recovers most recall.
   */
 object Ann {
 
@@ -310,60 +310,15 @@ object Ann {
         max(col("len")).as("max_bucket"),
         sum(expr("len * (len - 1) DIV 2")).as("candidate_volume"))
 
-  /** LSH-bucketed approximate top-k: the standard L-table structure.
-    * Each of `tables` independent hash tables assigns every vector a
-    * `planes`-bit hyperplane-sign bucket; only (query, corpus) pairs
-    * colliding in at least one table are scored, optionally probing
-    * all 1-bit-flipped buckets too (`multiProbe`). The corpus index
-    * is `tables`× its size; the scoring join is a bucket equi-join —
-    * never a cross product — which is what makes the 100 TB case
-    * tractable.
-    */
-  def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-              dim: Int, planes: Int = 8, tables: Int = 8,
-              multiProbe: Boolean = true, seed: Long = 42L): DataFrame = {
-    def indexed(df: DataFrame, idAs: String, vecAs: String, normAs: String,
-                probe: Boolean): DataFrame = {
-      val withSketches = df.select(
-        col("id").as(idAs), col("vec").as(vecAs),
-        VectorOps.fnorm(col("vec")).as(normAs),
-        graft.functions.HyperplaneSketches(col("vec"), dim, planes, tables, seed).as("sketches"))
-        .select(col(idAs), col(vecAs), col(normAs),
-          posexplode(col("sketches")).as(Seq("table", "sketch")))
-      if (!probe)
-        withSketches.select(col(idAs), col(vecAs), col(normAs),
-          col("table"), col("sketch").as("bucket"))
-      else {
-        val masks = array((0L +: (0 until planes).map(p => 1L << p).toSeq).map(lit): _*)
-        withSketches
-          .withColumn("mask", explode(masks))
-          .select(col(idAs), col(vecAs), col(normAs), col("table"),
-            col("sketch").bitwiseXOR(col("mask")).as("bucket"))
-      }
-    }
-    val c = indexed(corpus, "nbr_id", "cvec", "cnorm", probe = false)
-    val q = indexed(queries, "query_id", "qvec", "qnorm", probe = multiProbe)
-    // scoring is inline (a repeated collision re-evaluates its fused
-    // dot — map-side CPU) and the multi-table dedup rides the top-k
-    // aggregation itself (TopKAgg.distinct keeps one entry per nbr):
-    // the old dropDuplicates + window pair shuffled the candidate
-    // multiset twice, still carrying both vector arrays
-    val scored = c
-      .join(broadcast(q), Seq("table", "bucket"))
-      .filter(col("query_id") =!= col("nbr_id"))
-      .withColumn("sim",
-        VectorOps.cosinePre(col("qvec"), col("cvec"), col("qnorm"), col("cnorm")))
-    topK(scored, k, dedup = true)
-  }
-
   /** Thresholded kNN graph via LSH: for EVERY vector, its top-k
     * neighbors among those with cosine ≥ `minCos` — the similarity
     * graph behind near-dup clustering and semantic dedup, built from
     * [[cosineNearDupPairsLSH]]'s bucket self-join (never all-pairs;
     * nothing is broadcast, so the query side may be the whole
     * corpus). Thresholding is what makes LSH *exact* here: with
-    * (planes, tables) tuned to recall 1.0 at `minCos` (see
-    * `tools/TuneD5.scala` / `tools/TuneAnn.scala`), every qualifying
+    * (planes, tables) tuned to recall 1.0 at `minCos` (SCALE.md,
+    * "ANN exactness gates"; the tuners, deleted in 8a94aaa, are
+    * listed in FIXTURES.md), every qualifying
     * pair collides in some table, so the graph equals the brute-force
     * thresholded graph — unthresholded global top-k has no such
     * guarantee (the k-th neighbor can be near-orthogonal, which no
@@ -371,25 +326,20 @@ object Ann {
     */
   def cosineKnnGraphLSH(df: DataFrame, minCos: Double, k: Int, dim: Int,
                         planes: Int = 10, tables: Int = -1,
-                        seed: Long = 42L, checkpoint: Boolean = true): DataFrame = {
+                        seed: Long = 42L): DataFrame = {
     // a pinned table count keeps the single-probe emission it was
     // tuned at (a2's 48 tables); unpinned, the pair join's measured
     // multi-probe sizing applies.
     // The pair plan (48-table bucket join + verify) feeds BOTH union
     // branches; checkpoint the tiny thresholded pair set so the LSH
     // pipeline executes once, not once per direction (exchange reuse
-    // does not cover the post-shuffle verify operators).
-    // `checkpoint = false` exists for plan auditing ONLY: the lazy
-    // localCheckpoint truncates lineage to a LogicalRDD, hiding the
-    // bucket self-join from the executed-plan string — the exact gap
-    // that let the d4 broadcast drift live unaudited for three
-    // rounds. PlanAuditSpec runs this same construction un-truncated
-    // (at the cost of planning the LSH pipeline per branch) and pins
-    // the join shape; production callers keep the default.
+    // does not cover the post-shuffle verify operators). The
+    // checkpoint hides the bucket self-join from the returned plan;
+    // PlanAuditSpec audits it from the checkpoint action's own
+    // QueryExecution.
     val pairs = cosineNearDupPairsLSH(df, minCos, dim, planes, tables, seed,
       probes = if (tables > 0) 0 else 2)
-    val undirected = if (checkpoint) pairs.localCheckpoint(eager = false) else pairs
-    knnFromPairs(undirected, k)
+    knnFromPairs(pairs.localCheckpoint(eager = false), k)
   }
 
   /** The top-k step of [[cosineKnnGraphLSH]] over an already-built
@@ -999,8 +949,7 @@ object Ann {
                                    incoming: DataFrame,
                                    minCos: Double, dim: Int,
                                    planes: Int = 10, tables: Int = 8,
-                                   seed: Long = 42L, probes: Int = 2,
-                                   checkpoint: Boolean = true): DataFrame = {
+                                   seed: Long = 42L, probes: Int = 2): DataFrame = {
     val newSketches = sketchIndex(incoming, dim, planes, tables, seed, probes)
     val allSketches = existingIndex.select(col("id"), col("table"), col("bucket"))
       .unionByName(newSketches)
@@ -1014,10 +963,8 @@ object Ann {
       // it feeds the candidate-id semi-join AND both verify joins,
       // and without the checkpoint each reference re-derives the
       // whole sketch-explode + bucket-join subtree (the d19 plan
-      // carried 19 copies of the embeddings scan). `checkpoint =
-      // false` un-truncates the lineage so specs can assert the
-      // plan's storage properties (the a2KnnGraph pattern).
-      .transform(c => if (checkpoint) c.localCheckpoint(false) else c)
+      // carried 19 copies of the embeddings scan)
+      .localCheckpoint(false)
     val candIds = cands.select(col("a").as("id"))
       .unionByName(cands.select(col("b").as("id")))
       .distinct()

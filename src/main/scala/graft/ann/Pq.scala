@@ -17,7 +17,8 @@ import graft.functions.{PqAdc, PqAdcPacked, PqAssign, PqCodec, PqLut, PqPack, Ve
   * as [[Ann.kmeansCentroids]]: md5-hash-sampled seeds, fixed
   * iteration count, round-6 double means — so any engine retrains
   * bit-identical codebooks). A vector is stored as `m` small codes —
-  * at the measured gate config (m=16, ksub=64; tools/TunePq) that is
+  * at the measured gate config (m=16, ksub=64; TunePq, deleted in
+  * 8a94aaa, PqSpec keeps its margins) that is
   * 16 six-bit codes standing in for 64 floats: 256 B → 12 B of true
   * entropy (21×) for a packing writer, 72 B (3.5×) as the raw int
   * array the codegen kernel reads. Quantization grain is the
@@ -576,7 +577,8 @@ object Pq {
     * from storage. Ranking by `dot(q, recon(x)) / ‖recon(x)‖` is the
     * self-consistent quantized cosine; its measured worst true-top-k
     * rank is the SAME TunePq law as the stored-norm ranking (re-
-    * measured: ≤30 in-cell on the gate fixtures vs ≤31 stored-norm),
+    * measured: ≤30 in-cell on the gate fixtures vs ≤31 stored-norm;
+    * SCALE.md "Round 17: the PQ index at its true entropy"),
     * and the exact re-rank restores exact output under the same
     * budget. The `greatest(…, 1e-12)` floor keeps a degenerate
     * all-hole candidate finite (it ranks arbitrarily, burns one
@@ -794,10 +796,12 @@ object Pq {
 
   /** The ADC half of every measured dispatch law: the worst rank, in
     * (qsim desc, nbr_id asc) order over the scored candidates, of any
-    * true top-k answer in `tops` (query_id, nbr_id) — the TunePq/SpotPq
-    * law. Over the full scan it budgets [[pqTopKAuto]]'s rerank; over
-    * the probed cells, [[ivfPqTopKAuto]]'s; over [[indexedScored]], the
-    * stored law of [[saveIvfPqLaws]]. The ranked relation stays
+    * true top-k answer in `tops` (query_id, nbr_id) — the law TunePq
+    * measured (deleted in 8a94aaa) and SpotPq replays per scale
+    * (SPOTCHECK_pq.txt). Over the full scan it budgets
+    * [[pqTopKAuto]]'s rerank; over the probed cells,
+    * [[ivfPqTopKAuto]]'s; over [[indexedScored]], the stored law of
+    * [[saveIvfPqLaws]]. The ranked relation stays
     * distributed; only the 1-row max is collected.
     */
   private def measuredRank(scored: DataFrame, tops: DataFrame): Int = {

@@ -51,14 +51,15 @@ object Clusters {
     // seed each node with min(id, min neighbor) — one aggregation,
     // same shuffle the identity-seeded distinct() would cost, but it
     // starts the loop one propagation round ahead
-    // graft.plans.Lineage.loopCheckpoint, NOT bare localCheckpoint,
-    // on the loop-carried relation: localCheckpoint propagates origin
-    // statistics, and the pointer-jump self-join below SQUARES them
-    // each round — bit length doubles per round (tools/StatsProbe)
-    // until join planning stalls the driver in BigInteger arithmetic
-    // on deep-diameter graphs (found at sf10, round 11). The periodic
-    // stat-free rewrap bounds the compounding at trivial size while
-    // costing its Row pass on 1 round in 6.
+    // graft.plans.Lineage.truncate, NOT bare localCheckpoint, on the
+    // loop-carried relation every round: localCheckpoint propagates
+    // origin statistics, and the pointer-jump self-join below SQUARES
+    // them each round — bit length doubles per round (SCALE.md,
+    // "Iterative algorithms"; LineageSpec) until join planning
+    // stalls the driver in BigInteger arithmetic on deep-diameter
+    // graphs (found at sf10, round 11). truncate's leaf is the
+    // checkpoint's own RDD without origin stats, so the reset costs
+    // nothing per row.
     var labels = sym.groupBy(col("src"))
       .agg(least(col("src"), min(col("dst"))).as("label"))
       .select(col("src").as("id"), col("label"))
@@ -95,13 +96,14 @@ object Clusters {
       // `Observation`, whose get() blocks on LISTENER-BUS delivery of
       // the query-end event after each round's checkpoint — a
       // per-round wait that scales with bus load, not with the data
-      // (r20 verdict item 1; instrumented in tools/ProfileCc: the
-      // wait measured ~0–1 ms/round on a quiet box — the adjudicated
-      // v5 driver regression was host noise — but the accumulator
-      // read is load-independent by construction where the bus path
-      // is not). A missing metric (a future execution path that
-      // bypasses CollectMetrics) falls back to an explicit count
-      // job over the checkpointed rows — never a silent early exit.
+      // (r20 verdict item 1; instrumented in tools/ProfileCc, deleted
+      // in 8a94aaa: the wait measured ~0–1 ms/round on a quiet box —
+      // the adjudicated v5 driver regression was host noise — but
+      // the accumulator read is load-independent by construction
+      // where the bus path is not). A missing metric (a future
+      // execution path that bypasses CollectMetrics) falls back to an
+      // explicit count job over the checkpointed rows — never a silent
+      // early exit.
       val mName = s"cc_changed_$iter"
       val observed = afterNbr
         .join(afterNbr.select(col("id").as("label"), col("label").as("jump")),
@@ -110,7 +112,7 @@ object Clusters {
           least(col("label"), coalesce(col("jump"), col("label"))).as("label"))
         .observe(mName, sum(when(col("old") =!= col("label"), 1L).otherwise(0L))
           .as("changed"))
-      val next = graft.plans.Lineage.loopCheckpoint(observed, iter)
+      val next = graft.plans.Lineage.truncate(observed)
       changed = observed.queryExecution.observedMetrics.get(mName) match {
         case Some(r) => if (r.isNullAt(0)) 0L else r.getLong(0)
         case None    => next.filter(col("old") =!= col("label")).count()
@@ -164,9 +166,9 @@ object Clusters {
     val raw = pairs.select(col("a").cast("long").as("src"),
         col("b").cast("long").as("dst"))
       .localCheckpoint(true)
-    // Lineage.loopCheckpoint for the loop-carried edge set — the
-    // star rewiring references `edges` three times per round (see the
-    // min-label loop's note on checkpointed statistics compounding)
+    // Lineage.truncate for the loop-carried edge set every round —
+    // the star rewiring references `edges` three times per round (see
+    // the min-label loop's note on checkpointed statistics compounding)
     var edges = canon(raw).localCheckpoint(true)
     var sig  = signature(edges)
     var iter = 0
@@ -185,12 +187,12 @@ object Clusters {
       // small-star over the directed (src > dst) view: u and all its
       // smaller neighbors attach to m = min of that neighborhood.
       val smin = afterLarge.groupBy(col("src")).agg(min(col("dst")).as("m"))
-      val afterSmall = graft.plans.Lineage.loopCheckpoint(
+      val afterSmall = graft.plans.Lineage.truncate(
         afterLarge.join(smin, Seq("src"))
           .filter(col("dst") =!= col("m"))
           .select(col("dst").as("src"), col("m").as("dst"))
           .union(smin.select(col("src"), col("m").as("dst")))
-          .distinct(), iter)
+          .distinct())
       val next = signature(afterSmall)
       done = next == sig
       sig = next

@@ -360,20 +360,17 @@ object MinHashLSH {
   def nearDuplicatesIncremental(existing: DataFrame, incoming: DataFrame,
                                 idCol: String, textCol: String,
                                 numHashes: Int = 16, bands: Int = 4, n: Int = 1,
-                                minJaccard: Double = 0.8,
-                                checkpoint: Boolean = true): DataFrame = {
+                                minJaccard: Double = 0.8): DataFrame = {
     val allDocs = existing.select(col(idCol), col(textCol))
       .unionByName(incoming.select(col(idCol), col(textCol)))
     // materialize the exploded band rows once (narrow: id + two
     // ints): they feed BOTH sides of the candidate join (the batch
     // side via the semi-join below), and without the checkpoint each
     // side re-runs the whole signature computation — the expensive
-    // numHashes x shingle hashing pass — over the corpus. checkpoint
-    // = false un-truncates the lineage for the spec's plan-shape
-    // assertions (the a2KnnGraph pattern).
+    // numHashes x shingle hashing pass — over the corpus
     val allBands = signatures(allDocs, idCol, textCol, numHashes, bands, n)
       .select(col("id"), posexplode(col("bands")).as(Seq("band", "bucket")))
-      .transform(b => if (checkpoint) b.localCheckpoint(false) else b)
+      .localCheckpoint(false)
     // the batch's bands are a semi-join of the corpus bands (batch ids
     // broadcast) — signatures are computed once, not re-derived
     val newBands = allBands.join(
@@ -428,25 +425,23 @@ object MinHashLSH {
                                        incoming: DataFrame,
                                        idCol: String, textCol: String,
                                        numHashes: Int = 16, bands: Int = 4, n: Int = 1,
-                                       minJaccard: Double = 0.8,
-                                       checkpoint: Boolean = true): DataFrame = {
+                                       minJaccard: Double = 0.8): DataFrame = {
     // the incoming batch's bands feed the union AND the candidate
     // join's build side — sign the batch once, not twice
     val newBands = bandIndex(incoming, idCol, textCol, numHashes, bands, n)
-      .transform(b => if (checkpoint) b.localCheckpoint(false) else b)
+      .localCheckpoint(false)
     val allBands = existingIndex.select(col("id"), col("band"), col("bucket"))
       .unionByName(newBands)
     // bounded two-long-row candidate set, referenced by the id
     // semi-join (twice) and the verify melt — materialize once
-    // (the cosine-path rationale); checkpoint = false keeps the
-    // lineage assertable
+    // (the cosine-path rationale)
     val cands = allBands.select(col("band"), col("bucket"), col("id").as("a"))
       .join(newBands.select(col("band"), col("bucket"), col("id").as("b")),
         Seq("band", "bucket"))
       .filter(col("a") < col("b"))
       .select("a", "b")
       .distinct()
-      .transform(c => if (checkpoint) c.localCheckpoint(false) else c)
+      .localCheckpoint(false)
     // verification shingles ONLY the existing docs named in some
     // candidate pair (plus the batch) — not the whole corpus
     val candIds = cands.select(col("a").as(idCol))

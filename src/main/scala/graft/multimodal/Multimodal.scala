@@ -177,7 +177,8 @@ object MediaDecoder {
   // partition wave, against a directory whose latency scales with
   // host filesystem churn rather than with the data — the round-16
   // adjudication measured the cache at +28–34% on the m1 decode arm
-  // (AdjudicateM1: cache-ON 0.244 s vs cache-OFF 0.190 s at sf0.1),
+  // (AdjudicateM1, deleted in 8a94aaa; SCALE.md "Round 16: m1
+  // adjudicated": cache-ON 0.244 s vs cache-OFF 0.190 s at sf0.1),
   // and at 100 TB it is also a per-executor /tmp contention point.
   // Memory-backed streams are strictly better for byte-array
   // payloads (the bytes are already in memory). Object-init runs

@@ -9,49 +9,26 @@ import org.apache.spark.sql.DataFrame
   * checkpointed relation. In a loop whose round r references round
   * r−1 more than once (pointer-jumping CC's label ⋈ label(label),
   * star-rewiring's edge self-joins), the `sizeInBytes` BigInt
-  * therefore MULTIPLIES round over round: measured with
-  * `tools/StatsProbe`, its bit length doubles every round — 63 bits
-  * → 189,292 bits after 12 rounds — and join planning consults
-  * those stats, so per-round planning cost grows super-exponentially
-  * until the driver stalls inside `BigInteger.multiply`. The stall
-  * is scale-dependent (round count grows with component diameter),
-  * which is exactly how it surfaced: fine at sf0.1/sf1, a
-  * driver-bound hang at sf10 (round 11, SemDeDup over k-means cells).
+  * therefore MULTIPLIES round over round: its bit length doubles
+  * every round — 63 bits → 189,292 bits after 12 rounds (SCALE.md,
+  * "Iterative algorithms"; LineageSpec pins the doubling) — and join
+  * planning consults those stats, so per-round planning cost grows
+  * super-exponentially until the driver stalls inside
+  * `BigInteger.multiply`. The stall is scale-dependent (round count
+  * grows with component diameter), which is exactly how it surfaced:
+  * fine at sf0.1/sf1, a driver-bound hang at sf10 (round 11,
+  * SemDeDup over k-means cells).
   *
   * [[truncate]] materializes the rows ONCE via `localCheckpoint`
-  * (distributed blocks, no recompute) and re-wraps them through the
-  * public `createDataFrame(rdd, schema)` door, which builds a fresh
-  * leaf WITHOUT origin statistics — the stat reverts to the engine
-  * default every round instead of compounding. The Row
-  * round-trip costs one deserialize/serialize pass per row per
-  * round — linear, distributed, and negligible against the
-  * alternative; the blocks it reads are the checkpoint's, so nothing
-  * upstream re-executes. Static broadcast planning sees the default
-  * (large) size and keeps these loop relations on shuffle joins —
-  * the stable choice for unbounded iteration state — while AQE still
-  * converts from REAL runtime sizes where profitable.
+  * (distributed blocks, no recompute) and re-wraps the checkpoint's
+  * own leaf without its origin statistics (`Bridge.statFree`): the
+  * stat reverts to the engine default every round instead of
+  * compounding, at no per-row cost. Static broadcast planning sees
+  * the default (large) size and keeps these loop relations on
+  * shuffle joins — the stable choice for unbounded iteration state —
+  * while AQE still converts from REAL runtime sizes where profitable.
   */
 object Lineage {
-  def truncate(df: DataFrame): DataFrame = rewrap(df.localCheckpoint(true))
-
-  /** Stat-free re-wrap of an ALREADY-materialized (checkpointed)
-    * relation — no second materialization; readers pay one Row
-    * conversion pass over the checkpoint's blocks.
-    */
-  def rewrap(ck: DataFrame): DataFrame =
-    ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
-
-  /** Loop-carried checkpoint with amortized stat reset: every round
-    * truncates lineage with a bare `localCheckpoint` (cheap, but its
-    * origin stats compound ~2× in bit length per round), and every
-    * `resetEvery`-th round re-wraps stat-free. Bits stay bounded at
-    * ~64·2^resetEvery (trivial for planning) while the Row-conversion
-    * cost of [[rewrap]] is paid on 1 round in `resetEvery` — measured
-    * at sf0.1, per-round rewrap cost CC-heavy queries 15–40%; this
-    * form keeps them at baseline with the sf10 stall still dead.
-    */
-  def loopCheckpoint(df: DataFrame, round: Int, resetEvery: Int = 6): DataFrame = {
-    val ck = df.localCheckpoint(true)
-    if (round % resetEvery == resetEvery - 1) rewrap(ck) else ck
-  }
+  def truncate(df: DataFrame): DataFrame =
+    org.apache.spark.sql.graft.Bridge.statFree(df.localCheckpoint(true))
 }

@@ -29,15 +29,13 @@ object CorpusOps {
 
   /** a2's graph construction, shared verbatim by the registry entry
     * and PlanAuditSpec so the audited plan can never drift from the
-    * gated one. `checkpoint = false` un-truncates the lineage that
-    * the production localCheckpoint hides, making the LSH bucket
-    * self-join's shape assertable.
+    * gated one (the spec reads the LSH bucket self-join's shape from
+    * the pair checkpoint's own action).
     */
-  def a2KnnGraph(s: SparkSession, d: String, checkpoint: Boolean = true): DataFrame =
+  def a2KnnGraph(s: SparkSession, d: String): DataFrame =
     Ann.cosineKnnGraphLSH(
       t(s, d, "embeddings").select(col("vec_id").as("id"), col("embedding").as("vec")),
-      minCos = 0.45, k = 5, dim = 64, planes = 6, tables = 48, seed = 42L,
-      checkpoint = checkpoint)
+      minCos = 0.45, k = 5, dim = 64, planes = 6, tables = 48, seed = 42L)
 
   /** v5's ε-graph construction, shared verbatim by the registry entry
     * and PlanAuditSpec (Dbscan.fromNeighbors checkpoints internally,
@@ -527,8 +525,9 @@ object CorpusOps {
     // LSH thresholded kNN graph: every vector's top-5 neighbors with
     // cosine ≥ 0.45, via the d5 bucket self-join. (planes=6,
     // tables=48, seed=42) is tuned to recall 1.0 at τ=0.45 on all
-    // three fixtures (tools/TuneAnn.scala: candidates are 40–53% of
-    // all-pairs, so the index genuinely prunes), which makes the
+    // three fixtures (TuneAnn, deleted in 8a94aaa; SCALE.md "ANN
+    // exactness gates": candidates are 40–53% of all-pairs, so the
+    // index genuinely prunes), which makes the
     // approximate graph EQUAL the brute-force thresholded graph —
     // hence the same exact DuckDB oracle as a brute-force query.
     // (Equality is scale-contingent like d5's — see the d5 comment;
@@ -572,8 +571,9 @@ object CorpusOps {
     // restores exact ranking WITHIN probed cells — so the
     // approximation surface is exactly IVF's structural recall and
     // a3's full-replay oracle gates the whole composition verbatim.
-    // Config is MEASURED on the oracle fixtures (tools/TunePq: worst
-    // true-top-5 in-cell ADC rank ≤31 → rerank=96 is a 3.1× budget;
+    // Config is MEASURED on the oracle fixtures (TunePq, deleted in
+    // 8a94aaa: worst true-top-5 in-cell ADC rank ≤31 → rerank=96 is
+    // a 3.1× budget;
     // PqSpec holds the equality down to 48).
     "a6_ivf_pq" -> { (s, d) =>
       val all = t(s, d, "embeddings")
@@ -660,7 +660,8 @@ object CorpusOps {
     // the PACKED serving path — pack, unpack, recon-norm ranking,
     // bucketed probe join, rerank-only vector access — under the
     // DuckDB gate end-to-end, not just the spec: with the measured
-    // rerank budget (TunePq neededIvfRecon=26 → 96 is 3.7×) the
+    // rerank budget (TunePq neededIvfRecon=26 → 96 is 3.7×; SCALE.md
+    // "Round 17: the PQ index at its true entropy") the
     // output equals exact IVF over the same cells, so a6's replay
     // oracle gates it verbatim.
     "a9_ivf_pq_indexed" -> { (s, d) =>

@@ -11,10 +11,10 @@ import graft.ann.{Ann, Pq}
   *
   *   1. **The exactness contract transfers across decades.** The
   *      rerank budget is re-derived at each scale by the SAME
-  *      measured law the gate config used (tools/TunePq: worst
-  *      in-cell ADC rank of a true top-k member, ×2), and
-  *      `ivfPqTopK` must equal `ivfTopK` bitwise at that budget —
-  *      over a `bruteForceTopK` baseline itself checked against an
+  *      measured law the gate config used (TunePq, deleted in
+  *      8a94aaa: worst in-cell ADC rank of a true top-k member, ×2),
+  *      and `ivfPqTopK` must equal `ivfTopK` bitwise at that budget
+  *      — over a `bruteForceTopK` baseline itself checked against an
   *      independent primitive-loop brute force (the SpotSf10
   *      discipline: no Catalyst, no shared scoring code).
   *
@@ -100,7 +100,9 @@ object SpotPq {
 
   /** Worst ADC rank of any (query_id, nbr_id) in `tops`, over the
     * probed-cell candidates — the per-scale replay of the TunePq
-    * measurement. The ranked relation never reaches the driver.
+    * measurement (TunePq was deleted in 8a94aaa; SPOTCHECK_pq.txt
+    * holds the replayed results). The ranked relation never reaches
+    * the driver.
     */
   private def measuredInCellRank(vecs: DataFrame, queries: DataFrame,
                                  cents: DataFrame, books: DataFrame,

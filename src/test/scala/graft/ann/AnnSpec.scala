@@ -1,10 +1,31 @@
 package graft.ann
 
+import org.apache.spark.SpecBus
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
 
 final class AnnSpec extends SparkTestBase {
+
+  /** Analyzed plans of a call: its own, plus the plan above every
+    * checkpoint it cut on the way (hidden from its own plan).
+    */
+  private def plans(body: => DataFrame): Seq[LogicalPlan] = {
+    val (df, cut) = SpecBus.checkpoints(spark)(body)
+    df.queryExecution.analyzed +: cut.map(_.analyzed)
+  }
+
+  /** Some node of `plan` computes hyperplane sketches over rows that
+    * passed a filter whose condition reads `cond`.
+    */
+  private def sketched(plan: LogicalPlan, cond: String): Boolean =
+    plan.collect {
+      case p if p.expressions.exists(_.exists(
+            _.isInstanceOf[graft.functions.HyperplaneProbeSketches])) &&
+          p.collect { case f: Filter if f.condition.toString.contains(cond) => f }.nonEmpty => p
+    }.nonEmpty
 
   private lazy val vecs = {
     spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -54,30 +75,6 @@ final class AnnSpec extends SparkTestBase {
     // exact top-k, so a fixture drift toward the margin fails HERE
     // (loudly) before it can flip the oracle gate
     assert(canon(Ann.quantizedTopK(vecs, queries, k = 5, rerank = 32)) == exact)
-  }
-
-  test("LSH top-k achieves high recall on clustered vectors") {
-    // planted clusters: 40 centroids × 10 members with small noise —
-    // the workload LSH is designed for (uniform random vectors have
-    // near-orthogonal neighbors and defeat any sublinear index)
-    import spark.implicits._
-    val rnd = new scala.util.Random(7)
-    val dim = 32
-    val rows = (0 until 40).flatMap { c =>
-      val centroid = Array.fill(dim)(rnd.nextGaussian())
-      (0 until 10).map { m =>
-        val v = centroid.map(x => (x + 0.15 * rnd.nextGaussian()).toFloat)
-        (c * 10L + m, v)
-      }
-    }
-    val df = rows.toDF("id", "vec")
-    val queries = df.filter(col("id") % 10 === 0) // one query per cluster
-    val exact = Ann.bruteForceTopK(df, queries, k = 3)
-      .collect().map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("nbr_id"))).toSet
-    val approx = Ann.lshTopK(df, queries, k = 3, dim = dim, planes = 8, tables = 8)
-      .collect().map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("nbr_id"))).toSet
-    val recall = (exact & approx).size.toDouble / exact.size
-    assert(recall >= 0.9, s"LSH recall@3 too low: $recall")
   }
 
   test("IVF top-k: high recall when the quantizer matches the clusters") {
@@ -173,30 +170,22 @@ final class AnnSpec extends SparkTestBase {
       assert(indexed == recompute && indexed.nonEmpty)
 
       // the indexed plan sketches ONLY the incoming batch — in the
-      // ANALYZED plan (before optimizer subtree duplication), no
+      // ANALYZED plans (before optimizer subtree duplication), no
       // hyperplane-sketch computation may sit above the existing-side
-      // filter; the existing buckets come from the stored table
-      import org.apache.spark.sql.catalyst.plans.logical.Filter
-      def sketchedOverExisting(df: org.apache.spark.sql.DataFrame): Boolean =
-        df.queryExecution.analyzed.collect {
-          case p if p.expressions.exists(_.exists(
-                _.isInstanceOf[graft.functions.HyperplaneProbeSketches])) &&
-              p.collect { case f: Filter
-                if f.condition.toString.contains(s"< $split") => f }.nonEmpty => p
-        }.nonEmpty
-      // checkpoint = false: the production candidate checkpoint
-      // truncates the analyzed plan, hiding exactly the lineage these
-      // storage-property assertions inspect (the a2KnnGraph pattern)
-      val indexedDf = Ann.cosineNearDupPairsLSHIndexed(
-        spark.table(table), existing, incoming, minCos = 0.9, dim = dim, probes = 0,
-        checkpoint = false)
-      assert(!sketchedOverExisting(indexedDf), "existing side must not be re-sketched")
-      assert(indexedDf.queryExecution.analyzed.toString.contains(table))
+      // filter; the existing buckets come from the stored table. The
+      // candidate checkpoint cuts the returned plan, so the lineage
+      // above it is read from the checkpoint action itself.
+      val indexedPlans = plans(Ann.cosineNearDupPairsLSHIndexed(
+        spark.table(table), existing, incoming, minCos = 0.9, dim = dim, probes = 0))
+      assert(indexedPlans.exists(sketched(_, s">= $split")), "the batch must be sketched")
+      assert(!indexedPlans.exists(sketched(_, s"< $split")),
+        "existing side must not be re-sketched")
+      assert(indexedPlans.exists(_.toString.contains(table)))
       // positive control: an index sketched inline DOES sketch the
       // existing side
-      assert(sketchedOverExisting(Ann.cosineNearDupPairsLSHIndexed(
+      assert(plans(Ann.cosineNearDupPairsLSHIndexed(
         Ann.sketchIndex(existing, dim, probes = 0), existing, incoming,
-        minCos = 0.9, dim = dim, probes = 0, checkpoint = false)))
+        minCos = 0.9, dim = dim, probes = 0)).exists(sketched(_, s"< $split")))
 
       // append maintenance keeps the stored index equal to a recompute
       Ann.saveSketchIndex(Ann.sketchIndex(incoming, dim, probes = 0), table, nBuckets = 8,
@@ -455,20 +444,13 @@ final class AnnSpec extends SparkTestBase {
 
       // only the incoming batch is probe-sketched; the existing
       // emissions come from the stored table
-      import org.apache.spark.sql.catalyst.plans.logical.Filter
-      def sketchedOverExisting(d: org.apache.spark.sql.DataFrame): Boolean =
-        d.queryExecution.analyzed.collect {
-          case p if p.expressions.exists(_.exists(
-                _.isInstanceOf[graft.functions.HyperplaneProbeSketches])) &&
-              p.collect { case f: Filter
-                if f.condition.toString.contains(s"< $split") => f }.nonEmpty => p
-        }.nonEmpty
-      // checkpoint = false un-truncates the lineage (a2KnnGraph pattern)
-      val indexedDf = Ann.cosineNearDupPairsLSHIndexed(
+      val indexedPlans = plans(Ann.cosineNearDupPairsLSHIndexed(
         spark.table(table), existing, incoming, minCos = 0.9, dim = dim,
-        planes = planes, tables = tables, probes = probes, checkpoint = false)
-      assert(!sketchedOverExisting(indexedDf), "existing side must not be re-sketched")
-      assert(indexedDf.queryExecution.analyzed.toString.contains(table))
+        planes = planes, tables = tables, probes = probes))
+      assert(indexedPlans.exists(sketched(_, s">= $split")), "the batch must be sketched")
+      assert(!indexedPlans.exists(sketched(_, s"< $split")),
+        "existing side must not be re-sketched")
+      assert(indexedPlans.exists(_.toString.contains(table)))
 
       // the probes=0 index is the base slots of the widened one: every
       // single-probe row is also emitted with probes, at the same table

@@ -13,7 +13,8 @@ import graft.SparkTestBase
   */
 final class PqSpec extends SparkTestBase {
 
-  // The gate config is MEASURED, not guessed: tools/TunePq reports,
+  // The gate config is MEASURED, not guessed: TunePq (deleted in
+  // 8a94aaa) reported,
   // per (m, ksub, iters), the worst ADC rank of any true top-5
   // neighbor on both oracle fixtures (isotropic vectors — PQ's worst
   // case, nothing for codebooks to exploit). (16, 64, 3) needs ≤64
@@ -116,7 +117,8 @@ final class PqSpec extends SparkTestBase {
   test("full-scan PQ search equals brute force, with rerank slack") {
     val queries = vecs.filter(col("id") < 20)
     val exact = canon(Ann.bruteForceTopK(vecs, queries, k = 5))
-    // TunePq: worst true-top-5 ADC rank on this fixture is 64 — the
+    // TunePq (deleted in 8a94aaa): worst true-top-5 ADC rank on this
+    // fixture is 64 — the
     // gate budget is 2.5× that, and the halved budget (the a4 slack
     // pattern: fixture drift toward the margin fails HERE, loudly,
     // before any oracle could flip) still carries 1.5×
@@ -128,7 +130,8 @@ final class PqSpec extends SparkTestBase {
     val queries = vecs.filter(col("id") < 20)
     val cents = Ann.kmeansCentroids(vecs, k = 8, iters = 2).localCheckpoint(true)
     val exact = canon(Ann.ivfTopK(vecs, queries, cents, k = 5, nprobe = 2))
-    // TunePq: worst in-cell rank ≤31 on both fixtures → 96 is the a6
+    // TunePq (deleted in 8a94aaa): worst in-cell rank ≤31 on both
+    // fixtures → 96 is the a6
     // gate budget (3.1×), 48 the slack assertion (1.55×)
     assert(canon(Pq.ivfPqTopK(vecs, queries, cents, books, k = 5, M, KSUB,
       nprobe = 2, rerank = 96)) == exact)

@@ -1,5 +1,7 @@
 package graft.dedup
 
+import org.apache.spark.SpecBus
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
@@ -150,30 +152,33 @@ final class DedupSpec extends SparkTestBase {
       assert(indexed == recompute && indexed.nonEmpty)
 
       // the whole point: the indexed plan signs ONLY the incoming batch —
-      // in the ANALYZED plan (what the operator declares, before the
+      // in the ANALYZED plans (what the operator declares, before the
       // optimizer duplicates subtrees with pushed-down predicates), no
       // MinHashSignature computation may sit above the existing-side
-      // filter (doc_id < split); existing bands come from the stored table
-      import org.apache.spark.sql.catalyst.plans.logical.Filter
-      def signedOverExisting(df: org.apache.spark.sql.DataFrame): Boolean =
-        df.queryExecution.analyzed.collect {
+      // filter (doc_id < split); existing bands come from the stored
+      // table. The band and candidate checkpoints cut the returned
+      // plan, so the lineage above them is read from the checkpoint
+      // actions themselves.
+      def plans(body: => org.apache.spark.sql.DataFrame): Seq[LogicalPlan] = {
+        val (df, cut) = SpecBus.checkpoints(spark)(body)
+        df.queryExecution.analyzed +: cut.map(_.analyzed)
+      }
+      def signed(plan: LogicalPlan, cond: String): Boolean =
+        plan.collect {
           case p if p.expressions.exists(_.exists(
                 _.isInstanceOf[graft.functions.MinHashSignature])) &&
-              p.collect { case f: Filter
-                if f.condition.toString.contains(s"< $split") => f }.nonEmpty => p
+              p.collect { case f: Filter if f.condition.toString.contains(cond) => f }
+                .nonEmpty => p
         }.nonEmpty
-      // checkpoint = false: the production checkpoints truncate the
-      // analyzed plan, hiding exactly the lineage these assertions
-      // inspect (the a2KnnGraph pattern)
-      val indexedDf = MinHashLSH.nearDuplicatesIncrementalIndexed(
-        spark.table(table), existing, incoming, "doc_id", "text", 24, 8, 3, 0.8,
-        checkpoint = false)
-      assert(!signedOverExisting(indexedDf), "existing side must not be re-signed")
-      assert(indexedDf.queryExecution.analyzed.toString.contains(table),
+      val indexedPlans = plans(MinHashLSH.nearDuplicatesIncrementalIndexed(
+        spark.table(table), existing, incoming, "doc_id", "text", 24, 8, 3, 0.8))
+      assert(indexedPlans.exists(signed(_, s">= $split")), "the batch must be signed")
+      assert(!indexedPlans.exists(signed(_, s"< $split")), "existing side must not be re-signed")
+      assert(indexedPlans.exists(_.toString.contains(table)),
         "existing bands must come from the stored index table")
       // positive control: the recompute form DOES sign the existing side
-      assert(signedOverExisting(MinHashLSH.nearDuplicatesIncremental(
-        existing, incoming, "doc_id", "text", 24, 8, 3, 0.8, checkpoint = false)))
+      assert(plans(MinHashLSH.nearDuplicatesIncremental(
+        existing, incoming, "doc_id", "text", 24, 8, 3, 0.8)).exists(signed(_, s"< $split")))
 
       // append maintenance: after folding the batch in, the index serves
       // the NEXT batch — equivalence holds against a full recompute

@@ -299,14 +299,15 @@ final class PlanAuditSpec extends SparkTestBase {
     // a2's production form wraps the pair plan behind a lazy
     // localCheckpoint whose lineage truncation hides the join from
     // the executed-plan string — an un-audited plan is exactly how
-    // the d4 drift lived for three rounds. a2KnnGraph(checkpoint =
-    // false) is the registry's own construction with the truncation
-    // off, so this pins the gated plan, not a spec-local copy.
-    val plan = graft.queries.CorpusOps.a2KnnGraph(spark, sfDir, checkpoint = false)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("ShuffledHashJoin"),
+    // the d4 drift lived for three rounds. The checkpoint action
+    // itself runs over the pair plan, so its QueryExecution is the
+    // registry's own construction above the cut, not a spec-local copy.
+    val (_, cut) = org.apache.spark.SpecBus.checkpoints(spark)(
+      graft.queries.CorpusOps.a2KnnGraph(spark, sfDir))
+    val plans = cut.map(_.executedPlan.toString)
+    assert(plans.exists(_.contains("ShuffledHashJoin")),
       "a2's bucket self-join must plan as a shuffle join")
-    assert(!plan.contains("BroadcastHashJoin"),
+    assert(!plans.exists(_.contains("BroadcastHashJoin")),
       "a2 must never broadcast the sketched-vector table")
   }
 

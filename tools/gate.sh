@@ -15,6 +15,11 @@ sbt -batch test 2>&1 | tee "$OUT/specs.log" | grep -E "Tests:|FAILED" | tail -2
 # task results that arrive after their query's accumulators were
 # cleaned up log this DAGScheduler error; the count shows a rise
 echo "non-existent accumulator errors: $(grep -c 'non-existent accumulator' "$OUT/specs.log" || true)"
+# ...and per suite: each line counts under the last ScalaTest suite
+# header ("[info] FooSpec:") printed before it
+awk '/^\[info\] [A-Za-z0-9_]+:$/ { suite = substr($2, 1, length($2) - 1) }
+     /non-existent accumulator/ { n[suite == "" ? "(before any suite)" : suite]++ }
+     END { for (s in n) printf "  %s: %d\n", s, n[s] }' "$OUT/specs.log" | sort
 
 echo "== correctness ($SF_CORRECT) =="
 SPARK_GRAFT_CPUS="$CPUS" \
