@@ -98,7 +98,7 @@ case class PqAssign(child: Expression, books: Array[Double],
           while (d < dsub) {
             // short or null-holed vectors contribute 0 for the missing
             // elements — degrade like the other kernels (PqAdc,
-            // HyperplaneSketches), never read past the array or abort
+            // HyperplaneProbeSketches), never read past the array or abort
             val i = sub * dsub + d
             if (i < n && !v.isNullAt(i)) {
               val x = if (isFloat) v.getFloat(i).toDouble else v.getDouble(i)

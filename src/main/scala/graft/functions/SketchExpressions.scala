@@ -263,17 +263,6 @@ object WordShingles {
     Bridge.column(WordShingles(Bridge.expression(tokens), n, distinct = false))
 }
 
-/** All `tables` signed-random-hyperplane sketches of a float vector
-  * in one pass: table t's planes are `planes × dim` Gaussians drawn
-  * from `Random(seed + t)` in plane-major order, bit p of sketch t
-  * is the sign of plane p's projection — the `probes = 0` emission
-  * of [[HyperplaneProbeSketches]], one sketch per table.
-  */
-object HyperplaneSketches {
-  def apply(vec: Column, dim: Int, planes: Int, tables: Int, seed: Long): Column =
-    HyperplaneProbeSketches(vec, dim, planes, tables, seed, probes = 0)
-}
-
 /** Margin-guided multi-probe hyperplane sketches (Lv et al., VLDB'07
   * adapted to the signed-hyperplane family): per table, the base
   * sketch PLUS `probes` one-bit-flipped sketches at the planes with

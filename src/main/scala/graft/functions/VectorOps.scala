@@ -56,7 +56,8 @@ object VectorOps {
     )
 
   // Signed random-hyperplane sketches live in
-  // [[graft.functions.HyperplaneSketches]] — a single-pass expression.
+  // [[graft.functions.HyperplaneProbeSketches]] (`probes = 0` for one
+  // sketch per table) — a single-pass expression.
   // The HOF formulation (aggregate(zip_with(v, array(lit…))) per
   // plane) evaluates interpreted per element and was the d5 hot spot.
 }

@@ -15,9 +15,11 @@ import org.apache.spark.sql.functions.udaf
   * extra `aggregateByKey` shuffles in the reference collapse into the
   * surrounding group-by shuffle.
   *
-  * Null handling matches the reference seqOp: a null/absent weight
-  * contributes nothing to either numerator or denominator (unlike SQL
-  * `avg`, which ignores only null *values*).
+  * Null handling: pass a null weight to skip a value — a row whose
+  * weight is null contributes nothing to either numerator or
+  * denominator. A null *value* with a non-null weight is read as 0.0
+  * and its weight is counted (unlike SQL `avg`, which ignores null
+  * values). Weights that sum to zero give NaN.
   */
 object WeightedMean extends Aggregator[WeightedValue, MeanBuf, Double] {
 

@@ -342,7 +342,7 @@ final class AnnSpec extends SparkTestBase {
     assert(n > 0)
   }
 
-  test("HyperplaneProbeSketches: base entries ≡ HyperplaneSketches, probes are distinct 1-bit flips") {
+  test("HyperplaneProbeSketches: base entries ≡ HyperplaneProbeSketches(…, probes = 0), probes are distinct 1-bit flips") {
     val (dim, planes, tables, seed, probes) = (64, 6, 5, 42L, 2)
     val width = probes + 1
     val rows = vecs.limit(50).select(col("id"),

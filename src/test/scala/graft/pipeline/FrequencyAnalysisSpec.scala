@@ -1,16 +1,25 @@
 package graft.pipeline
 
-import java.nio.file.{Files, Paths}
+import java.net.URI
+import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.SpecBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
-import graft.stage.Opts
+import graft.stage.{Context, JobEnv, Opts}
 
 /** End-to-end: synthetic variant JSON → method run → per-ancestry
   * weighted frequencies, checked against the independent SQL form of
   * the weighted mean (`sum(x*n)/sum(n)`), plus incremental no-op on
   * rerun. This is the SURVEY §7 step-6 "minimum end-to-end slice".
+  * The other cases pin the scoped read: each output reads only the
+  * part files of its own inputs, in at most 5 Spark jobs, and an
+  * ancestry without rows has no output.
   */
 final class FrequencyAnalysisSpec extends SparkTestBase {
 
@@ -20,12 +29,23 @@ final class FrequencyAnalysisSpec extends SparkTestBase {
     Files.write(p, lines.mkString("\n").getBytes)
   }
 
+  private def variant(varId: String, ds: String, anc: String, pheno: String,
+                      eaf: String, maf: String): String =
+    s"""{"varId":"$varId","dataset":"$ds","ancestry":"$anc","phenotype":"$pheno","eaf":$eaf,"maf":$maf}"""
+
+  private def metadata(root: String, ds: String, anc: String, samples: Int): Unit =
+    write(root, s"variants/$ds/$anc/metadata",
+      Seq(s"""{"name":"$ds","samples":$samples,"ancestry":"$anc"}"""))
+
+  private def context(root: String) = new Context(
+    "frequencyanalysis", "frequencyanalysis", spark, root, root, s"$root/.graft")
+
+  private def varIds(root: String, ancestry: String): Set[String] =
+    spark.read.json(s"$root/out/frequencyanalysis/$ancestry")
+      .collect().map(_.getAs[String]("varId")).toSet
+
   test("frequency analysis end-to-end with incremental rerun") {
     val root = tmpDir("freq-spec")
-
-    def variant(varId: String, ds: String, anc: String, pheno: String,
-                eaf: String, maf: String): String =
-      s"""{"varId":"$varId","dataset":"$ds","ancestry":"$anc","phenotype":"$pheno","eaf":$eaf,"maf":$maf}"""
 
     // dataset d1 (N=100): two traits → eaf averaged across traits first
     write(root, "variants/d1/EU/part-00000", Seq(
@@ -78,7 +98,7 @@ final class FrequencyAnalysisSpec extends SparkTestBase {
     assert(af.count() == 1)
 
     // UDAF result equals the SQL weighted-mean form (AGG-3 cross-check)
-    val vars = FrequencyAnalysis.readVariants(spark, root)
+    val vars = FrequencyAnalysis.readVariants(spark, root, "EU")
     val meta = FrequencyAnalysis.readMetadata(spark, root)
     val n = meta.select(col("name").as("dataset"), col("samples").as("n"))
       .groupBy("dataset").agg(max("n").as("n"))
@@ -92,9 +112,106 @@ final class FrequencyAnalysisSpec extends SparkTestBase {
     assert(math.abs(sqlForm("v1") - byVar("v1")._1.asInstanceOf[Double]) < 1e-12)
 
     // rerun: incremental planner reports nothing to do
-    val ctx = new graft.stage.Context(
-      "frequencyanalysis", "frequencyanalysis", spark, root, root, s"$root/.graft")
-    val stage = new FrequencyAnalysisStage()(ctx)
+    val stage = new FrequencyAnalysisStage()(context(root))
     assert(stage.getWork(new Opts(Seq("--yes"))).isEmpty)
+  }
+
+  /** Three ancestries over two datasets, plus one row filed under
+    * `d1/EU/` whose `ancestry` column says AF.
+    */
+  private def scopedCorpus(): String = {
+    val root = tmpDir("freq-scoped")
+    for ((ds, n) <- Seq("d1" -> 100, "d2" -> 300); anc <- Seq("EU", "AF", "SA")) {
+      for (p <- 0 until 2) write(root, s"variants/$ds/$anc/part-0000$p",
+        (0 until 20).map(i => variant(s"v$i", ds, anc, s"t$p", s"0.${i % 9 + 1}", s"0.${i % 5 + 1}")))
+      metadata(root, ds, anc, n)
+    }
+    write(root, "variants/d1/EU/part-00002", Seq(variant("stray", "d1", "AF", "t2d", "0.9", "0.4")))
+    root
+  }
+
+  private def realPath(p: Path): String = p.toRealPath().toString
+
+  test("scoped read: each output reads exactly the part files under its own inputs' dirnames") {
+    val root = scopedCorpus()
+    val stage = new FrequencyAnalysisStage()(context(root))
+    val plan = stage.buildOutputMap(stage.sources.flatMap(_.inputs(root)(spark)), new Opts(Seq("--yes")))
+    assert(plan.keySet == Set("EU", "AF", "SA"))
+    plan.foreach { case (output, inputs) =>
+      val expected = inputs.flatMap { in =>
+        Files.list(Paths.get(root, in.dirname)).iterator().asScala
+          .filter(_.getFileName.toString.startsWith("part-")).map(realPath)
+      }
+      val read = FrequencyAnalysis.readVariants(spark, root, output).inputFiles
+        .map(f => realPath(Paths.get(new URI(f)))).toSet
+      assert(read == expected, s"output $output")
+    }
+  }
+
+  test("a row whose ancestry disagrees with its directory lands in neither output") {
+    // The decision: an output is built from its own inputs only, so the
+    // AF-labelled row under d1/EU/ is filtered out of EU by its column
+    // and never read by AF. Touching d1/EU marks only EU stale, so an
+    // AF output that read it would depend on an input the planner does
+    // not track for AF.
+    val root = scopedCorpus()
+    FrequencyAnalysisMethod.runWith(spark, root, Seq("--yes"))
+    assert(varIds(root, "EU") == (0 until 20).map(i => s"v$i").toSet)
+    assert(varIds(root, "AF") == (0 until 20).map(i => s"v$i").toSet)
+  }
+
+  test("an ancestry whose inputs hold no rows has no output, cold and on a rebuild") {
+    val root = tmpDir("freq-empty")
+    def out(ancestry: String): Path = Paths.get(root, "out", "frequencyanalysis", ancestry)
+    write(root, "variants/d1/EU/part-00000", Seq(variant("v1", "d1", "EU", "t2d", "0.1", "0.1")))
+    metadata(root, "d1", "EU", 100)
+    // a dataset of SA with a metadata marker and no part file
+    metadata(root, "d2", "SA", 200)
+    write(root, "variants/d3/NA/part-00000", Seq(variant("v2", "d3", "NA", "t2d", "0.2", "0.2")))
+    metadata(root, "d3", "NA", 50)
+
+    FrequencyAnalysisMethod.runWith(spark, root, Seq("--yes"))
+    assert(Files.exists(out("EU")) && Files.exists(out("NA")))
+    assert(!Files.exists(out("SA")))
+
+    // NA's only input loses its rows: the rebuild removes the output
+    // it would have replaced
+    write(root, "variants/d3/NA/part-00000", Seq.empty)
+    metadata(root, "d3", "NA", 50)
+    val stage = new FrequencyAnalysisStage()(context(root))
+    assert(stage.getWork(new Opts(Seq("--yes"))).keySet == Set("NA"))
+    FrequencyAnalysisMethod.runWith(spark, root, Seq("--yes"))
+    assert(!Files.exists(out("NA")))
+    assert(Files.exists(out("EU")) && !Files.exists(out("SA")))
+  }
+
+  test("one output's job runs at most 5 Spark jobs and reads less than the corpus") {
+    val root = scopedCorpus()
+    val corpusBytes = Files.walk(Paths.get(root, "variants")).iterator().asScala
+      .filter(Files.isRegularFile(_)).map(Files.size).sum
+    val stage = new FrequencyAnalysisStage()(context(root))
+    val env = JobEnv("frequencyanalysis", "frequencyanalysis", stage.getName, "EU",
+      root, root, "out", dryRun = false)
+
+    // every job and task between two drained listener-bus points, as
+    // in ann.JobCountSpec: suites run one at a time in the test JVM
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val bytesRead = new AtomicLong
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => bytesRead.addAndGet(m.inputMetrics.bytesRead))
+    }
+    SpecBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      stage.make("EU").run(spark, env)
+      SpecBus.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    info(s"EU: ${jobs.get} jobs, ${bytesRead.get} of $corpusBytes corpus bytes read")
+    assert(jobs.get <= 5, s"ran ${jobs.get} jobs")
+    assert(bytesRead.get > 0 && bytesRead.get < corpusBytes, s"read ${bytesRead.get} of $corpusBytes bytes")
+    assert(varIds(root, "EU").size == 20)
   }
 }

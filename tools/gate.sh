@@ -1,5 +1,5 @@
 #!/usr/bin/env bash
-# Full local gate: specs -> correctness (DuckDB oracle) -> bench.
+# Full local gate: specs -> correctness (DuckDB oracle) -> bench -> methodbench.
 # Usage: tools/gate.sh [sf_correctness_dir] [sf_bench_dir]
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -29,3 +29,14 @@ python3 tools/check.py "$SF_CORRECT" "$OUT" | tail -2
 echo "== bench ($SF_BENCH) =="
 SPARK_GRAFT_SF_DIR="$SF_BENCH" SPARK_GRAFT_CPUS="$CPUS" \
   sbt -batch "runMain graft.Bench" 2>&1 | grep '"metric"'
+
+# the paper's own workload: an incremental method run, cold, no-op and refreshed
+echo "== methodbench =="
+for W in freq_heavy freq_wide; do
+  if python3 methodbench/run.py --workload "$W" --seed 1 --seconds 10 --trace 0 \
+      > "$OUT/methodbench-$W.json" 2> "$OUT/methodbench-$W.log"; then
+    echo "$W: $(cat "$OUT/methodbench-$W.json")"
+  else
+    echo "$W: FAILED (log: $OUT/methodbench-$W.log)"
+  fi
+done
