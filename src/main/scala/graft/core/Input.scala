@@ -26,10 +26,25 @@ object Input {
   /** Where a stage's inputs come from: a directory-prefix glob plus a
     * basename glob (reference: Input.scala:29-85).
     *
-    * The listing strategy mirrors the reference's hand-rolled
-    * partition pruning: list only under the literal `commonPrefix`
-    * (everything before the first `*`), then glob-filter the listed
-    * keys.
+    * Listing ([[Source.inputs]]) mirrors the reference's hand-rolled
+    * partition pruning: one recursive `listStatus` walk from the
+    * directory that holds `commonPrefix` (everything before the first
+    * `*`), with every listed file glob-filtered by [[Source.matches]].
+    *
+    * Not `fs.listFiles(dir, recursive = true)`: on the local FS that
+    * builds a `LocatedFileStatus` per file, whose constructor reads
+    * the file's permission, and without native IO each such read
+    * forks a shell. Measured on a 72-file tree (4 vCPUs): 6-7 ms per
+    * file, 506-610 ms for the `listFiles` listing against 4-11 ms for
+    * this walk. Spark's `HadoopFSUtils.listLeafFiles` skips the same
+    * cost by building its statuses with null permission, owner and
+    * group.
+    *
+    * One path for every filesystem. An object store lists a prefix
+    * flat in one paged call, where this walk makes one call per
+    * directory under the start; a flat-listing branch for object stores is
+    * left out because no object-store connector ships with this build,
+    * so nothing could test it.
     */
   final case class Source(prefix: String, basename: String,
                           rootOverride: Option[String] = None) {
@@ -60,9 +75,9 @@ object Input {
       }
 
     /** Driver-side listing: enumerate matching objects under `root`
-      * on whatever Hadoop filesystem `root` resolves to (local dir in
-      * tests, HDFS/S3A in production) and return them as inputs with
-      * keys relative to `root` (reference: Input.scala:38-45).
+      * on whatever Hadoop filesystem `root` resolves to and return
+      * them as inputs with keys relative to `root`, by the walk
+      * described on [[Source]] (reference: Input.scala:38-45).
       */
     def inputs(root: String)(implicit spark: SparkSession): Seq[Input] = {
       // per-source root override (the reference's s3BucketOverride,
@@ -70,17 +85,24 @@ object Input {
       val rootPath = new Path(rootOverride.getOrElse(root))
       val fs: FileSystem =
         rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val listRoot = new Path(rootPath, prefix.commonPrefix)
-      if (!fs.exists(listRoot)) return Seq.empty
-      val it  = fs.listFiles(listRoot, true)
-      val buf = Seq.newBuilder[Input]
-      val rootUri = fs.makeQualified(rootPath).toUri.getPath.stripSuffix("/") + "/"
-      while (it.hasNext) {
-        val st  = it.next()
-        val key = st.getPath.toUri.getPath.stripPrefix(rootUri)
-        val in  = Input(key, Instant.ofEpochMilli(st.getModificationTime))
-        if (matches(in)) buf += in
+      // the literal prefix may end inside a segment (`a/test=*/`) or
+      // be empty (`*/`): walk from the directory that holds it
+      val listRoot = prefix.commonPrefix.dirname match {
+        case ""  => rootPath
+        case dir => new Path(rootPath, dir)
       }
+      if (!fs.exists(listRoot)) return Seq.empty
+      val rootUri = fs.makeQualified(rootPath).toUri.getPath.stripSuffix("/") + "/"
+      val buf     = Seq.newBuilder[Input]
+      def walk(dir: Path): Unit = fs.listStatus(dir).foreach { st =>
+        if (st.isDirectory) walk(st.getPath)
+        else {
+          val key = st.getPath.toUri.getPath.stripPrefix(rootUri)
+          val in  = Input(key, Instant.ofEpochMilli(st.getModificationTime))
+          if (matches(in)) buf += in
+        }
+      }
+      walk(listRoot)
       buf.result()
     }
   }

@@ -70,7 +70,7 @@ final class ParquetTable[T: Encoder](
   /** Committed snapshots retained (manifests + their data dirs). */
   private val KeepManifests = 3
 
-  def exists: Boolean = currentManifest().isDefined
+  def exists: Boolean = versions.nonEmpty
 
   private val lockPath = new Path(path + ".lock")
 
@@ -115,32 +115,28 @@ final class ParquetTable[T: Encoder](
     finally fs.delete(lockPath, false)
   }
 
-  /** (version, snapshot dir name) of the latest committed manifest. */
-  private def currentManifest(): Option[(Long, String)] = {
-    val f = fs
-    if (!f.exists(manifestDir)) return None
-    val versions = f.listStatus(manifestDir).toSeq
-      .map(_.getPath.getName)
-      .filter(_.matches("v\\d{10}"))
-      .map(_.drop(1).toLong)
-    if (versions.isEmpty) None
-    else {
-      val v    = versions.max
-      val mf   = new Path(manifestDir, f"v$v%010d")
-      val in   = f.open(mf)
-      val snap =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
-      Some((v, snap))
-    }
+  private def manifestPath(version: Long): Path = new Path(manifestDir, f"v$version%010d")
+
+  /** Name of the snapshot dir that manifest `version` commits. */
+  private def readManifest(version: Long): String = {
+    val in = fs.open(manifestPath(version))
+    try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
+    finally in.close()
   }
 
+  /** (version, snapshot dir name) of the latest committed manifest. */
+  private def currentManifest(): Option[(Long, String)] =
+    versions.lastOption.map(v => v -> readManifest(v))
+
   /** Idempotent create (reference `migrate()`: CREATE TABLE IF NOT
-    * EXISTS, Runs.scala:36-45).
+    * EXISTS, Runs.scala:36-45). An existing table is seen without the
+    * writer lock, so a rerun's migrate costs one listing, not a lock
+    * file's create and delete; a missing one is re-checked under it.
     */
-  def migrate(): Unit = withWriterLock {
-    if (!exists) commitSnapshot(spark.emptyDataset[T])
-  }
+  def migrate(): Unit =
+    if (!exists) withWriterLock {
+      if (!exists) commitSnapshot(spark.emptyDataset[T])
+    }
 
   /** The table at its latest committed version. The returned Dataset
     * is pinned to that snapshot's immutable directory — later commits
@@ -181,17 +177,11 @@ final class ParquetTable[T: Encoder](
     * listed version reads consistently while GC'd ones fail loud.
     */
   def dsAt(version: Long): Dataset[T] = {
-    val f  = fs
-    val mf = new Path(manifestDir, f"v$version%010d")
-    if (!f.exists(mf))
+    if (!fs.exists(manifestPath(version)))
       throw new NoSuchElementException(
         s"version $version of $path does not exist or was garbage-collected " +
           s"(retained: ${versions.mkString(", ")})")
-    val in   = f.open(mf)
-    val snap =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-      finally in.close()
-    readSnapshot(snap)
+    readSnapshot(readManifest(version))
   }
 
   def isEmpty: Boolean = ds.isEmpty
@@ -253,8 +243,8 @@ final class ParquetTable[T: Encoder](
     val snap = "snap-" + UUID.randomUUID().toString.take(8)
     data.coalesce(1).write.mode(SaveMode.Overwrite)
       .parquet(new Path(path, snap).toString)
-    val ver      = currentManifest().map(_._1).getOrElse(0L) + 1L
-    val manifest = new Path(manifestDir, f"v$ver%010d")
+    val ver      = versions.lastOption.getOrElse(0L) + 1L
+    val manifest = manifestPath(ver)
     f.mkdirs(manifestDir)
     // the commit point: atomic create-if-absent of the next numbered
     // manifest. Under the writer lock a collision means another
@@ -275,16 +265,9 @@ final class ParquetTable[T: Encoder](
     * the committed state — GC is advisory cleanup.
     */
   private def gc(f: FileSystem, latest: Long): Unit = {
-    val cutoff = latest - (KeepManifests - 1)
-    val stats  = f.listStatus(manifestDir).toSeq
-      .filter(_.getPath.getName.matches("v\\d{10}"))
-    val (old, keep) = stats.partition(_.getPath.getName.drop(1).toLong < cutoff)
-    val live = keep.map { st =>
-      val in = f.open(st.getPath)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-      finally in.close()
-    }.toSet
-    old.foreach(st => f.delete(st.getPath, false))
+    val (old, keep) = versions.partition(_ < latest - (KeepManifests - 1))
+    val live        = keep.map(readManifest).toSet
+    old.foreach(v => f.delete(manifestPath(v), false))
     f.listStatus(new Path(path)).toSeq
       .map(_.getPath)
       .filter(p => p.getName.startsWith("snap-") && !live(p.getName))

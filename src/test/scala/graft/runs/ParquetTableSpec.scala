@@ -195,6 +195,19 @@ final class ParquetTableSpec extends SparkTestBase {
     assert(table.all().toSet == before)
   }
 
+  test("migrate() on an existing table takes no lock and commits nothing") {
+    val cp    = new CountingCommit
+    val table = new ParquetTable[(String, Long)](
+      spark, tmpDir("pt-migrate") + "/table", Seq("_1"), cp)
+    table.migrate()
+    assert(table.versions == Seq(1L), "a fresh table still commits v1")
+    assert(cp.creates.get == 2, "the lock file and manifest v1")
+    cp.creates.set(0)
+    table.migrate()
+    assert(cp.creates.get == 0, "no lock file, no manifest")
+    assert(table.versions == Seq(1L))
+  }
+
   test("update() is fenced to metadata scale: wide matches fail loud, table untouched") {
     // update() materializes MATCHED rows on the driver (f is an
     // arbitrary Scala function) — right for runs metadata, an OOM
@@ -216,5 +229,16 @@ final class ParquetTableSpec extends SparkTestBase {
       case (k, v) => (k, v + 10)
     }
     assert(table.all().toSet == Set(("a", 11L), ("b", 2L), ("c", 3L)))
+  }
+}
+
+/** The default commit primitive, counting its `createIfAbsent` calls. */
+final class CountingCommit extends CommitPrimitive {
+  val creates = new java.util.concurrent.atomic.AtomicInteger(0)
+
+  override def createIfAbsent(fs: org.apache.hadoop.fs.FileSystem, path: Path,
+                              content: Array[Byte]): Boolean = {
+    creates.incrementAndGet()
+    CommitPrimitive.HadoopAtomicCreate.createIfAbsent(fs, path, content)
   }
 }
