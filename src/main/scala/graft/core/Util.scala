@@ -32,6 +32,20 @@ object Stopwatch {
   }
 }
 
+/** Sizes on the local disk, for the spot-check tools' reports. */
+object LocalDisk {
+
+  /** Bytes under a local path: a file's length, or a directory's
+    * files summed recursively (0 for a missing path).
+    */
+  def dirBytes(path: String): Long = {
+    def walk(f: java.io.File): Long =
+      if (f.isDirectory) Option(f.listFiles()).map(_.map(walk).sum).getOrElse(0L)
+      else f.length()
+    walk(new java.io.File(path))
+  }
+}
+
 /** Partitioning helpers for compute-dense bounded relations. */
 object Partitioning {
 

@@ -5,9 +5,9 @@ import org.apache.spark.sql.functions._
 
 /** Corpus snapshot evolution: the relational MERGE INTO / diff pair
   * for immutable-file corpora (the corpus-scale analogue of
-  * `runs.ParquetTable.upsert`, which does the same anti-join ∪
-  * incoming dance for the KB-scale runs ledger — and of the MERGE a
-  * Delta/Iceberg table format would run transactionally).
+  * `runs.ParquetTable.upsert`, which merges the KB-scale runs ledger
+  * by key set on the driver — and of the MERGE a Delta/Iceberg table
+  * format would run transactionally).
   *
   * Scale shape: `upsert` is one keyed anti-join (target rows not
   * replaced) plus a union — the target never shuffles more than
@@ -145,8 +145,8 @@ object Merge {
     * new and some old (partition-level, not snapshot-level,
     * atomicity; `runs.ParquetTable` is the snapshot-isolated
     * primitive when readers need a consistent cut). On raw object
-    * storage the renames want a table format's commit, same caveat
-    * as `ParquetTable.writeAtomic`.
+    * storage the renames want a table format's commit, such as
+    * `ParquetTable`'s create-if-absent manifest.
     *
     * A pre-existing FLAT table (written by an older version of this
     * function) is migrated in one full rewrite on its first upsert,

@@ -3,17 +3,19 @@ package graft.runs
 import java.util.UUID
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, Dataset, Encoder, SaveMode, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.graft.Bridge
 
 /** A tiny MERGE-capable table stored as versioned parquet snapshots
   * under a manifest log — a hand-rolled miniature of the commit
   * protocol a table format (Delta / Iceberg) provides.
   *
   * Emulates `INSERT ... ON DUPLICATE KEY UPDATE` (reference:
-  * Runs.scala:77-103, RunStatus.scala:63-85 via Quill/MySQL) with
-  * pure DataFrame ops: `existing ANTI-JOIN incoming-keys UNION
-  * incoming`, written as a NEW immutable snapshot directory and
-  * committed by atomically creating the next numbered manifest file.
+  * Runs.scala:77-103, RunStatus.scala:63-85 via Quill/MySQL) as a
+  * key-set merge: the existing rows whose key is not incoming, plus
+  * the incoming rows, written as a NEW immutable snapshot directory
+  * and committed by atomically creating the next numbered manifest
+  * file.
   *
   * Layout:
   * {{{
@@ -48,19 +50,24 @@ import org.apache.spark.sql.{Column, Dataset, Encoder, SaveMode, SparkSession}
   * upsert before dispatch, then 1 `runs` upsert and 1 `runstatus`
   * update after its jobs succeed ([[graft.stage.Stage.processOutputs]]).
   *
-  * Rows are typed; keys are column names. The table is run-metadata
-  * sized (thousands of rows), but every operation is expressed
-  * relationally, so nothing here breaks if it grows by 10^6.
+  * Rows are typed products; keys are column names. Reads and commits
+  * run on the driver with no Spark job (the reference's point selects
+  * and upserts against MySQL, not distributed scans): a read decodes
+  * the snapshot's parquet file(s) through Spark's own parquet read
+  * support, and a commit merges key sets in Scala and writes one file
+  * through Spark's own parquet writer ([[org.apache.spark.sql.graft.Bridge]]).
+  * SCALE FENCE — metadata tables only: every operation holds the
+  * whole table in driver memory, as a `collect()` of it would. Right
+  * for run bookkeeping (thousands of rows); data-scale tables belong
+  * in [[graft.operators.Merge]].
   */
-final class ParquetTable[T: Encoder](
+final class ParquetTable[T <: Product : Encoder](
     spark: SparkSession,
     val path: String,
     val keyCols: Seq[String],
     commit: CommitPrimitive = CommitPrimitive.HadoopAtomicCreate,
     maxUpdateRows: Long = ParquetTable.MaxUpdateRows
 ) {
-
-  import spark.implicits._
 
   private def fs: FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -124,10 +131,6 @@ final class ParquetTable[T: Encoder](
     finally in.close()
   }
 
-  /** (version, snapshot dir name) of the latest committed manifest. */
-  private def currentManifest(): Option[(Long, String)] =
-    versions.lastOption.map(v => v -> readManifest(v))
-
   /** Idempotent create (reference `migrate()`: CREATE TABLE IF NOT
     * EXISTS, Runs.scala:36-45). An existing table is seen without the
     * writer lock, so a rerun's migrate costs one listing, not a lock
@@ -135,28 +138,31 @@ final class ParquetTable[T: Encoder](
     */
   def migrate(): Unit =
     if (!exists) withWriterLock {
-      if (!exists) commitSnapshot(spark.emptyDataset[T])
+      val vs = versions
+      if (vs.isEmpty) commitSnapshot(Seq.empty, vs)
     }
 
-  /** The table at its latest committed version. The returned Dataset
-    * is pinned to that snapshot's immutable directory — later commits
-    * do not disturb it (snapshot isolation for in-flight readers).
+  /** The table at its latest committed version, as a local Dataset of
+    * that snapshot's rows: later commits do not disturb it (snapshot
+    * isolation for in-flight readers).
     */
-  def ds: Dataset[T] = currentManifest() match {
-    case Some((_, snap)) => readSnapshot(snap)
-    case None            => spark.emptyDataset[T]
-  }
+  def ds: Dataset[T] = spark.createDataset(all())
 
-  /** Read one snapshot dir with the row type's own schema: every
-    * snapshot is written from a `Dataset[T]`, so the schema is known
-    * and `spark.read.parquet` need not launch a footer-inference job
-    * on every read.
+  def all(): Seq[T] = current(versions)
+
+  /** The rows committed by the latest of `vs`. */
+  private def current(vs: Seq[Long]): Seq[T] =
+    vs.lastOption.fold(Seq.empty[T])(v => readSnapshot(readManifest(v)))
+
+  /** Read one snapshot dir on the driver: its parquet files, skipping
+    * the `_`/`.`-prefixed side files (`_SUCCESS`, checksums) Spark's
+    * own listing skips.
     */
-  private def readSnapshot(snap: String): Dataset[T] =
-    spark.read.schema(implicitly[Encoder[T]].schema)
-      .parquet(new Path(path, snap).toString).as[T]
-
-  def all(): Seq[T] = ds.collect().toSeq
+  private def readSnapshot(snap: String): Seq[T] =
+    Bridge.readParquet[T](spark, fs.listStatus(new Path(path, snap)).toSeq.filter { s =>
+      val name = s.getPath.getName
+      s.isFile && !name.startsWith("_") && !name.startsWith(".")
+    })
 
   /** Committed versions still within the retention window, ascending
     * — the time-travel index.
@@ -181,69 +187,65 @@ final class ParquetTable[T: Encoder](
       throw new NoSuchElementException(
         s"version $version of $path does not exist or was garbage-collected " +
           s"(retained: ${versions.mkString(", ")})")
-    readSnapshot(readManifest(version))
+    spark.createDataset(readSnapshot(readManifest(version)))
   }
 
-  def isEmpty: Boolean = ds.isEmpty
+  private val keyIdx = keyCols.map(implicitly[Encoder[T]].schema.fieldIndex)
+
+  /** A row's key: its key columns, which for a product encoder are the
+    * product elements at the columns' positions.
+    */
+  private def key(row: T): Seq[Any] = keyIdx.map(row.productElement)
 
   /** Upsert: replace any existing row with the same key columns. */
-  def upsert(rows: Seq[T]): Unit = {
-    if (rows.isEmpty) return
-    withWriterLock {
-      val incoming = spark.createDataset(rows)
-      val kept     = ds.join(incoming.select(keyCols.map(c => $"$c"): _*), keyCols, "left_anti").as[T]
-      commitSnapshot(kept.unionByName(incoming))
+  def upsert(rows: Seq[T]): Unit =
+    if (rows.nonEmpty) mutate { cur =>
+      val incoming = rows.map(key).toSet
+      cur.filterNot(r => incoming(key(r))) ++ rows
     }
-  }
 
-  /** Delete all rows matching the predicate (null-safe: a null
-    * predicate result keeps the row).
-    */
-  def delete(pred: Column): Unit = withWriterLock {
-    commitSnapshot(ds.filter(!org.apache.spark.sql.functions.coalesce(
-      pred, org.apache.spark.sql.functions.lit(false))))
-  }
+  /** Delete all rows matching the predicate. */
+  def delete(pred: T => Boolean): Unit = mutate(_.filterNot(pred))
 
   /** Point update: transform matching rows, keep the rest.
     *
-    * SCALE FENCE — metadata tables only. `f` is an arbitrary Scala
-    * function, so the MATCHED rows must materialize on the driver
-    * (the unmatched remainder stays distributed). That is the right
-    * trade for this store's job — KB-scale runs/bookkeeping rows,
-    * the reference's analog being MySQL point updates — and wrong
-    * for any data-scale table, so the materialized side is capped at
-    * [[ParquetTable.MaxUpdateRows]]: a predicate matching more rows
-    * fails loud instead of OOMing the driver. Data-scale rewrites
-    * belong in [[graft.operators.Merge.upsertParquet]] (partition-
-    * pruned, fully distributed).
+    * The matches are capped at [[ParquetTable.MaxUpdateRows]]: this is
+    * a point-update API for KB-scale runs/bookkeeping rows (the
+    * reference's analog being MySQL point updates), so a predicate
+    * matching more rows fails loud, before anything is written.
+    * Data-scale rewrites belong in
+    * [[graft.operators.Merge.upsertParquet]] (partition-pruned, fully
+    * distributed).
     */
-  def update(pred: Column)(f: T => T): Unit = withWriterLock {
-    // one job: collect at most one row past the fence, so a wide match
-    // is caught before anything is rewritten
-    val probe = ds.filter(pred).limit(math.min(maxUpdateRows + 1, Int.MaxValue).toInt).collect()
-    require(probe.length <= maxUpdateRows,
+  def update(pred: T => Boolean)(f: T => T): Unit = mutate { cur =>
+    val (matched, rest) = cur.partition(pred)
+    require(matched.length <= maxUpdateRows,
       s"update() matched more than $maxUpdateRows rows of $path — this " +
-      "point-update API materializes matches on the driver and is fenced " +
-      s"to $maxUpdateRows rows (metadata-scale). Use a " +
-      "distributed rewrite (operators.Merge) for data-scale tables.")
-    val matched = probe.toSeq.map(f)
-    val rest    = ds.filter(!org.apache.spark.sql.functions.coalesce(
-      pred, org.apache.spark.sql.functions.lit(false)))
-    commitSnapshot(rest.unionByName(spark.createDataset(matched)))
+      s"point-update API is fenced to $maxUpdateRows rows (metadata-scale). " +
+      "Use a distributed rewrite (operators.Merge) for data-scale tables.")
+    rest ++ matched.map(f)
   }
 
-  /** Write `data` as a fresh immutable snapshot dir, then COMMIT by
-    * atomically creating the next numbered manifest — the only
-    * mutation the table's visible state ever sees. Must be called
-    * with the writer lock held. Retains the last [[KeepManifests]]
-    * versions and garbage-collects everything older.
+  /** One read-modify-write commit under the writer lock: `f` maps the
+    * latest committed rows to the next snapshot's. The manifest
+    * listing that finds them also numbers and GCs the commit.
     */
-  private def commitSnapshot(data: Dataset[T]): Unit = {
+  private def mutate(f: Seq[T] => Seq[T]): Unit = withWriterLock {
+    val vs = versions
+    commitSnapshot(f(current(vs)), vs)
+  }
+
+  /** Write `rows` as a fresh immutable snapshot dir, then COMMIT by
+    * atomically creating the manifest after the last of `vs` (the
+    * committed versions, listed under the writer lock) — the only
+    * mutation the table's visible state ever sees. Retains the last
+    * [[KeepManifests]] versions and garbage-collects everything older.
+    */
+  private def commitSnapshot(rows: Seq[T], vs: Seq[Long]): Unit = {
     val f    = fs
     val snap = "snap-" + UUID.randomUUID().toString.take(8)
-    data.coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(new Path(path, snap).toString)
-    val ver      = versions.lastOption.getOrElse(0L) + 1L
+    Bridge.writeParquet(spark, new Path(path, snap), rows)
+    val ver      = vs.lastOption.getOrElse(0L) + 1L
     val manifest = manifestPath(ver)
     f.mkdirs(manifestDir)
     // the commit point: atomic create-if-absent of the next numbered
@@ -257,15 +259,16 @@ final class ParquetTable[T: Encoder](
         s"commit of version $ver at $path lost the race: $manifest already " +
           "exists — another writer committed concurrently; this writer's " +
           "snapshot is unreferenced and will be garbage-collected")
-    gc(f, ver)
+    gc(f, vs :+ ver)
   }
 
-  /** Drop manifests older than the retention window and any snapshot
-    * dir no retained manifest references. Failures here never affect
-    * the committed state — GC is advisory cleanup.
+  /** Drop manifests of `vs` (ascending, the last one just committed)
+    * older than the retention window, and any snapshot dir no retained
+    * manifest references. Failures here never affect the committed
+    * state — GC is advisory cleanup.
     */
-  private def gc(f: FileSystem, latest: Long): Unit = {
-    val (old, keep) = versions.partition(_ < latest - (KeepManifests - 1))
+  private def gc(f: FileSystem, vs: Seq[Long]): Unit = {
+    val (old, keep) = vs.partition(_ < vs.last - (KeepManifests - 1))
     val live        = keep.map(readManifest).toSet
     old.foreach(v => f.delete(manifestPath(v), false))
     f.listStatus(new Path(path)).toSeq
@@ -276,7 +279,7 @@ final class ParquetTable[T: Encoder](
 }
 
 object ParquetTable {
-  /** Cap on rows a single `update()` may materialize on the driver.
+  /** Cap on rows a single `update()` may rewrite.
     * Generous for runs/bookkeeping metadata (thousands of rows);
     * far below anything data-scale.
     */

@@ -2,7 +2,6 @@ package graft.runs
 
 import java.time.Instant
 
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
 
 import graft.core.Input
@@ -51,11 +50,7 @@ final class Runs(spark: SparkSession, path: String, project: String, method: Str
 
   /** All prior runs of a stage (reference: Runs.scala:106-116). */
   def of(stage: String): Seq[RunRow] =
-    table.ds
-      .filter(col("project") === project && col("method") === method &&
-        col("stage") === stage)
-      .collect()
-      .toSeq
+    table.all().filter(r => r.project == project && r.method == method && r.stage == stage)
 
   /** Batch upsert of each output's inputs, all in one commit: on
     * duplicate key, the row's `version` and `timestamp` are replaced
@@ -70,9 +65,8 @@ final class Runs(spark: SparkSession, path: String, project: String, method: Str
 
   /** Delete all rows of one output (reference: Runs.scala:62-73). */
   def delete(stage: String, output: String): Unit =
-    table.delete(
-      col("project") === project && col("method") === method &&
-        col("stage") === stage && col("output") === output)
+    table.delete(r =>
+      r.project == project && r.method == method && r.stage == stage && r.output == output)
 }
 
 /** The `runstatus` table: started/ended lifecycle per output, with the
@@ -93,11 +87,7 @@ final class RunStatus(spark: SparkSession, path: String, project: String, method
   def all(): Seq[RunStatusRow] = table.all()
 
   def of(stage: String): Seq[RunStatusRow] =
-    table.ds
-      .filter(col("project") === project && col("method") === method &&
-        col("stage") === stage)
-      .collect()
-      .toSeq
+    table.all().filter(r => r.project == project && r.method == method && r.stage == stage)
 
   /** Insert (or conflict-reset) output rows, in one commit. */
   def insert(stage: String, outputs: String*): Unit = reset(stage, outputs, started = None)
@@ -113,9 +103,10 @@ final class RunStatus(spark: SparkSession, path: String, project: String, method
     table.upsert(outputs.map(o => RunStatusRow(project, method, stage, o, started, None, now)))
   }
 
-  private def keyPred(stage: String, outputs: Seq[String]) =
-    col("project") === project && col("method") === method &&
-      col("stage") === stage && col("output").isin(outputs: _*)
+  private def keyPred(stage: String, outputs: Seq[String]): RunStatusRow => Boolean = {
+    val out = outputs.toSet
+    r => r.project == project && r.method == method && r.stage == stage && out(r.output)
+  }
 
   /** Mark outputs as started, in one commit (reference:
     * RunStatus.scala:88-99, one output per call).

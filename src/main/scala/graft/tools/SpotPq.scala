@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.GraftSession
+import graft.core.LocalDisk.dirBytes
 import graft.ann.{Ann, Pq}
 
 /** Decade-scale audit for the IVF·PQ operator (a6) — sf1 (20 k
@@ -57,13 +58,6 @@ object SpotPq {
   private def canon(df: DataFrame): Set[Seq[Any]] = df
     .select(col("query_id"), col("nbr_id"), round(col("sim"), 9).as("sim"), col("rank"))
     .collect().map(_.toSeq).toSet
-
-  private def dirBytes(path: String): Long = {
-    def walk(f: java.io.File): Long =
-      if (f.isDirectory) Option(f.listFiles()).map(_.map(walk).sum).getOrElse(0L)
-      else f.length()
-    walk(new java.io.File(path))
-  }
 
   /** Primitive-loop top-k per query — independent ground truth, the
     * [[SpotSf10.bruteEpsPairs]] discipline: plain double loops on

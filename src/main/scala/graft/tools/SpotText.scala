@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.GraftSession
+import graft.core.LocalDisk.dirBytes
 import graft.index.TextIndex
 import graft.text.Bm25
 
@@ -89,13 +90,6 @@ object SpotText {
         round(sum(col("s")).cast(DoubleType), 9).as("score"))
       .orderBy(col("score").desc, col("doc_id"))
       .limit(k)
-  }
-
-  private def dirBytes(path: String): Long = {
-    def walk(f: java.io.File): Long =
-      if (f.isDirectory) Option(f.listFiles()).map(_.map(walk).sum).getOrElse(0L)
-      else f.length()
-    walk(new java.io.File(path))
   }
 
   def main(args: Array[String]): Unit = {

@@ -6,6 +6,8 @@ import scala.concurrent.duration.Duration
 import scala.concurrent.{Await, ExecutionContext, Future}
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.SpecBus
+import org.apache.spark.sql.{Encoder, Encoders, SaveMode}
 
 import graft.SparkTestBase
 
@@ -126,6 +128,70 @@ final class ParquetTableSpec extends SparkTestBase {
     assert(err.getMessage.contains("garbage-collected"))
   }
 
+  test("no table operation launches a Spark job") {
+    val table = newTable("pt-nojob")
+    val (_, jobs) = SpecBus.jobs(spark.sparkContext) {
+      table.migrate()
+      table.upsert(Seq(("a", 1L), ("b", 2L), ("c", 3L)))
+      table.update(_._1 == "a") { case (k, v) => (k, v + 10) }
+      table.delete(_._1 == "b")
+      assert(table.all().toSet == Set(("a", 11L), ("c", 3L)))
+      assert(table.ds.collect().toSet == table.all().toSet)
+      assert(table.dsAt(table.versions.head).collect().toSet == Set(("a", 1L), ("b", 2L), ("c", 3L)))
+    }
+    assert(jobs == 0)
+  }
+
+  // ---- the on-disk snapshot format, read and written both ways ----
+
+  private implicit val statusEnc: Encoder[RunStatusRow] = Encoders.product[RunStatusRow]
+
+  /** Rows with and without `started`/`ended`, at microsecond precision
+    * (a parquet timestamp's), so Instant equality is exact.
+    */
+  private val statusRows = Seq(
+    RunStatusRow("p", "m", "s", "o1", None, None, java.time.Instant.parse("2024-03-01T10:00:00.123456Z")),
+    RunStatusRow("p", "m", "s", "o2", Some(java.time.Instant.parse("2024-03-01T10:00:01.000001Z")),
+      None, java.time.Instant.parse("2024-03-01T10:00:01.000001Z")),
+    RunStatusRow("p", "m", "s", "o3", Some(java.time.Instant.parse("2024-03-01T10:00:02Z")),
+      Some(java.time.Instant.parse("2024-03-01T10:00:05.5Z")), java.time.Instant.parse("2024-03-01T09:59:59Z")))
+
+  private def statusTable(root: String) =
+    new ParquetTable[RunStatusRow](spark, root + "/table", Seq("project", "method", "stage", "output"))
+
+  test("a snapshot Spark's own writer committed reads back identically on the driver") {
+    // the layout earlier versions committed: Dataset.write of one
+    // partition, with a _SUCCESS marker and checksum side files
+    val table = statusTable(tmpDir("pt-read-compat"))
+    val snap  = new Path(table.path, "snap-spark001")
+    spark.createDataset(statusRows).coalesce(1).write.mode(SaveMode.Overwrite).parquet(snap.toString)
+    // the local FS's own listing hides checksum files: look on disk
+    val names = new java.io.File(snap.toUri.getPath).list().toSeq
+    assert(names.contains("_SUCCESS") && names.exists(_.endsWith(".crc")), names.mkString(","))
+    val fs  = snap.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val out = fs.create(new Path(table.path, "_manifests/v0000000001"), false)
+    try out.write("snap-spark001".getBytes("UTF-8")) finally out.close()
+
+    assert(table.all() == statusRows)
+    assert(table.dsAt(1L).collect().toSeq == statusRows)
+    // and a commit carries it forward
+    val o4 = RunStatusRow("p", "m", "s", "o4", None, None, java.time.Instant.parse("2024-03-02T00:00:00Z"))
+    table.upsert(Seq(o4))
+    assert(table.all().toSet == (statusRows :+ o4).toSet)
+  }
+
+  test("a driver-written snapshot reads identically through spark.read") {
+    val table = statusTable(tmpDir("pt-write-compat"))
+    table.migrate()
+    table.upsert(statusRows)
+    val fs   = new Path(table.path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val in   = fs.open(new Path(table.path, f"_manifests/v${table.versions.last}%010d"))
+    val snap = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim finally in.close()
+    val read = spark.read.schema(statusEnc.schema).parquet(new Path(table.path, snap).toString)
+      .as[RunStatusRow].collect().toSeq
+    assert(read.sortBy(_.output) == statusRows)
+  }
+
   // ---- the pluggable commit primitive (S3-class conditional put) ----
 
   test("conditional-put primitive: N racing writers, exactly one creates the key") {
@@ -220,12 +286,12 @@ final class ParquetTableSpec extends SparkTestBase {
     table.upsert(Seq(("a", 1L), ("b", 2L), ("c", 3L)))
     val before = table.all().toSet
     val err = intercept[IllegalArgumentException] {
-      table.update(org.apache.spark.sql.functions.lit(true)) { case (k, v) => (k, v + 1) }
+      table.update(_ => true) { case (k, v) => (k, v + 1) }
     }
     assert(err.getMessage.contains("fenced"))
     assert(table.all().toSet == before)
     // under the cap the point update still works, matched-side only
-    table.update(org.apache.spark.sql.functions.col("_1") === "a") {
+    table.update(_._1 == "a") {
       case (k, v) => (k, v + 10)
     }
     assert(table.all().toSet == Set(("a", 11L), ("b", 2L), ("c", 3L)))

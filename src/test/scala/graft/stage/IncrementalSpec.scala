@@ -3,6 +3,8 @@ package graft.stage
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.SpecBus
+
 import graft.SparkTestBase
 import graft.core.{Input, Outputs}
 
@@ -83,6 +85,42 @@ final class IncrementalSpec extends SparkTestBase {
     refresh(Seq("g2"))      // k = 1
     refresh(groups)         // k = 3
     refresh(Seq("g3"), "--insert-runs")
+  }
+
+  test("Method.runWith of job-free outputs launches no Spark job: cold, refresh and no-op") {
+    val root = tmpDir("nojob-spec")
+    groups.foreach(g => writeFile(root, s"a/$g/part-1"))
+    val method = new Method {
+      override def getName: String = "NoopMethod"
+      override def initStages(implicit context: Context): Unit = addStage(new Stage() {
+        val source = Input.Source("a/*/", "part-*")
+        override val sources = Seq(source)
+        override val rules: PartialFunction[Input, Outputs] = {
+          case source(group, _) => Outputs.Named(group)
+        }
+        override def make(output: String): SparkJob = SparkJob.noop
+        override def getName: String = "NoopStage"
+      })
+    }
+    // the ledger as runWith's own context sees it
+    val ledger = new Context("NoopMethod", "NoopMethod", spark, root, root, s"$root/.graft")
+    def run(): Int = SpecBus.jobs(spark.sparkContext)(method.runWith(spark, root, Seq("--yes")))._2
+    def ended: Map[String, Option[java.time.Instant]] =
+      ledger.runStatus.of("NoopStage").map(s => s.output -> s.ended).toMap
+
+    assert(run() == 0, "cold build over a fresh ledger")
+    assert(ledger.runs.of("NoopStage").map(_.output).toSet == groups.toSet)
+    val cold = ended
+    assert(cold.keySet == groups.toSet && cold.values.forall(_.isDefined))
+
+    Seq("g1", "g3").foreach(g => touch(root, s"a/$g/part-1"))
+    assert(run() == 0, "refresh of 2 stale outputs")
+    val refreshed = ended
+    assert(groups.filter(g => refreshed(g) != cold(g)) == Seq("g1", "g3"))
+
+    val v = ledgerVersion(ledger)
+    assert(run() == 0, "no-op")
+    assert(ledgerVersion(ledger) == v && ended == refreshed)
   }
 
   test("a failed job leaves runs unchanged and every output started, not ended") {

@@ -1,10 +1,8 @@
 package graft.stage
 
 import java.time.Instant
-import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.SpecBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 import graft.SparkTestBase
 import graft.core.{Input, Outputs}
@@ -103,24 +101,11 @@ final class StageSpec extends SparkTestBase {
     assert(excl.keySet == Set("web"))
   }
 
-  test("runs.of reads the ledger in exactly one Spark job") {
+  test("runs.of reads the ledger in no Spark job") {
     context.runs.migrate()
     context.runs.insert("TestStage", "api" -> Seq(apiMetrics1, apiMetrics2), "web" -> Seq(webLogs1))
-    // count only jobs submitted from this thread while the probe tag is set
-    val tag  = "graft.spec.probe"
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty(tag) != null)) jobs.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(tag, "runs.of")
-      val rows = try context.runs.of("TestStage") finally sc.setLocalProperty(tag, null)
-      SpecBus.drain(sc)
-      assert(rows.size == 3)
-      assert(jobs.get == 1)
-    } finally sc.removeSparkListener(listener)
+    val (rows, jobs) = SpecBus.jobs(spark.sparkContext)(context.runs.of("TestStage"))
+    assert(rows.size == 3)
+    assert(jobs == 0)
   }
 }

@@ -1,7 +1,10 @@
 package org.apache.spark
 
+import java.util.concurrent.atomic.AtomicInteger
+
 import scala.collection.mutable.ArrayBuffer
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -12,6 +15,27 @@ import org.apache.spark.sql.util.QueryExecutionListener
   */
 object SpecBus {
   def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
+  /** `body`'s result and the number of Spark jobs it submitted: jobs
+    * carrying a local property set on the calling thread for the call
+    * (threads it starts inherit it), so jobs of other threads do not
+    * count.
+    */
+  def jobs[A](sc: SparkContext)(body: => A): (A, Int) = {
+    val tag = "graft.spec.probe"
+    val n   = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(tag) != null)) n.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(tag, "probe")
+      val out = try body finally sc.setLocalProperty(tag, null)
+      drain(sc)
+      (out, n.get)
+    } finally sc.removeSparkListener(listener)
+  }
 
   /** `body`'s result with the QueryExecution of every `localCheckpoint`
     * it ran, eager or lazy: `Dataset.checkpoint` runs as a named

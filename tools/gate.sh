@@ -22,9 +22,12 @@ awk '/^\[info\] [A-Za-z0-9_]+:$/ { suite = substr($2, 1, length($2) - 1) }
      END { for (s in n) printf "  %s: %d\n", s, n[s] }' "$OUT/specs.log" | sort
 
 echo "== correctness ($SF_CORRECT) =="
-SPARK_GRAFT_CPUS="$CPUS" \
-  sbt -batch "runMain graft.Verify $SF_CORRECT $OUT" > /dev/null 2>&1
-python3 tools/check.py "$SF_CORRECT" "$OUT" | tail -2
+if SPARK_GRAFT_CPUS="$CPUS" \
+    sbt -batch "runMain graft.Verify $SF_CORRECT $OUT" > "$OUT/verify.log" 2>&1; then
+  python3 tools/check.py "$SF_CORRECT" "$OUT" | tail -2
+else
+  echo "graft.Verify: FAILED (log: $OUT/verify.log)"
+fi
 
 echo "== bench ($SF_BENCH) =="
 SPARK_GRAFT_SF_DIR="$SF_BENCH" SPARK_GRAFT_CPUS="$CPUS" \
