@@ -9,7 +9,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every `SparkEntry.queries` entry against
   * `SPARK_GRAFT_SF_DIR` and emits ONE JSON line
-  * `{"metric":…,"value":total,"unit":"sec","queries":{…},"sf":…}`.
+  * `{"metric":…,"value":total,"unit":"sec","queries":{…},"cpus":…,"sf":…}`.
   *
   * The line goes to stdout AND to a file (`SPARK_GRAFT_BENCH_OUT`,
   * default `BENCH.out` in the working directory) so the driver can
@@ -86,9 +86,18 @@ object Bench {
   def artifactSf(text: String): Option[String] =
     """\\?"sf\\?":([0-9.]+)""".r.findFirstMatchIn(text).map(_.group(1))
 
+  /** Core count self-described by a bench artifact (`"cpus":4` in a
+    * BENCH.out line, `"cpus": 32` in a driver JSON, or driver-escaped
+    * inside its tail), or None for a line without one. Timings are
+    * only comparable at one core count: a 32-core floor would flag
+    * nearly every query of a 4-core run as an outlier.
+    */
+  def artifactCpus(text: String): Option[String] =
+    """\\?"cpus\\?":\s*([0-9]+)""".r.findFirstMatchIn(text).map(_.group(1))
+
   /** Per-query FLOOR over a set of committed artifacts at the same
-    * scale factor: the minimum of every artifact that carries the
-    * query. Round 15 anchored to HEAD's artifact alone, which
+    * scale factor and core count: the minimum of every artifact that
+    * carries the query. Round 15 anchored to HEAD's artifact alone, which
     * ratchets UPWARD — once an inflated number is committed (m1 at
     * 0.525 s entered via a mid-round commit), every later run
     * compares against the inflated prior and the check can never
@@ -98,16 +107,19 @@ object Bench {
     * floor, and an inflated prior silences nothing while the clean
     * measurement remains in the window.
     */
-  def priorFloor(artifacts: Seq[String], sf: String): Map[String, Double] = {
-    val maps = artifacts.filter(a => artifactSf(a).contains(sf)).map(parsePriorQueries)
+  def priorFloor(artifacts: Seq[String], sf: String, cpus: String): Map[String, Double] = {
+    val maps = artifacts
+      .filter(a => artifactSf(a).contains(sf) && artifactCpus(a).contains(cpus))
+      .map(parsePriorQueries)
     maps.flatMap(_.keysIterator).distinct.map { k =>
       k -> maps.flatMap(_.get(k)).min
     }.toMap
   }
 
   /** Per-query seconds parsed from a prior BENCH.out JSON line (the
-    * non-query keys it also matches — value/nq/sf — are never looked
-    * up by a query name, so they ride along harmlessly).
+    * non-query keys it also matches — value/nq — are never looked up
+    * by a query name, so they ride along harmlessly; the keying tags
+    * `sf` and `cpus` describe the run, not a query, and are dropped).
     */
   def parsePriorQueries(line: String): Map[String, Double] =
     // optional backslashes: the driver's BENCH_r{N}.json artifacts store
@@ -118,7 +130,7 @@ object Bench {
     // single outlier. Accepting \" makes every committed artifact format
     // (raw BENCH.out line or driver JSON) usable as a prior.
     """\\?"([a-zA-Z0-9_]+)\\?":([0-9.]+)""".r.findAllMatchIn(line)
-      .map(m => m.group(1) -> m.group(2).toDouble).toMap
+      .map(m => m.group(1) -> m.group(2).toDouble).toMap -- Seq("sf", "cpus")
 
   /** 1-minute load average, or -1 where /proc is unavailable. The
     * bench records it at start and end in the artifact: the round-15
@@ -309,7 +321,8 @@ object Bench {
     // SPARK_GRAFT_BENCH_PRIOR points the anchor at an explicit file
     // for diagnosis (or "" to disable the check).
     // numeric scale factor parsed from the directory name (sf0.1 -> 0.1);
-    // also keys the anchor artifacts (only same-sf artifacts may floor)
+    // with the core count it keys the anchor artifacts (only same-sf,
+    // same-cpus artifacts may floor; with none the check is off)
     val sf = "sf([0-9.]+)".r.findFirstMatchIn(sfDir).map(_.group(1)).getOrElse("0")
     val priorQ: Map[String, Double] = {
       def fromFile(p: String): Option[String] =
@@ -345,9 +358,9 @@ object Bench {
         case Some("")   => Map.empty
         case Some(path) => fromFile(path).map(parsePriorQueries).getOrElse(Map.empty)
         case None =>
-          val floor = priorFloor(committedArtifacts, sf)
+          val floor = priorFloor(committedArtifacts, sf, cpus)
           if (floor.nonEmpty) floor
-          else fromFile(outPath).map(parsePriorQueries).getOrElse(Map.empty)
+          else priorFloor(fromFile(outPath).toSeq, sf, cpus)
       }
     }
     val rerunAdjusted = scala.collection.mutable.SortedSet.empty[String]
@@ -465,7 +478,7 @@ object Bench {
       else f""","steal_pct":${100.0 * (se - stealStart) / (te - cpuTotalStart)}%.2f"""
     }
     def mkLine(qs: String, nrerun: String): String =
-      s"""{"metric":"total","value":${sec3(total)},"unit":"sec","nq":${results.length},"queries":$qs$errors$nrerun$loadTag$stealTag,"sf":$sf}"""
+      s"""{"metric":"total","value":${sec3(total)},"unit":"sec","nq":${results.length},"queries":$qs$errors$nrerun$loadTag$stealTag,"cpus":$cpus,"sf":$sf}"""
     // errored queries always make the headline (a -1 the driver can
     // see beats a silent omission); then flagships; then the rest of
     // the registry HEAVIEST FIRST (r20 verdict item 6: the previous

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Partitioning.spread
 import graft.functions.VectorOps
 
 /** Approximate-nearest-neighbor search over an embedding column
@@ -22,24 +23,6 @@ import graft.functions.VectorOps
   *     recovers most recall.
   */
 object Ann {
-
-  /** Spread a compute-dense scoring input across the session's
-    * shuffle-partition count. Spark sizes scan splits by BYTES, but
-    * the broadcast-product / sketch passes below cost
-    * O(|broadcast| · dim) or O(tables · planes · dim) work PER ROW —
-    * a byte-small input (one parquet split, or the 1-partition result
-    * of an orderBy+limit sample) serializes the whole pass onto one
-    * core (measured at sf0.1: v4's 2M-cosine exact pair scoring ran
-    * as one 1.2 s task on a 32-core session; d17's 601-table sketch
-    * emission likewise). A no-op whenever the input already has at
-    * least the configured parallelism — at 100 TB the scan arrives
-    * with thousands of splits and nothing is shuffled — so the extra
-    * exchange exists exactly where it buys core-count speedup over a
-    * bounded relation (guide §2.5 "input skew": one unsplittable
-    * input, repartition after the read).
-    */
-  private[graft] def spread(df: DataFrame): DataFrame =
-    graft.core.Partitioning.spread(df)
 
   /** Exact top-k cosine neighbors for each query vector.
     *
@@ -176,90 +159,109 @@ object Ann {
     math.ceil(math.log(expectedPairs / maxExpectedMisses) / -math.log(missPerTable)).toInt.max(1)
   }
 
-  /** Sampled estimate of the corpus' true ≥ `minCos` pair count — the
-    * cheap pre-pass that feeds [[tablesForRecall]] (and the DBSCAN
-    * dispatch): a deterministic hash-sample of `sampleSize` vectors is
-    * brute-force pair-counted (≤ sampleSize² fused dots — trivial) and
-    * scaled by n(n−1)/s(s−1). Hash-ordering makes the sample a pure
-    * function of the ids, so the estimate replays identically across
-    * runs and engines; the corpus itself is scanned once (per-
-    * partition top-s, nothing corpus-sized shuffles). Pair counts at
-    * a fixed τ concentrate tightly under uniform sampling (each
-    * sampled pair is an unbiased indicator), so s = 2000 — 2 M
-    * scored pairs — bounds the relative error at the few-percent
-    * level that a LOGARITHMIC consumer like tablesForRecall shrugs
-    * off: ±30% on the estimate moves T by ±ln(1.3)/−ln(miss) ≈ ±4
-    * tables at the d5 gate config.
+  // The sampled pre-flights' fixed dials: a 2000-vector sample (2 M
+  // scored pairs, see [[pairSample]]) and an expected-miss budget of
+  // 0.05, which makes even one dropped pair 20-to-1 unlikely.
+  private val SampleSize = 2000
+  private val MissBudget = 0.05
+
+  /** The one hash-sampled pre-flight every LSH sizing law reads: the
+    * corpus count `n` and a deterministic hash-sample of
+    * s = min(sampleSize, n) vectors self-joined on a < b, each pair
+    * with its cosine — (va, vb, sim). Hash-ordering makes the sample a
+    * pure function of the ids, so every law measured on it replays
+    * identically across runs and engines; the corpus itself is scanned
+    * once (per-partition top-s, nothing corpus-sized shuffles), and
+    * the ≤ s²/2 scored pairs are fused dots — trivial. A sampled pair
+    * count scales to the corpus by n(n−1)/s(s−1) ([[PairSample.scale]]).
+    * Pair counts at a fixed τ concentrate tightly under uniform
+    * sampling (each sampled pair is an unbiased indicator), so
+    * s = 2000 — 2 M scored pairs — bounds the relative error at the
+    * few-percent level that a LOGARITHMIC consumer like
+    * [[tablesForRecall]] shrugs off: ±30% on the estimate moves T by
+    * ±ln(1.3)/−ln(miss) ≈ ±4 tables at the d5 gate config.
     */
-  def estimatePairCount(df: DataFrame, minCos: Double,
-                        sampleSize: Int = 2000, seed: Long = 42L): Double = {
+  private[graft] final case class PairSample(n: Long, s: Long, pairs: DataFrame) {
+    /** A count over the sampled pairs, scaled to the corpus (0 when
+      * fewer than two vectors were sampled: no pair exists). */
+    def scale(sampled: Long): Double =
+      if (s < 2) 0.0 else sampled.toDouble * (n.toDouble * (n - 1)) / (s.toDouble * (s - 1))
+  }
+
+  private[graft] def pairSample(df: DataFrame, sampleSize: Int, seed: Long): PairSample = {
     val n = df.count()
-    if (n < 2) return 0.0
     val s = math.min(sampleSize.toLong, n)
-    val sample = df.select(col("id"), col("vec"))
+    val v = df.select(col("id"), col("vec"))
       .orderBy(xxhash64(col("id"), lit(seed)), col("id"))
       .limit(s.toInt)
-    val sampled = cosinePairsExact(sample, minCos).count()
-    sampled.toDouble * (n.toDouble * (n - 1)) / (s.toDouble * (s - 1))
+      .select(col("id"), col("vec"), VectorOps.fnorm(col("vec")).as("nrm"))
+    // spread the streamed side of the s²/2 sampled product: orderBy +
+    // limit leaves ONE partition, which would run every sampled cosine
+    // (and the multi-probe trial sketches of its survivors) on one
+    // core (see Partitioning.spread)
+    val pairs = spread(v).select(col("id").as("a"), col("vec").as("va"), col("nrm").as("na"))
+      .join(broadcast(v.select(col("id").as("b"), col("vec").as("vb"), col("nrm").as("nb"))),
+        col("a") < col("b"))
+      .select(col("va"), col("vb"),
+        VectorOps.cosinePre(col("va"), col("vb"), col("na"), col("nb")).as("sim"))
+    PairSample(n, s, pairs)
+  }
+
+  // The analytic single-probe sizing: the recall-budget law at the
+  // estimated pair count (at least one), floored at 8 (the historic
+  // fixture default) so tiny/empty corpora still get a multi-table
+  // index rather than a degenerate one.
+  private def singleProbeTables(minCos: Double, planes: Int, estPairs: Double,
+                                maxExpectedMisses: Double): Int =
+    tablesForRecall(minCos, planes, math.max(estPairs, 1.0), maxExpectedMisses).max(8)
+
+  /** Sampled estimate of the corpus' true ≥ `minCos` pair count — the
+    * cheap pre-pass that feeds [[tablesForRecall]]: the [[pairSample]]
+    * pairs at or above `minCos`, scaled to the corpus.
+    */
+  def estimatePairCount(df: DataFrame, minCos: Double,
+                        sampleSize: Int = SampleSize, seed: Long = 42L): Double = {
+    val ps = pairSample(df, sampleSize, seed)
+    if (ps.s < 2) 0.0 else ps.scale(ps.pairs.filter(col("sim") >= minCos).count())
   }
 
   /** The measured-at-scale sizing law as a default: table count for
     * exactness-at-budget on THIS corpus, from a sampled pair-count
-    * estimate fed to [[tablesForRecall]]. `maxExpectedMisses = 0.05`
-    * makes even one dropped pair 20-to-1 unlikely. Floored at 8 (the
-    * historic fixture default) so tiny/empty corpora still get a
-    * multi-table index rather than a degenerate one.
+    * estimate fed to [[tablesForRecall]] at the 0.05 expected-miss
+    * budget, floored at 8.
     */
-  def autoTables(df: DataFrame, minCos: Double, planes: Int,
-                 seed: Long = 42L, maxExpectedMisses: Double = 0.05): Int = {
-    val est = estimatePairCount(df, minCos, seed = seed)
-    tablesForRecall(minCos, planes, math.max(est, 1.0), maxExpectedMisses).max(8)
-  }
+  def autoTables(df: DataFrame, minCos: Double, planes: Int, seed: Long = 42L): Int =
+    singleProbeTables(minCos, planes, estimatePairCount(df, minCos, seed = seed), MissBudget)
 
-  /** One sampled pre-flight, three numbers: the estimated true ≥τ
-    * pair count, the recall-budget table count for it, and — the
-    * candidateVolume idea applied to the sketch join — the expected
-    * CANDIDATE FRACTION: the probability a background pair (sim drawn
-    * from the sampled all-pairs distribution) collides in ≥ 1 of the
-    * `tables` tables, E[1 − (1 − p(sim)^planes)^T]. That fraction is
-    * what decides whether bucketing actually prunes: at a gap-less τ
-    * it approaches 1 (SCALE.md's measured 82% at the d5 gate — LSH
-    * then wins only by its distributable equi-join SHAPE, never by
-    * comparison count), while at a real near-dup τ it collapses and
-    * the index is doing its job. One hash-sample is scored once
-    * (≤ sampleSize² fused dots) and feeds all three numbers.
+  /** One sampled pre-flight, four numbers: the corpus count, the
+    * estimated true ≥τ pair count, the recall-budget table count for
+    * it, and — the candidateVolume idea applied to the sketch join —
+    * the expected CANDIDATE FRACTION: the probability a background
+    * pair (sim drawn from the sampled all-pairs distribution) collides
+    * in ≥ 1 of the `tables` tables, E[1 − (1 − p(sim)^planes)^T]. That
+    * fraction is what decides whether bucketing actually prunes: at a
+    * gap-less τ it approaches 1 (SCALE.md's measured 82% at the d5
+    * gate — LSH then wins only by its distributable equi-join SHAPE,
+    * never by comparison count), while at a real near-dup τ it
+    * collapses and the index is doing its job. One hash-sample is
+    * scored once (≤ 2000² fused dots) and feeds all of them.
     */
-  def lshProfile(df: DataFrame, minCos: Double, planes: Int,
-                 sampleSize: Int = 2000, seed: Long = 42L,
-                 maxExpectedMisses: Double = 0.05): LshProfile = {
-    val n = df.count()
-    if (n < 2) return LshProfile(0.0, 8, 0.0)
-    val s = math.min(sampleSize.toLong, n)
-    val sample = df.select(col("id"), col("vec"))
-      .orderBy(xxhash64(col("id"), lit(seed)), col("id"))
-      .limit(s.toInt)
-    val v = sample.select(col("id"), col("vec"), VectorOps.fnorm(col("vec")).as("nrm"))
-    // spread the streamed side of the s²/2 sampled product (see
-    // [[spread]]: orderBy+limit leaves one partition)
-    val sims = spread(v).select(col("id").as("a"), col("vec").as("va"), col("nrm").as("na"))
-      .join(broadcast(v.select(col("id").as("b"), col("vec").as("vb"), col("nrm").as("nb"))),
-        col("a") < col("b"))
-      .select(VectorOps.cosinePre(col("va"), col("vb"), col("na"), col("nb")).as("sim"))
+  def lshProfile(df: DataFrame, minCos: Double, planes: Int, seed: Long = 42L): LshProfile = {
+    val ps = pairSample(df, SampleSize, seed)
+    if (ps.s < 2) return LshProfile(ps.n, 0.0, 8, 0.0)
+    val sims = ps.pairs.select(col("sim"))
       .localCheckpoint(eager = false) // consumed by two aggregates
-    val sampled = sims.filter(col("sim") >= minCos).count()
-    val scale = (n.toDouble * (n - 1)) / (s.toDouble * (s - 1))
-    val estPairs = sampled * scale
-    val tables = tablesForRecall(minCos, planes,
-      math.max(estPairs, 1.0), maxExpectedMisses).max(8)
+    val estPairs = ps.scale(sims.filter(col("sim") >= minCos).count())
+    val tables = singleProbeTables(minCos, planes, estPairs, MissBudget)
     val p = pow(lit(1.0) - acos(greatest(lit(-1.0), least(col("sim"), lit(1.0)))) / lit(math.Pi),
       lit(planes))
     val frac = sims.agg(avg(lit(1.0) - pow(lit(1.0) - p, lit(tables))))
       .collect().head.getDouble(0)
-    LshProfile(estPairs, tables, frac)
+    LshProfile(ps.n, estPairs, tables, frac)
   }
 
   /** See [[lshProfile]]. */
-  final case class LshProfile(estPairs: Double, tables: Int, candidateFraction: Double)
+  final case class LshProfile(n: Long, estPairs: Double, tables: Int, candidateFraction: Double)
 
   /** (keep…, table, bucket) rows of the width-(probes+1) hyperplane
     * emission ([[graft.functions.HyperplaneProbeSketches]]): array slot
@@ -412,8 +414,8 @@ object Ann {
     * Scale shape: scoring is the broadcast (row × cell) product kept
     * entirely inside one codegen stage — [[graft.functions.DotProduct]]
     * (fused loop, float OR double centroid elements, bit-identical to
-    * the HOF form the oracle replays) feeds a `min(struct(-csim,
-    * cell, csim))` aggregate whose partial (map-side) combine reduces
+    * the HOF form the oracle replays) feeds a `max(struct(csim,
+    * -cell, cell))` aggregate whose partial (map-side) combine reduces
     * the n·k scored rows to n BEFORE the exchange, so the shuffle
     * carries one narrow row per vector no matter how many cells the
     * k* = √n sizing rule asks for. The previous window form shuffled
@@ -423,25 +425,41 @@ object Ann {
     * with Spark's NaN-is-greatest total order (identical to what the
     * desc sort used), then -cell breaks ties toward the lowest cell.
     */
-  def assignCells(vecs: DataFrame, centroids: DataFrame): DataFrame = {
+  def assignCells(vecs: DataFrame, centroids: DataFrame): DataFrame =
+    nearestCell(cellScores(vecs, centroids, "id", "vec", "nrm")._2, "id")
+
+  // every (row, cell) cosine of a (id, vec) side against broadcast
+  // centroids: the side's base projection (idAs, vecAs, normAs) and
+  // the narrow scored product (idAs, cell, csim). Scoring is the fused
+  // [[graft.functions.DotProduct]] (float or double centroid elements,
+  // bit-identical to the HOF form the oracle replays).
+  private[ann] def cellScores(df: DataFrame, centroids: DataFrame, idAs: String,
+                              vecAs: String, normAs: String): (DataFrame, DataFrame) = {
     val cents = broadcast(centroids.select(
       col("cell"), col("vec").as("centvec"),
       sqrt(VectorOps.dot(col("vec"), col("vec"))).as("centnorm")))
-    vecs.select(col("id"), col("vec"), VectorOps.fnorm(col("vec")).as("nrm"))
-      .join(cents)
-      .withColumn("csim",
-        VectorOps.fdot(col("vec"), col("centvec")) / (col("nrm") * col("centnorm")))
-      .select(col("id"),
-        struct(col("csim"), (-col("cell")).as("negcell"), col("cell")).as("sc"))
-      .groupBy(col("id"))
-      .agg(max(col("sc")).as("best"))
-      .select(col("id"), col("best.cell").as("cell"), col("best.csim").as("ccos"))
+    val base = df.select(col("id").as(idAs), col("vec").as(vecAs),
+      VectorOps.fnorm(col("vec")).as(normAs))
+    (base, base.join(cents).select(col(idAs), col("cell"),
+      (VectorOps.fdot(col(vecAs), col("centvec")) / (col(normAs) * col("centnorm"))).as("csim")))
   }
 
+  // each row's argmax cell and its cosine, (idAs, cell, ccos), by the
+  // struct max of [[assignCells]]' scale note
+  private def nearestCell(scored: DataFrame, idAs: String): DataFrame =
+    scored.select(col(idAs),
+        struct(col("csim"), (-col("cell")).as("negcell"), col("cell")).as("sc"))
+      .groupBy(col(idAs))
+      .agg(max(col("sc")).as("best"))
+      .select(col(idAs), col("best.cell").as("cell"), col("best.csim").as("ccos"))
+
+  // each row's cells ranked `csim DESC (NaN first), cell ASC` as crank
+  private[ann] def cellRanks(scored: DataFrame, idAs: String): DataFrame =
+    scored.withColumn("crank", row_number().over(
+      Window.partitionBy(col(idAs)).orderBy(col("csim").desc, col("cell").asc)))
+
   // nearest `n` cells for a (id, vec) side against broadcast
-  // centroids, (idAs, vecAs, normAs, cell) out. Scoring is the fused
-  // [[graft.functions.DotProduct]] (float or double centroid
-  // elements, bit-identical to the HOF form), and only narrow
+  // centroids, (idAs, vecAs, normAs, cell) out. Only narrow
   // (id, cell, csim) rows ever reach an exchange: n=1 (the corpus
   // side of every IVF build) aggregates the argmax with a map-side
   // partial combine — one row per vector crosses the wire — and
@@ -450,31 +468,11 @@ object Ann {
   // `csim DESC (NaN first), cell ASC` order exactly.
   private[ann] def assignN(df: DataFrame, centroids: DataFrame, n: Int,
                            idAs: String, vecAs: String, normAs: String): DataFrame = {
-    val cents = broadcast(centroids.select(
-      col("cell"), col("vec").as("centvec"),
-      sqrt(VectorOps.dot(col("vec"), col("vec"))).as("centnorm")))
-    val base = df.select(col("id").as(idAs), col("vec").as(vecAs),
-      VectorOps.fnorm(col("vec")).as(normAs))
-    val scored = base.join(cents)
-      .select(col(idAs), col("cell"),
-        (VectorOps.fdot(col(vecAs), col("centvec")) /
-          (col(normAs) * col("centnorm"))).as("csim"))
+    val (base, scored) = cellScores(df, centroids, idAs, vecAs, normAs)
     val chosen =
-      if (n == 1)
-        scored
-          .select(col(idAs),
-            struct(col("csim"), (-col("cell")).as("negcell"), col("cell")).as("sc"))
-          .groupBy(col(idAs))
-          .agg(max(col("sc")).as("best"))
-          .select(col(idAs), col("best.cell").as("cell"))
-      else {
-        val w = Window.partitionBy(col(idAs))
-          .orderBy(col("csim").desc, col("cell").asc)
-        scored.withColumn("crank", row_number().over(w))
-          .filter(col("crank") <= n)
-          .select(col(idAs), col("cell"))
-      }
-    base.join(chosen, Seq(idAs))
+      if (n == 1) nearestCell(scored, idAs)
+      else cellRanks(scored, idAs).filter(col("crank") <= n)
+    base.join(chosen.select(col(idAs), col("cell")), Seq(idAs))
       .select(col(idAs), col(vecAs), col(normAs), col("cell"))
   }
 
@@ -567,7 +565,7 @@ object Ann {
     val v = df.select(col("id"), col("vec"), VectorOps.fnorm(col("vec")).as("nrm"))
     // spread the STREAMED side: the broadcast nested-loop product
     // evaluates |v|²/2 fused cosines, and a 1-split input runs them
-    // all on one core (see [[spread]])
+    // all on one core (see Partitioning.spread)
     spread(v).select(col("id").as("a"), col("vec").as("va"), col("nrm").as("na"))
       .join(broadcast(v.select(col("id").as("b"), col("vec").as("vb"), col("nrm").as("nb"))),
         col("a") < col("b"))
@@ -676,7 +674,7 @@ object Ann {
     // spread before sketching: the emission costs
     // tables×width×planes×dim multiplies PER ROW — a byte-small
     // 1-split scan would compute every table's sketches for the whole
-    // corpus on one core (see [[spread]]; a no-op at scale where the
+    // corpus on one core (see Partitioning.spread; a no-op at scale where the
     // scan is already split)
     val sketched = sketchRows(spread(df),
       Seq(col("id"), col("vec"), VectorOps.fnorm(col("vec")).as("nrm")),
@@ -701,34 +699,52 @@ object Ann {
       .agg(max(col("sim")).as("sim"))
   }
 
-  /** Sampled per-table CATCH RATE of the margin-guided multi-probe
-    * scheme on THIS corpus' true ≥ `minCos` pairs — measured, not
-    * modeled: the analytic multi-probe catch needs the probability
-    * that the disagreeing plane ranks among a vector's `probes`
-    * smallest margins, which depends on the pair-angle distribution
-    * in a way no closed form captures honestly. Instead, the same
-    * hash-sample as [[estimatePairCount]] is self-joined for its true
-    * pairs, both probe-sketch arrays are computed inline over
-    * `trialTables` independent trial tables, and the fraction of
-    * (pair, table) trials where the emission sets intersect IS the
-    * per-table catch probability — unbiased, since tables are iid
-    * draws of the same Gaussian scheme the production index uses.
-    * Returns (rate, catches, trials); callers wanting a conservative
-    * sizing should deflate by the binomial CI (see [[mpAutoTables]]).
-    * Cost: one corpus scan for the sample + |truePairs| × trialTables
-    * small-array intersections — trivial, and interpreted HOFs are
-    * fine OFF the hot path.
+  // independent trial tables the multi-probe catch rate is measured over
+  private[ann] val TrialTables = 32
+
+  /** The multi-probe pre-flight: the [[pairSample]] pairs at or above
+    * `minCos` (its TRUE pairs) and, per pair, in how many of
+    * [[TrialTables]] trial tables the margin-guided probe emissions of
+    * its two vectors intersect — as the histogram (catch count c →
+    * pairs), ≤ TrialTables + 1 rows. The per-table catch rate is
+    * measured, not modeled: the analytic multi-probe catch needs the
+    * probability that the disagreeing plane ranks among a vector's
+    * `probes` smallest margins, which depends on the pair-angle
+    * distribution in a way no closed form captures honestly. Tables
+    * are iid draws of the same Gaussian scheme the production index
+    * uses, so the fraction of (pair, table) trials that catch IS the
+    * per-table catch probability, unbiased. One aggregate returns both
+    * the true-pair count and the catch events; splitting them scored
+    * the same s² fused dots twice — measured at ~2× the sizing cost.
+    * The trial sketches are interpreted HOFs over |true pairs| ×
+    * TrialTables small arrays — fine OFF the hot path.
     */
-  def mpCatchRate(df: DataFrame, minCos: Double, dim: Int, planes: Int,
-                  probes: Int, trialTables: Int = 32,
-                  sampleSize: Int = 2000, seed: Long = 42L): (Double, Long, Long) = {
-    val m = mpSample(df, minCos, dim, planes, probes, trialTables, sampleSize, seed)
-    val trials = m.sampledPairs * trialTables
-    (if (trials == 0) 0.0 else m.catches.toDouble / trials, m.catches, trials)
+  private[ann] def mpSample(df: DataFrame, minCos: Double, dim: Int, planes: Int,
+                            probes: Int, seed: Long): MpSample = {
+    val ps = pairSample(df, SampleSize, seed)
+    if (ps.s < 2) return MpSample(ps, Map.empty)
+    val width = probes + 1
+    val pairs = ps.pairs.filter(col("sim") >= minCos)
+      .select(
+        graft.functions.HyperplaneProbeSketches(col("va"), dim, planes, TrialTables, seed, probes).as("sa"),
+        graft.functions.HyperplaneProbeSketches(col("vb"), dim, planes, TrialTables, seed, probes).as("sb"))
+    val catchCnt = aggregate(
+      sequence(lit(0), lit(TrialTables - 1)), lit(0L),
+      (acc, t) => acc + when(arrays_overlap(
+        slice(col("sa"), t * width + 1, lit(width)),
+        slice(col("sb"), t * width + 1, lit(width))), 1L).otherwise(0L))
+    // the full per-pair catch-count HISTOGRAM, not just the sum: the
+    // heterogeneity-aware sizing needs the distribution of c over pairs
+    val rows = pairs.select(catchCnt.as("c"))
+      .groupBy(col("c")).agg(count(lit(1)).as("cnt")).collect()
+    MpSample(ps, rows.map(r => r.getLong(0).toInt -> r.getLong(1)).toMap)
   }
 
-  private final case class MpSample(n: Long, s: Long, sampledPairs: Long,
-                                    catches: Long, hist: Map[Int, Long])
+  /** See [[mpSample]]. */
+  private[ann] final case class MpSample(sample: PairSample, hist: Map[Int, Long]) {
+    def sampledPairs: Long = hist.valuesIterator.sum
+    def catches: Long = hist.iterator.map { case (c, cnt) => c.toLong * cnt }.sum
+  }
 
   /** Exactly-unbiased estimator of a pair's T-table miss probability
     * (1−r)^T from c catches in K iid trial tables: C(K−c, T)/C(K, T)
@@ -747,96 +763,39 @@ object Ann {
       p
     }
 
-  /** One sampled pre-flight pass shared by the multi-probe sizing:
-    * the [[estimatePairCount]] hash-sample is self-joined once, and a
-    * single aggregate returns BOTH the true ≥τ pair count (→ the
-    * recall budget's expected-pair estimate) and the probe-scheme
-    * catch events over `trialTables` trial tables (→ the measured
-    * per-table catch rate). Splitting these into two passes scored
-    * the same s² fused dots twice — measured at ~2× the sizing cost.
+  /** (table count, probes-pay) for the multi-probe pair join from ONE
+    * [[mpSample]] pass: the recall-budget law of [[tablesForRecall]]
+    * driven by the MEASURED per-table catch rate instead of the
+    * analytic single-probe p^planes. The rate is deflated to its 95%
+    * binomial lower bound before sizing (sampling noise must
+    * oversize, never undersize), and the result is FLOORED by a
+    * heterogeneity-aware sizing over the per-pair catch-count
+    * histogram (the average-rate law alone is average-case: Jensen
+    * lets τ-marginal pairs exceed the miss budget on corpora whose
+    * typical dup sits well above τ), then clamped by the analytic
+    * single-probe answer — probing strictly adds catch events (the
+    * base sketch is emission 0), so a larger-than-analytic demand can
+    * only be noise or an infeasible budget. Floors at 8 like
+    * [[autoTables]], and falls back to the single-probe sizing when
+    * the sample has no true pairs to measure (a super-selective τ).
+    *
+    * The second element is true only when the measured sizing beats
+    * the analytic single-probe law STRICTLY (and a catch rate was
+    * measurable at all); the auto join drops the probes otherwise, so
+    * the plan is the classic single-probe emission at the analytic
+    * count whenever probing wouldn't shrink the index. When it is
+    * false, the first element ALWAYS equals the single-probe sizing.
     */
-  private def mpSample(df: DataFrame, minCos: Double, dim: Int, planes: Int,
-                       probes: Int, trialTables: Int,
-                       sampleSize: Int, seed: Long): MpSample = {
-    val n = df.count()
-    if (n < 2) return MpSample(n, 0L, 0L, 0L, Map.empty)
-    val width = probes + 1
-    val s = math.min(sampleSize.toLong, n)
-    val sample = df.select(col("id"), col("vec"))
-      .orderBy(xxhash64(col("id"), lit(seed)), col("id"))
-      .limit(s.toInt)
-    val v = sample.select(col("id"), col("vec"), VectorOps.fnorm(col("vec")).as("nrm"))
-    // spread the streamed side: orderBy+limit leaves ONE partition,
-    // which would run the s²/2 sampled cosines and the survivors'
-    // trial-table probe sketches on one core (see [[spread]])
-    val pairs = spread(v).select(col("id").as("a"), col("vec").as("va"), col("nrm").as("na"))
-      .join(broadcast(v.select(col("id").as("b"), col("vec").as("vb"), col("nrm").as("nb"))),
-        col("a") < col("b"))
-      .filter(VectorOps.cosinePre(col("va"), col("vb"), col("na"), col("nb")) >= minCos)
-      .select(
-        graft.functions.HyperplaneProbeSketches(col("va"), dim, planes, trialTables, seed, probes).as("sa"),
-        graft.functions.HyperplaneProbeSketches(col("vb"), dim, planes, trialTables, seed, probes).as("sb"))
-    val catchCnt = aggregate(
-      sequence(lit(0), lit(trialTables - 1)), lit(0L),
-      (acc, t) => acc + when(arrays_overlap(
-        slice(col("sa"), t * width + 1, lit(width)),
-        slice(col("sb"), t * width + 1, lit(width))), 1L).otherwise(0L))
-    // the full per-pair catch-count HISTOGRAM, not just the sum: the
-    // heterogeneity-aware sizing needs the distribution of c over
-    // pairs (≤ trialTables+1 rows — a scalar-sized collect)
-    val rows = pairs.select(catchCnt.as("c"))
-      .groupBy(col("c")).agg(count(lit(1)).as("cnt")).collect()
-    val hist = rows.map(r => r.getLong(0).toInt -> r.getLong(1)).toMap
-    val sampledPairs = hist.valuesIterator.sum
-    val catches = hist.iterator.map { case (c, cnt) => c.toLong * cnt }.sum
-    MpSample(n, s, sampledPairs, catches, hist)
-  }
-
-  /** Auto table count for the multi-probe pair join: the recall-
-    * budget law of [[tablesForRecall]] driven by the MEASURED
-    * [[mpCatchRate]] instead of the analytic single-probe p^planes.
-    * The rate is deflated to its 95% binomial lower bound before
-    * sizing (sampling noise must oversize, never undersize), and the
-    * result is FLOORED by a heterogeneity-aware sizing over the
-    * per-pair catch-count histogram (the average-rate law alone is
-    * average-case: Jensen lets τ-marginal pairs exceed the miss
-    * budget on corpora whose typical dup sits well above τ — see
-    * the `misses(t)` U-statistic in [[mpSizing]]), then clamped by
-    * the analytic single-probe answer — probing strictly adds catch
-    * events (the base sketch is emission 0), so a larger-than-
-    * analytic demand can only be noise or an infeasible budget.
-    * Floors at 8 like [[autoTables]]. Falls back to the single-probe
-    * sizing when the sample has no true pairs to measure (a super-
-    * selective τ) — conservative, since every emitted probe then
-    * only adds recall.
-    */
-  def mpAutoTables(df: DataFrame, minCos: Double, dim: Int, planes: Int,
-                   probes: Int, seed: Long = 42L,
-                   maxExpectedMisses: Double = 0.05,
-                   trialTables: Int = 32, sampleSize: Int = 2000): Int =
-    mpSizing(df, minCos, dim, planes, probes, seed, maxExpectedMisses,
-      trialTables, sampleSize)._1
-
-  /** (table count, probes-pay) from ONE sampled pass — the second
-    * element is true only when the measured sizing beats the analytic
-    * single-probe law STRICTLY (and a catch rate was measurable at
-    * all); the auto join drops the probes otherwise, so the plan is
-    * the classic single-probe emission at the analytic count whenever
-    * probing wouldn't shrink the index. When it is false, the first
-    * element ALWAYS equals the floored single-probe sizing.
-    */
-  private def mpSizing(df: DataFrame, minCos: Double, dim: Int, planes: Int,
-                       probes: Int, seed: Long = 42L,
-                       maxExpectedMisses: Double = 0.05,
-                       trialTables: Int = 32, sampleSize: Int = 2000): (Int, Boolean) = {
-    val m = mpSample(df, minCos, dim, planes, probes, trialTables, sampleSize, seed)
-    val est = if (m.s < 2) 1.0 else math.max(
-      m.sampledPairs.toDouble * (m.n.toDouble * (m.n - 1)) / (m.s.toDouble * (m.s - 1)), 1.0)
-    val single = tablesForRecall(minCos, planes, est, maxExpectedMisses)
-    val trials = m.sampledPairs * trialTables
-    val sized =
-      if (m.catches == 0) single
+  private[graft] def mpSizing(df: DataFrame, minCos: Double, dim: Int, planes: Int,
+                              probes: Int, seed: Long = 42L,
+                              maxExpectedMisses: Double = MissBudget): (Int, Boolean) = {
+    val m = mpSample(df, minCos, dim, planes, probes, seed)
+    val est = m.sample.scale(m.sampledPairs)
+    val tSingle = singleProbeTables(minCos, planes, est, maxExpectedMisses)
+    val tMp =
+      if (m.catches == 0) tSingle
       else {
+        val trials = m.sampledPairs * TrialTables
         val rate = m.catches.toDouble / trials
         val low = math.max(rate - 1.96 * math.sqrt(rate * (1 - rate) / trials),
           1.0 / (2.0 * trials)) // never let the CI zero out a measured rate
@@ -856,13 +815,11 @@ object Ann {
         val scale = est / m.sampledPairs.toDouble
         def misses(t: Int): Double =
           scale * m.hist.iterator.map { case (c, cnt) =>
-            cnt * mpMissProb(trialTables, c, t) }.sum
-        val tHet = (1 to trialTables).find(t => misses(t) <= maxExpectedMisses)
+            cnt * mpMissProb(TrialTables, c, t) }.sum
+        val tHet = (1 to TrialTables).find(t => misses(t) <= maxExpectedMisses)
           .getOrElse(Int.MaxValue)
-        math.max(tAvg, tHet)
+        math.min(math.max(tAvg, tHet), tSingle).max(8)
       }
-    val tMp = math.min(sized, single).max(8)
-    val tSingle = single.max(8)
     // Probes must PAY FOR THEMSELVES IN TABLES: width-(probes+1)
     // emission at T tables costs what single-probe emission costs at
     // width×T — so unless the measured sizing beats the analytic
@@ -972,21 +929,5 @@ object Ann {
       .join(candIds, Seq("id"), "left_semi")
       .unionByName(incoming.select(col("id"), col("vec")))
     verifyCandidates(cands, vecsNeeded, minCos)
-  }
-
-  /** Embedding-cosine near-duplicate pairs (a < b, cosine ≥ τ).
-    * All-pairs form — kept ONLY as the ground truth for the recall
-    * spec; the gated d5 query and the scale path are both
-    * [[cosineNearDupPairsLSH]]. Never use this on a large corpus:
-    * the theta-only join plans as a broadcast-nested-loop product.
-    */
-  def cosineNearDupPairs(df: DataFrame, minCos: Double): DataFrame = {
-    val v = df.select(col("id"), col("vec"), VectorOps.fnorm(col("vec")).as("nrm"))
-    val a = v.select(col("id").as("a"), col("vec").as("va"), col("nrm").as("na"))
-    val b = v.select(col("id").as("b"), col("vec").as("vb"), col("nrm").as("nb"))
-    a.join(b, col("a") < col("b"))
-      .withColumn("sim", VectorOps.cosinePre(col("va"), col("vb"), col("na"), col("nb")))
-      .filter(col("sim") >= minCos)
-      .select("a", "b", "sim")
   }
 }

@@ -42,35 +42,33 @@ object Dbscan {
     * bucketing cannot prune below all-pairs comparisons and the
     * index build + per-table scoring is pure overhead over the brute
     * scan, so a corpus small enough to broadcast takes the brute
-    * path. When the fraction is small (a real near-dup τ), or when
+    * path once the fraction reaches one half. When the fraction is
+    * small (a real near-dup τ), or when
     * the corpus cannot broadcast AT ALL (n > maxBruteRows — at 100 TB
     * the theta-product isn't slow, it's impossible), the LSH
     * equi-join is the only shape that distributes.
     */
   def dispatchBrute(n: Long, candidateFraction: Double,
-                    denseFraction: Double = 0.5,
                     maxBruteRows: Long = 2000000L): Boolean =
-    n <= maxBruteRows && candidateFraction >= denseFraction
+    n <= maxBruteRows && candidateFraction >= 0.5
 
   /** End-to-end DBSCAN over (id, vec) rows with automatic ε-graph
     * engine selection — the 100 TB user calls THIS and gets the v4
     * brute scorer or the v5 LSH path per [[dispatchBrute]], fed by
-    * one sampled pre-flight ([[Ann.lshProfile]]: pair estimate,
-    * recall-budget table count, candidate fraction). The LSH branch
-    * uses the profile's table count, so its recall budget is sized to
-    * THIS corpus, not a fixture. Both branches feed the identical
+    * one sampled pre-flight ([[Ann.lshProfile]]: corpus count, pair
+    * estimate, recall-budget table count, candidate fraction). The
+    * LSH branch uses the profile's table count, so its recall budget
+    * is sized to THIS corpus, not a fixture. Both branches feed the identical
     * [[fromNeighbors]] density dataflow and both graphs are exact at
     * the budget (DbscanSpec pins them to identical output), so the
     * dispatch changes COST, never the clustering.
     */
   def epsCluster(vecs: DataFrame, minCos: Double, minPts: Int, dim: Int,
                  planes: Int = 6, seed: Long = 42L,
-                 denseFraction: Double = 0.5,
                  maxBruteRows: Long = 2000000L): DataFrame = {
-    val n = vecs.count()
     val profile = Ann.lshProfile(vecs, minCos, planes, seed = seed)
     val pairs =
-      if (dispatchBrute(n, profile.candidateFraction, denseFraction, maxBruteRows))
+      if (dispatchBrute(profile.n, profile.candidateFraction, maxBruteRows))
         Ann.cosinePairsExact(vecs, minCos)
       else
         Ann.cosineNearDupPairsLSH(vecs, minCos, dim, planes,

@@ -214,6 +214,10 @@ object Pq {
       PqLut(col("vec"), b.arr, b.present, b.m, b.ksub, b.dsub).as("lut"))
   }
 
+  // The encoded stage-1 scan relation every ADC consumer reads,
+  // (keep…, nbr_id, codes, cnorm): from a raw corpus (norms computed)
+  // or from a precomputed [[Ann.ivfAssignments]] assignment (`keep` =
+  // its cell, norms read from its `nrm`).
   // The repartition after the PqAssign projection is load-bearing,
   // not cosmetic: whole-stage codegen DEFERS a projected variable to
   // its use sites, and under the broadcast join that means
@@ -223,11 +227,12 @@ object Pq {
   // (~72 B/row), 3.5× smaller than the vectors it stands in for —
   // the same once-ever materialization the saved-index path does in
   // storage.
-  private def encodedCorpus(corpus: DataFrame, b: PqBooks): DataFrame =
-    corpus.select(col("id").as("nbr_id"),
+  private def encoded(df: DataFrame, b: PqBooks, keep: Seq[Column] = Nil,
+                      norm: Column = VectorOps.fnorm(col("vec"))): DataFrame =
+    df.select(keep ++ Seq(col("id").as("nbr_id"),
         PqAssign(col("vec"), b.arr, b.present, b.m, b.ksub, b.dsub).as("codes"),
-        VectorOps.fnorm(col("vec")).as("cnorm"))
-      .repartition(shufflePartitions(corpus))
+        norm.as("cnorm")): _*)
+      .repartition(shufflePartitions(df))
 
   /** Full-corpus PQ search: ADC-rank every (query, corpus) pair over
     * the compressed index, exact-re-rank the top `rerank`. With
@@ -238,7 +243,7 @@ object Pq {
   def pqTopK(corpus: DataFrame, queries: DataFrame, codebooks: DataFrame,
              k: Int, m: Int, ksub: Int, rerank: Int = 64): DataFrame = {
     val b = collectBooks(codebooks, m, ksub)
-    rerankStage(adcStage(scored(encodedCorpus(corpus, b), queryLuts(queries, b)), rerank),
+    rerankStage(adcStage(scored(encoded(corpus, b), queryLuts(queries, b)), rerank),
       corpus, queries, k)
   }
 
@@ -256,7 +261,7 @@ object Pq {
     *
     * Exactness contract, stated precisely: the fallback arm is the
     * brute scan (exact by definition), and the PQ arm re-ranks
-    * `marginX × measured` candidates — EXACT on every sampled query
+    * twice the measured rank in candidates — EXACT on every sampled query
     * (their true worst rank is inside the budget by construction) and
     * margin-covered on unsampled ones, the same average-case stance
     * as d17's miss budget. When the query set fits inside
@@ -269,48 +274,57 @@ object Pq {
     * ADC-ranks the full corpus×sample product, so the REFUSE arm
     * costs roughly 2× a plain brute scan (measurement + fallback).
     * That is the price of an honest dispatch on a structureless
-    * corpus; callers that already know the law for this corpus skip
-    * it by passing `knownRank` (a worst full-scan ADC rank measured
-    * earlier over the same corpus/k — the SpotPq protocol), which
-    * makes the call pure plan construction except for the corpus
-    * count.
+    * corpus.
     */
   def pqTopKAuto(corpus: DataFrame, queries: DataFrame, codebooks: DataFrame,
                  k: Int, m: Int, ksub: Int, sampleQueries: Int = 32,
-                 budgetFrac: Double = 0.02, marginX: Int = 2,
-                 knownRank: Option[Int] = None): DataFrame = knownRank match {
-    case Some(kr) =>
-      // pure plan construction (the SpotPq protocol) — no measurement
-      // pass, so nothing to share; keep the call side-effect-free
-      val budget = math.max(16, marginX * kr)
-      val n = corpus.count()
-      if (budget <= (budgetFrac * n).toLong)
-        pqTopK(corpus, queries, codebooks, k, m, ksub, rerank = budget)
-      else Ann.bruteForceTopK(corpus, queries, k)
-    case None =>
-      // encode ONCE: the measurement's full-scan ADC ranking and the
-      // accepted-arm serve read the same encoded relation (one corpus
-      // encode + shuffle, not one per consumer). DISK_ONLY persist,
-      // not localCheckpoint — the codes relation is corpus-sized (the
-      // ivfPqTopKAuto storage-discipline note).
-      val b = collectBooks(codebooks, m, ksub)
-      val cIdx = encodedCorpus(corpus, b)
-        .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-      val sample = queries.orderBy(col("id")).limit(sampleQueries)
-      val needed = measuredRank(scored(cIdx, queryLuts(sample, b)),
-        Ann.bruteForceTopK(corpus, sample, k).select(col("query_id"), col("nbr_id")))
-      val budget = math.max(16, marginX * needed)
-      val n = corpus.count()
-      if (budget <= (budgetFrac * n).toLong)
-        rerankStage(adcStage(scored(cIdx, queryLuts(queries, b)), budget), corpus, queries, k)
-      else {
+                 budgetFrac: Double = 0.02): DataFrame = {
+    // encode ONCE: the measurement's full-scan ADC ranking and the
+    // accepted-arm serve read the same encoded relation (one corpus
+    // encode + shuffle, not one per consumer). DISK_ONLY persist, not
+    // localCheckpoint — the codes relation is corpus-sized (the
+    // ivfPqTopKAuto storage-discipline note).
+    val b = collectBooks(codebooks, m, ksub)
+    val cIdx = encoded(corpus, b)
+      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
+    val sample = queries.orderBy(col("id")).limit(sampleQueries)
+    val needed = measuredRank(scored(cIdx, queryLuts(sample, b)),
+      Ann.bruteForceTopK(corpus, sample, k).select(col("query_id"), col("nbr_id")))
+    rerankBudget(needed, corpus.count(), budgetFrac) match {
+      case Some(rerank) =>
+        rerankStage(adcStage(scored(cIdx, queryLuts(queries, b)), rerank), corpus, queries, k)
+      case None =>
         // the measured law says the corpus has no structure for the
         // index to exploit at this k — exact scan, loudly the same
         // answer for a linear (not rerank-inflated) cost
         cIdx.unpersist()
         Ann.bruteForceTopK(corpus, queries, k)
-      }
+    }
   }
+
+  // The measured-dispatch rules every PQ auto path shares. Each law
+  // is margined 2× before it sets a dial, so unsampled queries are
+  // covered with slack; the UNMARGINED law is the structure signal.
+  private val MarginX = 2
+
+  // the cell law refuses the index when the worst sampled answer's
+  // cell rank exceeds `probeFrac` of the cells: the coarse quantizer
+  // does not separate this corpus, and probing most cells is a worse
+  // brute force
+  private def refusesCells(cellRank: Int, nCells: Long, probeFrac: Double): Boolean =
+    cellRank > probeFrac * nCells
+
+  // the probe dial: the margined cell law, at least 1, capped at the
+  // cell count
+  private def probeDial(cellRank: Int, nCells: Long): Int =
+    math.min(math.max(1L, MarginX.toLong * cellRank), nCells).toInt
+
+  // the rerank depth: the margined ADC law floored at 16, or None
+  // (refuse) when it exceeds `budgetFrac` of the corpus — ADC error
+  // displacing candidates by whole percents is the structureless-
+  // corpus signal (the a7 rule)
+  private def rerankBudget(adcRank: Int, n: Long, budgetFrac: Double): Option[Int] =
+    Some(math.max(16, MarginX * adcRank)).filter(_ <= (budgetFrac * n).toLong)
 
   /** The cell half of the measured dispatch law: the worst COARSE
     * rank, over the sampled queries' true top-k answers, of the cell
@@ -339,17 +353,8 @@ object Pq {
   private[ann] def measuredCellRankFromCells(tops: DataFrame, nbrCell: DataFrame,
                                              sampleQueries: DataFrame,
                                              centroids: DataFrame): Int = {
-    val cents = broadcast(centroids.select(col("cell"), col("vec").as("centvec"),
-      sqrt(VectorOps.dot(col("vec"), col("vec"))).as("centnorm")))
-    val qRanks = sampleQueries
-      .select(col("id").as("query_id"), col("vec").as("qvec"),
-        VectorOps.fnorm(col("vec")).as("qnorm"))
-      .join(cents)
-      .withColumn("csim",
-        VectorOps.fdot(col("qvec"), col("centvec")) / (col("qnorm") * col("centnorm")))
-      .withColumn("crank", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("query_id"))
-          .orderBy(col("csim").desc, col("cell").asc)))
+    val qRanks = Ann.cellRanks(
+        Ann.cellScores(sampleQueries, centroids, "query_id", "qvec", "qnorm")._2, "query_id")
       .select(col("query_id"), col("cell"), col("crank"))
     val row = tops.join(nbrCell, Seq("nbr_id"))
       .join(qRanks, Seq("query_id", "cell"))
@@ -357,31 +362,17 @@ object Pq {
     if (row.isNullAt(0)) 0 else row.getInt(0)
   }
 
-  /** The encoded stage-1 scan relation of the IVF·PQ paths (in
-    * [[ivfPqTopKAuto]], both the ADC law and the accepted-arm serve
-    * read it): (cell, nbr_id, codes, cnorm) from a precomputed
-    * [[Ann.ivfAssignments]] assignment. The repartition pins PqAssign
-    * map-side (the encodedCorpus deferral note) and shuffles only the
-    * compressed codes relation.
-    */
-  private def encodedFromAssigned(assigned: DataFrame, b: PqBooks): DataFrame =
-    assigned
-      .select(col("cell"), col("id").as("nbr_id"),
-        PqAssign(col("vec"), b.arr, b.present, b.m, b.ksub, b.dsub).as("codes"),
-        col("nrm").as("cnorm"))
-      .repartition(shufflePartitions(assigned))
-
   /** Fully-measured IVF·PQ auto dispatch — [[pqTopKAuto]]'s recipe
     * applied to BOTH index dials instead of taking `nprobe` as a
     * hand-set constant: sample queries, brute-force their true top-k
     * once, then (1) size `nprobe` from the worst measured cell rank
-    * ([[measuredCellRank]], ×marginX, so every sampled answer's cell
+    * ([[measuredCellRank]], ×2, so every sampled answer's cell
     * is probed with margin), refusing to the exact scan when the
     * margined depth exceeds `probeFrac` of the cells (the coarse
     * quantizer does not separate this corpus — probing most cells is
     * a worse brute force); then (2) size `rerank` from the worst
     * in-cell ADC rank at that depth ([[measuredRank]] over the probed
-    * cells, ×marginX, floor 16), refusing when the budget exceeds
+    * cells, ×2, floor 16), refusing when the budget exceeds
     * `budgetFrac` of the corpus (the a7 rule: ADC error displaces
     * candidates by whole percents on structureless data).
     *
@@ -397,7 +388,7 @@ object Pq {
   def ivfPqTopKAuto(corpus: DataFrame, queries: DataFrame, centroids: DataFrame,
                     codebooks: DataFrame, k: Int, m: Int, ksub: Int,
                     sampleQueries: Int = 32, probeFrac: Double = 0.5,
-                    budgetFrac: Double = 0.02, marginX: Int = 2): DataFrame = {
+                    budgetFrac: Double = 0.02): DataFrame = {
     val sample = queries.orderBy(col("id")).limit(sampleQueries)
     // one brute pass over the sample feeds BOTH measured laws (the
     // tops relation is sample×k rows, materialized once, bounded),
@@ -428,14 +419,13 @@ object Pq {
         asg.count()))
     val cellNeeded = measuredCellRankFromCells(tops,
       asg.select(col("id").as("nbr_id"), col("cell")), sample, centroids)
-    // the UNMARGINED law is the structure signal (needing most cells
-    // = the quantizer does not separate); the margin pads the
-    // accepted dial for unsampled queries and caps at the cell count
-    if (cellNeeded > probeFrac * nCells) {
+    // refuse on the cell law BEFORE measuring the ADC law: a quantizer
+    // that does not separate this corpus makes that pass pure waste
+    if (refusesCells(cellNeeded, nCells, probeFrac)) {
       asg.unpersist()
       return Ann.bruteForceTopK(corpus, queries, k)
     }
-    val nprobe = math.min(math.max(1L, marginX.toLong * cellNeeded), nCells).toInt
+    val nprobe = probeDial(cellNeeded, nCells)
     // encode ONCE: the ADC law and the accepted-arm serve previously
     // each rebuilt the identical encoded stage-1 relation (PqAssign
     // over the assignment + its pinning exchange) — one corpus encode
@@ -444,21 +434,21 @@ object Pq {
     // the two; it materializes under the ADC-law job and the serve
     // reads the cached blocks.
     val b = collectBooks(codebooks, m, ksub)
-    val cIdx = encodedFromAssigned(asg, b)
+    val cIdx = encoded(asg, b, Seq(col("cell")), col("nrm"))
       .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
     val adcNeeded = measuredRank(
       scored(cIdx, queryLuts(sample, b, Some(centroids -> nprobe)), Seq("cell")), tops)
-    val rerank = math.max(16, marginX * adcNeeded)
-    if (rerank <= (budgetFrac * n).toLong)
-      // rerank vectors come from the persisted assignment (id, vec,
-      // nrm — the same fnorm expression the corpus projection would
-      // recompute), so the serve plan touches no third corpus scan
-      rerankFromVecs(adcStage(scored(cIdx,
-          queryLuts(queries, b, Some(centroids -> nprobe)), Seq("cell")), rerank),
-        asg.select(col("id"), col("vec"), col("nrm")), queries, k)
-    else {
-      asg.unpersist(); cIdx.unpersist()
-      Ann.bruteForceTopK(corpus, queries, k)
+    rerankBudget(adcNeeded, n, budgetFrac) match {
+      case Some(rerank) =>
+        // rerank vectors come from the persisted assignment (id, vec,
+        // nrm — the same fnorm expression the corpus projection would
+        // recompute), so the serve plan touches no third corpus scan
+        rerankFromVecs(adcStage(scored(cIdx,
+            queryLuts(queries, b, Some(centroids -> nprobe)), Seq("cell")), rerank),
+          asg.select(col("id"), col("vec"), col("nrm")), queries, k)
+      case None =>
+        asg.unpersist(); cIdx.unpersist()
+        Ann.bruteForceTopK(corpus, queries, k)
     }
   }
 
@@ -475,9 +465,9 @@ object Pq {
                 codebooks: DataFrame, k: Int, m: Int, ksub: Int,
                 nprobe: Int = 2, rerank: Int = 64): DataFrame = {
     val b = collectBooks(codebooks, m, ksub)
-    rerankStage(adcStage(scored(encodedFromAssigned(Ann.ivfAssignments(corpus, centroids), b),
-        queryLuts(queries, b, Some(centroids -> nprobe)), Seq("cell")), rerank),
-      corpus, queries, k)
+    val cIdx = encoded(Ann.ivfAssignments(corpus, centroids), b, Seq(col("cell")), col("nrm"))
+    rerankStage(adcStage(scored(cIdx, queryLuts(queries, b, Some(centroids -> nprobe)), Seq("cell")),
+      rerank), corpus, queries, k)
   }
 
   /** Persist an IVF·PQ index: `<prefix>_centroids` + `<prefix>_books`
@@ -637,7 +627,7 @@ object Pq {
     * measured over the STORED packed tables with the recon-norm
     * ranking serving actually uses ([[indexedScored]]), not an
     * in-memory stand-in. The row also persists the DIAL the ADC
-    * law was measured at (`nprobe = marginX · cell_rank`, capped) —
+    * law was measured at (`nprobe = 2 · cell_rank`, capped) —
     * serving probes at exactly that stored dial, so a serve-time
     * margin choice can never probe cells the stored ADC law did not
     * cover — and the codes table's build fingerprint, so laws
@@ -655,7 +645,7 @@ object Pq {
     * check backstops any laws table that escapes that lifecycle.
     */
   def saveIvfPqLaws(spark: SparkSession, tablePrefix: String, measureK: Int,
-                    m: Int, ksub: Int, sampleN: Int = 32, marginX: Int = 2): Unit = {
+                    m: Int, ksub: Int, sampleN: Int = 32): Unit = {
     val corpus = spark.table(s"${tablePrefix}_vecs").select(col("id"), col("vec"))
     val centroids = spark.table(s"${tablePrefix}_centroids")
     val sample = lawsSample(spark, tablePrefix, sampleN)
@@ -677,7 +667,7 @@ object Pq {
     val cellNeeded = measuredCellRankFromCells(tops,
       spark.table(s"${tablePrefix}_codes").select(col("id").as("nbr_id"), col("cell")),
       sample, centroids)
-    val nprobe = math.min(math.max(1L, marginX.toLong * cellNeeded), nCells).toInt
+    val nprobe = probeDial(cellNeeded, nCells)
     // reclaim of the laws location (the StoredIndex.resetStorage
     // rationale: a previous session may have left the directory
     // without a metastore entry, and saveAsTable would then fail the
@@ -693,15 +683,9 @@ object Pq {
     spark.createDataFrame(
       spark.sparkContext.parallelize(Seq(Row(measureK, sampleN, cellNeeded,
         adcNeeded, nprobe, nCells, n, codesBuildId(spark, tablePrefix))), 1),
-      StructType(Seq(
-        StructField("measure_k", IntegerType, nullable = false),
-        StructField("sample_n", IntegerType, nullable = false),
-        StructField("cell_rank", IntegerType, nullable = false),
-        StructField("adc_rank", IntegerType, nullable = false),
-        StructField("nprobe", IntegerType, nullable = false),
-        StructField("n_cells", org.apache.spark.sql.types.LongType, nullable = false),
-        StructField("corpus_n", org.apache.spark.sql.types.LongType, nullable = false),
-        StructField("build_id", org.apache.spark.sql.types.StringType, nullable = false))))
+      StructType.fromDDL("measure_k INT NOT NULL, sample_n INT NOT NULL, " +
+        "cell_rank INT NOT NULL, adc_rank INT NOT NULL, nprobe INT NOT NULL, " +
+        "n_cells BIGINT NOT NULL, corpus_n BIGINT NOT NULL, build_id STRING NOT NULL"))
       .write.mode("overwrite").format("parquet")
       .saveAsTable(s"${tablePrefix}_laws")
   }
@@ -721,13 +705,12 @@ object Pq {
     * longer matches the codes table (the index was rebuilt since the
     * laws were measured; the dials describe a corpus that no longer
     * exists). The probe runs at the STORED `nprobe` — the dial the
-    * ADC law was measured at — so `marginX` here margins only the
+    * ADC law was measured at — so the serve-time margin pads only the
     * rerank depth, never the probe width.
     */
   def ivfPqTopKIndexedAuto(spark: SparkSession, tablePrefix: String,
                            queries: DataFrame, k: Int, m: Int, ksub: Int,
-                           probeFrac: Double = 0.5, budgetFrac: Double = 0.02,
-                           marginX: Int = 2): DataFrame = {
+                           probeFrac: Double = 0.5, budgetFrac: Double = 0.02): DataFrame = {
     val law = spark.table(s"${tablePrefix}_laws").head()
     val storedBuild = law.getAs[String]("build_id")
     val liveBuild = codesBuildId(spark, tablePrefix)
@@ -744,12 +727,12 @@ object Pq {
     val nprobe = law.getAs[Int]("nprobe")
     val nCells = law.getAs[Long]("n_cells")
     val corpusN = law.getAs[Long]("corpus_n")
-    val rerank = math.max(16, marginX * adcRank)
-    if (cellRank > probeFrac * nCells || rerank > (budgetFrac * corpusN).toLong)
-      Ann.bruteForceTopK(
+    rerankBudget(adcRank, corpusN, budgetFrac) match {
+      case Some(rerank) if !refusesCells(cellRank, nCells, probeFrac) =>
+        ivfPqTopKIndexed(spark, tablePrefix, queries, k, m, ksub, nprobe, rerank)
+      case _ => Ann.bruteForceTopK(
         spark.table(s"${tablePrefix}_vecs").select(col("id"), col("vec")), queries, k)
-    else
-      ivfPqTopKIndexed(spark, tablePrefix, queries, k, m, ksub, nprobe, rerank)
+    }
   }
 
   // the query side of every ADC join: each query's baked lookup

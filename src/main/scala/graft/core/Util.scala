@@ -58,7 +58,8 @@ object Partitioning {
     * than a plain scan — a byte-small input (one parquet split, or
     * the 1-partition result of an orderBy+limit sample) serializes
     * the WHOLE pass onto one core (measured at sf0.1: v4's 2M-cosine
-    * exact pair scoring ran as one 1.2 s task on a 32-core session).
+    * exact pair scoring ran as one 1.2 s task on a 32-core session;
+    * d17's 601-table sketch emission likewise).
     *
     * A no-op whenever the input already has at least the configured
     * parallelism — at 100 TB the scan arrives with thousands of

@@ -37,19 +37,18 @@ object SemDeDup {
     * training included ([[graft.ann.Ann.kmeansCentroids]], fixed
     * iterations, deterministic hash-sampled seeds, so the result is
     * still a pure function of the data). With k = √n both terms are
-    * n^1.5: sub-quadratic without tuning, at ANY corpus size.
+    * n^1.5: sub-quadratic without tuning, at ANY corpus size. The
+    * quantizer trains for 2 k-means iterations.
     */
-  def runAuto(vecs: DataFrame, minCos: Double, kmeansIters: Int = 2,
-              cellsPerSqrtN: Double = 1.0): DataFrame = {
-    val k = autoCellCount(vecs.count(), cellsPerSqrtN)
-    run(vecs, Ann.kmeansCentroids(vecs, k, kmeansIters), minCos)
-  }
+  def runAuto(vecs: DataFrame, minCos: Double): DataFrame =
+    run(vecs, Ann.kmeansCentroids(vecs, autoCellCount(vecs.count()), iters = 2), minCos)
 
-  /** The k* = Θ(√n) sizing rule by itself, for callers sizing their
-    * own quantizer (and for specs asserting the law tracks n).
+  /** The k* = ⌈√n⌉ sizing rule by itself (at least 2 cells), for
+    * callers sizing their own quantizer (and for specs asserting the
+    * law tracks n).
     */
-  def autoCellCount(n: Long, cellsPerSqrtN: Double = 1.0): Int =
-    math.max(2, math.ceil(cellsPerSqrtN * math.sqrt(n.toDouble)).toInt)
+  def autoCellCount(n: Long): Int =
+    math.max(2, math.ceil(math.sqrt(n.toDouble)).toInt)
 
   def run(vecs: DataFrame, centroids: DataFrame, minCos: Double): DataFrame = {
     val assigned = Ann.assignCells(vecs, centroids) // (id, cell, ccos)

@@ -210,7 +210,7 @@ object CorpusOps {
     "d16_semdedup_auto" -> { (s, d) =>
       graft.dedup.SemDeDup.runAuto(
           t(s, d, "embeddings").select(col("vec_id").as("id"), col("embedding").as("vec")),
-          minCos = 0.45, kmeansIters = 2)
+          minCos = 0.45)
         .select(col("id"), col("cell"), col("cluster_rep"),
           round(col("centroid_cos"), 6).as("centroid_cos"), col("kept"))
         .orderBy(col("id"))
@@ -358,7 +358,7 @@ object CorpusOps {
     // at the SAME (τ, minPts) so the hash match proves the dispatch
     // changes cost, never the clustering. The default arm takes the
     // brute path (n ≤ maxBruteRows and the sampled candidate fraction
-    // at this gap-less τ exceeds denseFraction); the second arm pins
+    // at this gap-less τ is at least one half); the second arm pins
     // maxBruteRows below n, forcing the LSH branch with the profile's
     // recall-budget table count (maxExpectedMisses = 0.05 → a single
     // dropped pair is 20-to-1 unlikely, and the whole pre-flight is
@@ -390,9 +390,9 @@ object CorpusOps {
     // d5's UN-PINNED form — every knob at its default. As of round 16
     // the default IS the margin-guided multi-probe join: the table
     // count comes from the corpus via the MEASURED per-table catch
-    // rate (mpCatchRate over the same deterministic 2000-vector hash
-    // sample, CI-deflated, heterogeneity-floored) at the 0.05
-    // expected-miss budget — 6–9× fewer tables than the analytic
+    // rate (Ann.mpSizing's catch histogram over the same deterministic
+    // 2000-vector hash sample, CI-deflated, heterogeneity-floored) at
+    // the 0.05 expected-miss budget — 6–9× fewer tables than the analytic
     // single-probe law for identical output (SCALE.md), with the
     // unmeasurable-τ fallback dropping probes and reverting to the
     // analytic sizing. This is the config a user who types nothing
@@ -413,7 +413,7 @@ object CorpusOps {
     // hyperplane family): per table each vector also probes its
     // `probes` smallest-|projection| one-bit flips, so a table
     // catches a pair that straddles one or two near-boundary planes
-    // — and the MEASURED per-table catch rate (mpCatchRate on the
+    // — and the MEASURED per-table catch rate (Ann.mpSizing on the
     // same deterministic hash sample as d17's sizing) feeds the same
     // recall-budget law, landing ~4× fewer tables than d17's
     // single-probe sizing at this τ. It is Ann.cosineNearDupPairsLSH

@@ -147,15 +147,9 @@ object SpotTau {
 
       // one 5,000-vector all-pairs sim sample feeds every plane
       // count's collision model: E[p(sim)^planes], p = 1 − acos/π
-      val s = 5000L.min(n)
-      val sv = planted.orderBy(xxhash64(col("id"), lit(42L)), col("id")).limit(s.toInt)
-        .select(col("id"), col("vec"), graft.functions.VectorOps.fnorm(col("vec")).as("nrm"))
-      val sampleP = sv.select(col("id").as("a"), col("vec").as("va"), col("nrm").as("na"))
-        .join(broadcast(sv.select(col("id").as("b"), col("vec").as("vb"), col("nrm").as("nb"))),
-          col("a") < col("b"))
-        .select((lit(1.0) - acos(greatest(lit(-1.0),
-          least(graft.functions.VectorOps.cosinePre(col("va"), col("vb"), col("na"), col("nb")),
-            lit(1.0)))) / lit(math.Pi)).as("p"))
+      val sampleP = Ann.pairSample(planted, sampleSize = 5000, seed = 42L).pairs
+        .select((lit(1.0) - acos(greatest(lit(-1.0), least(col("sim"), lit(1.0)))) /
+          lit(math.Pi)).as("p"))
         .agg(avg(pow(col("p"), lit(10))), avg(pow(col("p"), lit(12))),
           avg(pow(col("p"), lit(14))), avg(pow(col("p"), lit(16))))
         .collect().head
@@ -187,7 +181,7 @@ object SpotTau {
       }
 
       // multi-probe arm (round 15): the production auto path —
-      // measured-catch sizing (mpAutoTables) at the SAME 0.01 miss
+      // measured-catch sizing (mpSizing) at the SAME 0.01 miss
       // budget — must still equal the independent brute force exactly,
       // at a fraction of the law's single-probe table count. This
       // chains the SCALE.md sf1 A/B (T 156→9, 6.3×) to decade 2
@@ -195,7 +189,7 @@ object SpotTau {
       for (probes <- Seq(2)) {
         val planes = 12
         t0 = System.nanoTime()
-        val tMp = Ann.mpAutoTables(planted, tau, dim = 64, planes = planes,
+        val (tMp, _) = Ann.mpSizing(planted, tau, dim = 64, planes = planes,
           probes = probes, maxExpectedMisses = 0.01)
         val tSingle = Ann.tablesForRecall(tau, planes, nPairs.toDouble, 0.01)
         val mp = Ann.cosineNearDupPairsLSH(planted, minCos = tau, dim = 64,

@@ -97,33 +97,58 @@ final class BenchSelfCheckSpec extends AnyFunSuite {
     // the committed-artifact window: the clean 0.23 stays the anchor
     // while it remains in the window, and the inflated number flags.
     val clean    = """{"metric":"total","value":9.0,"unit":"sec","nq":2,""" +
-      """"queries":{"m1_media_features":0.23,"q1_pricing_summary":0.493},"sf":0.1}"""
+      """"queries":{"m1_media_features":0.23,"q1_pricing_summary":0.493},"cpus":4,"sf":0.1}"""
     val inflated = """{"metric":"total","value":9.5,"unit":"sec","nq":2,""" +
-      """"queries":{"m1_media_features":0.59,"q1_pricing_summary":0.49},"sf":0.1}"""
-    val floor = Bench.priorFloor(Seq(inflated, clean), "0.1")
+      """"queries":{"m1_media_features":0.59,"q1_pricing_summary":0.49},"cpus":4,"sf":0.1}"""
+    val floor = Bench.priorFloor(Seq(inflated, clean), "0.1", "4")
     assert(floor("m1_media_features") == 0.23)
     assert(floor("q1_pricing_summary") == 0.49) // min is per-query, not per-artifact
     // the inflated-prior query still re-measures at the gate
     assert(Bench.needsRerun(floor.get("m1_media_features"), 0.525))
     // queries only one artifact carries still get a floor
-    val newer = """{"queries":{"d18_embed_neardup_mp":0.83},"sf":0.1}"""
-    assert(Bench.priorFloor(Seq(clean, newer), "0.1")("d18_embed_neardup_mp") == 0.83)
+    val newer = """{"queries":{"d18_embed_neardup_mp":0.83},"cpus":4,"sf":0.1}"""
+    assert(Bench.priorFloor(Seq(clean, newer), "0.1", "4")("d18_embed_neardup_mp") == 0.83)
   }
 
   test("priorFloor admits only same-sf artifacts") {
     // a BENCH.out committed after an sf0.01 iteration run must not
     // floor the sf0.1 gate at ~10x too fast (every query would
     // pointlessly re-run min-of-3)
-    val sf001 = """{"queries":{"q1_pricing_summary":0.05},"sf":0.01}"""
-    val sf01  = """{"queries":{"q1_pricing_summary":0.493},"sf":0.1}"""
-    val noSf  = """{"queries":{"q1_pricing_summary":0.01}}"""
-    val floor = Bench.priorFloor(Seq(sf001, sf01, noSf), "0.1")
+    val sf001 = """{"queries":{"q1_pricing_summary":0.05},"cpus":4,"sf":0.01}"""
+    val sf01  = """{"queries":{"q1_pricing_summary":0.493},"cpus":4,"sf":0.1}"""
+    val noSf  = """{"queries":{"q1_pricing_summary":0.01},"cpus":4}"""
+    val floor = Bench.priorFloor(Seq(sf001, sf01, noSf), "0.1", "4")
     assert(floor("q1_pricing_summary") == 0.493)
-    assert(Bench.priorFloor(Seq(sf001), "0.1").isEmpty)
+    assert(Bench.priorFloor(Seq(sf001), "0.1", "4").isEmpty)
     // the driver's escaped format carries its sf through too
-    val escaped = """{"tail":"{\"queries\":{\"q1_pricing_summary\":0.51},\"sf\":0.1}"}"""
-    assert(Bench.priorFloor(Seq(escaped, sf01), "0.1")("q1_pricing_summary") == 0.493)
+    val escaped = """{"tail":"{\"queries\":{\"q1_pricing_summary\":0.51},\"cpus\":4,\"sf\":0.1}"}"""
+    assert(Bench.priorFloor(Seq(escaped, sf01), "0.1", "4")("q1_pricing_summary") == 0.493)
     assert(Bench.artifactSf(escaped).contains("0.1"))
+  }
+
+  test("priorFloor admits only same-cpus artifacts: a 32-core floor is off for cpus=4") {
+    // the driver's JSON keys its core count at the top level, with a
+    // space after the colon; its tail line predates the cpus tag
+    val driver32 = """{"n":21,"rc":0,"cpus": 32,"sf": 0.1,""" +
+      """"tail":"{\"queries\":{\"q1_pricing_summary\":0.21},\"sf\":0.1}"}"""
+    val run4 = """{"queries":{"q1_pricing_summary":0.493},"cpus":4,"sf":0.1}"""
+    val noCpus = """{"queries":{"q1_pricing_summary":0.11},"sf":0.1}""" // pre-tag BENCH.out
+    assert(Bench.artifactCpus(driver32).contains("32"))
+    assert(Bench.artifactCpus(run4).contains("4"))
+    assert(Bench.artifactCpus(noCpus).isEmpty)
+    assert(Bench.priorFloor(Seq(driver32, noCpus), "0.1", "4").isEmpty)
+    assert(Bench.priorFloor(Seq(driver32, run4, noCpus), "0.1", "4")("q1_pricing_summary") == 0.493)
+    assert(Bench.priorFloor(Seq(driver32, run4), "0.1", "32")("q1_pricing_summary") == 0.21)
+  }
+
+  test("the cpus tag never parses as a query prior") {
+    val line = """{"metric":"total","value":9.1,"unit":"sec","nq":1,""" +
+      """"queries":{"q1_pricing_summary":0.493},"cpus":4,"sf":0.1}"""
+    val m = Bench.parsePriorQueries(line)
+    assert(m.get("cpus").isEmpty)
+    assert(m("q1_pricing_summary") == 0.493)
+    val escaped = """{"tail":"{\"queries\":{\"q1_pricing_summary\":0.51},\"cpus\":4,\"sf\":0.1}"}"""
+    assert(Bench.parsePriorQueries(escaped).get("cpus").isEmpty)
   }
 
   test("parsePriorQueries reads the driver's ESCAPED artifact format too") {

@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
+import graft.functions.VectorOps
 
 final class AnnSpec extends SparkTestBase {
 
@@ -109,7 +110,7 @@ final class AnnSpec extends SparkTestBase {
       (1000L + i) -> v.map(x => x + 0.03f * rnd.nextGaussian().toFloat)
     }
     val df = (base ++ dups).toDF("id", "vec")
-    val exact = Ann.cosineNearDupPairs(df, minCos = 0.9)
+    val exact = AnnSpec.allPairs(df, minCos = 0.9)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val lsh = Ann.cosineNearDupPairsLSH(df, minCos = 0.9, dim = dim)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -237,7 +238,7 @@ final class AnnSpec extends SparkTestBase {
   }
 
   test("cosine near-dup pairs are symmetric-free and thresholded") {
-    val pairs = Ann.cosineNearDupPairs(vecs, minCos = 0.4).collect()
+    val pairs = Ann.cosinePairsExact(vecs, minCos = 0.4).collect()
     assert(pairs.forall(r => r.getAs[Long]("a") < r.getAs[Long]("b")))
     assert(pairs.forall(_.getAs[Double]("sim") >= 0.4))
   }
@@ -296,7 +297,7 @@ final class AnnSpec extends SparkTestBase {
     // the default IS the validated law, verbatim
     assert(tB == Ann.tablesForRecall(0.9, 10, estB.max(1.0), 0.05).max(8))
     // and the un-pinned operator default recovers the exact pair set
-    val exact = Ann.cosineNearDupPairs(small, minCos = 0.9).select("a", "b")
+    val exact = AnnSpec.allPairs(small, minCos = 0.9).select("a", "b")
     val auto  = Ann.cosineNearDupPairsLSH(small, minCos = 0.9, dim = dim).select("a", "b")
     assert(auto.exceptAll(exact).isEmpty && exact.exceptAll(auto).isEmpty)
   }
@@ -312,6 +313,9 @@ final class AnnSpec extends SparkTestBase {
     assert(gapless.candidateFraction > 0.5,
       s"gap-less regime should look dense: $gapless")
     assert(gapless.estPairs > 0 && gapless.tables >= 8)
+    // the profile carries the corpus count its pre-flight took, so a
+    // dispatch reading it (Dbscan.epsCluster) need not count again
+    assert(gapless.n == fixture.count())
     // a planted near-dup corpus at τ=0.9 is selective: the same
     // profile shows the index pruning almost everything
     val rnd = new scala.util.Random(11)
@@ -377,11 +381,11 @@ final class AnnSpec extends SparkTestBase {
       (1000L + i) -> v.map(x => x + 0.03f * rnd.nextGaussian().toFloat)
     }
     val df = (base ++ dups).toDF("id", "vec")
-    val exact = Ann.cosineNearDupPairs(df, minCos = 0.9)
+    val exact = AnnSpec.allPairs(df, minCos = 0.9)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val planes = 10
     val tSingle = Ann.autoTables(df, minCos = 0.9, planes = planes)
-    val tMp     = Ann.mpAutoTables(df, minCos = 0.9, dim = dim, planes = planes, probes = 3)
+    val (tMp, _) = Ann.mpSizing(df, minCos = 0.9, dim = dim, planes = planes, probes = 3)
     assert(tMp <= tSingle,
       s"measured-catch sizing should never exceed the analytic single-probe count ($tMp > $tSingle)")
     val mp = Ann.cosineNearDupPairsLSH(df, minCos = 0.9, dim = dim,
@@ -533,7 +537,7 @@ final class AnnSpec extends SparkTestBase {
     assert(again == got)
   }
 
-  test("mpAutoTables: heterogeneous (τ-marginal + easy) pairs raise the sizing, output stays exact") {
+  test("mpSizing: τ-marginal pairs raise the sizing, output stays exact") {
     import spark.implicits._
     // round-16 ADVICE (low): the average-rate law is average-case —
     // a corpus of mostly sim≈0.99 dups plus a few τ-marginal pairs
@@ -568,11 +572,11 @@ final class AnnSpec extends SparkTestBase {
     val easyDf  = (base ++ easy).toDF("id", "vec")
     val mixedDf = (base ++ easy ++ marginal).toDF("id", "vec")
     val planes = 10
-    val tEasy  = Ann.mpAutoTables(easyDf, minCos = 0.9, dim = dim, planes = planes, probes = 3)
-    val tMixed = Ann.mpAutoTables(mixedDf, minCos = 0.9, dim = dim, planes = planes, probes = 3)
+    val (tEasy, _)  = Ann.mpSizing(easyDf, minCos = 0.9, dim = dim, planes = planes, probes = 3)
+    val (tMixed, _) = Ann.mpSizing(mixedDf, minCos = 0.9, dim = dim, planes = planes, probes = 3)
     assert(tMixed >= tEasy,
       s"marginal pairs must never SHRINK the sizing ($tMixed < $tEasy)")
-    val exact = Ann.cosineNearDupPairs(mixedDf, minCos = 0.9)
+    val exact = AnnSpec.allPairs(mixedDf, minCos = 0.9)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(marginal.nonEmpty && exact.size >= easy.size + marginal.size)
     val mp = Ann.cosineNearDupPairsLSH(mixedDf, minCos = 0.9, dim = dim,
@@ -581,13 +585,18 @@ final class AnnSpec extends SparkTestBase {
     assert(mp == exact, s"auto-sized T=$tMixed missed ${(exact -- mp).size} of ${exact.size}")
   }
 
-  test("mpCatchRate: measured catch dominates the analytic single-probe collision rate") {
+  test("mpSample: measured catch dominates the single-probe collision rate") {
     val df = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
     val planes = 6
-    val (rate, catches, trials) = Ann.mpCatchRate(df, minCos = 0.45, dim = 64,
-      planes = planes, probes = 2, trialTables = 16)
+    // the per-table catch rate read off the pre-flight's catch-count
+    // histogram: catch events over (true pair, trial table) trials
+    val m = Ann.mpSample(df, minCos = 0.45, dim = 64, planes = planes, probes = 2, seed = 42L)
+    val trials = m.sampledPairs * Ann.TrialTables
+    val catches = m.catches
     assert(trials > 0 && catches > 0)
+    assert(m.hist.keysIterator.forall(c => c >= 0 && c <= Ann.TrialTables))
+    val rate = catches.toDouble / trials
     // the base sketch is emission 0, so the probe scheme's catch rate
     // is bounded below by the single-probe analytic p^planes
     val p = 1.0 - math.acos(0.45) / math.Pi
@@ -621,5 +630,22 @@ final class AnnSpec extends SparkTestBase {
         s"probes=$probes: aggregate said ${row.getAs[Long]("candidate_volume")}, " +
           s"join counted $joined")
     }
+  }
+}
+
+object AnnSpec {
+  /** The all-pairs ground truth the LSH specs compare against: every
+    * (a < b) pair with cosine ≥ minCos from a plain theta self-join —
+    * no broadcast and no repartition, independent of the operators
+    * under test.
+    */
+  def allPairs(df: DataFrame, minCos: Double): DataFrame = {
+    val v = df.select(col("id"), col("vec"), VectorOps.fnorm(col("vec")).as("nrm"))
+    v.select(col("id").as("a"), col("vec").as("va"), col("nrm").as("na"))
+      .join(v.select(col("id").as("b"), col("vec").as("vb"), col("nrm").as("nb")),
+        col("a") < col("b"))
+      .withColumn("sim", VectorOps.cosinePre(col("va"), col("vb"), col("na"), col("nb")))
+      .filter(col("sim") >= minCos)
+      .select("a", "b", "sim")
   }
 }

@@ -95,7 +95,7 @@ final class DbscanSpec extends SparkTestBase {
     val lshAuto = Dbscan.epsCluster(planted, minCos = 0.9, minPts = 2, dim = dim,
       planes = 10, maxBruteRows = 0L)
     val bruteRef = Dbscan.fromNeighbors(planted.select(col("id")),
-      Ann.cosineNearDupPairs(planted, minCos = 0.9).select("a", "b"), minPts = 2)
+      AnnSpec.allPairs(planted, minCos = 0.9).select("a", "b"), minPts = 2)
     assert(canon(lshAuto) == canon(bruteRef))
   }
 

@@ -63,7 +63,11 @@ final class JobCountSpec extends SparkTestBase {
       budgetFrac = 0.02).collect())
     info(s"pqTopKAuto jobs: pq arm $pqArm, brute arm $bruteArm")
     // the same call runs 16 or 18 jobs from run to run (a7, its
-    // registry form, runs 26 or 28), so this arm is pinned as a ceiling
+    // registry form, runs 26 or 28), so this arm is pinned as a ceiling:
+    // the two extra jobs build the DISK_ONLY encoded corpus (its
+    // repartition stage, and the cache fill under measuredRank's
+    // head()), and are skipped when an earlier accepted-arm call over
+    // the same corpus and codebooks left that relation cached
     assert(pqArm <= 18, s"pq arm ran $pqArm jobs")
     assert(bruteArm == 15, s"brute arm ran $bruteArm jobs")
   }
@@ -77,6 +81,48 @@ final class JobCountSpec extends SparkTestBase {
     info(s"ivfPqTopKAuto jobs: index arm $idxArm, brute arm $bruteArm")
     assert(idxArm == 39, s"index arm ran $idxArm jobs")
     assert(bruteArm == 19, s"brute arm ran $bruteArm jobs")
+  }
+
+  test("saveIvfPqLaws and ivfPqTopKIndexedAuto: job count per arm") {
+    books.count(); cents.count()
+    val prefix = "jobcount_pq_idx"
+    val tables = Seq("centroids", "books", "codes", "vecs", "laws").map(t => s"${prefix}_$t")
+    tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    try {
+      Pq.saveIvfPqIndex(vecs, cents, books, prefix, M, KSUB, nBuckets = 4)
+      val laws = jobs(Pq.saveIvfPqLaws(spark, prefix, measureK = 5, M, KSUB, sampleN = 32))
+      // PqSpec's fractions: 1.0 serves from the packed index, the
+      // production defaults refuse to the exact scan over the vecs table
+      val served = jobs(Pq.ivfPqTopKIndexedAuto(spark, prefix, queries, k = 5, M, KSUB,
+        probeFrac = 1.0, budgetFrac = 1.0).collect())
+      val refused = jobs(Pq.ivfPqTopKIndexedAuto(spark, prefix, queries, k = 5, M, KSUB)
+        .collect())
+      info(s"saveIvfPqLaws jobs: $laws; ivfPqTopKIndexedAuto jobs: served $served, " +
+        s"refused $refused")
+      assert(laws == 22, s"saveIvfPqLaws ran $laws jobs")
+      assert(served == 11, s"served arm ran $served jobs")
+      assert(refused == 5, s"refused arm ran $refused jobs")
+    } finally tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+  }
+
+  test("Dbscan.epsCluster: job count per v6 arm") {
+    vecs.count()
+    // v6's two calls: the default dispatch, and maxBruteRows below n,
+    // which forces the LSH branch at the profile's table count
+    val default = jobs(Dbscan.epsCluster(vecs, minCos = 0.45, minPts = 2, dim = 64).collect())
+    val lsh = jobs(Dbscan.epsCluster(vecs, minCos = 0.45, minPts = 2, dim = 64,
+      maxBruteRows = 100L).collect())
+    info(s"epsCluster jobs: default $default, maxBruteRows = 100 $lsh")
+    assert(default == 42, s"default arm ran $default jobs")
+    assert(lsh == 43, s"LSH arm ran $lsh jobs")
+  }
+
+  test("unpinned cosineNearDupPairsLSH(probes = 0): job count") {
+    vecs.count()
+    // the single-probe auto sizing (autoTables)
+    val n = jobs(Ann.cosineNearDupPairsLSH(vecs, minCos = 0.45, dim = 64, probes = 0).collect())
+    info(s"unpinned single-probe cosineNearDupPairsLSH jobs: $n")
+    assert(n == 10, s"unpinned single-probe pair join ran $n jobs")
   }
 
   test("unpinned cosineNearDupPairsLSH: job count") {

@@ -48,7 +48,6 @@ final class SemDeDupSpec extends SparkTestBase {
     assert(SemDeDup.autoCellCount(1000000) == 1000)
     assert(SemDeDup.autoCellCount(250000) == 500)
     assert(SemDeDup.autoCellCount(0) == 2 && SemDeDup.autoCellCount(1) == 2)
-    assert(SemDeDup.autoCellCount(10000, cellsPerSqrtN = 2.0) == 200)
 
     val vecs = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
