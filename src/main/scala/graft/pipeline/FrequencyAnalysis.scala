@@ -1,8 +1,14 @@
 package graft.pipeline
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import java.io.InputStream
+import java.nio.charset.StandardCharsets.UTF_8
+
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import org.json4s.{JInt, JString}
+import org.json4s.jackson.JsonMethods.parseOpt
 
 import graft.core.{Input, Outputs}
 import graft.functions.WeightedMean
@@ -14,19 +20,24 @@ import graft.stage.{Context, Method, SparkJob, Stage}
   *
   * Differences from the PySpark original, by design:
   *   - the two hand-rolled RDD `aggregateByKey` weighted means
-  *     (py:55-75) are the [[WeightedMean]] typed Aggregator — Catalyst
-  *     plans partial+final hash aggregation, so the extra RDD
-  *     shuffles collapse into the group-by shuffle;
-  *   - the tiny per-dataset N table (py:31-35) is broadcast
-  *     explicitly at the join (py:54, :66);
+  *     (py:55-75) are the [[WeightedMean]] typed Aggregator;
+  *   - N is read on the driver: the per-dataset max `samples` over
+  *     every `metadata` marker (py:24, :31-35) is a map that each row
+  *     looks up, instead of a Spark scan, aggregate and broadcast join
+  *     (py:54, :66); a dataset without a marker is dropped, as the
+  *     inner join drops it;
+  *   - one `varId` exchange: the scoped rows are hash-partitioned on
+  *     `varId` once, which satisfies both the per-(variant, dataset)
+  *     and the per-variant aggregate, where the reference shuffles
+  *     once per `aggregateByKey` (py:55-75);
   *   - scoped read: one ancestry's job reads only the part files
   *     under `variants/<dataset>/<ancestry>/`, the dirnames of its own
   *     inputs, not the whole corpus (py:109). A row whose `ancestry`
   *     column disagrees with its directory therefore lands in no
   *     output: its directory's job filters it out (py:14) and its
   *     column's job never reads it;
-  *   - fixed schemas for variants and metadata, so no job infers one
-  *     by reading the JSON first;
+  *   - a fixed variants schema, so no job infers one by reading the
+  *     JSON first;
   *   - one scan and one final aggregate serve EAF and MAF: per
   *     (variant, dataset) a conditional average of each column's
   *     valid values (the NaN/null filters py:20-21, avg-across-traits
@@ -41,20 +52,22 @@ import graft.stage.{Context, Method, SparkJob, Stage}
   */
 object FrequencyAnalysis {
 
-  /** Per-variant weighted EAF/MAF for one ancestry (py:13-85). */
-  def calcFreq(variants: DataFrame, datasets: DataFrame, ancestry: String): DataFrame = {
+  private val variantsSchema =
+    StructType.fromDDL("varId STRING, dataset STRING, ancestry STRING, phenotype STRING, eaf DOUBLE, maf DOUBLE")
+
+  /** Per-variant weighted EAF/MAF for one ancestry (py:13-85), with N
+    * the max samples per dataset ([[readSamples]]).
+    */
+  def calcFreq(variants: DataFrame, samples: Map[String, Long], ancestry: String): DataFrame = {
     def valid(c: String): Column = when(col(c).isNotNull && !isnan(col(c)), col(c))
 
-    // max samples per dataset across all traits (py:31-35)
-    val n = datasets
-      .select(col("name").as("dataset"), col("samples").as("n"))
-      .groupBy("dataset")
-      .agg(max(col("n")).as("n"))
-
     // average across traits per (variant, dataset) (py:38-51); null
-    // where the dataset has no valid value
+    // where the dataset has no valid value. Partitioned on varId once:
+    // that satisfies this grouping and the per-variant one below, so
+    // neither adds an exchange
     val perDataset = variants
       .filter(col("ancestry") === ancestry)
+      .repartition(col("varId"))
       .groupBy(col("varId"), col("dataset"))
       .agg(avg(valid("eaf")).as("eaf"), avg(valid("maf")).as("maf"))
 
@@ -65,7 +78,9 @@ object FrequencyAnalysis {
       when(count(col(c)) > 0, WeightedMean(col(c), when(col(c).isNotNull, col("n"))))
 
     perDataset
-      .join(broadcast(n), Seq("dataset"))
+      // a dataset without a metadata marker has no N and is dropped (py:54)
+      .withColumn("n", element_at(typedLit(samples), col("dataset")))
+      .filter(col("n").isNotNull)
       .groupBy(col("varId"))
       .agg(weighted("eaf").as("eaf"), weighted("maf").as("maf"))
       // MAF should always be present, EAF is optional (py:77-78)
@@ -75,19 +90,41 @@ object FrequencyAnalysis {
 
   /** Load one ancestry's variant part-files: every
     * `variants/<dataset>/<ancestry>/`, the inverse of the stage rule
-    * (py:109 globs every ancestry).
+    * (py:109 globs every ancestry). The directories are expanded on
+    * the driver and passed as plain paths, so Spark never looks up a
+    * glob as a file.
     */
-  def readVariants(spark: SparkSession, root: String, ancestry: String): DataFrame =
-    spark.read
-      .schema("varId STRING, dataset STRING, ancestry STRING, phenotype STRING, eaf DOUBLE, maf DOUBLE")
-      .option("pathGlobFilter", "part-*")
-      .json(s"$root/variants/*/$ancestry/")
+  def readVariants(spark: SparkSession, root: String, ancestry: String): DataFrame = {
+    val dirs = glob(spark, s"$root/variants/*/$ancestry").filter(_.isDirectory).map(_.getPath.toString)
+    if (dirs.isEmpty) spark.createDataFrame(java.util.List.of[Row](), variantsSchema)
+    else spark.read.schema(variantsSchema).option("pathGlobFilter", "part-*").json(dirs: _*)
+  }
 
-  /** Load every dataset metadata marker (py:24): N is a max over all
-    * of a dataset's markers.
+  /** N per dataset: the max `samples` over every one of its
+    * `variants/<dataset>/<ancestry>/metadata` markers (py:24, :31-35),
+    * read on the driver. A marker line without a `name` or an integer
+    * `samples` is skipped.
     */
-  def readMetadata(spark: SparkSession, root: String): DataFrame =
-    spark.read.schema("name STRING, samples BIGINT, ancestry STRING").json(s"$root/variants/*/*/metadata")
+  def readSamples(spark: SparkSession, root: String): Map[String, Long] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val marks = for {
+      st   <- glob(spark, s"$root/variants/*/*/metadata") if st.isFile
+      line <- readLines(st.getPath.getFileSystem(conf).open(st.getPath))
+      m    <- parseOpt(line)
+      (JString(name), JInt(n)) <- Some((m \ "name", m \ "samples"))
+    } yield name -> n.toLong
+    marks.groupMapReduce(_._1)(_._2)(math.max)
+  }
+
+  private def glob(spark: SparkSession, pattern: String): Seq[FileStatus] = {
+    val path = new Path(pattern)
+    val fs   = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Option(fs.globStatus(path)).fold(Seq.empty[FileStatus])(_.toSeq)
+  }
+
+  private def readLines(in: InputStream): Seq[String] =
+    try new String(in.readAllBytes(), UTF_8).linesIterator.filter(_.trim.nonEmpty).toList
+    finally in.close()
 }
 
 /** Stage wiring: inputs are `variants/<dataset>/<ancestry>/` marker
@@ -107,10 +144,10 @@ class FrequencyAnalysisStage(implicit context: Context) extends Stage {
 
   override def make(output: String): SparkJob = SparkJob { (spark, env) =>
     val vars = FrequencyAnalysis.readVariants(spark, env.inputRoot, output)
-    val meta = FrequencyAnalysis.readMetadata(spark, env.inputRoot)
+    val n    = FrequencyAnalysis.readSamples(spark, env.inputRoot)
     val dir  = s"${env.outputRoot}/${env.prefix}/frequencyanalysis/$output"
     val rows = Observation()
-    FrequencyAnalysis.calcFreq(vars, meta, ancestry = output)
+    FrequencyAnalysis.calcFreq(vars, n, ancestry = output)
       .observe(rows, count(lit(1)).as("rows"))
       .write.mode("overwrite").json(dir)
     // an ancestry without variants has no output (py:16-17)

@@ -2,12 +2,18 @@ package graft.pipeline
 
 import java.net.URI
 import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.{Configurator, Property}
 import org.apache.spark.SpecBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.execution.streaming.sinks.FileStreamSink
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
@@ -17,9 +23,9 @@ import graft.stage.{Context, JobEnv, Opts}
   * weighted frequencies, checked against the independent SQL form of
   * the weighted mean (`sum(x*n)/sum(n)`), plus incremental no-op on
   * rerun. This is the SURVEY §7 step-6 "minimum end-to-end slice".
-  * The other cases pin the scoped read: each output reads only the
-  * part files of its own inputs, in at most 5 Spark jobs, and an
-  * ancestry without rows has no output.
+  * The other cases pin the scoped read (each output reads only the
+  * part files of its own inputs, in at most 2 Spark jobs, and an
+  * ancestry without rows has no output) and N, read on the driver.
   */
 final class FrequencyAnalysisSpec extends SparkTestBase {
 
@@ -98,10 +104,10 @@ final class FrequencyAnalysisSpec extends SparkTestBase {
     assert(af.count() == 1)
 
     // UDAF result equals the SQL weighted-mean form (AGG-3 cross-check)
+    // with N from Spark's own read of the markers, not the driver's
     val vars = FrequencyAnalysis.readVariants(spark, root, "EU")
-    val meta = FrequencyAnalysis.readMetadata(spark, root)
-    val n = meta.select(col("name").as("dataset"), col("samples").as("n"))
-      .groupBy("dataset").agg(max("n").as("n"))
+    val n = spark.read.schema("name STRING, samples BIGINT").json(s"$root/variants/*/*/metadata")
+      .groupBy(col("name").as("dataset")).agg(max("samples").as("n"))
     val sqlForm = vars
       .filter(col("ancestry") === "EU" && col("eaf").isNotNull && !isnan(col("eaf")))
       .groupBy(col("varId"), col("dataset")).agg(avg("eaf").as("eaf"))
@@ -185,7 +191,7 @@ final class FrequencyAnalysisSpec extends SparkTestBase {
     assert(Files.exists(out("EU")) && !Files.exists(out("SA")))
   }
 
-  test("one output's job runs at most 5 Spark jobs and reads less than the corpus") {
+  test("one output's job runs at most 2 Spark jobs and reads less than the corpus") {
     val root = scopedCorpus()
     val corpusBytes = Files.walk(Paths.get(root, "variants")).iterator().asScala
       .filter(Files.isRegularFile(_)).map(Files.size).sum
@@ -210,8 +216,72 @@ final class FrequencyAnalysisSpec extends SparkTestBase {
       SpecBus.drain(sc)
     } finally sc.removeSparkListener(listener)
     info(s"EU: ${jobs.get} jobs, ${bytesRead.get} of $corpusBytes corpus bytes read")
-    assert(jobs.get <= 5, s"ran ${jobs.get} jobs")
+    assert(jobs.get <= 2, s"ran ${jobs.get} jobs")
     assert(bytesRead.get > 0 && bytesRead.get < corpusBytes, s"read ${bytesRead.get} of $corpusBytes bytes")
     assert(varIds(root, "EU").size == 20)
+  }
+
+  /** `body`'s result and the WARN-or-worse events that Spark's
+    * `FileStreamSink` logged while it ran, kept off the console; that
+    * logger warns, with a stack trace, whenever a read's single path
+    * is a glob.
+    */
+  private def sinkWarnings[A](body: => A): (A, Seq[String]) = {
+    val name   = classOf[FileStreamSink].getName
+    val logger = LogManager.getLogger(name).asInstanceOf[CoreLogger]
+    val level  = logger.getLevel
+    val seen   = new ConcurrentLinkedQueue[String]
+    val appender = new AbstractAppender("freq-spec-sink", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.WARN)) seen.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    Configurator.setLevel(name, Level.WARN)
+    logger.addAppender(appender)
+    logger.setAdditive(false)
+    try {
+      val out = body
+      (out, seen.asScala.toList)
+    } finally {
+      logger.setAdditive(true)
+      logger.removeAppender(appender)
+      Configurator.setLevel(name, level)
+      appender.stop()
+    }
+  }
+
+  test("N is the max samples over a dataset's markers, read on the driver; a dataset without one is dropped") {
+    val root = tmpDir("freq-n")
+    write(root, "variants/d1/EU/part-00000", Seq(
+      variant("v1", "d1", "EU", "t2d", "0.2", "0.2"),
+      // dx has no metadata marker anywhere: its rows carry no weight
+      variant("v1", "dx", "EU", "t2d", "0.9", "0.9"),
+      variant("orphan", "dx", "EU", "t2d", "0.5", "0.5")))
+    metadata(root, "d1", "EU", 100)
+    // d1's second marker, under another ancestry, holds the larger N
+    write(root, "variants/d1/AF/part-00000", Seq(variant("v7", "d1", "AF", "t2d", "0.1", "0.1")))
+    metadata(root, "d1", "AF", 400)
+    write(root, "variants/d2/EU/part-00000", Seq(variant("v1", "d2", "EU", "t2d", "0.6", "0.6")))
+    metadata(root, "d2", "EU", 300)
+
+    val (n, jobs) = SpecBus.jobs(spark.sparkContext)(FrequencyAnalysis.readSamples(spark, root))
+    assert(n == Map("d1" -> 400L, "d2" -> 300L))
+    assert(jobs == 0, s"readSamples ran $jobs Spark jobs")
+
+    // the logger does catch a glob read: Spark's own read of the markers
+    val (_, globWarnings) = sinkWarnings(spark.read.json(s"$root/variants/*/*/metadata").count())
+    assert(globWarnings.nonEmpty)
+
+    val stage = new FrequencyAnalysisStage()(context(root))
+    val env = JobEnv("frequencyanalysis", "frequencyanalysis", stage.getName, "EU",
+      root, root, "out", dryRun = false)
+    val (_, warnings) = sinkWarnings(stage.make("EU").run(spark, env))
+    assert(warnings.isEmpty, warnings.mkString("\n"))
+
+    val eu = spark.read.json(s"$root/out/frequencyanalysis/EU").collect()
+    assert(eu.map(_.getAs[String]("varId")).toSet == Set("v1"))
+    // (0.2*400 + 0.6*300) / 700
+    assert(math.abs(eu.head.getAs[Double]("eaf") - 260.0 / 700) < 1e-12)
+    assert(math.abs(eu.head.getAs[Double]("maf") - 260.0 / 700) < 1e-12)
   }
 }
