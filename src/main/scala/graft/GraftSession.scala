@@ -23,8 +23,16 @@ import org.apache.spark.sql.SparkSession
   *     which scopes the provider to the query and restores the
   *     session default after; a production job holding larger-than-
   *     heap state would likewise opt in per job.
+  *   - `spark.hadoop.fs.file.impl`: [[graft.core.NioLocalFileSystem]],
+  *     Hadoop's local FS with a `java.nio` permission change in place
+  *     of the `chmod` it forks per created file or directory when no
+  *     native libhadoop is loaded. A value the JVM's Spark properties
+  *     already carry (a `-D` flag, or `spark-submit --conf`) is kept,
+  *     so a caller can still install its own local FS.
   */
 object GraftSession {
+
+  private val LocalFsKey = "spark.hadoop.fs.file.impl"
 
   def build(
       appName: String = "graft",
@@ -39,7 +47,7 @@ object GraftSession {
       shufflePartitions: String = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS",
         sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
   ): SparkSession = {
-    val spark = SparkSession.builder()
+    val builder = SparkSession.builder()
       .master(master)
       .appName(appName)
       .config("spark.sql.shuffle.partitions", shufflePartitions)
@@ -49,7 +57,9 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    if (!sys.props.contains(LocalFsKey))
+      builder.config(LocalFsKey, classOf[graft.core.NioLocalFileSystem].getName)
+    val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

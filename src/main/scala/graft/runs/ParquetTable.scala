@@ -2,7 +2,7 @@ package graft.runs
 
 import java.util.UUID
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.graft.Bridge
 
@@ -56,8 +56,26 @@ import org.apache.spark.sql.graft.Bridge
   * the snapshot's parquet file(s) through Spark's own parquet read
   * support, and a commit merges key sets in Scala and writes one file
   * through Spark's own parquet writer ([[org.apache.spark.sql.graft.Bridge]]).
+  *
+  * Read path: list `_manifests`, read the highest manifest for the
+  * live snapshot's name, list that snapshot dir, then return its rows.
+  * The rows come from a per-table-path cache in this JVM when the
+  * cached entry's key matches: the snapshot's name and, per data file,
+  * its name, length and modification time. Otherwise the files are
+  * decoded and the entry replaced. A successful commit caches the rows
+  * it wrote, round-tripped through the encoder as a read would decode
+  * them (an `Instant` truncated to parquet's microseconds); a commit
+  * that loses the manifest race caches nothing. The cache is exact
+  * because a snapshot dir is immutable and uniquely named: no writer
+  * ever rewrites one, so a dir whose name and files are unchanged has
+  * unchanged rows, and a commit made by another process shows up as a
+  * new manifest naming a new dir, which the next read resolves as it
+  * always did. A warm read so opens one small manifest file and no
+  * parquet.
+  *
   * SCALE FENCE — metadata tables only: every operation holds the
-  * whole table in driver memory, as a `collect()` of it would. Right
+  * whole table in driver memory, as a `collect()` of it would, and the
+  * cache keeps the latest snapshot of each table this JVM touched. Right
   * for run bookkeeping (thousands of rows); data-scale tables belong
   * in [[graft.operators.Merge]].
   */
@@ -154,15 +172,31 @@ final class ParquetTable[T <: Product : Encoder](
   private def current(vs: Seq[Long]): Seq[T] =
     vs.lastOption.fold(Seq.empty[T])(v => readSnapshot(readManifest(v)))
 
-  /** Read one snapshot dir on the driver: its parquet files, skipping
-    * the `_`/`.`-prefixed side files (`_SUCCESS`, checksums) Spark's
-    * own listing skips.
+  /** One snapshot dir's parquet files, skipping the `_`/`.`-prefixed
+    * side files (`_SUCCESS`, checksums) Spark's own listing skips.
     */
-  private def readSnapshot(snap: String): Seq[T] =
-    Bridge.readParquet[T](spark, fs.listStatus(new Path(path, snap)).toSeq.filter { s =>
+  private def dataFiles(snap: String): Seq[FileStatus] =
+    fs.listStatus(new Path(path, snap)).toSeq.filter { s =>
       val name = s.getPath.getName
       s.isFile && !name.startsWith("_") && !name.startsWith(".")
-    })
+    }
+
+  private def snapshotKey(snap: String, files: Seq[FileStatus]): ParquetTable.SnapshotKey =
+    ParquetTable.SnapshotKey(snap, files.map(s => (s.getPath.getName, s.getLen, s.getModificationTime)))
+
+  /** Read one snapshot dir on the driver: the cached rows if the
+    * table's cache entry has this snapshot's key, else its parquet
+    * files decoded (and cached).
+    */
+  private def readSnapshot(snap: String): Seq[T] = {
+    val files = dataFiles(snap)
+    val key   = snapshotKey(snap, files)
+    ParquetTable.cached[T](path, key).getOrElse {
+      val rows = Bridge.readParquet[T](spark, files)
+      ParquetTable.remember(path, key, rows)
+      rows
+    }
+  }
 
   /** Committed versions still within the retention window, ascending
     * — the time-travel index.
@@ -244,7 +278,7 @@ final class ParquetTable[T <: Product : Encoder](
   private def commitSnapshot(rows: Seq[T], vs: Seq[Long]): Unit = {
     val f    = fs
     val snap = "snap-" + UUID.randomUUID().toString.take(8)
-    Bridge.writeParquet(spark, new Path(path, snap), rows)
+    val stored = Bridge.writeParquet(spark, new Path(path, snap), rows)
     val ver      = vs.lastOption.getOrElse(0L) + 1L
     val manifest = manifestPath(ver)
     f.mkdirs(manifestDir)
@@ -259,6 +293,7 @@ final class ParquetTable[T <: Product : Encoder](
         s"commit of version $ver at $path lost the race: $manifest already " +
           "exists — another writer committed concurrently; this writer's " +
           "snapshot is unreferenced and will be garbage-collected")
+    ParquetTable.remember(path, snapshotKey(snap, dataFiles(snap)), stored)
     gc(f, vs :+ ver)
   }
 
@@ -289,4 +324,24 @@ object ParquetTable {
 
   private def monitorFor(path: String): AnyRef =
     monitors.getOrElseUpdate(path, new AnyRef)
+
+  /** What identifies a snapshot's content: the dir's name and, per
+    * data file, its name, length and modification time.
+    */
+  private final case class SnapshotKey(snap: String, files: Seq[(String, Long, Long)])
+
+  /** The rows of one table's latest read or committed snapshot, as
+    * the encoder `enc` decodes them.
+    */
+  private final case class Cached(key: SnapshotKey, enc: Encoder[_], rows: Seq[Any])
+
+  private val snapshots = scala.collection.concurrent.TrieMap.empty[String, Cached]
+
+  private def cached[T: Encoder](path: String, key: SnapshotKey): Option[Seq[T]] =
+    snapshots.get(path).collect {
+      case c if c.key == key && c.enc == implicitly[Encoder[T]] => c.rows.asInstanceOf[Seq[T]]
+    }
+
+  private def remember[T: Encoder](path: String, key: SnapshotKey, rows: Seq[T]): Unit =
+    snapshots.update(path, Cached(key, implicitly[Encoder[T]], rows))
 }

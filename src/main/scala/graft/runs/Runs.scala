@@ -39,7 +39,7 @@ final case class RunStatusRow(
   */
 final class Runs(spark: SparkSession, path: String, project: String, method: String) {
 
-  private implicit val enc: Encoder[RunRow] = Encoders.product[RunRow]
+  import Runs.enc
 
   val table = new ParquetTable[RunRow](
     spark, path, Seq("project", "method", "stage", "input", "output"))
@@ -69,6 +69,13 @@ final class Runs(spark: SparkSession, path: String, project: String, method: Str
       r.project == project && r.method == method && r.stage == stage && r.output == output)
 }
 
+object Runs {
+  /** Built once per JVM, not per [[graft.stage.Context]]: deriving a
+    * product encoder is a reflection pass.
+    */
+  private implicit val enc: Encoder[RunRow] = Encoders.product[RunRow]
+}
+
 /** The `runstatus` table: started/ended lifecycle per output, with the
   * reference's conflict-reset semantics (RunStatus.scala:63-85): an
   * insert over an existing output NULLs `started`/`ended` and
@@ -77,7 +84,7 @@ final class Runs(spark: SparkSession, path: String, project: String, method: Str
   */
 final class RunStatus(spark: SparkSession, path: String, project: String, method: String) {
 
-  private implicit val enc: Encoder[RunStatusRow] = Encoders.product[RunStatusRow]
+  import RunStatus.enc
 
   val table = new ParquetTable[RunStatusRow](
     spark, path, Seq("project", "method", "stage", "output"))
@@ -126,4 +133,9 @@ final class RunStatus(spark: SparkSession, path: String, project: String, method
 
   def delete(stage: String, output: String): Unit =
     table.delete(keyPred(stage, Seq(output)))
+}
+
+object RunStatus {
+  /** Built once, as [[Runs]]'s. */
+  private implicit val enc: Encoder[RunStatusRow] = Encoders.product[RunStatusRow]
 }

@@ -125,15 +125,12 @@ abstract class Stage(implicit val context: Context) {
 
     if (opts.showInputs()) inputs.foreach(i => println(s"...found input ${i.key}"))
 
+    // the stage's run rows by `(output, input)`, unique within a stage
+    // (the runs table's key)
+    val built = lastOutputs.iterator.map(r => (r.output, r.input) -> r.timestamp).toMap
+
     val updatedOutputMap = outputMap.map { case (output, ins) =>
-      val results = lastOutputs.filter(_.output == output)
-      val newInputs = ins.filter { input =>
-        results.find(_.input == input.key) match {
-          case Some(result) if result.timestamp.isAfter(input.version) => false
-          case _                                                       => true
-        }
-      }
-      output -> newInputs
+      output -> ins.filterNot(input => built.get((output, input.key)).exists(_.isAfter(input.version)))
     }
 
     updatedOutputMap.filter { case (_, ins) => ins.nonEmpty }

@@ -2,6 +2,7 @@ package org.apache.spark.sql.graft
 
 import java.util.UUID
 
+import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileStatus, Path}
@@ -14,7 +15,7 @@ import org.apache.parquet.hadoop.api.InitContext
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.ColumnIOFactory
 import org.apache.spark.sql.{Column, DataFrame, Encoder, SparkSession}
-import org.apache.spark.sql.catalyst.encoders.encoderFor
+import org.apache.spark.sql.catalyst.encoders.{encoderFor, ExpressionEncoder}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.ExpressionUtils
@@ -22,6 +23,7 @@ import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.datasources.DataSourceUtils
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetReadSupport, ParquetUtils}
 import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
 
 /** Column ⇄ Expression bridge. Spark 4's Column wraps a ColumnNode
   * (Connect refactor) and the converters are `private[sql]`, so
@@ -68,6 +70,22 @@ object Bridge {
   private def sessionState(spark: SparkSession) =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
 
+  /** One encoder's bound serializer and deserializer. Both hold
+    * mutable projections, so a caller holds the codec's lock while it
+    * uses them; building them once per encoder, not per call, spares
+    * each ledger read and commit an analysis and a code generation.
+    */
+  private final class Codec[T](enc: ExpressionEncoder[T]) {
+    val schema: StructType                         = enc.schema
+    val toRow: ExpressionEncoder.Serializer[T]     = enc.createSerializer()
+    val fromRow: ExpressionEncoder.Deserializer[T] = enc.resolveAndBind().createDeserializer()
+  }
+
+  private val codecs = TrieMap.empty[Encoder[_], Codec[_]]
+
+  private def codec[T: Encoder]: Codec[T] =
+    codecs.getOrElseUpdate(implicitly[Encoder[T]], new Codec(encoderFor[T])).asInstanceOf[Codec[T]]
+
   /** The rows of parquet `files`, decoded on the driver with no Spark
     * job: parquet-hadoop's file reader hands each record to Spark's
     * own `ParquetReadSupport` (the row converter of the row-based
@@ -77,17 +95,16 @@ object Bridge {
   def readParquet[T: Encoder](spark: SparkSession, files: Seq[FileStatus]): Seq[T] = {
     val state   = sessionState(spark)
     val sql     = state.conf
-    val enc     = encoderFor[T]
+    val c       = codec[T]
     val options = new ParquetOptions(Map.empty[String, String], sql)
     val conf    = state.newHadoopConf()
-    conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, enc.schema.json)
+    conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, c.schema.json)
     // the read support's schema converter reads these without a default
     Seq(SQLConf.CASE_SENSITIVE, SQLConf.PARQUET_BINARY_AS_STRING, SQLConf.PARQUET_INT96_AS_TIMESTAMP,
       SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED, SQLConf.LEGACY_PARQUET_NANOS_AS_LONG)
       .foreach(e => conf.set(e.key, sql.getConfString(e.key)))
     // built once: `open` without options builds default ones per file
     val readOptions = HadoopReadOptions.builder(conf).build()
-    val fromRow     = enc.resolveAndBind().createDeserializer()
     files.flatMap { file =>
       val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf), readOptions)
       try {
@@ -107,7 +124,7 @@ object Bridge {
         while (pages != null) {
           val records = columns.getRecordReader(pages, materializer, FilterCompat.NOOP)
           var n       = pages.getRowCount
-          while (n > 0) { rows += fromRow(records.read()); n -= 1 }
+          c.synchronized { while (n > 0) { rows += c.fromRow(records.read()); n -= 1 } }
           pages = reader.readNextRowGroup()
         }
         rows.result()
@@ -120,19 +137,27 @@ object Bridge {
     * would use under this session's conf (`ParquetUtils.prepareWrite`):
     * the same schema, codec, timestamp type and footer metadata, with
     * no commit protocol and so no `_SUCCESS` file.
+    *
+    * Returns the rows as a read of the file decodes them: each one
+    * round-tripped through `T`'s encoder, so an `Instant` comes back
+    * truncated to the microsecond a parquet timestamp holds.
     */
-  def writeParquet[T: Encoder](spark: SparkSession, dir: Path, rows: Seq[T]): Unit = {
+  def writeParquet[T: Encoder](spark: SparkSession, dir: Path, rows: Seq[T]): Seq[T] = {
     val state   = sessionState(spark)
-    val enc     = encoderFor[T]
+    val c       = codec[T]
     val job     = Job.getInstance(state.newHadoopConf())
-    val factory = ParquetUtils.prepareWrite(state.conf, job, enc.schema,
+    val factory = ParquetUtils.prepareWrite(state.conf, job, c.schema,
       new ParquetOptions(Map.empty[String, String], state.conf))
     val task = new TaskAttemptContextImpl(job.getConfiguration,
       new TaskAttemptID(new TaskID(new JobID(), TaskType.MAP, 0), 0))
     val file   = new Path(dir, s"part-00000-${UUID.randomUUID()}-c000${factory.getFileExtension(task)}")
-    val writer = factory.newInstance(file.toString, enc.schema, task)
-    val toRow  = enc.createSerializer()
-    try rows.foreach(r => writer.write(toRow(r)))
-    finally writer.close()
+    val writer = factory.newInstance(file.toString, c.schema, task)
+    try c.synchronized {
+      rows.iterator.map { r =>
+        val row = c.toRow(r)
+        writer.write(row)
+        c.fromRow(row)
+      }.toVector
+    } finally writer.close()
   }
 }

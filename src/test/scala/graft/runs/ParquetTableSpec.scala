@@ -1,11 +1,13 @@
 package graft.runs
 
+import java.net.URI
 import java.util.concurrent.Executors
+import java.util.concurrent.atomic.AtomicLong
 
 import scala.concurrent.duration.Duration
 import scala.concurrent.{Await, ExecutionContext, Future}
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FSDataInputStream, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.spark.SpecBus
 import org.apache.spark.sql.{Encoder, Encoders, SaveMode}
 
@@ -192,6 +194,69 @@ final class ParquetTableSpec extends SparkTestBase {
     assert(read.sortBy(_.output) == statusRows)
   }
 
+  // ---- the snapshot cache ----
+
+  /** The name of the snapshot the latest manifest commits. */
+  private def liveSnapshot(table: ParquetTable[_]): String = {
+    val fs = new Path(table.path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val in = fs.open(new Path(table.path, f"_manifests/v${table.versions.last}%010d"))
+    try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim finally in.close()
+  }
+
+  /** Commit `rows` as another process would: Spark's writer puts
+    * them in a new snapshot dir, then the next manifest names it.
+    */
+  private def commitBehind(table: ParquetTable[(String, Long)], rows: Seq[(String, Long)], snap: String): Unit = {
+    val next = table.versions.last + 1
+    rows.toDS().coalesce(1).write.parquet(new Path(table.path, snap).toString)
+    val fs  = new Path(table.path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val out = fs.create(new Path(table.path, f"_manifests/v$next%010d"), false)
+    try out.write(snap.getBytes("UTF-8")) finally out.close()
+  }
+
+  test("the next all() reads a commit made behind the table's back") {
+    val table = newTable("pt-behind")
+    table.migrate()
+    table.upsert(Seq(("a", 1L)))
+    assert(table.all() == Seq(("a", 1L))) // cached by the commit
+    commitBehind(table, Seq(("a", 1L), ("b", 2L)), "snap-behind01")
+    assert(table.all().toSet == Set(("a", 1L), ("b", 2L)))
+    // and the next commit merges into those rows
+    table.upsert(Seq(("c", 3L)))
+    assert(table.all().toSet == Set(("a", 1L), ("b", 2L), ("c", 3L)))
+  }
+
+  test("a cached read equals spark.read of the same snapshot, sub-microsecond Instants included") {
+    val table = statusTable(tmpDir("pt-cache-equal"))
+    table.migrate()
+    val nanos = statusRows.map(r => r.copy(created = r.created.plusNanos(789)))
+    table.upsert(nanos)
+    val cached = table.all() // the commit's own rows, round-tripped
+    val read = spark.read.schema(statusEnc.schema).parquet(new Path(table.path, liveSnapshot(table)).toString)
+      .as[RunStatusRow].collect().toSeq
+    assert(cached.sortBy(_.output) == read.sortBy(_.output))
+    assert(read.sortBy(_.output) == statusRows, "parquet keeps microseconds")
+    assert(cached != nanos)
+  }
+
+  test("a second all() on an unchanged table opens no parquet file") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val impl = s"fs.${OpenCountingFs.Scheme}.impl"
+    conf.set(impl, classOf[OpenCountingFs].getName)
+    try {
+      val table = new ParquetTable[(String, Long)](
+        spark, s"${OpenCountingFs.Scheme}://${tmpDir("pt-opens")}/table", Seq("_1"))
+      table.migrate()
+      commitBehind(table, Seq(("a", 1L), ("b", 2L)), "snap-opens01")
+      def opens(read: => Unit): Long = { OpenCountingFs.parquetOpens.set(0); read; OpenCountingFs.parquetOpens.get }
+      assert(opens(assert(table.all().toSet == Set(("a", 1L), ("b", 2L)))) == 1, "a new snapshot is decoded")
+      assert(opens(assert(table.all().toSet == Set(("a", 1L), ("b", 2L)))) == 0)
+      table.upsert(Seq(("c", 3L)))
+      assert(opens(assert(table.all().toSet == Set(("a", 1L), ("b", 2L), ("c", 3L)))) == 0,
+        "a commit caches its own rows")
+    } finally conf.unset(impl)
+  }
+
   // ---- the pluggable commit primitive (S3-class conditional put) ----
 
   test("conditional-put primitive: N racing writers, exactly one creates the key") {
@@ -257,8 +322,11 @@ final class ParquetTableSpec extends SparkTestBase {
       table.upsert(Seq(("b", 2L)))     // tries v3; the hook steals v3 first
     }
     assert(err.getMessage.contains("lost the race"))
-    // committed state at v2 is untouched; the loser's snapshot is unreferenced
+    // committed state at v2 is untouched; the loser's snapshot is
+    // unreferenced, and its rows were never cached
     assert(table.all().toSet == before)
+    table.upsert(Seq(("c", 3L)))       // v4, over the competitor's v3
+    assert(table.all().toSet == before + (("c", 3L)))
   }
 
   test("migrate() on an existing table takes no lock and commits nothing") {
@@ -306,5 +374,24 @@ final class CountingCommit extends CommitPrimitive {
                               content: Array[Byte]): Boolean = {
     creates.incrementAndGet()
     CommitPrimitive.HadoopAtomicCreate.createIfAbsent(fs, path, content)
+  }
+}
+
+/** The local filesystem under its own scheme, counting every open of
+  * a parquet file.
+  */
+final class OpenCountingFs extends LocalFileSystem(new OpenCountingFs.Raw)
+
+object OpenCountingFs {
+  val Scheme       = "graftopens"
+  val parquetOpens = new AtomicLong
+
+  final class Raw extends RawLocalFileSystem {
+    override def getUri: URI = URI.create(s"$Scheme:///")
+
+    override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+      if (f.getName.endsWith(".parquet")) parquetOpens.incrementAndGet()
+      super.open(f, bufferSize)
+    }
   }
 }

@@ -44,12 +44,13 @@ for W in freq_heavy freq_wide; do
   fi
 done
 # one traced run: its Spark job counts show a regression in the jobs a
-# refresh or a rebuild submits, which wall times on a shared host hide
+# refresh or a rebuild submits, which wall times on a shared host hide;
+# its ledger read and plan times show one in a no-op's driver work
 if python3 methodbench/run.py --workload freq_wide --seed 1 --seconds 10 --trace 1 \
     > "$OUT/methodbench-trace.json" 2> "$OUT/methodbench-trace.log"; then
   python3 -c 'import json, sys
 m = json.loads(open(sys.argv[1]).read().splitlines()[-1])["metrics"]
-print("freq_wide traced: " + ", ".join("%s %g" % (k, m[k]["value"]) for k in ("spark.refresh.jobs", "spark.rebuild.jobs")))' \
+print("freq_wide traced: " + ", ".join("%s %g" % (k, m[k]["value"]) for k in ("spark.refresh.jobs", "spark.rebuild.jobs", "runs.read_s", "stage.plan_s")))' \
     "$OUT/methodbench-trace.json"
 else
   echo "freq_wide traced: FAILED (log: $OUT/methodbench-trace.log)"
