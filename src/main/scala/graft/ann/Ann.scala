@@ -478,31 +478,13 @@ object Ann {
 
   /** The corpus side of an IVF index: each vector in its single
     * nearest cell, with its norm precomputed — (cell, id, vec, nrm).
-    * This IS the expensive half of every [[ivfTopK]] call; persist
-    * it with [[saveIvfIndex]] so serving recomputes nothing.
+    * This IS the expensive half of every [[ivfTopK]] call; the stored
+    * IVF·PQ index ([[Pq.saveIvfPqIndex]]) persists it so serving
+    * recomputes nothing.
     */
   def ivfAssignments(corpus: DataFrame, centroids: DataFrame): DataFrame =
     assignN(corpus, centroids, 1, "id", "vec", "nrm")
       .select(col("cell"), col("id"), col("vec"), col("nrm"))
-
-  // probe: score each query's nprobe cells' members on the fused
-  // float path, keep the per-query top k
-  private def ivfProbe(assignments: DataFrame, queries: DataFrame,
-                       centroids: DataFrame, k: Int, nprobe: Int): DataFrame = {
-    val c = assignments.select(col("cell"), col("id").as("nbr_id"),
-      col("vec").as("cvec"), col("nrm").as("cnorm"))
-    val q = assignN(queries, centroids, nprobe, "query_id", "qvec", "qnorm")
-    // (query, nbr) pairs are unique by construction (each nbr lives
-    // in exactly one cell and a query's probe cells are distinct) —
-    // the dedup in TopKAgg.distinct is defensive; either way the old
-    // dropDuplicates + window double shuffle collapses into one
-    // bounded aggregation
-    val scored = c.join(broadcast(q), Seq("cell"))
-      .filter(col("query_id") =!= col("nbr_id"))
-      .withColumn("sim",
-        VectorOps.cosinePre(col("qvec"), col("cvec"), col("qnorm"), col("cnorm")))
-    topK(scored, k, dedup = true)
-  }
 
   /** IVF (inverted-file) approximate top-k: a coarse quantizer — a
     * small broadcastable centroid table, e.g. k-means centroids or
@@ -515,41 +497,22 @@ object Ann {
     * @param centroids (cell, vec) rows — must be broadcast-sized
     */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, centroids: DataFrame,
-              k: Int, nprobe: Int = 2): DataFrame =
-    ivfProbe(ivfAssignments(corpus, centroids), queries, centroids, k, nprobe)
-
-  /** Persist an IVF index as two catalog tables: the (tiny) trained
-    * centroids at `<prefix>_centroids` and the corpus assignment at
-    * `<prefix>_cells`, hash-bucketed on `cell` — the probe's join
-    * key — so the stored side joins without shuffling. `append`
-    * adds a new batch's assignments (vectors quantized against the
-    * SAME frozen centroids — the standard serve-time contract; re-
-    * train + full rebuild is the offline path). The dedup/sketch
-    * stored-index parity: a growing corpus is assigned ONCE, ever.
-    */
-  def saveIvfIndex(corpus: DataFrame, centroids: DataFrame, tablePrefix: String,
-                   nBuckets: Int = 32, append: Boolean = false): Unit = {
-    if (!append)
-      centroids.select(col("cell"), col("vec"))
-        .write.mode("overwrite").format("parquet")
-        .saveAsTable(s"${tablePrefix}_centroids")
-    ivfAssignments(corpus, centroids)
-      .write.mode(if (append) "append" else "overwrite")
-      .bucketBy(nBuckets, "cell")
-      .format("parquet")
-      .saveAsTable(s"${tablePrefix}_cells")
+              k: Int, nprobe: Int = 2): DataFrame = {
+    val c = ivfAssignments(corpus, centroids).select(col("cell"), col("id").as("nbr_id"),
+      col("vec").as("cvec"), col("nrm").as("cnorm"))
+    val q = assignN(queries, centroids, nprobe, "query_id", "qvec", "qnorm")
+    // score each query's nprobe cells' members on the fused float
+    // path, keep the per-query top k. (query, nbr) pairs are unique by
+    // construction (each nbr lives in exactly one cell and a query's
+    // probe cells are distinct) — the dedup in TopKAgg.distinct is
+    // defensive; either way the old dropDuplicates + window double
+    // shuffle collapses into one bounded aggregation
+    val scored = c.join(broadcast(q), Seq("cell"))
+      .filter(col("query_id") =!= col("nbr_id"))
+      .withColumn("sim",
+        VectorOps.cosinePre(col("qvec"), col("cvec"), col("qnorm"), col("cnorm")))
+    topK(scored, k, dedup = true)
   }
-
-  /** [[ivfTopK]] against a PRECOMPUTED index saved by
-    * [[saveIvfIndex]]: the corpus-side assignment (the expensive
-    * half) is read, never recomputed — only the query batch is
-    * quantized per call. Semantics identical to the recompute form
-    * (equivalence-spec'd in AnnSpec).
-    */
-  def ivfTopKIndexed(spark: org.apache.spark.sql.SparkSession, tablePrefix: String,
-                     queries: DataFrame, k: Int, nprobe: Int = 2): DataFrame =
-    ivfProbe(spark.table(s"${tablePrefix}_cells"),
-      queries, spark.table(s"${tablePrefix}_centroids"), k, nprobe)
 
   /** Exact ε-graph: every (a < b) pair with cosine ≥ minCos, scored
     * by the broadcast brute-force form (the a1 baseline shape: the

@@ -3,6 +3,7 @@ package graft.ann
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 import graft.functions.{PqAdc, PqAdcPacked, PqAssign, PqCodec, PqLut, PqPack, VectorOps}
 
@@ -275,32 +276,16 @@ object Pq {
     * costs roughly 2× a plain brute scan (measurement + fallback).
     * That is the price of an honest dispatch on a structureless
     * corpus.
+    *
+    * Both PQ autos return holding nothing cached: the accepted arm's
+    * result comes back eagerly checkpointed (the query set's top-k
+    * rows), and the corpus-sized relations the measurement built are
+    * released on every arm before the call returns.
     */
   def pqTopKAuto(corpus: DataFrame, queries: DataFrame, codebooks: DataFrame,
                  k: Int, m: Int, ksub: Int, sampleQueries: Int = 32,
-                 budgetFrac: Double = 0.02): DataFrame = {
-    // encode ONCE: the measurement's full-scan ADC ranking and the
-    // accepted-arm serve read the same encoded relation (one corpus
-    // encode + shuffle, not one per consumer). DISK_ONLY persist, not
-    // localCheckpoint — the codes relation is corpus-sized (the
-    // ivfPqTopKAuto storage-discipline note).
-    val b = collectBooks(codebooks, m, ksub)
-    val cIdx = encoded(corpus, b)
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    val sample = queries.orderBy(col("id")).limit(sampleQueries)
-    val needed = measuredRank(scored(cIdx, queryLuts(sample, b)),
-      Ann.bruteForceTopK(corpus, sample, k).select(col("query_id"), col("nbr_id")))
-    rerankBudget(needed, corpus.count(), budgetFrac) match {
-      case Some(rerank) =>
-        rerankStage(adcStage(scored(cIdx, queryLuts(queries, b)), rerank), corpus, queries, k)
-      case None =>
-        // the measured law says the corpus has no structure for the
-        // index to exploit at this k — exact scan, loudly the same
-        // answer for a linear (not rerank-inflated) cost
-        cIdx.unpersist()
-        Ann.bruteForceTopK(corpus, queries, k)
-    }
-  }
+                 budgetFrac: Double = 0.02): DataFrame =
+    measuredServe(corpus, queries, codebooks, k, m, ksub, sampleQueries, budgetFrac, None)
 
   // The measured-dispatch rules every PQ auto path shares. Each law
   // is margined 2× before it sets a dial, so unsampled queries are
@@ -388,68 +373,85 @@ object Pq {
   def ivfPqTopKAuto(corpus: DataFrame, queries: DataFrame, centroids: DataFrame,
                     codebooks: DataFrame, k: Int, m: Int, ksub: Int,
                     sampleQueries: Int = 32, probeFrac: Double = 0.5,
-                    budgetFrac: Double = 0.02): DataFrame = {
+                    budgetFrac: Double = 0.02): DataFrame =
+    measuredServe(corpus, queries, codebooks, k, m, ksub, sampleQueries, budgetFrac,
+      Some(centroids -> probeFrac))
+
+  // The measured serve both live autos run: `cells = None` is the full
+  // scan, Some(centroids -> probeFrac) the IVF·PQ index with its cell
+  // law first. Sample the queries (smallest ids), measure the ADC law
+  // against their true top-k, then serve at the margined rerank budget
+  // or fall back to the brute scan.
+  //
+  // Materializations: the corpus-sized relations — the IVF assignment
+  // `asg` (it feeds the cell law, the ADC law and the rerank vectors)
+  // and the encoded stage-1 index `cIdx` (the ADC law and the serve
+  // read it, so the corpus is encoded and shuffled once) — persist
+  // DISK_ONLY, not localCheckpoint: persist keeps the lineage (a lost
+  // block recomputes, where a lost checkpoint block kills the query)
+  // and stages the bytes on disk, off the execution-memory budget.
+  // Every one of them is released in the one `finally`, on every arm;
+  // left cached, the CacheManager would hold their blocks past the
+  // call and a later call over the same corpus and codebooks would
+  // find them already built. So the accepted arm returns its result
+  // eagerly checkpointed: (query set × k) rows, bounded by the query
+  // side both arms already broadcast, not by the corpus.
+  private def measuredServe(corpus: DataFrame, queries: DataFrame, codebooks: DataFrame,
+                            k: Int, m: Int, ksub: Int, sampleQueries: Int,
+                            budgetFrac: Double, cells: Option[(DataFrame, Double)]): DataFrame = {
     val sample = queries.orderBy(col("id")).limit(sampleQueries)
-    // one brute pass over the sample feeds BOTH measured laws (the
-    // tops relation is sample×k rows, materialized once, bounded),
-    // and ONE materialized assignment pass feeds the cell law, the
-    // ADC law, and the accepted-arm serve scan — which previously
-    // each re-ran the n×cells scoring. The two scalar counts, the
-    // brute pass and the assignment pass are mutually independent,
-    // so they overlap on driver threads (the v6/x6 rationale).
-    //
-    // Storage discipline (r20 verdict item 3): the bounded sample
-    // tops keep localCheckpoint (sample×k rows — trivial), but the
-    // CORPUS-SIZED assignment is persisted DISK_ONLY instead of
-    // localCheckpointed: checkpoint blocks truncate lineage and live
-    // in executor memory-and-disk with NO recompute path, so at
-    // 100 TB an executor loss kills the query and memory pressure is
-    // corpus-sized; persist keeps the lineage (lost blocks recompute)
-    // and stages the bytes on disk, off the execution-memory budget.
-    // The eager count() materializes it before the two driver threads
-    // read it (racing a lazy first materialization is what the eager
-    // form was protecting against).
-    val asg = Ann.ivfAssignments(corpus, centroids)
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
+    val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def persisted(df: DataFrame): DataFrame = { held += df; df.persist(StorageLevel.DISK_ONLY) }
+    try {
+      // (stage-1 source with its norm, true sample top-k, corpus count,
+      // probe), or None when the cell law refuses
+      val stage = cells match {
+        case None => Some((corpus, VectorOps.fnorm(col("vec")),
+          Ann.bruteForceTopK(corpus, sample, k).select(col("query_id"), col("nbr_id")),
+          corpus.count(), None))
+        case Some((centroids, probeFrac)) =>
+          val asg = persisted(Ann.ivfAssignments(corpus, centroids))
+          // asg.count() materializes the assignment before the laws read it
+          val (tops, nCells, n) = lawInputs(corpus, sample, centroids, k, asg.count())
+          val cellNeeded = measuredCellRankFromCells(tops,
+            asg.select(col("id").as("nbr_id"), col("cell")), sample, centroids)
+          // refuse on the cell law BEFORE measuring the ADC law: a
+          // quantizer that does not separate this corpus makes that
+          // pass pure waste
+          if (refusesCells(cellNeeded, nCells, probeFrac)) None
+          else Some((asg, col("nrm"), tops, n, Some(centroids -> probeDial(cellNeeded, nCells))))
+      }
+      stage.flatMap { case (src, norm, tops, n, probe) =>
+        val b = collectBooks(codebooks, m, ksub)
+        val keys = probe.map(_ => "cell").toSeq
+        val cIdx = persisted(encoded(src, b, keys.map(col), norm))
+        def adc(qs: DataFrame) = scored(cIdx, queryLuts(qs, b, probe), keys)
+        rerankBudget(measuredRank(adc(sample), tops), n, budgetFrac).map { rerank =>
+          // rerank vectors come from the stage-1 source, so the IVF
+          // serve reads its persisted norms and touches no third
+          // corpus scan
+          rerankFromVecs(adcStage(adc(queries), rerank),
+            src.select(col("id"), col("vec"), norm.as("nrm")), queries, k)
+            .localCheckpoint(eager = true)
+        }
+      }.getOrElse(Ann.bruteForceTopK(corpus, queries, k))
+    } finally held.foreach(_.unpersist())
+  }
+
+  // the laws' shared inputs: the sample's true top-k (query_id, nbr_id;
+  // sample×k rows, checkpointed because both laws read it), the cell
+  // count and the corpus count. They and `alongside` are independent,
+  // so they overlap on driver threads (the v6/x6 rationale); the law
+  // chain cellRank → nprobe → adcRank that follows is sequential.
+  private def lawInputs(corpus: DataFrame, sample: DataFrame, centroids: DataFrame,
+                        k: Int, alongside: => Any = ()): (DataFrame, Long, Long) = {
     val ((nCells, n), (tops, _)) = graft.core.Par.par2(
       graft.core.Par.par2(centroids.count(), corpus.count()),
       graft.core.Par.par2(
         Ann.bruteForceTopK(corpus, sample, k)
           .select(col("query_id"), col("nbr_id")).localCheckpoint(true),
-        asg.count()))
-    val cellNeeded = measuredCellRankFromCells(tops,
-      asg.select(col("id").as("nbr_id"), col("cell")), sample, centroids)
-    // refuse on the cell law BEFORE measuring the ADC law: a quantizer
-    // that does not separate this corpus makes that pass pure waste
-    if (refusesCells(cellNeeded, nCells, probeFrac)) {
-      asg.unpersist()
-      return Ann.bruteForceTopK(corpus, queries, k)
-    }
-    val nprobe = probeDial(cellNeeded, nCells)
-    // encode ONCE: the ADC law and the accepted-arm serve previously
-    // each rebuilt the identical encoded stage-1 relation (PqAssign
-    // over the assignment + its pinning exchange) — one corpus encode
-    // + shuffle per consumer. The encoded codes relation (~m ints per
-    // row, 3.5× smaller than the vectors) persists DISK_ONLY across
-    // the two; it materializes under the ADC-law job and the serve
-    // reads the cached blocks.
-    val b = collectBooks(codebooks, m, ksub)
-    val cIdx = encoded(asg, b, Seq(col("cell")), col("nrm"))
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    val adcNeeded = measuredRank(
-      scored(cIdx, queryLuts(sample, b, Some(centroids -> nprobe)), Seq("cell")), tops)
-    rerankBudget(adcNeeded, n, budgetFrac) match {
-      case Some(rerank) =>
-        // rerank vectors come from the persisted assignment (id, vec,
-        // nrm — the same fnorm expression the corpus projection would
-        // recompute), so the serve plan touches no third corpus scan
-        rerankFromVecs(adcStage(scored(cIdx,
-            queryLuts(queries, b, Some(centroids -> nprobe)), Seq("cell")), rerank),
-          asg.select(col("id"), col("vec"), col("nrm")), queries, k)
-      case None =>
-        asg.unpersist(); cIdx.unpersist()
-        Ann.bruteForceTopK(corpus, queries, k)
-    }
+        alongside))
+    (tops, nCells, n)
   }
 
   /** IVF·PQ: coarse-probe `nprobe` cells ([[Ann.assignN]], the a3/a5
@@ -476,8 +478,8 @@ object Pq {
     * without a shuffle), and `<prefix>_vecs` (id, vec, nrm — touched
     * only by the rerank semi-join, id-bucketed). `append` encodes a
     * new batch against the FROZEN centroids + codebooks — the
-    * [[Ann.saveIvfIndex]] contract: a growing corpus is assigned and
-    * encoded once, ever.
+    * stored-index contract: a growing corpus is assigned and encoded
+    * once, ever.
     *
     * The codes column is the [[graft.functions.PqPack]] bit-packed
     * layout (⌈log₂ ksub⌉ bits per code — 12 bytes at the gate config,
@@ -516,7 +518,7 @@ object Pq {
     // and compete for executor memory at 100 TB; the bounded
     // relations in this file keep localCheckpoint.
     val cells = Ann.ivfAssignments(corpus, centroids)
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
+      .persist(StorageLevel.DISK_ONLY)
     cells.count()
     graft.core.Par.par2(
       cells.select(col("cell"), col("id"),
@@ -649,13 +651,7 @@ object Pq {
     val corpus = spark.table(s"${tablePrefix}_vecs").select(col("id"), col("vec"))
     val centroids = spark.table(s"${tablePrefix}_centroids")
     val sample = lawsSample(spark, tablePrefix, sampleN)
-    // the brute pass and the two scalar counts are independent —
-    // overlap them (the ivfPqTopKAuto rationale); the law chain
-    // cellRank → nprobe → adcRank is inherently sequential
-    val (tops, (nCells, n)) = graft.core.Par.par2(
-      Ann.bruteForceTopK(corpus, sample, measureK)
-        .select(col("query_id"), col("nbr_id")).localCheckpoint(true),
-      graft.core.Par.par2(centroids.count(), corpus.count()))
+    val (tops, nCells, n) = lawInputs(corpus, sample, centroids, measureK)
     // the build already persisted the exact (id → cell) assignment the
     // index serves with — <prefix>_codes carries `cell` per id — so the
     // cell law is measured against the STORED assignment instead of

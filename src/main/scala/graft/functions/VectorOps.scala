@@ -44,17 +44,6 @@ object VectorOps {
   def cosinePre(a: Column, b: Column, normA: Column, normB: Column): Column =
     fdot(a, b) / (normA * normB)
 
-  /** Squared L2 distance (double). */
-  def l2sq(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => {
-        val d = x.cast("double") - y.cast("double")
-        d * d
-      }),
-      lit(0.0),
-      (acc, v) => acc + v
-    )
-
   // Signed random-hyperplane sketches live in
   // [[graft.functions.HyperplaneProbeSketches]] (`probes = 0` for one
   // sketch per table) — a single-pass expression.

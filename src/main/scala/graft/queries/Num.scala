@@ -31,17 +31,8 @@ object Num {
   /** Exact 4-decimal view (for products of two 2-decimal values). */
   def dec4(c: Column): Column = c.cast(DecimalType(18, 4))
 
-  /** Exact 6-decimal view (for products of three 2-decimal values). */
-  def dec6(c: Column): Column = c.cast(DecimalType(18, 6))
-
   /** Order-independent sum of a 2-decimal double column, as double. */
   def exactSum2(c: Column): Column = sum(dec2(c)).cast(DoubleType)
-
-  /** Order-independent sum of a 4-decimal product, as double. */
-  def exactSum4(c: Column): Column = sum(dec4(c)).cast(DoubleType)
-
-  /** Order-independent sum of a 6-decimal product, as double. */
-  def exactSum6(c: Column): Column = sum(dec6(c)).cast(DoubleType)
 
   /** Order-independent mean of a 2-decimal double column: exact sum
     * divided by count — one deterministic double division.

@@ -122,12 +122,6 @@ object TextOps {
   def contentFingerprint(c: Column): Column =
     graft.functions.ContentFingerprint64(tokens(c))
 
-  /** Simhash-style 64-bit near-dup fingerprint built from per-token
-    * hashes; see [[graft.dedup.SimHash]] for the pair search.
-    */
-  def tokenHashes(c: Column): Column =
-    transform(tokens(c), t => xxhash64(t))
-
   /** Token-window chunk starts for sliding-window chunking with
     * overlap: 0, step, 2·step, … while < token count
     * (step = chunkTokens − overlap). A zero-token document yields an

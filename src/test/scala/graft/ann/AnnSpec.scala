@@ -198,45 +198,6 @@ final class AnnSpec extends SparkTestBase {
     } finally spark.sql(s"DROP TABLE IF EXISTS $table")
   }
 
-  test("IVF index persistence: stored probe ≡ recomputed, append ≡ fresh assignment") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(7)
-    val dim = 16
-    val all = (0 until 150).map(i =>
-      i.toLong -> Array.fill(dim)(rnd.nextGaussian().toFloat)).toSeq.toDF("id", "vec")
-    val corpus  = all.filter(col("id") < 120)
-    val batch   = all.filter(col("id") >= 120)
-    val queries = all.filter(col("id") % 7 === 0)
-    val cents   = Ann.kmeansCentroids(corpus, k = 6, iters = 2)
-      .localCheckpoint() // freeze the trained quantizer for the whole spec
-    val prefix  = "ivf_index_spec"
-    try {
-      Ann.saveIvfIndex(corpus, cents, prefix, nBuckets = 4)
-      def key(df: org.apache.spark.sql.DataFrame) = df.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
-      val indexed   = key(Ann.ivfTopKIndexed(spark, prefix, queries, k = 5))
-      val recompute = key(Ann.ivfTopK(corpus, queries, cents, k = 5))
-      assert(indexed == recompute && indexed.nonEmpty)
-
-      // the indexed plan reads the stored assignment — the corpus
-      // table name appears; no corpus-side quantization runs (the
-      // only argmax-assignment in the plan is the query batch's)
-      val indexedDf = Ann.ivfTopKIndexed(spark, prefix, queries, k = 5)
-      assert(indexedDf.queryExecution.analyzed.toString.contains(s"${prefix}_cells"))
-
-      // append maintenance: assigning a new batch against the FROZEN
-      // centroids keeps the stored index equal to a fresh full build
-      Ann.saveIvfIndex(batch, cents, prefix, nBuckets = 4, append = true)
-      val stored = spark.table(s"${prefix}_cells").select("cell", "id")
-      val fresh  = Ann.ivfAssignments(all, cents).select("cell", "id")
-      assert(stored.exceptAll(fresh).isEmpty && fresh.exceptAll(stored).isEmpty)
-      assert(stored.count() == 150)
-    } finally {
-      spark.sql(s"DROP TABLE IF EXISTS ${prefix}_cells")
-      spark.sql(s"DROP TABLE IF EXISTS ${prefix}_centroids")
-    }
-  }
-
   test("cosine near-dup pairs are symmetric-free and thresholded") {
     val pairs = Ann.cosinePairsExact(vecs, minCos = 0.4).collect()
     assert(pairs.forall(r => r.getAs[Long]("a") < r.getAs[Long]("b")))

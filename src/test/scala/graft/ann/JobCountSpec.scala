@@ -53,34 +53,38 @@ final class JobCountSpec extends SparkTestBase {
     } finally sc.removeSparkListener(listener)
   }
 
+  // Each PQ auto call builds its DISK_ONLY relations and releases them
+  // before it returns, so a second call over the same corpus and
+  // codebooks runs the same jobs as the first, and the order the arms
+  // run in does not matter. An accepted arm's count includes the one
+  // that materializes its result checkpoint.
+
   test("pqTopKAuto: job count per arm") {
     books.count()
     // the budgets of PqSpec's auto-dispatch test: 0.5 accepts the
     // compressed scan, 0.02 refuses to the brute scan
-    val pqArm = jobs(Pq.pqTopKAuto(vecs, queries, books, k = 5, M, KSUB,
-      budgetFrac = 0.5).collect())
-    val bruteArm = jobs(Pq.pqTopKAuto(vecs, queries, books, k = 5, M, KSUB,
-      budgetFrac = 0.02).collect())
-    info(s"pqTopKAuto jobs: pq arm $pqArm, brute arm $bruteArm")
-    // the same call runs 16 or 18 jobs from run to run (a7, its
-    // registry form, runs 26 or 28), so this arm is pinned as a ceiling:
-    // the two extra jobs build the DISK_ONLY encoded corpus (its
-    // repartition stage, and the cache fill under measuredRank's
-    // head()), and are skipped when an earlier accepted-arm call over
-    // the same corpus and codebooks left that relation cached
-    assert(pqArm <= 18, s"pq arm ran $pqArm jobs")
-    assert(bruteArm == 15, s"brute arm ran $bruteArm jobs")
+    def arm(budgetFrac: Double) = jobs(Pq.pqTopKAuto(vecs, queries, books, k = 5, M, KSUB,
+      budgetFrac = budgetFrac).collect())
+    val pqArm = arm(0.5)
+    val pqAgain = arm(0.5)
+    val bruteArm = arm(0.02)
+    info(s"pqTopKAuto jobs: pq arm $pqArm, again $pqAgain, brute arm $bruteArm")
+    assert(pqArm == 19, s"pq arm ran $pqArm jobs")
+    assert(pqAgain == pqArm, s"pq arm ran $pqArm jobs, then $pqAgain")
+    assert(bruteArm == 17, s"brute arm ran $bruteArm jobs")
   }
 
   test("ivfPqTopKAuto: job count per arm") {
     books.count(); cents.count()
-    val idxArm = jobs(Pq.ivfPqTopKAuto(vecs, queries, cents, books, k = 5, M, KSUB,
-      probeFrac = 1.0, budgetFrac = 1.0).collect())
-    val bruteArm = jobs(Pq.ivfPqTopKAuto(vecs, queries, cents, books, k = 5, M, KSUB,
-      probeFrac = 0.5, budgetFrac = 0.02).collect())
-    info(s"ivfPqTopKAuto jobs: index arm $idxArm, brute arm $bruteArm")
-    assert(idxArm == 39, s"index arm ran $idxArm jobs")
-    assert(bruteArm == 19, s"brute arm ran $bruteArm jobs")
+    def arm(probeFrac: Double, budgetFrac: Double) = jobs(Pq.ivfPqTopKAuto(vecs, queries,
+      cents, books, k = 5, M, KSUB, probeFrac = probeFrac, budgetFrac = budgetFrac).collect())
+    val idxArm = arm(1.0, 1.0)
+    val idxAgain = arm(1.0, 1.0)
+    val bruteArm = arm(0.5, 0.02)
+    info(s"ivfPqTopKAuto jobs: index arm $idxArm, again $idxAgain, brute arm $bruteArm")
+    assert(idxArm == 40, s"index arm ran $idxArm jobs")
+    assert(idxAgain == idxArm, s"index arm ran $idxArm jobs, then $idxAgain")
+    assert(bruteArm == 23, s"brute arm ran $bruteArm jobs")
   }
 
   test("saveIvfPqLaws and ivfPqTopKIndexedAuto: job count per arm") {

@@ -35,6 +35,14 @@ final class PqSpec extends SparkTestBase {
     .select(col("query_id"), col("nbr_id"), round(col("sim"), 9).as("sim"), col("rank"))
     .collect().map(_.toSeq).toSet
 
+  // a call's result and the plans it ran, as strings: its own executed
+  // plan and every checkpoint action's. An accepted auto arm returns an
+  // eager checkpoint, so its serve plan is the checkpoint action's
+  private def withPlans(body: => DataFrame): (DataFrame, Seq[String]) = {
+    val (df, cut) = org.apache.spark.SpecBus.checkpoints(spark)(body)
+    (df, df.queryExecution.executedPlan.toString +: cut.map(_.executedPlan.toString))
+  }
+
   private def deleteRecursively(f: java.io.File): Unit = {
     if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
     f.delete()
@@ -145,15 +153,17 @@ final class PqSpec extends SparkTestBase {
     // generous budget → the measured-PQ arm runs (plan carries the ADC
     // kernel) and is exact: the fixture samples every query, so the
     // measured budget IS the true worst rank, margined 2×
-    val pqArm = Pq.pqTopKAuto(vecs, queries, books, k = 5, M, KSUB, budgetFrac = 0.5)
-    assert(pqArm.queryExecution.executedPlan.toString.contains("pqadc"),
+    val (pqArm, pqPlans) =
+      withPlans(Pq.pqTopKAuto(vecs, queries, books, k = 5, M, KSUB, budgetFrac = 0.5))
+    assert(pqPlans.exists(_.contains("pqadc")),
       "generous budget must dispatch to the compressed scan")
     assert(canon(pqArm) == exact)
     // tight budget on the isotropic fixture → the measured law comes
     // back as a whole-percent corpus fraction and the dispatch refuses
     // the index (the SPOTCHECK_pq arm-2 rule) — exact via brute
-    val bruteArm = Pq.pqTopKAuto(vecs, queries, books, k = 5, M, KSUB, budgetFrac = 0.02)
-    assert(!bruteArm.queryExecution.executedPlan.toString.contains("pqadc"),
+    val (bruteArm, brutePlans) =
+      withPlans(Pq.pqTopKAuto(vecs, queries, books, k = 5, M, KSUB, budgetFrac = 0.02))
+    assert(!brutePlans.exists(_.contains("pqadc")),
       "tight budget on a structureless corpus must dispatch to the exact scan")
     assert(canon(bruteArm) == exact)
   }
@@ -168,17 +178,17 @@ final class PqSpec extends SparkTestBase {
     // generous fractions -> the index arm runs (margined nprobe capped
     // at the cell count, rerank from the in-cell law) and is exact:
     // the fixture samples every query
-    val idxArm = Pq.ivfPqTopKAuto(vecs, queries, cents, books, k = 5, M, KSUB,
-      probeFrac = 1.0, budgetFrac = 1.0)
-    assert(idxArm.queryExecution.executedPlan.toString.contains("pqadc"),
+    val (idxArm, idxPlans) = withPlans(Pq.ivfPqTopKAuto(vecs, queries, cents, books,
+      k = 5, M, KSUB, probeFrac = 1.0, budgetFrac = 1.0))
+    assert(idxPlans.exists(_.contains("pqadc")),
       "generous fractions must dispatch to the IVF-PQ index")
     assert(canon(idxArm) == exact)
     // production fractions on the isotropic fixture: the cell law
     // comes back as most of the cell count (no coarse structure for
     // the quantizer to exploit) -> the dispatch refuses the index
-    val bruteArm = Pq.ivfPqTopKAuto(vecs, queries, cents, books, k = 5, M, KSUB,
-      probeFrac = 0.5, budgetFrac = 0.02)
-    assert(!bruteArm.queryExecution.executedPlan.toString.contains("pqadc"),
+    val (bruteArm, brutePlans) = withPlans(Pq.ivfPqTopKAuto(vecs, queries, cents, books,
+      k = 5, M, KSUB, probeFrac = 0.5, budgetFrac = 0.02))
+    assert(!brutePlans.exists(_.contains("pqadc")),
       "production fractions on a structureless corpus must dispatch to the exact scan")
     assert(canon(bruteArm) == exact)
   }

@@ -219,17 +219,19 @@ final class PlanAuditSpec extends SparkTestBase {
     val offenders = graft.SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, _) if skipped(name) => Nil
       case (name, fn) =>
-        val plan = fn(spark, sfDir).queryExecution.executedPlan
-        plan.collect { case f: FilterExec => f }.flatMap { f =>
-          scanBelow(f.child).toSeq.flatMap { scan =>
-            val scanCols = scan.output.map(_.name).toSet
-            val pushed   = scan.metadata.getOrElse("PushedFilters", "")
-            conjuncts(f.condition).flatMap(pushableCol)
-              .filter(scanCols)
-              .filterNot(pushed.contains)
-              .map(c => s"$name: predicate on '$c' not in PushedFilters [$pushed]")
+        // with the plans above its checkpoints (a7's and a8's serve)
+        val (df, cut) = org.apache.spark.SpecBus.checkpoints(spark)(fn(spark, sfDir))
+        (df.queryExecution +: cut).flatMap(_.executedPlan.collect { case f: FilterExec => f })
+          .flatMap { f =>
+            scanBelow(f.child).toSeq.flatMap { scan =>
+              val scanCols = scan.output.map(_.name).toSet
+              val pushed   = scan.metadata.getOrElse("PushedFilters", "")
+              conjuncts(f.condition).flatMap(pushableCol)
+                .filter(scanCols)
+                .filterNot(pushed.contains)
+                .map(c => s"$name: predicate on '$c' not in PushedFilters [$pushed]")
+            }
           }
-        }
     }
     assert(offenders.isEmpty,
       s"pushable predicates failed to reach their scans:\n${offenders.distinct.mkString("\n")}")
@@ -326,11 +328,16 @@ final class PlanAuditSpec extends SparkTestBase {
   }
 
   test("no gated query plans a cartesian product") {
+    // the cartesian check also reads a query's checkpoint actions: the
+    // plan above a cut (a7's and a8's serve, behind their eager result
+    // checkpoint) no longer shows in the returned frame's plan
     val offenders = graft.SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, _) if skipped(name) => None
       case (name, fn) =>
-        val plan = fn(spark, sfDir).queryExecution.executedPlan.toString
-        val cartesian = plan.contains("CartesianProduct")
+        val (df, cut) = org.apache.spark.SpecBus.checkpoints(spark)(fn(spark, sfDir))
+        val plan = df.queryExecution.executedPlan.toString
+        val cartesian = (plan +: cut.map(_.executedPlan.toString))
+          .exists(_.contains("CartesianProduct"))
         val bnl = plan.contains("BroadcastNestedLoopJoin") && !scalarBroadcastOk(name)
         if (cartesian || bnl)
           Some(s"$name: ${if (cartesian) "CartesianProduct" else "BroadcastNestedLoopJoin"}")

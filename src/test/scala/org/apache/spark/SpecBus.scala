@@ -8,6 +8,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
+import org.apache.spark.storage.StorageLevel
 
 /** Waits until every event posted so far has reached every listener,
   * so a count a spec reads after it is complete (the bus itself is
@@ -57,5 +58,22 @@ object SpecBus {
       drain(spark.sparkContext)
       (out, seen.synchronized(seen.toList))
     } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** What a call that releases its materializations leaves as it
+    * found it: the CacheManager's entries (its cached relations, in
+    * order) and the ids of the DISK_ONLY RDDs the context holds
+    * persisted.
+    */
+  def residue(spark: SparkSession): (List[AnyRef], Set[Int]) = {
+    val cm = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    val entries = classOf[org.apache.spark.sql.execution.CacheManager]
+      .getDeclaredField("cachedData")
+    entries.setAccessible(true)
+    val disk = spark.sparkContext.getPersistentRDDs.collect {
+      case (id, rdd) if rdd.getStorageLevel == StorageLevel.DISK_ONLY => id
+    }.toSet
+    (entries.get(cm).asInstanceOf[Seq[AnyRef]].toList, disk)
   }
 }

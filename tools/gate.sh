@@ -20,6 +20,11 @@ echo "non-existent accumulator errors: $(grep -c 'non-existent accumulator' "$OU
 awk '/^\[info\] [A-Za-z0-9_]+:$/ { suite = substr($2, 1, length($2) - 1) }
      /non-existent accumulator/ { n[suite == "" ? "(before any suite)" : suite]++ }
      END { for (s in n) printf "  %s: %d\n", s, n[s] }' "$OUT/specs.log" | sort
+# the job counts of every auto arm and pair path, as JobCountSpec
+# measured them: a moved count shows here even where its pin still holds
+echo "JobCountSpec job counts:"
+awk '/^\[info\] [A-Za-z0-9_]+:$/ { inJc = ($2 == "JobCountSpec:") }
+     inJc && /^\[info\]   \+ .* jobs: / { sub(/^\[info\]   \+ /, "  "); print }' "$OUT/specs.log"
 
 echo "== correctness ($SF_CORRECT) =="
 if SPARK_GRAFT_CPUS="$CPUS" \
