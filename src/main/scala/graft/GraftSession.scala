@@ -16,13 +16,9 @@ import org.apache.spark.sql.SparkSession
   *   - State store provider: left at Spark's default (HDFS-backed,
   *     in-memory maps) — the right store for bounded watermark-sized
   *     state like windowed counts, with none of RocksDB's per-batch
-  *     open/commit overhead. `transformWithState` needs multi-column-
-  *     family state, which only the RocksDB provider supports, so
-  *     those queries run under
-  *     [[graft.streaming.EventsPipeline.withRocksDBStateStore]],
-  *     which scopes the provider to the query and restores the
-  *     session default after; a production job holding larger-than-
-  *     heap state would likewise opt in per job.
+  *     open/commit overhead. A query that needs RocksDB (e.g.
+  *     `transformWithState`'s multi-column-family state) or holds
+  *     larger-than-heap state opts in per query.
   *   - `spark.hadoop.fs.file.impl`: [[graft.core.NioLocalFileSystem]],
   *     Hadoop's local FS with a `java.nio` permission change in place
   *     of the `chmod` it forks per created file or directory when no

@@ -235,7 +235,8 @@ object Ann {
 
   /** One sampled pre-flight, four numbers: the corpus count, the
     * estimated true ≥τ pair count, the recall-budget table count for
-    * it, and — the candidateVolume idea applied to the sketch join —
+    * it, and — the exact join's pre-flight volume
+    * (`NgramJaccard.volumeOfPostings`) applied to the sketch join —
     * the expected CANDIDATE FRACTION: the probability a background
     * pair (sim drawn from the sampled all-pairs distribution) collides
     * in ≥ 1 of the `tables` tables, E[1 − (1 − p(sim)^planes)^T]. That
@@ -282,7 +283,7 @@ object Ann {
 
   /** EXACT candidate volume of a [[cosineNearDupPairsLSH]] config on
     * THIS corpus — the vector-side analogue of
-    * `NgramJaccard.candidateVolume`: one sketch pass and one
+    * `NgramJaccard.volumeOfPostings`: one sketch pass and one
     * group-by, linear in `tables × n`, no pair ever materialized.
     * Where [[lshProfile]]'s `candidateFraction` is a sampled
     * ESTIMATE of the distinct-pair collision probability, this is
@@ -837,18 +838,6 @@ object Ann {
   def sketchIndex(df: DataFrame, dim: Int, planes: Int = 10,
                   tables: Int = 8, seed: Long = 42L, probes: Int = 2): DataFrame =
     sketchRows(df, Seq(col("id")), dim, planes, tables, seed, probes)
-
-  /** Store a sketch index as a bucketed catalog table (hash-clustered
-    * on `bucket`, a subset of the candidate join key (table, bucket),
-    * so the stored side joins without shuffling). `append = true`
-    * adds a processed batch — the per-batch maintenance step.
-    */
-  def saveSketchIndex(index: DataFrame, table: String, nBuckets: Int = 32,
-                      append: Boolean = false): Unit =
-    index.write.mode(if (append) "append" else "overwrite")
-      .bucketBy(nBuckets, "bucket")
-      .format("parquet")
-      .saveAsTable(table)
 
   /** Incremental embedding near-dup against a PRECOMPUTED index: the
     * existing side arrives as stored (id, table, bucket) rows

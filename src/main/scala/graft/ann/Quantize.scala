@@ -41,10 +41,4 @@ object Quantize {
           lit(0.0), (acc, e) => acc + e)))
       .select(col(idCol).as("id"), col("scale"), col("qvec"), col("recon_err"))
   }
-
-  /** Inverse map: (id, scale, qvec) → (id, vec: Array[Double]),
-    * `vec(i) = qvec(i) · scale` — the serving-side decode.
-    */
-  def dequantize(df: DataFrame): DataFrame =
-    df.withColumn("vec", transform(col("qvec"), q => q.cast("double") * col("scale")))
 }

@@ -70,24 +70,6 @@ final case class Glob(glob: String, pathSep: Char = '/') {
   /** Fully-anchored regex source (for `rlike` / external engines). */
   val fullRegex: String = regex + "$"
 
-  /** Literal prefix before the first `*` — the sargable part of the
-    * glob.
-    */
-  val literalPrefix: String = glob.takeWhile(_ != '*')
-
-  /** Catalyst predicate for "stored key column matches this glob",
-    * built for scan pushdown: a regex never reaches a parquet scan,
-    * but the glob's literal prefix derives a REDUNDANT `startsWith`
-    * conjunct that does — `PushedFilters: [StringStartsWith(...)]`,
-    * i.e. row-group min/max range pruning over the key column — while
-    * the full regex evaluates post-scan on the surviving rows. On a
-    * 100 TB keyed table this is the difference between scanning the
-    * key range the glob can touch and scanning everything.
-    */
-  def columnPredicate(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    if (literalPrefix.isEmpty) c.rlike(fullRegex)
-    else c.startsWith(literalPrefix) && c.rlike(fullRegex)
-
   private val fullP: Pattern   = Pattern.compile(fullRegex)
   private val prefixP: Pattern = Pattern.compile(regex)
 

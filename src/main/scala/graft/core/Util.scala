@@ -1,19 +1,9 @@
 package graft.core
 
 /** Wall-clock instrumentation for driver-side phases (the reference
-  * wraps method runs the same way; Util.scala:9-21 — re-expressed as
-  * a measure-then-report pair rather than a try/finally wrapper).
+  * wraps method runs the same way; Util.scala:9-21).
   */
 object Stopwatch {
-
-  /** Evaluate `body`, returning its value and the elapsed wall time
-    * in milliseconds.
-    */
-  def measure[A](body: => A): (A, Long) = {
-    val t0 = System.nanoTime()
-    val value = body
-    (value, (System.nanoTime() - t0) / 1000000L)
-  }
 
   /** Evaluate `body`, reporting "<label> took N ms" through `report`
     * whether or not `body` throws.

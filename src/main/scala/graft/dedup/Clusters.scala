@@ -8,17 +8,10 @@ import org.apache.spark.sql.functions._
   * canonical-document choice needs the *connected components* —
   * transitive closure of "is a near-dup of".
   *
-  * Two interchangeable engines, same (pairs → (id, cluster_rep))
-  * contract:
-  *   - [[Clusters.connectedComponents]] — min-label propagation with
-  *     pointer jumping. Iterations ≈ log(diameter); the right default
-  *     for dedup graphs (shallow, star-ish clusters).
-  *   - [[Clusters.connectedComponentsStars]] — alternating
-  *     large-star/small-star (Kiveris et al., "Connected Components
-  *     in MapReduce and Beyond", SoCC'14): each round rewires edges
-  *     toward neighborhood minima, provably converging in O(log n)
-  *     rounds on ANY graph — the adversarial-chain-safe engine for
-  *     10⁹-edge graphs where diameter is unknown.
+  * [[Clusters.connectedComponents]] resolves them (pairs → (id,
+  * cluster_rep)) by min-label propagation with pointer jumping.
+  * Iterations ≈ log(diameter); the right engine for dedup graphs
+  * (shallow, star-ish clusters).
   */
 object Clusters {
 
@@ -121,99 +114,6 @@ object Clusters {
       iter += 1
     }
     labels.select(col("id"), col("label").as("cluster_rep"))
-  }
-
-  /** Connected components via alternating large-star/small-star
-    * rounds (Kiveris et al.). Every round is two (join + keyed
-    * aggregation) passes over the edge list — the same relational
-    * shape as the min-label loop — but instead of propagating labels
-    * along edges, it REWIRES the edges themselves:
-    *
-    *   - large-star: every node v attaches to m(u) = min(Γ(u) ∪ u)
-    *     of each smaller neighbor u (emitted for v > u), collapsing
-    *     tall subtrees onto local minima;
-    *   - small-star: each node and its smaller neighbors all attach
-    *     to the minimum of that smaller neighborhood.
-    *
-    * At fixpoint each component is a star centered on its minimum
-    * node. Convergence is O(log n) rounds on any topology — a 10⁹-
-    * node adversarial chain needs ~30 rounds where naive propagation
-    * needs 10⁹. Edge set stability is detected with an
-    * order-independent (count, XOR of xxhash64(src,dst)) signature —
-    * one tiny aggregate per round instead of a full EXCEPT self-join.
-    *
-    * Same contract as [[connectedComponents]]: (id, cluster_rep) for
-    * every node appearing in a pair, rep = component minimum.
-    */
-  def connectedComponentsStars(pairs: DataFrame, maxIter: Int = 50): DataFrame = {
-    def canon(e: DataFrame): DataFrame = e
-      .filter(col("src") =!= col("dst"))
-      .select(greatest(col("src"), col("dst")).as("src"),
-        least(col("src"), col("dst")).as("dst"))
-      .distinct()
-
-    // XOR fold, not sum: order-independent like sum, but can't
-    // overflow under ANSI arithmetic (edges are distinct, so XOR
-    // can't self-cancel a duplicate)
-    def signature(e: DataFrame): (Long, Long) = {
-      val r = e.agg(count(lit(1)), expr("bit_xor(xxhash64(src, dst))")).head()
-      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-    }
-
-    // materialize the raw pair list once: it feeds canon() AND the
-    // identity-row node set at the end, and may itself be an
-    // expensive similarity-join plan
-    val raw = pairs.select(col("a").cast("long").as("src"),
-        col("b").cast("long").as("dst"))
-      .localCheckpoint(true)
-    // Lineage.truncate for the loop-carried edge set every round —
-    // the star rewiring references `edges` three times per round (see
-    // the min-label loop's note on checkpointed statistics compounding)
-    var edges = canon(raw).localCheckpoint(true)
-    var sig  = signature(edges)
-    var iter = 0
-    var done = false
-    while (!done && iter < maxIter) {
-      // large-star over the symmetric view: for every node u, each
-      // LARGER neighbor v re-attaches to m(u) = min(Γ(u) ∪ u).
-      // Output is already canonical (v > u ≥ m(u)).
-      val sym = edges.union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      val lmin = sym.groupBy(col("src")).agg(least(col("src"), min(col("dst"))).as("m"))
-      val afterLarge = sym.join(lmin, Seq("src"))
-        .filter(col("dst") > col("src"))
-        .select(col("dst").as("src"), col("m").as("dst"))
-        .distinct()
-        .localCheckpoint(true)
-      // small-star over the directed (src > dst) view: u and all its
-      // smaller neighbors attach to m = min of that neighborhood.
-      val smin = afterLarge.groupBy(col("src")).agg(min(col("dst")).as("m"))
-      val afterSmall = graft.plans.Lineage.truncate(
-        afterLarge.join(smin, Seq("src"))
-          .filter(col("dst") =!= col("m"))
-          .select(col("dst").as("src"), col("m").as("dst"))
-          .union(smin.select(col("src"), col("m").as("dst")))
-          .distinct())
-      val next = signature(afterSmall)
-      done = next == sig
-      sig = next
-      edges = afterSmall
-      iter += 1
-    }
-    // at fixpoint every non-rep node has exactly one star edge to its
-    // rep; the min-agg also yields the best-known rep if maxIter cut
-    // the loop short on a pathological graph. Identity rows from the
-    // RAW pair list keep nodes whose only edges were self-loops
-    // (canon() drops (a,a), so they never enter the star rounds) —
-    // the min-label engine returns them with themselves as rep, and
-    // the two engines must stay interchangeable on that input too.
-    val nodes = raw.select(col("src").as("id"))
-      .union(raw.select(col("dst").as("id")))
-      .distinct()
-    edges.select(col("src").as("id"), col("dst").as("label"))
-      .union(edges.select(col("dst").as("id"), col("dst").as("label")))
-      .union(nodes.select(col("id"), col("id").as("label")))
-      .groupBy(col("id"))
-      .agg(min(col("label")).as("cluster_rep"))
   }
 
   /** Canonical-document selection — the step that turns near-dup

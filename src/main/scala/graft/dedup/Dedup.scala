@@ -75,24 +75,22 @@ object NgramJaccard {
     * arithmetic (rank ≤ sz − ⌈t·sz⌉ + 1  ⇔  t·sz ≤ sz + 1 − rank,
     * scaled to millionths) — a float ⌈⌉ at the boundary would
     * silently shorten prefixes and break exactness.
-    */
-  def prefixCandidates(df: DataFrame, idCol: String, textCol: String, n: Int,
-                       minJaccard: Double): DataFrame =
-    prefixCandidatesOfSets(
-      df.select(col(idCol).as("id"), shingles(col(textCol), n).as("shs")),
-      minJaccard)
-
-  /** [[prefixCandidates]] over an already-shingled (id, shs) table.
-    * The doc's set size rides through the explode as `size(shs)` — a
-    * per-row projection — instead of being re-counted with a second
+    *
+    * Takes an already-shingled (id, shs) table. The doc's set size
+    * rides through the explode as `size(shs)` — a per-row projection —
+    * instead of being re-counted with a second
     * `count().over(partitionBy(id))` window pass over the exploded
     * posting table (that window was a full extra shuffle+sort of
     * every (id, shingle) row for a value known before the explode).
     * Only the rarity `row_number` window remains, which is inherent
     * to prefix filtering.
     */
+  private[dedup] def prefixCandidatesOfSets(shSets: DataFrame,
+                                            minJaccard: Double): DataFrame =
+    candidatesOfPostings(prefixPostings(shSets, minJaccard), minJaccard)
+
   /** The prefix-filtered posting table (sh, id, sz, rk) both the
-    * candidate join and [[candidateVolume]] are built from.
+    * candidate join and [[volumeOfPostings]] are built from.
     */
   private def prefixPostings(shSets: DataFrame, minJaccard: Double): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -107,38 +105,16 @@ object NgramJaccard {
       .filter(lit(num) * col("sz") <= lit(denom) * (col("sz") + 1 - col("rk")))
   }
 
-  /** Capacity-planning diagnostic: the exact join's candidate volume
-    * Σ_sh |prefix-posting(sh)|² WITHOUT running the join — one cheap
-    * aggregation over the posting table. Returns one row:
+  /** The exact join's candidate volume Σ_sh |prefix-posting(sh)|²,
+    * computed from a (possibly checkpointed) posting table WITHOUT
+    * running the join — one cheap aggregation. Returns one row:
     * (postings, distinct_sh, max_posting, candidate_volume).
-    *
-    * The exact PPJoin is sub-quadratic exactly when prefix postings
-    * stay short — i.e. when the shingle space grows with the corpus.
-    * A closed shingle vocabulary (the sf10 generator regime: 31
-    * words → ≤ 29,791 trigrams shared by 500 k docs) drives
-    * posting lengths ∝ n and the volume ∝ n², no matter the prefix
-    * filtering — measured as a > local-disk spill at sf10. Run THIS
-    * first at scale: if candidate_volume is unpayable, the same
-    * contract at a recall budget is [[nearDuplicates]] (MinHash+LSH,
-    * d3) — banding collides near-identical sets, not shared-shingle
-    * pairs, so its candidates track the TRUE-pair count (measured
-    * 66 s at the same sf10 / same τ where the exact form could not
-    * complete).
+    * len·(len−1) DIV 2 stays in LONG arithmetic end to end: a `/ 2`
+    * would divide Long by Long into a Double, whose 53-bit mantissa
+    * silently rounds the running sum above ~9e15 — the enormous-n²
+    * regime this volume exists to catch (sf10's closed-vocabulary
+    * case is already ~1e15).
     */
-  def candidateVolume(df: DataFrame, idCol: String, textCol: String, n: Int,
-                      minJaccard: Double): DataFrame = {
-    val shSets = df.select(col(idCol).as("id"),
-      transform(shingles(col(textCol), n), s => xxhash64(s)).as("shs"))
-    volumeOfPostings(prefixPostings(shSets, minJaccard))
-  }
-
-  // the volume aggregate itself, reusable over an already-built (and
-  // possibly checkpointed) posting table. len·(len−1) DIV 2 stays in
-  // LONG arithmetic end to end: the previous `/ 2` divided Long by
-  // Long into a Double, whose 53-bit mantissa silently rounds the
-  // running sum above ~9e15 — precisely the enormous-n² regime this
-  // diagnostic exists to quantify (sf10's closed-vocabulary case is
-  // already ~1e15).
   private[dedup] def volumeOfPostings(postings: DataFrame): DataFrame =
     postings
       .groupBy(col("sh")).agg(count(lit(1)).as("len"))
@@ -146,10 +122,6 @@ object NgramJaccard {
         count(lit(1)).as("distinct_sh"),
         max(col("len")).as("max_posting"),
         sum(expr("len * (len - 1) DIV 2")).as("candidate_volume"))
-
-  private[dedup] def prefixCandidatesOfSets(shSets: DataFrame,
-                                            minJaccard: Double): DataFrame =
-    candidatesOfPostings(prefixPostings(shSets, minJaccard), minJaccard)
 
   private def candidatesOfPostings(prefix: DataFrame,
                                    minJaccard: Double): DataFrame = {
@@ -171,7 +143,7 @@ object NgramJaccard {
     * intersection/union counts.
     *
     * Inverted-index formulation (not an O(n²) cross join):
-    * [[prefixCandidates]] generates the (provably complete) candidate
+    * [[prefixCandidatesOfSets]] generates the (provably complete) candidate
     * pairs from rarest-shingle postings, then one pass over the
     * shingle sets verifies each candidate exactly — candidates melt
     * to two (pair, id) rows, join the per-doc shingle arrays on id,
@@ -192,8 +164,8 @@ object NgramJaccard {
     * checkpoint blocks are non-recomputable if an executor is lost
     * under dynamic allocation — acceptable for a bounded two-reader
     * subplan; a resilient alternative is persist(DISK_ONLY) + unpersist.
-    */
-  /** `maxCandidateVolume` is the pre-flight guard (measured at sf10:
+    *
+    * `maxCandidateVolume` is the pre-flight guard (measured at sf10:
     * a 17.9 M-candidate corpus verifies in seconds; a closed-
     * vocabulary 2.0 B-candidate one died of local-disk spill — the
     * default is half the measured DNF). Before building the join, the
@@ -398,19 +370,6 @@ object MinHashLSH {
     signatures(df, idCol, textCol, numHashes, bands, n)
       .select(col("id"), posexplode(col("bands")).as(Seq("band", "bucket")))
 
-  /** Store a band index as a bucketed catalog table (hash-clustered
-    * on `bucket`, which is a subset of the candidate join key
-    * (band, bucket) — so the stored side joins WITHOUT shuffling).
-    * `append = true` adds a processed batch's rows to the same table,
-    * the per-batch maintenance step of the growing-corpus loop.
-    */
-  def saveBandIndex(index: DataFrame, table: String, nBuckets: Int = 32,
-                    append: Boolean = false): Unit =
-    index.write.mode(if (append) "append" else "overwrite")
-      .bucketBy(nBuckets, "bucket")
-      .format("parquet")
-      .saveAsTable(table)
-
   /** [[nearDuplicatesIncremental]] against a PRECOMPUTED index: the
     * existing side arrives as stored (id, band, bucket) rows plus the
     * raw docs table, so nothing existing is re-signed — per batch the
@@ -508,15 +467,10 @@ object MinHashLSH {
   */
 object SimHash {
 
-  /** doc → (id, simhash long). Computed entirely within one
-    * projection (per-bit folds over the token-hash array) — no
-    * explode, no shuffle: fingerprints stream out at scan speed.
-    */
-  def fingerprints(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    fingerprintsOfTokens(df, idCol, array_distinct(TextOps.tokens(col(textCol))))
-
-  /** Fingerprint an arbitrary token/shingle array column with one
-    * [[graft.functions.SimHash64]] pass per row.
+  /** (id, simhash long) of an arbitrary token/shingle array column:
+    * one [[graft.functions.SimHash64]] pass per row, within one
+    * projection — no explode, no shuffle, so fingerprints stream out
+    * at scan speed.
     */
   def fingerprintsOfTokens(df: DataFrame, idCol: String, tokens: Column): DataFrame =
     // spread before fingerprinting: tokenize + per-token hash folds

@@ -16,8 +16,8 @@ import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
   * pigeonhole Hamming blocking for corpus-scale image dedup.
   *
   * Input contract: a `binary` column whose FIRST 64 bytes are the
-  * tile (e.g. `MediaDecoder.grayscaleTile(payload, 8, 8)` for real
-  * images, or any deterministic byte source for stubs). Shorter
+  * tile (e.g. a decoded 8×8 luminance tile for real images, or any
+  * deterministic byte source for stubs). Shorter
   * payloads yield NULL rather than a silently padded hash. Bit 63
   * (MSB) is pixel 0, so `bin(hash)` prints pixels in order — the
   * cross-engine replay (DuckDB `string_agg` over byte positions)

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * sort on (x, y) prunes file stats only on x (y is scattered within
   * every x-run), while a z-sort gives every file a narrow min/max box
   * on BOTH x and y — a 2-D box predicate then skips most files
-  * entirely (see `Sinks.zOrderedParquet` + `ZOrderSpec`).
+  * entirely.
   */
 object ZOrder {
 

@@ -2,13 +2,11 @@ package graft.index
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.ann.{Ann, Pq}
-import graft.dedup.MinHashLSH
+import graft.ann.Pq
 
-/** One maintenance contract over every persisted near-dup/ANN index
-  * the library ships — MinHash bands (d7), multi-probe hyperplane
-  * sketches (d19), IVF·PQ (a6). Each already persisted a bucketed
-  * catalog table with its own save/append function; a 100 TB
+/** One maintenance contract over every persisted index the library
+  * ships — IVF·PQ (a6) and the BM25 text index (x1). Each persists
+  * bucketed catalog tables with its own build/append step; a 100 TB
   * deployment runs ONE maintenance loop, so the shared invariants
   * live here, spec'd once (`StoredIndexSpec`), instead of once per
   * index family:
@@ -25,9 +23,9 @@ import graft.dedup.MinHashLSH
   *     scan sees.
   *   - **Vec-free scan side.** The tables a serving/candidate scan
   *     reads ([[scanTableNames]]) carry NO raw vector or text column
-  *     — the compressed/sketched representation is the storage
-  *     format, not a projection of it (bands/sketches: (id, band|
-  *     table, bucket); PQ: bit-packed codes).
+  *     — the compressed representation is the storage format, not
+  *     a projection of it (PQ: bit-packed codes; text: term
+  *     postings).
   *   - **Bucketed for shuffle-free probes.** Each scan table is
   *     hash-bucketed on (a prefix of) its candidate-join key, so the
   *     stored side of every per-batch probe joins without an
@@ -147,56 +145,6 @@ object StoredIndex {
     val loc = new org.apache.hadoop.fs.Path(wh, table)
     if (fs.exists(loc)) fs.delete(loc, true)
   }
-}
-
-/** d7's persisted MinHash band index under the shared contract:
-  * one table of (id, band, bucket) rows, bucketed on `bucket` (a
-  * prefix of the (band, bucket) candidate key). Batches are signed
-  * with the frozen (numHashes, bands, n) — deterministic xxhash64
-  * seeds, so an appended row equals what a fresh build would write.
-  * Serving path: [[graft.dedup.MinHashLSH.nearDuplicatesIncrementalIndexed]].
-  */
-case class MinHashBandIndex(table: String, idCol: String, textCol: String,
-                            numHashes: Int = 16, bands: Int = 4, n: Int = 1,
-                            nBuckets: Int = 32) extends StoredIndex {
-  override def tableSpecs: Seq[StoredIndex.TableSpec] =
-    Seq(StoredIndex.TableSpec(table, Some("bucket"), nBuckets))
-  override def scanTableNames: Seq[String] = Seq(table)
-  override def build(corpus: DataFrame): Unit = {
-    resetStorage(corpus.sparkSession)
-    MinHashLSH.saveBandIndex(
-      MinHashLSH.bandIndex(corpus, idCol, textCol, numHashes, bands, n),
-      table, nBuckets, append = false)
-  }
-  override def append(batch: DataFrame): Unit =
-    MinHashLSH.saveBandIndex(
-      MinHashLSH.bandIndex(batch, idCol, textCol, numHashes, bands, n),
-      table, nBuckets, append = true)
-}
-
-/** d19's persisted multi-probe hyperplane-sketch index under the
-  * shared contract: one table of (id, table, bucket) widened-emission
-  * rows, bucketed on `bucket`. Sketches are deterministic in the
-  * frozen (dim, planes, tables, seed, probes). Serving path:
-  * [[graft.ann.Ann.cosineNearDupPairsLSHIndexed]] at the same
-  * (dim, planes, tables, seed, probes).
-  */
-case class ProbeSketchIndex(table: String, dim: Int, planes: Int = 6,
-                            nTables: Int = 16, seed: Long = 42L, probes: Int = 2,
-                            nBuckets: Int = 32) extends StoredIndex {
-  override def tableSpecs: Seq[StoredIndex.TableSpec] =
-    Seq(StoredIndex.TableSpec(table, Some("bucket"), nBuckets))
-  override def scanTableNames: Seq[String] = Seq(table)
-  override def build(corpus: DataFrame): Unit = {
-    resetStorage(corpus.sparkSession)
-    Ann.saveSketchIndex(
-      Ann.sketchIndex(corpus, dim, planes, nTables, seed, probes),
-      table, nBuckets, append = false)
-  }
-  override def append(batch: DataFrame): Unit =
-    Ann.saveSketchIndex(
-      Ann.sketchIndex(batch, dim, planes, nTables, seed, probes),
-      table, nBuckets, append = true)
 }
 
 /** a6's persisted IVF·PQ index under the shared contract: the

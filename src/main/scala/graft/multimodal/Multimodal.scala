@@ -85,23 +85,6 @@ object Multimodal {
       }
   }
 
-  /** Distributed image normalization: every decodable image payload
-    * is rescaled to `w`×`h` (re-encoded PNG); non-images and
-    * undecodable payloads pass through untouched. One decoder per
-    * partition, streaming — the standard shape for a corpus-wide
-    * "resize everything to model input size" pass.
-    */
-  def resizeImages(spark: SparkSession, media: DataFrame, w: Int, h: Int): Dataset[MediaRow] = {
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      rows.map { m =>
-        if (m.media_type == "image")
-          MediaDecoder.resizeImage(m.payload, w, h)
-            .map(p => m.copy(payload = p)).getOrElse(m)
-        else m
-      }
-    }
-  }
 }
 
 object MultimodalFrames {
@@ -141,25 +124,6 @@ object MultimodalFrames {
     }
   }
 
-  /** Resize plumbing: maps each frame through a (stubbed) resampler
-    * to a fixed target size — the real version swaps the byte-fold
-    * for an image scaler; schema and batching are identical.
-    */
-  def resizeFrames(spark: SparkSession, frames: Dataset[FrameRow],
-                   targetBytes: Int): Dataset[FrameRow] = {
-    import spark.implicits._
-    frames.mapPartitions { it =>
-      it.map { f =>
-        val out = new Array[Byte](targetBytes)
-        var i = 0
-        while (i < f.frame.length) { // stub "resample": fold bytes
-          out(i % targetBytes) = (out(i % targetBytes) + f.frame(i)).toByte
-          i += 1
-        }
-        f.copy(frame = out)
-      }
-    }
-  }
 }
 
 /** Media decoder: genuine JDK image decode with a deterministic
@@ -212,46 +176,6 @@ object MediaDecoder {
         case None => decodeStub(row)
       }
     } else decodeStub(row)
-
-  /** Real image resize: decode, scale with Graphics2D, re-encode as
-    * PNG. None if the payload isn't a decodable image.
-    */
-  def resizeImage(payload: Array[Byte], w: Int, h: Int): Option[Array[Byte]] =
-    try Option(javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(payload))).map { img =>
-      val scaled = new java.awt.image.BufferedImage(w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-      val g = scaled.createGraphics()
-      try g.drawImage(img, 0, 0, w, h, null)
-      finally g.dispose()
-      val out = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(scaled, "png", out)
-      out.toByteArray
-    } catch { case _: java.io.IOException => None }
-
-  /** Real decode → w×h grayscale tile (row-major luminance bytes) —
-    * the canonical input to `functions.AHash64`. None if no
-    * installed reader recognizes the payload.
-    */
-  def grayscaleTile(payload: Array[Byte], w: Int, h: Int): Option[Array[Byte]] =
-    try Option(javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(payload))).map { img =>
-      val scaled = new java.awt.image.BufferedImage(w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-      val g = scaled.createGraphics()
-      try g.drawImage(img, 0, 0, w, h, null)
-      finally g.dispose()
-      val out = new Array[Byte](w * h)
-      var y = 0
-      while (y < h) {
-        var x = 0
-        while (x < w) {
-          val rgb = scaled.getRGB(x, y)
-          val lum = (((rgb >> 16) & 0xff) * 299 + ((rgb >> 8) & 0xff) * 587 +
-            (rgb & 0xff) * 114) / 1000
-          out(y * w + x) = lum.toByte
-          x += 1
-        }
-        y += 1
-      }
-      out
-    } catch { case _: java.io.IOException => None }
 
   /** Decoded audio facts + exact integer energy. `rms_raw` is the
     * unrounded root-mean-square over ALL samples (channels

@@ -74,22 +74,4 @@ object BloomPrune {
       .select(col("key"), col("bloom_hit"),
         coalesce(col("is_member"), lit(0)).as("is_member"))
   }
-
-  /** Exact pruned semi-join: bloom filter in front, exact key
-    * verify behind — result equals a plain left-semi join (no false
-    * negatives by construction), with the bulk of non-matching fact
-    * rows dropped at the broadcast probe before any shuffle or
-    * verify work.
-    */
-  def prunedSemiJoin(fact: DataFrame, dim: DataFrame, factKeyName: String,
-                     dimKey: Column, seedPrefix: String,
-                     k: Int = 4, m: Int = 512): DataFrame = {
-    val filter = buildFilter(dim, dimKey, seedPrefix, k, m)
-    val probes = slots(col(factKeyName), seedPrefix, k, m)
-    fact
-      .crossJoin(broadcast(filter))
-      .filter(probes.map(p => array_contains(col("bloom_slots"), p)).reduce(_ && _))
-      .drop("bloom_slots")
-      .join(dim.select(dimKey.as(factKeyName)).distinct(), Seq(factKeyName), "left_semi")
-  }
 }

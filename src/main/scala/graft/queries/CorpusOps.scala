@@ -1345,8 +1345,7 @@ object CorpusOps {
     // pigeonhole blocking for corpus-scale image dedup). The gate
     // runs the expression over deterministic byte tiles (the first
     // 64 payload bytes), so DuckDB replays every pixel, mean, and
-    // bit; the real-image path (decode → grayscaleTile → AHash64) is
-    // spec-driven with actual PNGs. Both sides keep only ASCII docs
+    // bit. Both sides keep only ASCII docs
     // (octet_length = length ⟺ bytes are code points), because the
     // expression tiles BYTES while the oracle walks CHARACTERS —
     // equivalent only when the two coincide; a non-ASCII doc would

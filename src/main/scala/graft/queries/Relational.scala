@@ -607,13 +607,11 @@ object Relational {
         .orderBy(col("scope"))
     },
 
-    // Z-order (Morton) codes — the clustering key behind
-    // Sinks.zOrderedParquet's multi-dimensional layout: low 20 bits
-    // of (custkey, orderkey) interleave into one long, entirely in
-    // codegen'd shift/mask/or built-ins. Gated on the first 1000
-    // curve positions (zval ties broken by orderkey); the layout
-    // itself is exercised in ZOrderSpec with measured file-stats
-    // pruning boxes.
+    // Z-order (Morton) codes — the clustering key of a
+    // multi-dimensional layout: low 20 bits of (custkey, orderkey)
+    // interleave into one long, entirely in codegen'd shift/mask/or
+    // built-ins. Gated on the first 1000 curve positions (zval ties
+    // broken by orderkey).
     "q45_zorder" -> { (s, d) =>
       t(s, d, "orders")
         .select(col("o_orderkey"), col("o_custkey"),

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Sink utilities covering the reference's post-processing surface. */
 object Sinks {
@@ -23,130 +23,5 @@ object Sinks {
   def mergePartCsvs(spark: SparkSession, partsGlob: String, outPath: String): Unit = {
     val parts = spark.read.option("header", "true").csv(partsGlob)
     singleCsv(parts, outPath)
-  }
-
-  /** Partitioned write (SNK-1 generalized): one directory per value
-    * of the partition columns, overwritable per partition when
-    * `spark.sql.sources.partitionOverwriteMode=dynamic`.
-    */
-  def partitionedParquet(df: DataFrame, path: String, partitionCols: String*): Unit =
-    df.write.mode("overwrite")
-      .partitionBy(partitionCols: _*)
-      .parquet(path)
-
-  /** Bucketed catalog table: co-locates rows by hash(bucketCol) at
-    * write time so repeated joins/aggregations on that key need NO
-    * shuffle at read time — the pre-partitioning strategy for 100 TB
-    * fact-fact joins that recur (see SCALE.md §Joins and
-    * `SinksSpec`, which asserts the bucketed join plans with zero
-    * Exchange nodes).
-    */
-  def bucketedTable(df: DataFrame, table: String, bucketCol: String,
-                    nBuckets: Int): Unit =
-    df.write.mode("overwrite")
-      .bucketBy(nBuckets, bucketCol)
-      .sortBy(bucketCol)
-      .format("parquet")
-      .saveAsTable(table)
-
-  /** Format-agnostic columnar write: parquet and ORC are both
-    * first-class — same predicate pushdown and column pruning story
-    * at the scan (`PushedFilters` reaches the ORC reader exactly as
-    * it does parquet), so the storage format is a configuration
-    * choice, not a code change. (Avro would slot in the same way;
-    * its DataSource module is not on this classpath.)
-    */
-  def columnarWrite(df: DataFrame, path: String,
-                    format: String = "parquet"): Unit =
-    df.write.mode("overwrite").format(format).save(path)
-
-  /** Range-clustered write: `repartitionByRange` + in-partition sort
-    * on the cluster keys, so each output file covers a narrow,
-    * DISJOINT key range and its parquet footer min/max statistics
-    * actually prune — a point/range predicate at read time touches
-    * one file instead of all of them. This is the data-layout lever
-    * for 100 TB scans (the Z-order/liquid-clustering idea in its
-    * single-dimension Spark-native form): bucketing co-locates by
-    * hash for JOINS, range clustering co-locates by order for RANGE
-    * PREDICATES; both are write-once costs that every later read
-    * amortizes. Skewed keys are handled by the range partitioner's
-    * sampling (reservoir over the key distribution).
-    */
-  def rangeClusteredParquet(df: DataFrame, path: String, nFiles: Int,
-                            keys: Column*): Unit =
-    df.repartitionByRange(nFiles, keys: _*)
-      .sortWithinPartitions(keys: _*)
-      .write.mode("overwrite").parquet(path)
-
-  /** Z-order-clustered write: range-partition + sort on the Morton
-    * code of the cluster keys ([[graft.functions.ZOrder.zValue]]), so
-    * every output file covers a narrow min/max BOX across ALL cluster
-    * dimensions at once — a multi-dimensional box predicate then
-    * prunes on every dimension's footer stats, where a plain range
-    * sort only prunes on its leading key. Same write-once,
-    * every-read-amortizes economics as [[rangeClusteredParquet]];
-    * `bits` bounds the per-dimension resolution (keys are pmod-
-    * reduced, preserving low-bit locality). ZOrderSpec quantifies the
-    * pruning-box difference against a single-key range layout.
-    */
-  def zOrderedParquet(df: DataFrame, path: String, nFiles: Int,
-                      bits: Int, keys: Column*): Unit =
-    df.withColumn("__z", graft.functions.ZOrder.bucketed(keys, bits))
-      .repartitionByRange(nFiles, org.apache.spark.sql.functions.col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-      .write.mode("overwrite").parquet(path)
-
-  /** Small-file compaction (OPTIMIZE): rewrite a parquet directory
-    * into ~`targetFileBytes` files, preserving content exactly. The
-    * table-maintenance pass every streaming/CDC sink eventually
-    * needs — micro-batch commits accrete kilobyte files whose
-    * per-file open/footer cost dominates reads at scale. File count
-    * is computed from the directory's actual on-disk size (never a
-    * row-count guess, which breaks on wide vs narrow schemas); the
-    * rewrite stages to a temp dir and swaps via the same
-    * rename-aside protocol as `Merge.upsertParquet`, so a crash
-    * mid-compact never loses the table. Returns (filesBefore,
-    * filesAfter).
-    *
-    * FLAT directories only: a hive-partitioned layout (`k=v`
-    * subdirectories) is rejected up front — a naive rewrite would
-    * silently flatten the partition columns into data columns and
-    * drop the directory structure. Compact partitioned tables one
-    * partition directory at a time. The swap itself is two renames;
-    * readers racing the instant between them can see the path
-    * briefly absent (same documented window as `upsertParquet` —
-    * a table format's commit is the fix on object storage).
-    */
-  def compactParquet(spark: SparkSession, path: String,
-                     targetFileBytes: Long = 128L << 20): (Int, Int) = {
-    require(targetFileBytes > 0, "targetFileBytes must be > 0")
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val subDirs = fs.listStatus(hPath).toSeq.filter(_.isDirectory)
-    if (subDirs.nonEmpty)
-      throw new IllegalArgumentException(
-        s"compactParquet: $path contains subdirectories " +
-          s"(${subDirs.take(3).map(_.getPath.getName).mkString(", ")}…) — " +
-          "partitioned layouts are unsupported; compact each partition " +
-          "directory individually so the layout survives")
-    val dataFiles = fs.listStatus(hPath).toSeq
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    val totalBytes = dataFiles.map(_.getLen).sum
-    val nFiles = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
-    val tmp = new org.apache.hadoop.fs.Path(path + s".compact-${System.nanoTime()}")
-    spark.read.parquet(path).repartition(nFiles)
-      .write.mode("overwrite").parquet(tmp.toString)
-    val bak = new org.apache.hadoop.fs.Path(path + s".bak-${System.nanoTime()}")
-    if (!fs.rename(hPath, bak))
-      throw new java.io.IOException(s"rename $hPath -> $bak failed")
-    if (!fs.rename(tmp, hPath)) {
-      fs.rename(bak, hPath) // best-effort restore
-      throw new java.io.IOException(s"rename $tmp -> $hPath failed")
-    }
-    fs.delete(bak, true)
-    val after = fs.listStatus(hPath).toSeq
-      .count(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    (dataFiles.size, after)
   }
 }

@@ -19,7 +19,6 @@ trait SparkJob {
 
 object SparkJob {
   def apply(f: (SparkSession, JobEnv) => Unit): SparkJob = (s, e) => f(s, e)
-  val noop: SparkJob = (_, _) => ()
 }
 
 /** One unit of the pipeline: discovers inputs from `sources`, maps

@@ -9,7 +9,7 @@ import org.apache.spark.sql.types._
   * (event_id, ts, user_id, event_type, value, props).
   *
   * The reference has no streaming code; this is the greenfield
-  * north-star surface (SURVEY.md §2.7): file/Kafka source →
+  * north-star surface (SURVEY.md §2.7): file source →
   * watermark → windowed/sessionized aggregation → sink, with
   * `Trigger.AvailableNow` giving the batch-incremental semantics the
   * Stage/Runs planner provides for files (checkpoint dir = runs
@@ -156,44 +156,6 @@ object EventsPipeline {
       .withWatermark("ts", "1 hour")
       .dropDuplicatesWithinWatermark("event_id")
 
-  /** Kafka source with the same downstream schema as the file
-    * source: JSON events on a topic → parsed/typed columns. Requires
-    * the `spark-sql-kafka` connector on the classpath (not present
-    * in this container, so this constructor is compile-checked and
-    * production-documented rather than locally driven; every
-    * transformation downstream of it is exercised via the file
-    * source, which is the point of keeping the schemas identical).
-    */
-  def readKafkaStream(spark: SparkSession, bootstrapServers: String,
-                      topic: String): DataFrame =
-    parseKafkaEnvelope(
-      spark.readStream
-        .format("kafka")
-        .option("kafka.bootstrap.servers", bootstrapServers)
-        .option("subscribe", topic)
-        .option("startingOffsets", "earliest")
-        .load())
-
-  /** JSON event payload schema carried in the Kafka record value. */
-  val kafkaEventSchema: StructType = StructType(Seq(
-    StructField("event_id", LongType),
-    StructField("ts", TimestampType),
-    StructField("user_id", LongType),
-    StructField("event_type", StringType),
-    StructField("value", DoubleType),
-    StructField("props", StringType)))
-
-  /** Kafka wire envelope → typed event rows: exactly the transform
-    * [[readKafkaStream]] applies after `load()`. Factored out so the
-    * parse logic runs under test against a memory stream carrying the
-    * connector's wire schema (binary key/value + topic/partition/
-    * offset) — only the socket itself needs the connector jar.
-    */
-  def parseKafkaEnvelope(raw: DataFrame): DataFrame =
-    raw
-      .select(from_json(col("value").cast("string"), kafkaEventSchema).as("e"))
-      .select("e.*")
-
   /** Stream-static enrichment join: each micro-batch joins against
     * the (broadcastable) static dimension — no streaming state at
     * all, the standard shape for dimension lookup at any scale.
@@ -217,138 +179,6 @@ object EventsPipeline {
       .agg(
         count(lit(1)).as("n"),
         sum(col("value").cast(DecimalType(18, 2))).cast(DoubleType).as("sum_value"))
-
-  /** Arbitrary-state processing (`flatMapGroupsWithState`): per-user
-    * running totals emitted on every update — the custom-state
-    * surface that windowed aggregation can't express (e.g. decaying
-    * counters, per-key ML state). State is a typed case class held
-    * by the state store per user.
-    */
-  def runningTotals(spark: SparkSession, events: DataFrame): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-
-    val typed = events
-      .select(col("user_id"), col("value"))
-      .as[(Long, Double)]
-
-    val updated = typed
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(
-        OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        (userId: Long, rows: Iterator[(Long, Double)], state: GroupState[UserTotals]) => {
-          val prev = state.getOption.getOrElse(UserTotals(0L, 0.0))
-          var n    = prev.n
-          var sum  = prev.sum
-          rows.foreach { case (_, v) => n += 1; sum += v }
-          val next = UserTotals(n, sum)
-          state.update(next)
-          Iterator((userId, next.n, next.sum))
-        })
-      .toDF("user_id", "n_events", "total_value")
-    updated
-  }
-
-  /** Runs `body` with the RocksDB state-store provider set for any
-    * streaming query STARTED inside it, restoring the session's
-    * previous provider after. transformWithState needs multi-column-
-    * family state, which only the RocksDB provider supports — the one
-    * streaming surface here that does. The session default stays
-    * HDFS-backed (GraftSession): plain windowed aggs carry bounded
-    * watermark-sized state and RocksDB's per-batch open/commit
-    * overhead buys them nothing. The provider conf is read at QUERY
-    * START, so `body` must start (and for determinism, finish) its
-    * query before this returns.
-    */
-  def withRocksDBStateStore[T](spark: SparkSession)(body: => T): T = {
-    val key  = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body finally spark.conf.set(key, prev)
-  }
-
-  /** The same per-user running totals on the `transformWithState`
-    * API (Spark 4's arbitrary-state v2): explicit `ValueState` held
-    * by a [[StatefulProcessor]]. Builds the plan only — run it under
-    * [[withRocksDBStateStore]] (or see [[runningTotalsV2ToCompletion]]),
-    * which transformWithState requires.
-    *
-    * `ttl`: optional per-key state TTL (processing-time based, the
-    * v2 API's contract) — expired totals restart from zero instead
-    * of accumulating forever, the standard bound for an
-    * ever-growing key space.
-    */
-  def runningTotalsV2(spark: SparkSession, events: DataFrame,
-                      ttl: Option[java.time.Duration] = None): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    // state TTL is processing-time-based, so a TTL'd run requires
-    // TimeMode.ProcessingTime (the engine enforces this pairing)
-    val timeMode = if (ttl.isDefined) TimeMode.ProcessingTime() else TimeMode.None()
-    events
-      .select(col("user_id"), col("value"))
-      .as[(Long, Double)]
-      .groupByKey(_._1)
-      .transformWithState(
-        new TotalsProcessor(ttl), timeMode, OutputMode.Append())
-      .toDF("user_id", "n_events", "total_value")
-  }
-
-  /** [[runningTotalsV2]] run to completion over the files under
-    * `dir` (AvailableNow + memory sink), with the RocksDB provider
-    * scoped to the query and the session conf restored after.
-    */
-  def runningTotalsV2ToCompletion(spark: SparkSession, dir: String,
-                                  queryName: String,
-                                  glob: String = "*.parquet",
-                                  ttl: Option[java.time.Duration] = None): DataFrame =
-    withRocksDBStateStore(spark) {
-      // the TTL'd variant runs in processing-time mode, where
-      // AvailableNow never reaches the terminal no-more-data state
-      // (TTL sweeps keep the query "busy") — a single-batch trigger
-      // processes everything present and stops; TimeMode.None takes
-      // the normal AvailableNow drain
-      val trigger =
-        if (ttl.isDefined) Trigger.Once() else Trigger.AvailableNow(): @annotation.nowarn("cat=deprecation")
-      val q = runningTotalsV2(spark, readStream(spark, dir, glob), ttl)
-        .writeStream.outputMode("append").format("memory")
-        .queryName(queryName).trigger(trigger).start()
-      q.awaitTermination()
-      spark.table(queryName)
-    }
-
-  /** Event-time session close via STATE TIMERS (the v2 API surface
-    * windowed aggregation can't express): per user, totals accumulate
-    * in `ValueState` and a timer is (re)registered at
-    * `last event time + gap`; when the watermark passes it, the
-    * expired-timer callback emits the closed session's totals and
-    * clears the state. Sessions still open when the input ends never
-    * emit — exactly the semantics of a forever-running job. State is
-    * one row + one timer per LIVE user, so memory tracks concurrent
-    * activity, not stream length.
-    */
-  def sessionClosedTotals(spark: SparkSession, dir: String,
-                          gapMs: Long, queryName: String,
-                          glob: String = "*.parquet",
-                          maxFilesPerTrigger: Option[Int] = None): DataFrame =
-    withRocksDBStateStore(spark) {
-      import spark.implicits._
-      import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-      val q = readStream(spark, dir, glob, maxFilesPerTrigger)
-        .withWatermark("ts", "0 seconds")
-        .select(col("user_id"), col("ts"), col("value"))
-        .as[(Long, java.sql.Timestamp, Double)]
-        .groupByKey(_._1)
-        .transformWithState(
-          new SessionTotalsProcessor(gapMs),
-          TimeMode.EventTime(), OutputMode.Append())
-        .toDF("user_id", "n_events", "total_value", "session_end")
-        .writeStream.outputMode("append").format("memory")
-        .queryName(queryName).trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      spark.table(queryName)
-    }
 
   /** Streaming MERGE sink — the "stream maintains a serving table"
     * pattern: per-user totals aggregate in update mode, and each
@@ -481,92 +311,5 @@ object EventsPipeline {
         "reader (most likely a data-layout change in the `ts` column; see " +
         "graft.queries.Tables.normalizeEventTs)")
     }
-  }
-}
-
-/** Per-user custom state for [[EventsPipeline.runningTotals]]. */
-final case class UserTotals(n: Long, sum: Double)
-
-/** StatefulProcessor for [[EventsPipeline.runningTotalsV2]]: one
-  * `ValueState[UserTotals]` per user, updated per input batch and
-  * emitted per update. `ttl` (processing-time) bounds how long an
-  * idle key's totals survive — `None` keeps state forever.
-  */
-final class TotalsProcessor(ttl: Option[java.time.Duration] = None)
-    extends org.apache.spark.sql.streaming.StatefulProcessor[
-      Long, (Long, Double), (Long, Long, Double)] {
-
-  import org.apache.spark.sql.streaming.{OutputMode, TimeMode, TimerValues, TTLConfig, ValueState}
-  import org.apache.spark.sql.{Encoder, Encoders}
-
-  @transient private var totals: ValueState[UserTotals] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    implicit val enc: Encoder[UserTotals] = Encoders.product[UserTotals]
-    totals = getHandle.getValueState[UserTotals]("totals", enc,
-      ttl.fold(TTLConfig.NONE)(TTLConfig(_)))
-  }
-
-  override def handleInputRows(
-      key: Long, rows: Iterator[(Long, Double)],
-      timerValues: TimerValues): Iterator[(Long, Long, Double)] = {
-    val prev = Option(totals.get()).getOrElse(UserTotals(0L, 0.0))
-    var n    = prev.n
-    var sum  = prev.sum
-    rows.foreach { case (_, v) => n += 1; sum += v }
-    totals.update(UserTotals(n, sum))
-    Iterator((key, n, sum))
-  }
-}
-
-/** Per-user open-session state for [[EventsPipeline.sessionClosedTotals]]:
-  * running totals plus the event-time timer currently armed for the
-  * session close (kept in state so each new event can delete it
-  * before re-arming at the later close).
-  */
-final case class OpenSession(n: Long, sum: Double, timerMs: Long)
-
-/** StatefulProcessor for [[EventsPipeline.sessionClosedTotals]] —
-  * exercises the v2 TIMER surface: every input re-arms an event-time
-  * timer at `max(ts) + gapMs`; the expired-timer callback emits the
-  * closed session and clears state.
-  */
-final class SessionTotalsProcessor(gapMs: Long)
-    extends org.apache.spark.sql.streaming.StatefulProcessor[
-      Long, (Long, java.sql.Timestamp, Double), (Long, Long, Double, java.sql.Timestamp)] {
-
-  import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, TimeMode, TimerValues, TTLConfig, ValueState}
-  import org.apache.spark.sql.{Encoder, Encoders}
-
-  @transient private var session: ValueState[OpenSession] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    implicit val enc: Encoder[OpenSession] = Encoders.product[OpenSession]
-    session = getHandle.getValueState[OpenSession]("session", enc, TTLConfig.NONE)
-  }
-
-  override def handleInputRows(
-      key: Long, rows: Iterator[(Long, java.sql.Timestamp, Double)],
-      timerValues: TimerValues): Iterator[(Long, Long, Double, java.sql.Timestamp)] = {
-    val prev  = Option(session.get()).getOrElse(OpenSession(0L, 0.0, Long.MinValue))
-    var n     = prev.n
-    var sum   = prev.sum
-    var maxMs = Long.MinValue
-    rows.foreach { case (_, ts, v) => n += 1; sum += v; maxMs = math.max(maxMs, ts.getTime) }
-    val closeAt = maxMs + gapMs
-    if (prev.timerMs != Long.MinValue && closeAt > prev.timerMs)
-      getHandle.deleteTimer(prev.timerMs)
-    val armed = math.max(closeAt, prev.timerMs)
-    if (armed != prev.timerMs) getHandle.registerTimer(armed)
-    session.update(OpenSession(n, sum, armed))
-    Iterator.empty
-  }
-
-  override def handleExpiredTimer(
-      key: Long, timerValues: TimerValues,
-      expiredTimerInfo: ExpiredTimerInfo): Iterator[(Long, Long, Double, java.sql.Timestamp)] = {
-    val s = session.get()
-    session.clear()
-    Iterator((key, s.n, s.sum, new java.sql.Timestamp(expiredTimerInfo.getExpiryTimeInMs)))
   }
 }

@@ -47,18 +47,6 @@ object Phrase {
     out
   }
 
-  /** Proximity search — all `terms` within a `window`-token span,
-    * any order (Lucene's sloppy-phrase relaxation) — computed
-    * DIRECTLY from a (doc_id, text) corpus. Output: (doc_id,
-    * min_span) for qualifying docs, min_span = the tightest span
-    * containing one occurrence of every term.
-    */
-  def proximityDirect(docs: DataFrame, terms: Seq[String], window: Int): DataFrame =
-    proximityFrom(
-      docs.select(col("doc_id"),
-        posexplode(TextOps.tokens(col("text"))).as(Seq("pos", "term"))),
-      terms, window)
-
   /** Proximity search served from the positional index — reads ONLY
     * the terms' buckets of `<prefix>_positions` (plan forced under
     * the pinned bucketed-scan conf, the [[matchesIndexed]] rationale:
@@ -72,6 +60,12 @@ object Phrase {
     out
   }
 
+  // Proximity search — all `terms` within a `window`-token span, any
+  // order (Lucene's sloppy-phrase relaxation) — over any (term,
+  // doc_id, pos) relation. Output: (doc_id, min_span) for qualifying
+  // docs, min_span = the tightest span containing one occurrence of
+  // every term.
+  //
   // ONE scan of the terms' positions (a single `isin` bucket-prunes
   // to the terms' buckets), grouped per doc into one sorted position
   // list per term, minimal covering span by the fused k-pointer
@@ -85,8 +79,8 @@ object Phrase {
   // MinSpan NULL → dropped by the window gate, matching the former
   // inner joins. Repeated terms would let one position satisfy two
   // slots, so the term set must be distinct.
-  private def proximityFrom(positions: DataFrame, terms: Seq[String],
-                            window: Int): DataFrame = {
+  private[text] def proximityFrom(positions: DataFrame, terms: Seq[String],
+                                  window: Int): DataFrame = {
     require(terms.nonEmpty, "proximity needs at least one term")
     require(terms.distinct == terms, "proximity terms must be distinct")
     require(window >= 0, "window must be >= 0")

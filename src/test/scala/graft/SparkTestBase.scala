@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for specs (one per suite, lazy). */
@@ -17,6 +17,14 @@ trait SparkTestBase extends AnyFunSuite {
 
   def tmpDir(prefix: String): String =
     Files.createTempDirectory(prefix).toFile.getAbsolutePath
+
+  /** Writes `df` as a parquet catalog table hash-bucketed on
+    * `bucketCol`, replacing the table or, with `append`, adding to it.
+    */
+  def bucketedTable(df: DataFrame, table: String, bucketCol: String, nBuckets: Int,
+                    append: Boolean = false): Unit =
+    df.write.mode(if (append) "append" else "overwrite")
+      .bucketBy(nBuckets, bucketCol).format("parquet").saveAsTable(table)
 }
 
 object SparkTestBase {

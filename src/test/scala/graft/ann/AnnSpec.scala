@@ -158,7 +158,7 @@ final class AnnSpec extends SparkTestBase {
     val incoming = df.filter(col("id") >= split)
     val table = "sketch_index_spec"
     try {
-      Ann.saveSketchIndex(Ann.sketchIndex(existing, dim, probes = 0), table, nBuckets = 8)
+      bucketedTable(Ann.sketchIndex(existing, dim, probes = 0), table, "bucket", 8)
       val indexed = Ann.cosineNearDupPairsLSHIndexed(
           spark.table(table), existing, incoming, minCos = 0.9, dim = dim, probes = 0)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -189,7 +189,7 @@ final class AnnSpec extends SparkTestBase {
         minCos = 0.9, dim = dim, probes = 0)).exists(sketched(_, s"< $split")))
 
       // append maintenance keeps the stored index equal to a recompute
-      Ann.saveSketchIndex(Ann.sketchIndex(incoming, dim, probes = 0), table, nBuckets = 8,
+      bucketedTable(Ann.sketchIndex(incoming, dim, probes = 0), table, "bucket", 8,
         append = true)
       val stored = spark.table(table)
       val fresh = Ann.sketchIndex(df, dim, probes = 0)
@@ -392,9 +392,9 @@ final class AnnSpec extends SparkTestBase {
     try {
       // the same bucketed persistence as the single-probe index: the
       // schema (id, table, bucket) is shared, only the emission widens
-      Ann.saveSketchIndex(
+      bucketedTable(
         Ann.sketchIndex(existing, dim, planes, tables, probes = probes),
-        table, nBuckets = 8)
+        table, "bucket", 8)
       val indexed = Ann.cosineNearDupPairsLSHIndexed(
           spark.table(table), existing, incoming, minCos = 0.9, dim = dim,
           planes = planes, tables = tables, probes = probes)
@@ -424,9 +424,9 @@ final class AnnSpec extends SparkTestBase {
       assert(sp.count() * (probes + 1) == mp.count() && sp.exceptAll(mp).isEmpty)
 
       // append maintenance: stored ≡ fresh full-corpus probe index
-      Ann.saveSketchIndex(
+      bucketedTable(
         Ann.sketchIndex(incoming, dim, planes, tables, probes = probes),
-        table, nBuckets = 8, append = true)
+        table, "bucket", 8, append = true)
       val stored = spark.table(table)
       val fresh = Ann.sketchIndex(df, dim, planes, tables, probes = probes)
       assert(stored.count() == fresh.count())

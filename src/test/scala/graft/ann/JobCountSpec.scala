@@ -142,7 +142,7 @@ final class JobCountSpec extends SparkTestBase {
     val incoming = vecs.filter(col("id") > 400)
     val table = "jobcount_sketch_index"
     try {
-      Ann.saveSketchIndex(Ann.sketchIndex(existing, 64, 6, 16, 42L), table, nBuckets = 8)
+      bucketedTable(Ann.sketchIndex(existing, 64, 6, 16, 42L), table, "bucket", 8)
       val n = jobs(Ann.cosineNearDupPairsLSHIndexed(spark.table(table), existing, incoming,
         minCos = 0.45, dim = 64, planes = 6, tables = 16, seed = 42L).collect())
       info(s"stored-index cosineNearDupPairsLSHIndexed jobs: $n")

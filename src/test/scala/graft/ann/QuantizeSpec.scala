@@ -1,5 +1,6 @@
 package graft.ann
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
@@ -13,6 +14,12 @@ final class QuantizeSpec extends SparkTestBase {
     (3L, Array(0.0f, 0.0f, 0.0f, 0.0f)) // all-zero: scale 0, qvec zeros
   ).toDF("id", "vec")
 
+  /** The round-trip reference, (id, scale, qvec) → (id, vec:
+    * Array[Double]) with `vec(i) = qvec(i) · scale`.
+    */
+  private def dequantize(df: DataFrame): DataFrame =
+    df.withColumn("vec", transform(col("qvec"), q => q.cast("double") * col("scale")))
+
   test("int8: scale is max|x|/127, elements land in [-127, 127], zeros stay zeros") {
     val rows = Quantize.int8(vecs).collect()
       .map(r => r.getLong(0) -> (r.getDouble(1), r.getSeq[Int](2))).toMap
@@ -24,7 +31,7 @@ final class QuantizeSpec extends SparkTestBase {
 
   test("per-element reconstruction error is bounded by scale/2; dequantize round-trips") {
     val q = Quantize.int8(vecs)
-    val joined = Quantize.dequantize(q).as("d")
+    val joined = dequantize(q).as("d")
       .join(vecs.select(col("id"), col("vec").as("orig")), Seq("id"))
       .select(col("id"), col("scale"), col("vec"), col("orig"))
       .collect()

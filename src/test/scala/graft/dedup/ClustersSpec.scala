@@ -6,11 +6,13 @@ final class ClustersSpec extends SparkTestBase {
   import spark.implicits._
 
   test("connected components: chains merge, singletons keep own rep") {
-    // components: {1,2,3,4} (chain), {10,11}, {20,21,22} (triangle)
+    // components: {1,2,3,4} (chain), {10,11}, {20,21,22} (triangle),
+    // {40} (a node whose only pair is a self-loop)
     val pairs = Seq(
       (1L, 2L), (2L, 3L), (3L, 4L),
       (10L, 11L),
-      (20L, 21L), (21L, 22L), (20L, 22L)
+      (20L, 21L), (21L, 22L), (20L, 22L),
+      (40L, 40L)
     ).toDF("a", "b")
 
     val comp = Clusters.connectedComponents(pairs)
@@ -19,7 +21,8 @@ final class ClustersSpec extends SparkTestBase {
     assert(Seq(1L, 2L, 3L, 4L).forall(comp(_) == 1L))
     assert(Seq(10L, 11L).forall(comp(_) == 10L))
     assert(Seq(20L, 21L, 22L).forall(comp(_) == 20L))
-    assert(comp.size == 9)
+    assert(comp(40L) == 40L, "self-loop-only node keeps itself as rep")
+    assert(comp.size == 10)
   }
 
   test("long chain converges within the iteration cap") {
@@ -27,22 +30,6 @@ final class ClustersSpec extends SparkTestBase {
     val comp = Clusters.connectedComponents(pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(comp.values.forall(_ == 1L))
-  }
-
-  test("large-star/small-star: same components as min-label on a mixed graph") {
-    val pairs = Seq(
-      (1L, 2L), (2L, 3L), (3L, 4L),
-      (10L, 11L),
-      (20L, 21L), (21L, 22L), (20L, 22L),
-      (30L, 31L), (31L, 32L), (30L, 33L), (33L, 34L), // tree
-      (40L, 40L) // self-loop-only node: both engines must emit (40, 40)
-    ).toDF("a", "b")
-    val label = Clusters.connectedComponents(pairs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val stars = Clusters.connectedComponentsStars(pairs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(stars == label)
-    assert(stars(40L) == 40L, "self-loop-only node keeps itself as rep")
   }
 
   test("keepBest: one survivor per cluster by score, singletons always survive") {
@@ -63,20 +50,5 @@ final class ClustersSpec extends SparkTestBase {
     // exactly one survivor per cluster
     val perCluster = out.values.groupBy(_._1).map { case (c, vs) => c -> vs.count(_._2) }
     assert(perCluster.values.forall(_ == 1), perCluster.toString)
-  }
-
-  test("large-star/small-star: 10k-node adversarial path graph in O(log n) rounds") {
-    // a 10_000-node chain is the worst case for plain propagation
-    // (diameter = n); the star rounds must close it within the
-    // default 50-round cap (theory: O(log n) ≈ 14)
-    val pairs = spark.range(1L, 10000L).selectExpr("id AS a", "id + 1 AS b")
-    val comp = Clusters.connectedComponentsStars(pairs)
-    import org.apache.spark.sql.functions._
-    val agg = comp.agg(count(lit(1)), countDistinct(col("cluster_rep")),
-      min(col("cluster_rep")), min(col("id")), max(col("id"))).head()
-    assert(agg.getLong(0) == 10000L, "every chain node labeled")
-    assert(agg.getLong(1) == 1L, "one component")
-    assert(agg.getLong(2) == 1L, "rep is the chain minimum")
-    assert(agg.getLong(3) == 1L && agg.getLong(4) == 10000L)
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
+import graft.text.TextOps
 
 final class DedupSpec extends SparkTestBase {
   import spark.implicits._
@@ -40,19 +41,18 @@ final class DedupSpec extends SparkTestBase {
     assert(pairs.size == 4)
   }
 
-  test("candidateVolume reports the exact join's pre-join pair count") {
-    // three identical docs: every prefix shingle posts all three ids,
-    // so volume = distinct_sh * C(3,2) and max_posting = 3
-    val docs = Seq((1L, "alpha beta gamma delta epsilon"),
-                   (2L, "alpha beta gamma delta epsilon"),
-                   (3L, "alpha beta gamma delta epsilon")).toDF("doc_id", "text")
-    val r = NgramJaccard.candidateVolume(docs, "doc_id", "text", n = 3, minJaccard = 0.8)
-      .collect().head
-    val distinctSh = r.getAs[Long]("distinct_sh")
-    assert(distinctSh > 0)
+  test("volumeOfPostings reports the exact join's pre-join pair count") {
+    // three identical 3-shingle docs at tau = 0.8 post a one-shingle
+    // prefix each (3 - ceil(0.8 * 3) + 1 = 1), the same rarest shingle:
+    // one posting list of all three ids, C(3,2) = 3 candidate pairs
+    val postings = Seq((7L, 1L), (7L, 2L), (7L, 3L)).toDF("sh", "id")
+    val r = NgramJaccard.volumeOfPostings(postings).collect().head
+    assert(r.getAs[Long]("distinct_sh") == 1L)
     assert(r.getAs[Long]("max_posting") == 3L)
-    assert(r.getAs[Long]("postings") == 3 * distinctSh)
-    assert(r.getAs[Long]("candidate_volume") == 3L * distinctSh)
+    assert(r.getAs[Long]("postings") == 3L)
+    assert(r.getAs[Long]("candidate_volume") == 3L)
+    // len * (len - 1) DIV 2 stays LONG: a `/ 2` would sum doubles
+    assert(r.schema("candidate_volume").dataType == org.apache.spark.sql.types.LongType)
   }
 
   test("pairs pre-flight guard refuses a saturated-vocabulary corpus") {
@@ -77,7 +77,7 @@ final class DedupSpec extends SparkTestBase {
   }
 
   test("simhash joinHint typo fails fast instead of silently unpinning the plan") {
-    val fps = SimHash.fingerprints(docs, "doc_id", "text")
+    val fps = SimHash.fingerprintsOfTokens(docs, "doc_id", array_distinct(TextOps.tokens(col("text"))))
     intercept[IllegalArgumentException] {
       SimHash.pairs(fps, maxDist = 3, matchChunks = 1, joinHint = "sort_merge")
     }
@@ -141,8 +141,8 @@ final class DedupSpec extends SparkTestBase {
     val incoming = docs01.filter(col("doc_id") >= split)
     val table = "band_index_spec"
     try {
-      MinHashLSH.saveBandIndex(
-        MinHashLSH.bandIndex(existing, "doc_id", "text", 24, 8, 3), table, nBuckets = 8)
+      bucketedTable(
+        MinHashLSH.bandIndex(existing, "doc_id", "text", 24, 8, 3), table, "bucket", 8)
       val indexed = MinHashLSH.nearDuplicatesIncrementalIndexed(
           spark.table(table), existing, incoming, "doc_id", "text", 24, 8, 3, 0.8)
         .select("a", "b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -182,9 +182,9 @@ final class DedupSpec extends SparkTestBase {
 
       // append maintenance: after folding the batch in, the index serves
       // the NEXT batch — equivalence holds against a full recompute
-      MinHashLSH.saveBandIndex(
+      bucketedTable(
         MinHashLSH.bandIndex(incoming, "doc_id", "text", 24, 8, 3), table,
-        nBuckets = 8, append = true)
+        "bucket", 8, append = true)
       val stored = spark.table(table)
       val fresh = MinHashLSH.bandIndex(docs01, "doc_id", "text", 24, 8, 3)
       assert(stored.count() == fresh.count())
@@ -212,7 +212,9 @@ final class DedupSpec extends SparkTestBase {
     val nDocs = 42L
     val allPairs = nDocs * (nDocs - 1) / 2
 
-    val nCand = NgramJaccard.prefixCandidates(corpus, "doc_id", "text", n, tau).count()
+    val nCand = NgramJaccard.prefixCandidatesOfSets(
+      corpus.select(col("doc_id").as("id"), NgramJaccard.shingles(col("text"), n).as("shs")),
+      tau).count()
     // every doc shares the universal 3-gram windows, so an unfiltered
     // posting join would candidate every pair; the prefix keeps only
     // each doc's rarest shingles, which the hot shingles never are
@@ -257,7 +259,7 @@ final class DedupSpec extends SparkTestBase {
   }
 
   test("simhash: identical docs collide at distance 0, near-dups are close") {
-    val fps = SimHash.fingerprints(docs, "doc_id", "text")
+    val fps = SimHash.fingerprintsOfTokens(docs, "doc_id", array_distinct(TextOps.tokens(col("text"))))
     val byId = fps.collect().map(r => r.getAs[Long]("id") -> r.getAs[Long]("simhash")).toMap
     assert(byId(1L) == byId(2L))
     val d13 = java.lang.Long.bitCount(byId(1L) ^ byId(3L))

@@ -3,7 +3,6 @@ package graft.functions
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
-import graft.multimodal.MediaDecoder
 
 final class AHashSpec extends SparkTestBase {
   import spark.implicits._
@@ -30,25 +29,5 @@ final class AHashSpec extends SparkTestBase {
 
   test("payloads shorter than the tile yield NULL, not a padded hash") {
     assert(hashOf(Seq(Array.fill[Byte](63)(1))) == Seq(None))
-  }
-
-  test("real PNG path: decode -> grayscaleTile -> aHash is stable and discriminative") {
-    def png(f: (Int, Int) => Int): Array[Byte] = {
-      val img = new java.awt.image.BufferedImage(32, 32,
-        java.awt.image.BufferedImage.TYPE_INT_RGB)
-      for (y <- 0 until 32; x <- 0 until 32) img.setRGB(x, y, f(x, y))
-      val out = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(img, "png", out)
-      out.toByteArray
-    }
-    val gradient = png((x, _) => { val v = x * 8; (v << 16) | (v << 8) | v })
-    val vertical = png((_, y) => { val v = y * 8; (v << 16) | (v << 8) | v })
-    def ah(p: Array[Byte]): Long = {
-      val tile = MediaDecoder.grayscaleTile(p, 8, 8).get
-      hashOf(Seq(tile)).head.get
-    }
-    assert(ah(gradient) == ah(gradient)) // deterministic decode + hash
-    val hamming = java.lang.Long.bitCount(ah(gradient) ^ ah(vertical))
-    assert(hamming >= 16, s"orthogonal gradients too close: $hamming")
   }
 }

@@ -7,8 +7,8 @@ import graft.SparkTestBase
 import graft.ann.{Ann, Pq}
 
 /** The ONE spec for the shared [[StoredIndex]] invariants, run
-  * against all three implementations (d7 MinHash bands, d19 probe
-  * sketches, a6 IVF·PQ): append ≡ fresh at the table level, compact
+  * against both implementations (a6 IVF·PQ, x1 text index): append ≡
+  * fresh at the table level, compact
   * preserves contents, and the scan side carries no raw vector/text
   * column. The per-index SERVING equivalences (indexed search equals
   * recompute) stay in their own suites — this spec pins the
@@ -57,25 +57,11 @@ final class StoredIndexSpec extends SparkTestBase {
     } finally idx.drop(spark)
   }
 
-  test("MinHash band index (d7) honors the shared contract") {
-    contract(
-      MinHashBandIndex("sidx_bands", "doc_id", "text", nBuckets = 4),
-      docs.filter(col("doc_id") % 5 =!= 0),
-      docs.filter(col("doc_id") % 5 === 0))
-  }
-
-  test("probe-sketch index (d19) honors the shared contract") {
-    contract(
-      ProbeSketchIndex("sidx_sketch", dim = 64, nBuckets = 4),
-      vecs.filter(col("id") % 5 =!= 0),
-      vecs.filter(col("id") % 5 === 0))
-  }
-
   test("compact actually collapses the small files appends leave") {
     // the content-preservation half is in contract(); this is the
     // point of compact — N appends leave O(N × buckets) part files,
     // one rewrite pass collapses them back to O(buckets)
-    val idx = ProbeSketchIndex("sidx_compact", dim = 64, nBuckets = 2)
+    val idx = TextIndex("sidx_compact", nBuckets = 2)
     idx.drop(spark)
     def partFiles(t: String): Int = {
       val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
@@ -83,14 +69,14 @@ final class StoredIndexSpec extends SparkTestBase {
         .map(_.count(_.getName.startsWith("part-"))).getOrElse(0)
     }
     try {
-      idx.build(vecs.filter(col("id") % 4 === 0))
-      (1 to 3).foreach(r => idx.append(vecs.filter(col("id") % 4 === r)))
-      val before = partFiles("sidx_compact")
-      val rows = snapshot(spark.table("sidx_compact"))
+      idx.build(docs.filter(col("doc_id") % 4 === 0))
+      (1 to 3).foreach(r => idx.append(docs.filter(col("doc_id") % 4 === r)))
+      val before = partFiles("sidx_compact_postings")
+      val rows = snapshot(spark.table("sidx_compact_postings"))
       idx.compact(spark)
-      val after = partFiles("sidx_compact")
+      val after = partFiles("sidx_compact_postings")
       assert(after < before, s"compact did not reduce files: $before -> $after")
-      assert(snapshot(spark.table("sidx_compact")) == rows)
+      assert(snapshot(spark.table("sidx_compact_postings")) == rows)
     } finally idx.drop(spark)
   }
 
@@ -101,14 +87,14 @@ final class StoredIndexSpec extends SparkTestBase {
     // LOCATION_ALREADY_EXISTS — every future build bricked until
     // someone hand-deletes the directory. build() reclaims its own
     // storage instead.
-    val idx = ProbeSketchIndex("sidx_orphan", dim = 64, nBuckets = 2)
+    val idx = TextIndex("sidx_orphan", nBuckets = 2)
     idx.drop(spark)
     val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    val loc = new java.io.File(wh, "sidx_orphan/_temporary/0")
+    val loc = new java.io.File(wh, "sidx_orphan_postings/_temporary/0")
     assert(loc.mkdirs() || loc.isDirectory)
     try {
-      idx.build(vecs.filter(col("id") < 50))
-      assert(spark.table("sidx_orphan").count() > 0)
+      idx.build(docs.filter(col("doc_id") < 50))
+      assert(spark.table("sidx_orphan_postings").count() > 0)
     } finally {
       idx.drop(spark)
     }
@@ -206,12 +192,12 @@ final class StoredIndexSpec extends SparkTestBase {
     // the rewrite must stream table -> staged table -> rename; an
     // index-sized localCheckpoint/cache (the old implementation)
     // cannot survive a 100 TB compaction
-    val idx = ProbeSketchIndex("sidx_cplan", dim = 64, nBuckets = 2)
+    val idx = TextIndex("sidx_cplan", nBuckets = 2)
     idx.drop(spark)
     try {
-      idx.build(vecs.filter(col("id") % 2 === 0))
-      idx.append(vecs.filter(col("id") % 2 =!= 0))
-      val before = snapshot(spark.table("sidx_cplan"))
+      idx.build(docs.filter(col("doc_id") % 2 === 0))
+      idx.append(docs.filter(col("doc_id") % 2 =!= 0))
+      val before = snapshot(spark.table("sidx_cplan_postings"))
       val plans = capturePlans(idx.compact(spark))
       assert(plans.nonEmpty)
       for (p <- plans) {
@@ -220,7 +206,7 @@ final class StoredIndexSpec extends SparkTestBase {
         assert(!p.contains("InMemoryTableScan"),
           s"compact cached the table:\n$p")
       }
-      assert(snapshot(spark.table("sidx_cplan")) == before)
+      assert(snapshot(spark.table("sidx_cplan_postings")) == before)
     } finally idx.drop(spark)
   }
 
@@ -229,19 +215,19 @@ final class StoredIndexSpec extends SparkTestBase {
     // refuses on mismatch; a compaction does not change contents, so
     // it must carry the fingerprint across the rewrite or every
     // compacted PQ index would refuse its own valid laws
-    val idx = ProbeSketchIndex("sidx_cprops", dim = 64, nBuckets = 2)
+    val idx = TextIndex("sidx_cprops", nBuckets = 2)
     idx.drop(spark)
     try {
-      idx.build(vecs.filter(col("id") < 100))
+      idx.build(docs.filter(col("doc_id") < 100))
       spark.sql(
-        "ALTER TABLE sidx_cprops SET TBLPROPERTIES ('graft.build_id' = 'bid-123')")
+        "ALTER TABLE sidx_cprops_postings SET TBLPROPERTIES ('graft.build_id' = 'bid-123')")
       idx.compact(spark)
-      val prop = spark.sql("SHOW TBLPROPERTIES sidx_cprops")
+      val prop = spark.sql("SHOW TBLPROPERTIES sidx_cprops_postings")
         .filter(col("key") === "graft.build_id").collect()
       assert(prop.length == 1 && prop(0).getString(1) == "bid-123",
         "compact dropped the graft.build_id fingerprint")
       // the bucketing survived the stage-and-swap rename as well
-      val staged = spark.catalog.tableExists("sidx_cprops__compacting")
+      val staged = spark.catalog.tableExists("sidx_cprops_postings__compacting")
       assert(!staged, "compact left its staging table behind")
     } finally idx.drop(spark)
   }

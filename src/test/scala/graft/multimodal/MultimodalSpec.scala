@@ -29,7 +29,7 @@ final class MultimodalSpec extends SparkTestBase {
     assert(byId(0L).checksum == "tiny".getBytes.map(_ & 0xff).sum.toLong)
   }
 
-  test("frame sampling fans out deterministically and resize fixes size") {
+  test("frame sampling fans out deterministically") {
     val docs = Seq((1L, "x" * 1000), (2L, "tiny")).toDF("doc_id", "text")
     val media  = Multimodal.synthesize(docs, "doc_id", "text")
     val frames = MultimodalFrames.sampleFrames(spark, media, frameSize = 64, stride = 4)
@@ -39,11 +39,6 @@ final class MultimodalSpec extends SparkTestBase {
     assert(frames.filter(_.media_id == 1L).map(_.frame_idx).toSeq == Seq(0, 4, 8, 12))
     assert(frames.forall(_.frame.length <= 64))
     assert(frames.count(_.media_id == 2L) == 0) // payload shorter than a frame
-
-    val resized = MultimodalFrames.resizeFrames(
-      spark, MultimodalFrames.sampleFrames(spark, media, 64, 4), targetBytes = 16)
-      .collect()
-    assert(resized.nonEmpty && resized.forall(_.frame.length == 16))
   }
 
   // a real PNG payload, rendered in-JVM
@@ -70,20 +65,6 @@ final class MultimodalSpec extends SparkTestBase {
     val stub3 = MediaDecoder.decodeStub(Multimodal.MediaRow(3L, "image", "not an image at all".getBytes))
     assert(byId(3L).width == stub3.width && byId(3L).height == stub3.height)
     assert(byId(4L).width == (byId(4L).byte_len % 640).toInt) // stub shape for audio
-  }
-
-  test("resizeImages rescales every decodable image to the target size") {
-    val media = Seq(
-      Multimodal.MediaRow(1L, "image", pngBytes(64, 48)),
-      Multimodal.MediaRow(2L, "image", "junk".getBytes),
-      Multimodal.MediaRow(3L, "video", pngBytes(10, 10))
-    ).toDF()
-
-    val resized = Multimodal.resizeImages(spark, media, 16, 12).collect()
-      .map(m => m.media_id -> m).toMap
-    assert(MediaDecoder.decodeImageDims(resized(1L).payload).contains((16, 12)))
-    assert(java.util.Arrays.equals(resized(2L).payload, "junk".getBytes)) // undecodable passthrough
-    assert(MediaDecoder.decodeImageDims(resized(3L).payload).contains((10, 10))) // non-image untouched
   }
 
   test("WAV audio decodes for real through javax.sound: format facts + exact energy") {

@@ -19,20 +19,6 @@ final class BloomPruneSpec extends SparkTestBase {
     assert(rep.filter(col("is_member") === 1).count() > 0)
   }
 
-  test("pruned semi-join equals the plain semi-join") {
-    val fact = Tables(spark, sfDir, "lineitem")
-    val dim  = Tables(spark, sfDir, "supplier").filter(col("s_nationkey") < 13)
-    val pruned = BloomPrune.prunedSemiJoin(
-        fact, dim, "l_suppkey", col("s_suppkey"), "q46b", k = 4, m = 512)
-      .select(col("l_orderkey"), col("l_linenumber"))
-    val plain = fact
-      .join(dim.select(col("s_suppkey").as("l_suppkey")).distinct(),
-        Seq("l_suppkey"), "left_semi")
-      .select(col("l_orderkey"), col("l_linenumber"))
-    assert(pruned.count() == plain.count())
-    assert(pruned.exceptAll(plain).isEmpty && plain.exceptAll(pruned).isEmpty)
-  }
-
   test("the broadcast filter is slot-bounded, not dim-sized") {
     // a tiny slot space: the filter can never exceed m entries no
     // matter how many dim keys hash into it

@@ -53,11 +53,10 @@ final class AsofJoinSpec extends SparkTestBase {
     // a union of two tables is never bucketed, so the window form
     // ALWAYS shuffles — the custom exec inherits its children's
     // clustering and merges in place
-    import graft.sources.Sinks
     val left = (1L to 500L).map(k => (k % 50, k, s"l$k")).toDF("k", "t", "lval")
     val right = (1L to 200L).map(k => (k % 50, k, s"r$k")).toDF("k", "t", "payload")
-    Sinks.bucketedTable(left, "b_asof_l", "k", 8)
-    Sinks.bucketedTable(right, "b_asof_r", "k", 8)
+    bucketedTable(left, "b_asof_l", "k", 8)
+    bucketedTable(right, "b_asof_r", "k", 8)
     try {
       val native = AsofJoin.asOf(
         spark.table("b_asof_l"), spark.table("b_asof_r"), "k", "t", "t", Seq("payload"))

@@ -31,91 +31,4 @@ final class SinksSpec extends SparkTestBase {
     assert(merged.count() == 3)
     assert(merged.columns.toSeq == Seq("id", "v"))
   }
-
-  test("partitionedParquet lays out one dir per partition value") {
-    val out = tmpDir("sink-part") + "/out"
-    Sinks.partitionedParquet(
-      Seq((1, "x", "EU"), (2, "y", "AF")).toDF("id", "v", "ancestry"), out, "ancestry")
-    assert(Files.exists(Paths.get(out, "ancestry=EU")))
-    assert(Files.exists(Paths.get(out, "ancestry=AF")))
-    assert(spark.read.parquet(out).count() == 2)
-  }
-
-  test("ORC round-trips with the same pushdown story as parquet") {
-    import org.apache.spark.sql.functions._
-    val base = tmpDir("sink-orc")
-    val df = spark.range(0L, 5000L).select(
-      col("id"), (col("id") % 13).as("k"), concat(lit("row-"), col("id")).as("s"))
-    Sinks.columnarWrite(df, s"$base/orc", format = "orc")
-    Sinks.columnarWrite(df, s"$base/parquet", format = "parquet")
-
-    val orc = spark.read.orc(s"$base/orc")
-    val pq  = spark.read.parquet(s"$base/parquet")
-    assert(orc.count() == 5000L)
-    assert(orc.collect().map(_.toSeq).toSet == pq.collect().map(_.toSeq).toSet)
-
-    // the filter must reach the ORC scan, not evaluate post-scan only
-    val plan = orc.filter(col("k") === 3).queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters") && plan.contains("EqualTo(k,3"),
-      s"ORC scan must receive the pushed filter:\n$plan")
-  }
-
-  test("rangeClusteredParquet: files cover disjoint key ranges (min/max prunes)") {
-    import org.apache.spark.sql.functions._
-    val out = tmpDir("sink-range") + "/out"
-    val df = spark.range(0L, 10000L).select(
-      col("id"), (col("id") % 97).as("payload"))
-    Sinks.rangeClusteredParquet(df, out, nFiles = 4, col("id"))
-
-    val parts = new java.io.File(out).listFiles()
-      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-      .map(_.getAbsolutePath).sorted
-    assert(parts.length == 4)
-    val ranges = parts.map { p =>
-      val r = spark.read.parquet(p).agg(min("id"), max("id")).head()
-      (r.getLong(0), r.getLong(1))
-    }.sortBy(_._1)
-    // every file's range is internally consistent and disjoint from the next
-    ranges.foreach { case (lo, hi) => assert(lo <= hi) }
-    ranges.sliding(2).foreach {
-      case Array((_, hi), (lo2, _)) => assert(hi < lo2, s"overlap: $hi >= $lo2")
-      case _ => ()
-    }
-    // nothing lost in the re-layout
-    assert(spark.read.parquet(out).count() == 10000L)
-  }
-
-  test("compactParquet: shrinks the file count, preserves content, swaps cleanly") {
-    val dir = tmpDir("sinks-compact")
-    val out = s"$dir/table"
-    val df = spark.range(0, 5000).selectExpr("id", "id * 2 AS v")
-    df.repartition(40).write.parquet(out) // simulate micro-batch accretion
-
-    val before = new java.io.File(out).listFiles()
-      .count(f => f.getName.endsWith(".parquet"))
-    assert(before == 40)
-    val (reportedBefore, after) =
-      Sinks.compactParquet(spark, out, targetFileBytes = 1L << 30)
-    assert(reportedBefore == 40 && after == 1, s"got $reportedBefore -> $after")
-
-    // content identical, no staging/backup leftovers
-    val got = spark.read.parquet(out).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == (0L until 5000L).map(i => i -> i * 2).toMap)
-    val leftovers = new java.io.File(dir).listFiles().map(_.getName)
-      .filter(n => n.contains(".compact-") || n.contains(".bak-"))
-    assert(leftovers.isEmpty, s"not cleaned: ${leftovers.mkString(",")}")
-  }
-
-  test("compactParquet: rejects hive-partitioned layouts instead of flattening them") {
-    val dir = tmpDir("sinks-compact-part")
-    val out = s"$dir/table"
-    spark.range(0, 100).selectExpr("id", "id % 4 AS p")
-      .write.partitionBy("p").parquet(out)
-    val err = intercept[IllegalArgumentException](Sinks.compactParquet(spark, out))
-    assert(err.getMessage.contains("partition"))
-    // the table is untouched: partition dirs and content intact
-    assert(new java.io.File(out).listFiles().count(_.getName.startsWith("p=")) == 4)
-    assert(spark.read.parquet(out).count() == 100L)
-  }
 }

@@ -40,43 +40,4 @@ final class ZOrderSpec extends SparkTestBase {
       .collect().map(_.getLong(0)).toSeq
     assert(viaSql == viaCols)
   }
-
-  test("z-ordered layout gives tighter multi-dim file boxes than a range sort") {
-    // a full 64x64 grid: every (x, y) once
-    val grid = spark.range(4096)
-      .select((col("id") % 64).as("x"), expr("id div 64").as("y"))
-
-    val zPath = tmpDir("zorder") + "/z"
-    val rPath = tmpDir("zorder") + "/r"
-    Sinks.zOrderedParquet(grid, zPath, nFiles = 16, bits = 6, col("x"), col("y"))
-    Sinks.rangeClusteredParquet(grid, rPath, 16, col("x"), col("y"))
-
-    // per-file min/max boxes — exactly what parquet footer stats give
-    // a reader; a file is prunable for a predicate iff its box misses
-    def boxes(path: String) = spark.read.parquet(path)
-      .groupBy(input_file_name().as("f"))
-      .agg(min("x").as("minx"), max("x").as("maxx"),
-        min("y").as("miny"), max("y").as("maxy"))
-      .collect()
-
-    // the box predicate a time+key or geo query makes: y in [8, 15],
-    // any x. The range layout sorted on (x, y) scatters every y range
-    // across ALL files; the z layout confines it to the files whose
-    // curve quadrant intersects.
-    def hits(path: String): Int =
-      boxes(path).count(r => !(r.getAs[Long]("maxy") < 8 || r.getAs[Long]("miny") > 15))
-
-    val (zHits, rHits) = (hits(zPath), hits(rPath))
-    val zFiles = boxes(zPath).length
-    assert(zFiles >= 8, s"expected ~16 z files, got $zFiles")
-    assert(rHits >= 12, s"range layout should leave y unpruned nearly everywhere; got $rHits")
-    assert(zHits * 2 <= rHits,
-      s"z-order should prune at least 2x better on the non-leading dim: z=$zHits range=$rHits")
-
-    // layout must not change the data
-    assert(spark.read.parquet(zPath).count() == 4096L)
-    val sums = spark.read.parquet(zPath).agg(sum("x"), sum("y")).head
-    val rsums = spark.read.parquet(rPath).agg(sum("x"), sum("y")).head
-    assert(sums == rsums)
-  }
 }

@@ -98,7 +98,7 @@ final class IncrementalSpec extends SparkTestBase {
         override val rules: PartialFunction[Input, Outputs] = {
           case source(group, _) => Outputs.Named(group)
         }
-        override def make(output: String): SparkJob = SparkJob.noop
+        override def make(output: String): SparkJob = (_, _) => ()
         override def getName: String = "NoopStage"
       })
     }

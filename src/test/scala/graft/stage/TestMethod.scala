@@ -19,7 +19,7 @@ object TestMethod extends Method {
 
     override val sources: Seq[Input.Source] = Seq.empty
 
-    override def make(output: String): SparkJob = SparkJob.noop
+    override def make(output: String): SparkJob = (_, _) => ()
 
     override val rules: PartialFunction[Input, Outputs] = {
       case metricsSrc(service, _) => Outputs.Named(service)

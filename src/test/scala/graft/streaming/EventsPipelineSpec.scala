@@ -160,41 +160,6 @@ final class EventsPipelineSpec extends SparkTestBase {
     assert(got.select("event_id").distinct().count() == nDistinct)
   }
 
-  test("kafka envelope parsing: wire-schema memory stream to typed events to windows") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    import EventsPipelineSpec.Wire
-
-    def rec(offset: Long, id: Long, ts: String, user: Long, typ: String, v: Double): Wire =
-      Wire(
-        key = user.toString.getBytes("UTF-8"),
-        value =
-          s"""{"event_id":$id,"ts":"$ts","user_id":$user,"event_type":"$typ","value":$v,"props":"{}"}"""
-            .getBytes("UTF-8"),
-        topic = "events", partition = 0, offset = offset,
-        timestamp = java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), timestampType = 0)
-
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val mem = MemoryStream[Wire]
-    mem.addData(
-      rec(0, 1L, "2024-01-01 10:05:00", 7L, "click", 1.5),
-      rec(1, 2L, "2024-01-01 10:20:00", 7L, "click", 2.5),
-      rec(2, 3L, "2024-01-01 11:05:00", 8L, "view", 4.0))
-
-    val q = EventsPipeline.tumblingCounts(EventsPipeline.parseKafkaEnvelope(mem.toDF()))
-      .writeStream.outputMode("complete").format("memory")
-      .queryName("spec_kafka_envelope").start()
-    try q.processAllAvailable()
-    finally q.stop()
-
-    val rows = spark.table("spec_kafka_envelope")
-      .select(col("bucket_ts").cast("string"), col("event_type"), col("n"), col("sum_value"))
-      .collect().map(_.toSeq).toSet
-    assert(rows == Set(
-      Seq("2024-01-01 10:00:00", "click", 2L, 4.0),
-      Seq("2024-01-01 11:00:00", "view", 1L, 4.0)))
-  }
-
   test("session windows merge events within the gap") {
     val sessions = EventsPipeline.runToCompletion(
       spark, sfDir, EventsPipeline.sessionCounts,
@@ -204,114 +169,6 @@ final class EventsPipelineSpec extends SparkTestBase {
     val bad = sessions.filter(col("session_end") < col("session_start") ||
       col("n_events") <= 0)
     assert(bad.isEmpty)
-  }
-
-  test("flatMapGroupsWithState running totals accumulate per user") {
-    import org.apache.spark.sql.streaming.Trigger
-    val q = EventsPipeline.runningTotals(
-        spark, EventsPipeline.readStream(spark, sfDir, glob = "events.parquet"))
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName("spec_totals")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val got = spark.table("spec_totals")
-      .groupBy(col("user_id"))
-      .agg(max(col("n_events")).as("n"), max(col("total_value")).as("total"))
-    val batch = Tables.events(spark, sfDir)
-      .groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n"), sum(col("value")).as("total"))
-    val g = got.collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
-    val b = batch.collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
-    assert(g.keySet == b.keySet)
-    g.foreach { case (u, (n, total)) =>
-      assert(n == b(u)._1, s"user $u count")
-      assert(math.abs(total - b(u)._2) < 1e-6, s"user $u total")
-    }
-  }
-
-  test("transformWithState running totals match flatMapGroupsWithState") {
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val providerBefore = spark.conf.get(providerKey)
-    val got0 = EventsPipeline.runningTotalsV2ToCompletion(
-      spark, sfDir, queryName = "spec_totals_v2", glob = "events.parquet")
-    // RocksDB is scoped to the query: the session provider is restored
-    assert(spark.conf.get(providerKey) == providerBefore)
-    val got = got0
-      .groupBy(col("user_id"))
-      .agg(max(col("n_events")).as("n"), max(col("total_value")).as("total"))
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
-    val batch = Tables.events(spark, sfDir)
-      .groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n"), sum(col("value")).as("total"))
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
-    assert(got.keySet == batch.keySet)
-    got.foreach { case (u, (n, total)) =>
-      assert(n == batch(u)._1)
-      assert(math.abs(total - batch(u)._2) < 1e-6)
-    }
-  }
-
-  test("transformWithState with a generous TTL equals the no-TTL totals") {
-    // exercises the TTLConfig codepath end-to-end; a TTL far longer
-    // than the run means no state expires, so results are identical
-    val got = EventsPipeline.runningTotalsV2ToCompletion(
-      spark, sfDir, queryName = "spec_totals_ttl", glob = "events.parquet",
-      ttl = Some(java.time.Duration.ofHours(1)))
-      .groupBy(col("user_id"))
-      .agg(max(col("n_events")).as("n"), max(col("total_value")).as("total"))
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
-    val batch = Tables.events(spark, sfDir)
-      .groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n"), sum(col("value")).as("total"))
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
-    assert(got.keySet == batch.keySet)
-    got.foreach { case (u, (n, total)) =>
-      assert(n == batch(u)._1)
-      assert(math.abs(total - batch(u)._2) < 1e-6)
-    }
-  }
-
-  test("event-time timers close sessions when the watermark passes the gap") {
-    import spark.implicits._
-    val tmp = tmpDir("stream-timers")
-
-    // two micro-batches an hour apart: batch-2's events push the
-    // watermark past batch-1's session closes, firing their timers
-    def writeRaw(rows: Seq[(Long, String, Long, String, Double, String)], dest: String): Unit = {
-      val stage = dest + ".stage"
-      rows.toDF("event_id", "ts_s", "user_id", "event_type", "value", "props")
-        .withColumn("ts", unix_timestamp(col("ts_s")).cast("long") * 1000000000L)
-        .select("event_id", "ts", "user_id", "event_type", "value", "props")
-        .coalesce(1).write.mode("overwrite").parquet(stage)
-      val part = new java.io.File(stage).listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dest).getParent)
-      java.nio.file.Files.move(part.toPath, java.nio.file.Paths.get(dest))
-    }
-    writeRaw(Seq(
-      (1L, "2024-01-01 10:00:00", 1L, "click", 1.0, "{}"),
-      (2L, "2024-01-01 10:10:00", 1L, "click", 2.5, "{}"),
-      (3L, "2024-01-01 10:05:00", 2L, "view", 4.0, "{}")),
-      s"$tmp/a_batch1.parquet")
-    writeRaw(Seq(
-      (4L, "2024-01-01 12:00:00", 3L, "click", 9.0, "{}")),
-      s"$tmp/b_batch2.parquet")
-
-    val got = EventsPipeline.sessionClosedTotals(
-      spark, tmp, gapMs = 30L * 60 * 1000, queryName = "spec_timer_sessions",
-      maxFilesPerTrigger = Some(1))
-      .select(col("user_id"), col("n_events"), col("total_value"),
-        col("session_end").cast("string"))
-      .collect().map(_.toSeq).toSet
-
-    // users 1 and 2 closed (watermark reached 12:00 > close times);
-    // user 3's session is still open at end-of-input and must NOT emit
-    assert(got == Set(
-      Seq(1L, 2L, 3.5, "2024-01-01 10:40:00"),
-      Seq(2L, 1L, 4.0, "2024-01-01 10:35:00")))
   }
 
   test("stream-stream join state plateaus: watermark cleanup evicts expired rows") {
@@ -401,11 +258,4 @@ final class EventsPipelineSpec extends SparkTestBase {
       queryName = "spec_tumbling2", glob = "events.parquet")
     assert(slide.count() > tumble.count())
   }
-}
-
-object EventsPipelineSpec {
-  /** The Kafka connector's wire schema: binary key/value + provenance. */
-  final case class Wire(key: Array[Byte], value: Array[Byte], topic: String,
-                        partition: Int, offset: Long,
-                        timestamp: java.sql.Timestamp, timestampType: Int)
 }

@@ -24,6 +24,15 @@ final class Bm25Spec extends SparkTestBase {
   private def canon(df: DataFrame): Seq[Seq[Any]] =
     df.collect().toSeq.map(_.toSeq).sortBy(_.mkString("|"))
 
+  /** The brute-force proximity reference: the same search computed
+    * DIRECTLY from a (doc_id, text) corpus, with no index.
+    */
+  private def proximityDirect(docs: DataFrame, terms: Seq[String], window: Int): DataFrame =
+    Phrase.proximityFrom(
+      docs.select(col("doc_id"),
+        posexplode(TextOps.tokens(col("text"))).as(Seq("pos", "term"))),
+      terms, window)
+
   test("indexed BM25 equals direct computation, including after appends") {
     val idx = TextIndex("bm25spec_idx", nBuckets = 4)
     idx.drop(spark)
@@ -119,7 +128,7 @@ final class Bm25Spec extends SparkTestBase {
         (Seq("table", "hash"), 1), (Seq("table", "hash"), 3),
         (Seq("zzz_absent", "hash"), 50))) {
         val served = Phrase.proximityIndexed(spark, "proxspec_idx", terms, w)
-        val direct = Phrase.proximityDirect(docs, terms, w)
+        val direct = proximityDirect(docs, terms, w)
         assert(canon(served) == canon(direct), s"terms=$terms w=$w")
       }
       // window=1 over a 2-term set = adjacency in either order — it
@@ -175,11 +184,11 @@ final class Bm25Spec extends SparkTestBase {
     val expected = Seq(1L -> brute(heavy), 2L -> brute(Seq("table", "the", "hash")))
       .collect { case (id, Some(s)) => id -> s }.toMap
 
-    val wide = Phrase.proximityDirect(planted, terms, window = 300)
+    val wide = proximityDirect(planted, terms, window = 300)
     val got = wide.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == expected, s"merge kernel vs brute combination: $got vs $expected")
     // tight window keeps only the adjacent doc
-    val tight = Phrase.proximityDirect(planted, terms, window = 8)
+    val tight = proximityDirect(planted, terms, window = 8)
       .collect().map(r => r.getLong(0)).toSeq
     assert(tight == Seq(2L))
     // the linear shape is structural: one aggregation, zero joins

@@ -1,5 +1,6 @@
 #!/usr/bin/env bash
-# Full local gate: specs -> correctness (DuckDB oracle) -> bench -> methodbench.
+# Full local gate: caller-less members -> specs -> correctness (DuckDB oracle)
+# -> bench -> methodbench.
 # Usage: tools/gate.sh [sf_correctness_dir] [sf_bench_dir]
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -9,6 +10,10 @@ SF_BENCH="${2:-/root/testdata/sf0.1}"
 OUT=$(mktemp -d /tmp/graft-gate.XXXX)
 # numbers are only comparable at one core count: default to this host's
 CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}"
+
+# every public library member needs a caller outside the specs
+echo "== caller-less members =="
+if python3 tools/callerless.py; then echo "none"; else echo "callerless: FAILED"; fi
 
 echo "== specs =="
 sbt -batch test 2>&1 | tee "$OUT/specs.log" | grep -E "Tests:|FAILED" | tail -2
